@@ -485,15 +485,16 @@ def _j12_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared J12 bipartite event construction (DriverNet Graph.R).
 
     expand_side="outliers" (r17, guide §2.3/§3.3): the edge vocabulary is
-    ~25 brands x ~150 types, so fanning the mutation side out broadcasts
-    ~150 edges per mutation row into the patient-level exchange while the
-    outlier side fans out only ~25 per row — and |mutations| ≥ |outliers|
-    here (every matched row mutates, only ±1.5σ rows outlie).  Expanding
-    the outlier side shuffles ~25·|outliers| + |mutations| rows instead of
-    ~150·|mutations| + |outliers| — identical result by inner-join
-    reassociation (the r17 A/B and the unchanged oracle hash prove it).
-    Both fan-outs are fixed category vocabularies, so the asymmetry holds
-    at any TPC-H scale."""
+    150 distinct (brand, type) pairs.  Measured at sf0.1 (OPTIMIZATION_r17.md):
+    fanning the mutation side out gives 1,737,498 / 289,583 ≈ 6 edges per
+    mutation row, the outlier side 1,294,275 / 51,771 ≈ 25 per row, and
+    |mutations| ≈ 5.6·|outliers| (every matched row mutates, only ±1.5σ
+    rows outlie).  Expanding the outlier side feeds the patient-level
+    exchange 1,294,275 + 289,583 rows instead of 1,737,498 + 51,771 —
+    about 11% fewer rows, and narrower ones (3 columns) — with an
+    identical result by inner-join reassociation (the r17 A/B and the
+    unchanged oracle hash prove it).  Both fan-outs are fixed category
+    vocabularies, so the per-row ratios hold at any TPC-H scale."""
     mutations, edges, outliers = _j12_tables(spark, sf_dir)
     return join_ops.bipartite_event_join(
         mutations, edges, outliers, expand_side="outliers"

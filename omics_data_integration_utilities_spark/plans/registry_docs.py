@@ -29,23 +29,7 @@ from ..operators.constants import (
     SHINGLE_WIDTH,
     SIMHASH_BITS,
 )
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    # the doc/embedding tables land as a single-row-group file → one scan
-    # partition; the per-row work here (md5 shingles, 64-dim dot products)
-    # is heavy, so spread it.  Gated on the scan partition count
-    # (r16, guide §2.5): a naturally-split production input skips the
-    # round-robin exchange entirely instead of re-shuffling every row
-    # into exactly defaultParallelism partitions.  The count is ESTIMATED
-    # from the file index (r17, verdict item 7 — no plan-to-RDD
-    # translation in the query build path); the gate assumes upstream
-    # writers produce roughly even splits (r16 ADVICE note).
-    from ..sources.readers import scan_split_estimate
-
-    n = spark.sparkContext.defaultParallelism
-    return df.repartition(n) if scan_split_estimate(df, n) < n else df
+from .registry import _spread_scan, _t
 
 
 # ---- shared DuckDB fragments (kept in lockstep with the Spark operators) --
@@ -81,7 +65,7 @@ def _mh_expr(a: int, b: int) -> str:
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: hash-groupBy on a 60-bit content hash, min-id keeper."""
-    return dedup_ops.exact_dedup(_t(spark, sf_dir, "documents"), "text", "doc_id")
+    return dedup_ops.exact_dedup(_spread_scan(_t(spark, sf_dir, "documents")), "text", "doc_id")
 
 
 # groups on the full digest (collision-proof), displays the 60-bit key —
@@ -97,7 +81,7 @@ FROM (
 
 def q_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-insensitive token-set fingerprint (catches shuffled dups)."""
-    return text_ops.doc_fingerprint(_t(spark, sf_dir, "documents"), "text", "doc_id")
+    return text_ops.doc_fingerprint(_spread_scan(_t(spark, sf_dir, "documents")), "text", "doc_id")
 
 
 SQL_DEDUP_FINGERPRINT = """
@@ -114,7 +98,8 @@ FROM documents
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures, long form (doc_id, perm, minhash) — computed
     with zero-shuffle array expressions in Spark."""
-    out = dedup_ops.minhash_signatures(_t(spark, sf_dir, "documents"), "text", "doc_id")
+    docs = _spread_scan(_t(spark, sf_dir, "documents"))
+    out = dedup_ops.minhash_signatures(docs, "text", "doc_id")
     return out.select("doc_id", F.col("perm").cast("long").alias("perm"), "minhash")
 
 
@@ -129,7 +114,8 @@ SQL_MINHASH_SIGNATURES = (
 
 def q_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH banding: docs sharing any of 4 banded signature slices."""
-    return dedup_ops.lsh_candidate_pairs(_t(spark, sf_dir, "documents"), "text", "doc_id")
+    docs = _spread_scan(_t(spark, sf_dir, "documents"))
+    return dedup_ops.lsh_candidate_pairs(docs, "text", "doc_id")
 
 
 def _lsh_sql() -> str:
@@ -171,7 +157,7 @@ def _incr_split(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
     split every incremental-dedup query family member uses."""
     from ..operators.sampling import _hash_bucket
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = _spread_scan(_t(spark, sf_dir, "documents"))
     tagged = docs.withColumn("__b", _hash_bucket(F.col("doc_id"), _INCR_SALT))
     ref = tagged.where(F.col("__b") < _INCR_REF_CUT).drop("__b")
     new = tagged.where(F.col("__b") >= _INCR_REF_CUT).drop("__b")
@@ -345,7 +331,7 @@ def q_dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via inverted-index join."""
     return dedup_ops.ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", min_jaccard=0.2
+        _spread_scan(_t(spark, sf_dir, "documents")), "text", "doc_id", min_jaccard=0.2
     )
 
 
@@ -379,7 +365,7 @@ def q_text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle runs the identical regex."""
     from ..operators.text import token_counts
 
-    return token_counts(_t(spark, sf_dir, "documents"), "text", "doc_id")
+    return token_counts(_spread_scan(_t(spark, sf_dir, "documents")), "text", "doc_id")
 
 
 SQL_TEXT_TOKEN_COUNTS = r"""
@@ -437,7 +423,7 @@ def q_text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     count."""
     from ..operators.text import scrub_pii
 
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = _spread_scan(_t(spark, sf_dir, "documents")).select(
         "doc_id",
         F.concat(
             F.col("text"),
@@ -475,7 +461,7 @@ def q_text_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     boolean rules + keep verdict, one projection."""
     from ..operators.text import gopher_quality_rules
 
-    return gopher_quality_rules(_t(spark, sf_dir, "documents"), "text", "doc_id")
+    return gopher_quality_rules(_spread_scan(_t(spark, sf_dir, "documents")), "text", "doc_id")
 
 
 SQL_TEXT_GOPHER = f"""
@@ -514,7 +500,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected components + canonical-doc flag — the production step that
     turns pair lists into keep/drop decisions.  Oracle = recursive CTE
     reachability with min label over the identical pair construction."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = _spread_scan(_t(spark, sf_dir, "documents"))
     pairs = dedup_ops.ngram_jaccard_pairs(docs, "text", "doc_id", min_jaccard=0.2)
     return dedup_ops.connected_components(
         pairs, vertices=docs.select(F.col("doc_id").alias("id_a"))
@@ -562,7 +548,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster canonicalization: components over the Jaccard
     near-dup graph, then keep the highest-quality member per component
     (ties to lowest id) — the full pair→cluster→representative chain."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = _spread_scan(_t(spark, sf_dir, "documents"))
     pairs = dedup_ops.ngram_jaccard_pairs(docs, "text", "doc_id", min_jaccard=0.2)
     comps = dedup_ops.connected_components(
         pairs, vertices=docs.select(F.col("doc_id").alias("id_a"))
@@ -602,7 +588,7 @@ def q_doc_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines derive it independently and must agree bit-for-bit)."""
     from ..operators.sampling import leakage_safe_split
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = _spread_scan(_t(spark, sf_dir, "documents"))
     return leakage_safe_split(docs, "text", "doc_id", min_jaccard=0.2)
 
 
@@ -630,7 +616,7 @@ def q_doc_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproducible-split staple; pure md5 arithmetic, fully oracled."""
     from ..operators.sampling import hash_split, stratified_hash_sample
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = _spread_scan(_t(spark, sf_dir, "documents"))
     split = hash_split(docs.select("doc_id"), "doc_id")
     counts = split.groupBy("split").agg(F.count(F.lit(1)).alias("n"))
     sampled = stratified_hash_sample(
@@ -654,7 +640,7 @@ def q_pipeline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs") that naively runs one count job per stage."""
     from ..operators.aggregates import funnel_counts
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = _spread_scan(_t(spark, sf_dir, "documents"))
     return funnel_counts(
         docs,
         [
@@ -676,7 +662,7 @@ def q_pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.pipeline import curate_doc_batch_counts
 
     return curate_doc_batch_counts(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", min_quality=0.5
+        _spread_scan(_t(spark, sf_dir, "documents")), "text", "doc_id", min_quality=0.5
     )
 
 
@@ -717,7 +703,7 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered so the driver hash-checks the windowed funnel algebra."""
     from ..streaming.funnel import windowed_funnel_batch
 
-    events = _t(spark, sf_dir, "events")
+    events = _spread_scan(_t(spark, sf_dir, "events"))
     return windowed_funnel_batch(
         events,
         [
@@ -784,7 +770,7 @@ def q_mix_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
     algebra + a broadcast quota map — exact SQL oracle."""
     from ..operators.sampling import mixture_sample
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = _spread_scan(_t(spark, sf_dir, "documents"))
     return mixture_sample(docs, "doc_id", "source", MIX_WEIGHTS, MIX_TOTAL)
 
 
@@ -820,7 +806,7 @@ def q_doc_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle reproduces offsets exactly."""
     from ..operators.sampling import pack_and_chunk
 
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = _spread_scan(_t(spark, sf_dir, "documents")).select(
         "doc_id", text_ops.token_count_col("text").alias("n_tokens")
     )
     return pack_and_chunk(docs, "doc_id", "n_tokens", budget=1024, n_shards=4)
@@ -860,7 +846,7 @@ def q_doc_pack_chunks_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     across 8 rounds) carries independent evidence for the same operator."""
     from ..operators.sampling import pack_and_chunk
 
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = _spread_scan(_t(spark, sf_dir, "documents")).select(
         "doc_id", text_ops.token_count_col("text").alias("n_tokens")
     )
     packed = pack_and_chunk(docs, "doc_id", "n_tokens", budget=1024, n_shards=4)
@@ -890,7 +876,7 @@ def q_probe_double_pmod(spark: SparkSession, sf_dir: str) -> DataFrame:
     localize any residual driver divergence to the window construct."""
     from ..operators.sampling import _hash_bucket
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = _spread_scan(_t(spark, sf_dir, "documents"))
     return docs.select(
         "doc_id",
         F.pmod(_hash_bucket(F.col("doc_id"), "pack-v1"), F.lit(4))
@@ -915,7 +901,7 @@ def q_probe_cum_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the truncating division."""
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = _spread_scan(_t(spark, sf_dir, "documents")).select(
         "doc_id", text_ops.token_count_col("text").alias("token_count")
     )
     w = (
@@ -971,7 +957,7 @@ SELECT split, n FROM counts UNION ALL SELECT split, n FROM kept
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash fingerprints (Charikar majority-vote)."""
-    return dedup_ops.simhash_table(_t(spark, sf_dir, "documents"), "text", "doc_id")
+    return dedup_ops.simhash_table(_spread_scan(_t(spark, sf_dir, "documents")), "text", "doc_id")
 
 
 def _simhash_sql() -> str:
@@ -995,7 +981,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete for hamming <= 3 with 4 bands) + exact bit_count(xor)
     verification."""
     return dedup_ops.simhash_pairs(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", max_hamming=3
+        _spread_scan(_t(spark, sf_dir, "documents")), "text", "doc_id", max_hamming=3
     )
 
 
@@ -1039,7 +1025,7 @@ SQL_SIMHASH_PAIRS = _simhash_pairs_sql()
 
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 for query vectors (vec_id % 50 == 0)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = _spread_scan(_t(spark, sf_dir, "embeddings"))
     queries = emb.where(F.col("vec_id") % 50 == 0)
     out = sim_ops.brute_force_topk_np(emb, queries, "embedding", "vec_id", k=5)
     return out.select("query_id", "cand_id", "score", F.col("rank").cast("long").alias("rank"))
@@ -1051,7 +1037,7 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     training, list assignment, probe join, window top-k) against the
     same brute-force oracle; the approximate mode's recall is asserted
     in tests/test_similarity.py."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = _spread_scan(_t(spark, sf_dir, "embeddings"))
     queries = emb.where(F.col("vec_id") % 50 == 0)
     out = sim_ops.ivf_topk(
         emb, queries, "embedding", "vec_id", k=5, n_lists=16, n_probes=16
@@ -1087,7 +1073,7 @@ def q_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs cosine near-dup — GEMM-backed (broadcast matrix +
     mapInPandas BLAS blocks); LSH variant in library for two-large-sides."""
     return sim_ops.cosine_neardup_np(
-        _t(spark, sf_dir, "embeddings"), "embedding", "vec_id", min_cosine=0.35
+        _spread_scan(_t(spark, sf_dir, "embeddings")), "embedding", "vec_id", min_cosine=0.35
     )
 
 
@@ -1102,7 +1088,7 @@ def q_sim_semantic_dedup_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derived by an independent no-Spark replica — any single keep-flip
     moves ``id_sum``."""
     out = sim_ops.semantic_dedup(
-        _t(spark, sf_dir, "embeddings"), "embedding", "vec_id",
+        _spread_scan(_t(spark, sf_dir, "embeddings")), "embedding", "vec_id",
         threshold=0.35, n_lists=1,
     )
     return (
@@ -1123,7 +1109,7 @@ def q_text_compression_ratio_digest(spark: SparkSession, sf_dir: str) -> DataFra
     sf0.01 digest is golden-pinned (plans/golden_oracles.py) with a
     no-Spark replica recomputing the ratios from parquet."""
     out = text_ops.compression_ratio(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", max_ratio=0.4
+        _spread_scan(_t(spark, sf_dir, "documents")), "text", "doc_id", max_ratio=0.4
     )
     return (
         out.groupBy("keep")
@@ -1148,7 +1134,7 @@ def q_sim_semantic_dedup_bucketed_digest(spark: SparkSession, sf_dir: str) -> Da
     tests/test_similarity.py).  Digest per (list_id, keep): any flip of
     a single assignment or keep decision moves n/id_sum of its group."""
     out = sim_ops.semantic_dedup(
-        _t(spark, sf_dir, "embeddings"), "embedding", "vec_id",
+        _spread_scan(_t(spark, sf_dir, "embeddings")), "embedding", "vec_id",
         threshold=0.35, n_lists=4, sample_fraction=1.0,
     )
     return (
@@ -1173,7 +1159,7 @@ def q_sim_diversity_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     single pick change moves id_sum, any coverage change moves
     dist_sum."""
     out = sim_ops.diversity_sample(
-        _t(spark, sf_dir, "embeddings"), "embedding", "vec_id",
+        _spread_scan(_t(spark, sf_dir, "embeddings")), "embedding", "vec_id",
         n=60, n_lists=4, sample_fraction=1.0,
     )
     return (
@@ -1207,7 +1193,7 @@ SELECT id_a, id_b, cosine FROM (
 # --------------------------------------------------------------------------
 
 def q_text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = _spread_scan(_t(spark, sf_dir, "documents"))
     return docs.select(
         "doc_id", text_ops.token_count_col("text").cast("long").alias("n_tokens")
     )
@@ -1219,7 +1205,7 @@ SELECT doc_id, len(string_split(text, ' '))::BIGINT AS n_tokens FROM documents
 
 
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = text_ops.quality_score(_t(spark, sf_dir, "documents"), "text", "doc_id")
+    out = text_ops.quality_score(_spread_scan(_t(spark, sf_dir, "documents")), "text", "doc_id")
     return out.withColumns(
         {
             "n_chars": F.col("n_chars").cast("long"),
@@ -1245,7 +1231,8 @@ FROM t
 
 
 def q_text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text_ops.lang_id(_t(spark, sf_dir, "documents"), "text", "doc_id", threshold=0.05)
+    docs = _spread_scan(_t(spark, sf_dir, "documents"))
+    return text_ops.lang_id(docs, "text", "doc_id", threshold=0.05)
 
 
 
@@ -1275,7 +1262,7 @@ def q_rulemap_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     mass analog), containment >= 0.8, assembled into the reference's
     rule_map is_in/has ;-lists."""
     return cont_ops.containment_map(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", min_containment=0.8
+        _spread_scan(_t(spark, sf_dir, "documents")), "text", "doc_id", min_containment=0.8
     )
 
 
@@ -1322,7 +1309,7 @@ def q_text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import winnowing_fingerprints
 
     return winnowing_fingerprints(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", k=3, window=4
+        _spread_scan(_t(spark, sf_dir, "documents")), "text", "doc_id", k=3, window=4
     )
 
 
@@ -1359,7 +1346,7 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n=5,6), each vs its published threshold + keep verdict."""
     from ..operators.text import repetition_rules
 
-    return repetition_rules(_t(spark, sf_dir, "documents"), "text", "doc_id")
+    return repetition_rules(_spread_scan(_t(spark, sf_dir, "documents")), "text", "doc_id")
 
 
 def _ngram_list_sql(n: int) -> str:
@@ -1412,7 +1399,7 @@ def q_text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the GPT-3 appendix-C recipe with a small n so tiny fixtures hit."""
     from ..operators.text import ngram_decontaminate
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = _spread_scan(_t(spark, sf_dir, "documents"))
     test = docs.where(F.col("doc_id") % 20 == 0)
     train = docs.where(F.col("doc_id") % 20 != 0)
     return ngram_decontaminate(train, test, "text", "doc_id", n=3)
@@ -1451,7 +1438,7 @@ def q_text_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-green locally pre-registration."""
     from ..operators.text import contamination_report
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = _spread_scan(_t(spark, sf_dir, "documents"))
     test = docs.where(F.col("doc_id") % 20 == 0)
     train = docs.where(F.col("doc_id") % 20 != 0)
     return contamination_report(train, test, "text", "doc_id", n=3)
@@ -1498,7 +1485,7 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import chunk_documents
 
     return chunk_documents(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", chunk_tokens=32, stride=24
+        _spread_scan(_t(spark, sf_dir, "documents")), "text", "doc_id", chunk_tokens=32, stride=24
     )
 
 
@@ -1533,7 +1520,7 @@ def q_text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import duplicated_ngram_spans
 
     return duplicated_ngram_spans(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", k=_SUBSTR_K
+        _spread_scan(_t(spark, sf_dir, "documents")), "text", "doc_id", k=_SUBSTR_K
     )
 
 
@@ -1606,7 +1593,7 @@ def q_text_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source exact token-length quantiles (pipeline distribution
     monitoring)."""
     return text_ops.length_quantiles(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", "source"
+        _spread_scan(_t(spark, sf_dir, "documents")), "text", "doc_id", "source"
     )
 
 
@@ -1627,7 +1614,7 @@ def q_sim_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label embedding centroid vs the global centroid (cosine) —
     the distribution-shift monitor for embedding slices."""
     return sim_ops.centroid_drift(
-        _t(spark, sf_dir, "embeddings"), "embedding", "label"
+        _spread_scan(_t(spark, sf_dir, "embeddings")), "embedding", "label"
     )
 
 
@@ -1655,7 +1642,7 @@ FROM cnt JOIN d USING (grp)
 def q_doc_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document corpus-first gram novelty (ingest-ranking signal)."""
     return dedup_ops.gram_novelty(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", width=_SUBSTR_K
+        _spread_scan(_t(spark, sf_dir, "documents")), "text", "doc_id", width=_SUBSTR_K
     )
 
 
@@ -1688,7 +1675,7 @@ def q_doc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.joins import upsert_snapshot
     from ..operators.sampling import _hash_bucket
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = _spread_scan(_t(spark, sf_dir, "documents")).select("doc_id", "text")
     tagged = docs.withColumn("__b", _hash_bucket(F.col("doc_id"), "upsert-v1"))
     updates = tagged.where(F.col("__b") < 200_000).select(
         "doc_id", F.upper("text").alias("text")
@@ -1729,7 +1716,7 @@ def q_dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-accuracy report: MinHash Jaccard estimate vs exact shingle
     Jaccard (+ abs error) for every LSH candidate pair."""
     return dedup_ops.minhash_estimate_accuracy(
-        _t(spark, sf_dir, "documents"), "text", "doc_id"
+        _spread_scan(_t(spark, sf_dir, "documents")), "text", "doc_id"
     )
 
 
@@ -1786,7 +1773,7 @@ def q_doc_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import weighted_sample
 
     return weighted_sample(
-        _t(spark, sf_dir, "documents"), "doc_id", "n_chars", n=100
+        _spread_scan(_t(spark, sf_dir, "documents")), "doc_id", "n_chars", n=100
     )
 
 
@@ -1805,7 +1792,7 @@ def q_text_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide top-50 word 3-grams with counts (boilerplate / stop-
     phrase discovery); total order (count desc, gram asc) so the limit
     is deterministic."""
-    return text_ops.top_ngrams(_t(spark, sf_dir, "documents"), "text", n=3, k=50)
+    return text_ops.top_ngrams(_spread_scan(_t(spark, sf_dir, "documents")), "text", n=3, k=50)
 
 
 SQL_TEXT_TOP_NGRAMS = f"""
@@ -1829,7 +1816,7 @@ def q_text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     12.4k at sf0.1 — measured r12), so the CERTIFIED path, not the
     fallback, is what the driver hash-checks."""
     return text_ops.heavy_hitters(
-        _t(spark, sf_dir, "documents"), "text", n=3, k=50, capacity=16384
+        _spread_scan(_t(spark, sf_dir, "documents")), "text", n=3, k=50, capacity=16384
     )
 
 
@@ -1841,7 +1828,7 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-source exact duplicates at the correctness scales, so the
     registered form overlaps at the gram level where the shared
     synthetic vocabulary gives real signal)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = _spread_scan(_t(spark, sf_dir, "documents"))
     grams = dedup_ops.with_token_grams(docs, "text", "doc_id", _SUBSTR_K)
     keyed = grams.join(docs.select("doc_id", "source"), "doc_id").select(
         "source", "g"
@@ -1870,7 +1857,7 @@ FROM pr JOIN tot ta ON ta.src = src_a JOIN tot tb ON tb.src = src_b
 def q_dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal duplicated token spans (>= _SUBSTR_K-gram resolution)."""
     return dedup_ops.duplicated_substring_spans(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", width=_SUBSTR_K
+        _spread_scan(_t(spark, sf_dir, "documents")), "text", "doc_id", width=_SUBSTR_K
     )
 
 
@@ -1891,7 +1878,7 @@ def q_dedup_substring_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction-of-corpus-removable number the paper reports); token-level
     sibling of text_dup_spans' window-level counts."""
     return dedup_ops.substring_dedup_stats(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", width=_SUBSTR_K
+        _spread_scan(_t(spark, sf_dir, "documents")), "text", "doc_id", width=_SUBSTR_K
     )
 
 
@@ -1917,7 +1904,7 @@ def q_dedup_substring_remove(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup ACTION: text with every duplicated span cut except its
     corpus-first occurrence (exact-duplicate docs collapse to '')."""
     return dedup_ops.remove_duplicated_spans(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", width=_SUBSTR_K
+        _spread_scan(_t(spark, sf_dir, "documents")), "text", "doc_id", width=_SUBSTR_K
     )
 
 
@@ -1956,7 +1943,7 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import bm25_top_terms
 
     return bm25_top_terms(
-        _t(spark, sf_dir, "documents"), "text", "doc_id",
+        _spread_scan(_t(spark, sf_dir, "documents")), "text", "doc_id",
         top_k=_BM25_TOPK, k1=_BM25_K1, b=_BM25_B,
     )
 
@@ -1994,7 +1981,7 @@ def q_text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc cross-entropy + perplexity."""
     from ..operators.text import unigram_perplexity
 
-    return unigram_perplexity(_t(spark, sf_dir, "documents"), "text", "doc_id")
+    return unigram_perplexity(_spread_scan(_t(spark, sf_dir, "documents")), "text", "doc_id")
 
 
 SQL_TEXT_PERPLEXITY = """
@@ -2024,7 +2011,7 @@ def q_plan_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes docs differing only in contact details collapse."""
     from .data_pipeline import curate_documents
 
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = _spread_scan(_t(spark, sf_dir, "documents")).select(
         "doc_id",
         F.concat(
             F.col("text"),
@@ -2128,7 +2115,7 @@ def q_doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.profile import profile_table
 
     return profile_table(
-        _t(spark, sf_dir, "documents"), list(PROFILE_COLS), approx=False
+        _spread_scan(_t(spark, sf_dir, "documents")), list(PROFILE_COLS), approx=False
     )
 
 
@@ -2170,7 +2157,7 @@ def q_doc_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(_LAYOUT_LAST.pop(), ignore_errors=True)
     path = tempfile.mkdtemp(prefix="doc_layout_")
     _LAYOUT_LAST.append(path)
-    docs = _t(spark, sf_dir, "documents")
+    docs = _spread_scan(_t(spark, sf_dir, "documents"))
     write_partitioned(docs, path, ["source"], cluster_by=["doc_id"])
     pruned = read_table(spark, path).where(
         (F.col("source") == "src7") & (F.col("doc_id") < 300)
@@ -2229,7 +2216,7 @@ def _shared_ann_index(spark: SparkSession, sf_dir: str):
     key = f"{os.getpid()}:{sf_dir}"
     idx = _ANN_IDX_SHARED.get(key)
     if idx is None:
-        emb = _t(spark, sf_dir, "embeddings")
+        emb = _spread_scan(_t(spark, sf_dir, "embeddings"))
         name = f"ann_idx_{os.getpid()}_{next(_ANN_IDX_SEQ)}"
         path = tempfile.mkdtemp(prefix="sim_ann_idx_")
         idx = build_ann_index(emb, "embedding", "vec_id", name, path, n_lists=16)
@@ -2257,7 +2244,7 @@ def q_sim_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _drop_shared_ann_indexes(spark)
     idx = _shared_ann_index(spark, sf_dir)
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = _spread_scan(_t(spark, sf_dir, "embeddings"))
     queries = emb.where(F.col("vec_id") % 50 == 0)
     out = ann_index_topk(spark, queries, idx, k=5, n_probes=16)
     return out.select(
@@ -2279,7 +2266,7 @@ def q_sim_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import ann_index_topk
 
     idx = _shared_ann_index(spark, sf_dir)
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = _spread_scan(_t(spark, sf_dir, "embeddings"))
     queries = emb.where(F.col("vec_id") % 50 == 0)
     out = ann_index_topk(spark, queries, idx, k=5, n_probes=16)
     return out.select(
@@ -2307,7 +2294,7 @@ def q_sim_index_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import ann_recall_certificate
 
     idx = _shared_ann_index(spark, sf_dir)
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = _spread_scan(_t(spark, sf_dir, "embeddings"))
     # denser query set than sim_index_topk's (the corpus is small at
     # test SFs): 50 queries at sf0.01 gives the certificate real
     # resolution on min_recall
@@ -2323,7 +2310,7 @@ def q_doc_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact form (the HLL approx form is the documented scale path)."""
     from .data_pipeline import dataset_card
 
-    return dataset_card(_t(spark, sf_dir, "documents"))
+    return dataset_card(_spread_scan(_t(spark, sf_dir, "documents")))
 
 
 # previous generation of the CDC snapshot dir (r14), cleaned on next
@@ -2354,7 +2341,7 @@ def q_doc_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(_SNAP_LAST.pop(), ignore_errors=True)
     path = tempfile.mkdtemp(prefix="doc_forget_snap_")
     _SNAP_LAST.append(path)
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
+    docs = _spread_scan(_t(spark, sf_dir, "documents")).select("doc_id", "source", "n_chars")
     seed = docs.withColumn("op", F.lit("upsert"))
     apply_cdc_batch_into_bucketed_snapshot(
         spark, seed, path, ["doc_id"], batch_id=0, n_buckets=16
@@ -2414,7 +2401,7 @@ def q_doc_snapshot_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(_SNAP_LAST.pop(), ignore_errors=True)
     path = tempfile.mkdtemp(prefix="doc_tt_snap_")
     _SNAP_LAST.append(path)
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
+    docs = _spread_scan(_t(spark, sf_dir, "documents")).select("doc_id", "source", "n_chars")
     upsert_batch_into_bucketed_snapshot(
         spark, docs, path, ["doc_id"], batch_id=0, n_buckets=16
     )
@@ -2478,7 +2465,7 @@ def q_doc_snapshot_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(_SNAP_LAST.pop(), ignore_errors=True)
     path = tempfile.mkdtemp(prefix="doc_rebucket_snap_")
     _SNAP_LAST.append(path)
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
+    docs = _spread_scan(_t(spark, sf_dir, "documents")).select("doc_id", "source", "n_chars")
     upsert_batch_into_bucketed_snapshot(
         spark, docs, path, ["doc_id"], batch_id=0, n_buckets=4
     )
@@ -2548,7 +2535,7 @@ def q_doc_snapshot_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(_SNAP_LAST.pop(), ignore_errors=True)
     path = tempfile.mkdtemp(prefix="doc_evolve_snap_")
     _SNAP_LAST.append(path)
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
+    docs = _spread_scan(_t(spark, sf_dir, "documents")).select("doc_id", "source", "n_chars")
     upsert_batch_into_bucketed_snapshot(
         spark, docs, path, ["doc_id"], batch_id=0, n_buckets=8
     )

@@ -4,7 +4,6 @@ from .readers import (  # noqa: F401
     read_parquet_table,
     rename_by_position,
 )
-from .tables import TESTDATA_TABLES, load_table, register_views  # noqa: F401
 from .writers import (  # noqa: F401
     write_parquet,
     write_csv,

@@ -48,7 +48,7 @@ def start_ann_probe_sink(
     failure between the write and the checkpoint commit makes the
     replayed batch REWRITE its partition instead of appending duplicate
     top-k rows (the same exactly-once-output contract as
-    :func:`~.sinks.start_upsert_sink`).
+    :func:`~.sinks.start_bucketed_upsert_sink`).
 
     Growth contract (r14 verdict item 5): by default the result archive
     keeps every ``batch_id=N`` partition — an archive by design, whose

@@ -170,7 +170,10 @@ class PosixSnapshotStore(SnapshotStore):
             with open(path) as f:
                 text = f.read()
                 st = os.fstat(f.fileno())
-        except FileNotFoundError:
+        except (FileNotFoundError, IsADirectoryError):
+            # a directory is data, not a text object: "no object", as on
+            # an object store (a CURRENT naming a version dir must read
+            # as a missing manifest, not raise a bare OS error)
             return None
         # posix has no server-side generation: the token is (inode,
         # mtime_ns, content) of the open file — fstat on the read fd, so

@@ -2,16 +2,16 @@
 commit units' damage-matrix errors point at but (pre-r16) left manual.
 
 Every refuse-loudly path in :mod:`.sinks` ends with an instruction like
-"restore CURRENT to the newest complete version/manifest".  Doing that
+"restore CURRENT to the newest complete manifest".  Doing that
 by hand means listing the store, parsing manifests, checking every
 referenced bucket dir exists, and writing the pointer — each step an
 opportunity to restore to an INCOMPLETE generation (a pre-flip crash
 leftover), which would surface later as missing rows.  This module is
 that workflow as code:
 
-- :func:`snapshot_lineage` — read-only report: layout, pointer state,
-  every generation on disk with a completeness verdict, and the newest
-  COMPLETE generation (the only safe restore target).
+- :func:`snapshot_lineage` — read-only report: pointer state, every
+  generation (manifest) on disk with a completeness verdict, and the
+  newest COMPLETE generation (the only safe restore target).
 - :func:`restore_current` — write the pointer back, with the guardrails
   the by-hand workflow lacks: refuses when CURRENT is already healthy
   (unless ``force=True`` — rolling back a healthy snapshot is a
@@ -20,11 +20,11 @@ that workflow as code:
   racing the recovery loses loudly (the exact ABA window the r16
   posix token hardening closes).
 
-Completeness is defined by what readers need, per layout:
-
-- bucketed: the manifest parses AND every referenced bucket dir exists
-  (an empty bucket map is complete — a fully-tombstoned snapshot);
-- full-rewrite: the version dir exists with data.
+Completeness is defined by what readers need: the manifest parses AND
+every referenced bucket dir exists (an empty bucket map is complete — a
+fully-tombstoned snapshot).  Only manifests are generations: a version
+dir without one is never a restore target, since CURRENT must name a
+manifest for any reader or commit to load it.
 
 The reference has no snapshot machinery at all (one-shot writes —
 integrative_omics/gizmos.py); north-star operational surface.
@@ -34,8 +34,8 @@ from __future__ import annotations
 
 import json
 
-from .commitstore import ABSENT, SnapshotStore, as_store
-from .sinks import _MANIFEST_PREFIX, _batch_digits, _pointer
+from .commitstore import SnapshotStore, as_store
+from .sinks import _CURRENT, _MANIFEST_PREFIX, _batch_digits, _pointer
 
 
 def _manifest_complete(store: SnapshotStore, name: str) -> "tuple[bool, str]":
@@ -66,11 +66,12 @@ def snapshot_lineage(snapshot_dir: "str | SnapshotStore") -> dict:
     Returns ``{"layout", "current", "current_complete", "generations":
     [{"name", "batch_id", "complete", "detail"}...] (newest first),
     "newest_complete"}``.  ``layout`` is ``"bucketed"`` when manifests
-    exist, ``"full"`` when only version dirs do, ``"empty"`` when
-    neither.  Never writes; safe on a live snapshot (a racing commit
-    may add a generation mid-listing — the report is a snapshot in
-    time, which is all an operator diagnosing a damaged pointer
-    needs)."""
+    or version dirs exist, ``"empty"`` when neither does; version dirs
+    whose manifests are all lost report ``"bucketed"`` with no
+    generation, so nothing is restorable.  Never writes; safe on a live
+    snapshot (a racing commit may add a generation mid-listing — the
+    report is a snapshot in time, which is all an operator diagnosing a
+    damaged pointer needs)."""
     store = as_store(snapshot_dir)
     names = store.list_names()
     manifests = sorted(
@@ -82,79 +83,26 @@ def snapshot_lineage(snapshot_dir: "str | SnapshotStore") -> dict:
     )
     cur, _ = _pointer(store)
     gens: "list[dict]" = []
-    if manifests:
-        layout = "bucketed"
-        for name in manifests:
-            ok, detail = _manifest_complete(store, name)
-            gens.append(
-                {
-                    "name": name,
-                    "batch_id": _batch_digits(name),
-                    "complete": ok,
-                    "detail": detail,
-                }
-            )
-    else:
-        # versions listed only on the non-bucketed path — on an object
-        # store every exists_prefix is a LIST round-trip, wasted when
-        # manifests already decided the layout (r16 review finding)
-        versions = sorted(
-            (n for n in names if n.startswith("v") and store.exists_prefix(n)),
-            reverse=True,
+    for name in manifests:
+        ok, detail = _manifest_complete(store, name)
+        gens.append(
+            {
+                "name": name,
+                "batch_id": _batch_digits(name),
+                "complete": ok,
+                "detail": detail,
+            }
         )
-        if not versions:
-            layout = "empty"
-        else:
-            for name in versions:
-                # a version dir can be a pre-flip crash's PARTIAL write;
-                # Spark's _SUCCESS marker (written at job completion, on
-                # by default) is the completeness signal a dir-exists
-                # check lacks.  (A deployment that disabled the marker
-                # reads as incomplete here — restore with an explicit
-                # name after verifying by hand, or re-enable the marker.)
-                children = store.list_names(name)
-                bucketed_data = any(c.startswith("__bucket=") for c in children)
-                if bucketed_data:
-                    # __bucket= children mean this snapshot was BUCKETED
-                    # and every manifest was lost: the version dir alone
-                    # is NOT restorable — CURRENT must name a manifest,
-                    # and pointing it at a dir would leave readers with
-                    # "manifest is missing" (r16 review finding: this
-                    # state previously misclassified as a healthy full
-                    # layout and 'restored' to an unusable pointer)
-                    ok, detail = False, (
-                        "bucket-partitioned version dir whose m*.json "
-                        "manifests are all missing — a bucketed snapshot "
-                        "cannot be restored without a manifest; "
-                        "reconstruct one from the bucket map or re-seed"
-                    )
-                else:
-                    ok = "_SUCCESS" in children
-                    detail = (
-                        "version dir with _SUCCESS marker"
-                        if ok
-                        else "version dir without _SUCCESS marker "
-                        "(partial write, or markers disabled)"
-                    )
-                gens.append(
-                    {
-                        "name": name,
-                        "batch_id": _batch_digits(name),
-                        "complete": ok,
-                        "detail": detail,
-                    }
-                )
-            layout = (
-                "bucketed"
-                if any("bucket-partitioned" in g["detail"] for g in gens)
-                else "full"
-            )
+    # version dirs are probed only when no manifest decided the layout —
+    # on an object store every exists_prefix is a LIST round-trip
+    on_disk = bool(manifests) or any(
+        n.startswith("v") and store.exists_prefix(n) for n in names
+    )
     complete_names = [g["name"] for g in gens if g["complete"]]
-    cur_complete = cur in complete_names if cur is not None else False
     return {
-        "layout": layout,
+        "layout": "bucketed" if on_disk else "empty",
         "current": cur,
-        "current_complete": cur_complete,
+        "current_complete": cur in complete_names,
         "generations": gens,
         "newest_complete": complete_names[0] if complete_names else None,
     }
@@ -166,9 +114,9 @@ def restore_current(
     force: bool = False,
 ) -> str:
     """Repoint CURRENT at a COMPLETE generation — the recovery step the
-    commit units' "restore CURRENT to the newest complete
-    version/manifest" errors instruct.  ``name=None`` targets the
-    newest complete generation; an explicit ``name`` must itself be
+    commit units' "restore CURRENT to the newest complete manifest"
+    errors instruct.  ``name=None`` targets the newest complete
+    generation; an explicit ``name`` must itself be
     complete (restoring to a pre-flip crash leftover would read back
     partial data — refused).  When CURRENT already names a complete
     generation the snapshot is NOT damaged and the restore is refused
@@ -196,7 +144,7 @@ def restore_current(
     if target is None:
         raise RuntimeError(
             f"no COMPLETE generation under {store.describe()!r} to restore "
-            f"to — every candidate is damaged: {report['generations']}"
+            f"to — every manifest is damaged or missing: {report['generations']}"
         )
     verdicts = {g["name"]: g for g in report["generations"]}
     if target not in verdicts:
@@ -212,11 +160,10 @@ def restore_current(
             "would read back partial data; pick a complete generation "
             "from snapshot_lineage()"
         )
-    got = store.get_text("CURRENT")
     # missing pointer → create-only (a pointer created meanwhile means
     # a live writer; overwriting it would drop that commit — lose
     # loudly instead); damaged-but-present pointer → conditional
     # replace on the generation just read, same reasoning
-    expect = got[1] if got is not None else ABSENT
-    store.put_text("CURRENT", target, expect=expect)
+    _, expect = _pointer(store)
+    store.put_text(_CURRENT, target, expect=expect)
     return target

@@ -1,7 +1,7 @@
 """Streaming sinks: the write-side conventions the streaming entry
 points leave to callers (north-star surface; the reference is strictly
-batch — its sinks are plain CSV/SQLite writes,
-/root/reference/integrative_omics/gizmos.py's to_csv/to_sql call sites).
+batch — its sinks are plain CSV/SQLite writes, the to_csv/to_sql call
+sites in integrative_omics/gizmos.py).
 
 Two production shapes:
 
@@ -10,53 +10,51 @@ Two production shapes:
   batch recount/verify job in this engine (the Lambda split the
   heavy-hitter and dedup docstrings describe needs the archived feed).
 
-- :func:`start_upsert_sink` — streaming MERGE: each micro-batch upserts
-  into a parquet SNAPSHOT via ``operators.joins.upsert_snapshot``
-  (anti-join + union — no Delta/Iceberg machinery).  The snapshot is a
-  VERSIONED directory with an atomically swapped ``CURRENT`` pointer
-  (the manifest pattern): each batch writes a full new version dir,
-  then one conditional pointer put flips it live.  Crash-safe at every
-  boundary — a crash before the flip leaves ``CURRENT`` on the previous
-  complete version, and Structured Streaming's replay of the
-  uncommitted batch re-derives the same next version from it (upsert of
-  the same rows is idempotent per key); a replayed ALREADY-committed
-  batch merges its rows into a snapshot that already contains them —
-  also a no-op.  Readers resolve through :func:`read_snapshot` and only
-  ever see a complete version.  (A naive rename-the-live-dir-aside swap
-  has a crash window in which the whole snapshot silently disappears —
-  found in review and replaced by this layout.)
+- :func:`start_bucketed_upsert_sink` — streaming MERGE: each micro-batch
+  upserts into a versioned parquet SNAPSHOT with the semantics of
+  ``operators.joins.upsert_snapshot`` (anti-join + union — no
+  Delta/Iceberg machinery).  The snapshot has ONE layout: version dirs
+  ``v{batch}/__bucket=B/`` partitioned by key-hash bucket, a manifest
+  ``m{batch}.json`` mapping every bucket to the version dir holding
+  it, and an atomically swapped ``CURRENT`` pointer naming the live
+  manifest.  A batch rewrites ONLY the buckets it touches; untouched
+  buckets carry by reference, so per-commit cost is O(touched-bucket
+  data + batch), never O(snapshot) (SCALE.md r14, "Bucketed upsert
+  snapshot": bytes written per commit are ~touched/n_buckets of the
+  snapshot at every scale, ~25× less with 2/64 buckets touched).
+  Crash-safe at every boundary — a crash before the pointer flip
+  leaves ``CURRENT`` on the previous complete manifest, and Structured
+  Streaming's replay of the uncommitted batch re-derives the same next
+  version from it; a replayed ALREADY-committed batch is a no-op.
+  Readers resolve through :func:`read_bucketed_snapshot` and only ever
+  see a complete manifest.  The newest ``keep_versions`` manifests are
+  retained per flip so in-flight readers of a superseded generation
+  finish their scan; older generations are pruned.
 
-Scale shape: the upsert's anti-join builds from the micro-batch (small
-side) so the snapshot is scanned, never shuffled; snapshot rewrite cost
-is O(snapshot + batch) per trigger for the full-rewrite form — the
-correct small/medium shape.  The 100 TB shape is
-:func:`start_bucketed_upsert_sink` (r13 verdict item 2): version dirs
-partitioned by key-hash bucket, a batch rewrites ONLY the buckets it
-touches, untouched buckets carry by reference through an atomically
-swapped manifest — per-commit cost is O(touched-bucket data + batch),
-never O(snapshot) (probe_r14_bucketedupsert16x.py: bytes written per
-commit are ~touched/n_buckets of the snapshot at every scale, ~25× less
-with 2/64 buckets touched).  Identical MERGE semantics, parity-tested.
-One previous version/manifest is retained per flip so in-flight readers
-of the superseded generation finish their scan; older generations are
-pruned.
+``n_buckets=1`` is the whole-snapshot-rewrite shape: one bucket and one
+file per commit, plus a manifest put.  It is the cheaper choice when
+every commit touches every bucket (SCALE.md r15, "CDC worst case
+measured": at touched fraction 1.0 the bucketed layout writes
+1.24–1.43× the bytes of a whole rewrite; crossover near 0.75).  The
+manifest pins ``n_buckets``, the key schema and the row schema;
+:func:`rebucket_bucketed_snapshot` is the one sanctioned way to change
+them.
 
-CDC apply (r14): :func:`start_cdc_sink` extends both layouts with
-DELETE tombstones — each micro-batch carries an op column of
-``upsert``/``delete`` rows and commits both in one version flip (one
-anti-join drops replaced AND deleted rows, upserts union back: the same
-single-shuffle bound as plain MERGE).  This is the right-to-be-forgotten
-half a training-data snapshot needs; same-key mixed ops within one
-unordered micro-batch are refused loudly rather than applied in an
-undefined order.
+CDC apply (r14): :func:`start_cdc_sink` adds DELETE tombstones — each
+micro-batch carries an op column of ``upsert``/``delete`` rows and
+commits both in one manifest flip (one anti-join drops replaced AND
+deleted rows, upserts union back: the same single-shuffle bound as
+plain MERGE).  This is the right-to-be-forgotten half a training-data
+snapshot needs; same-key mixed ops within one unordered micro-batch are
+refused loudly rather than applied in an undefined order.
 
 Deployment shape (r15, r14 verdict item 2): every driver-side metadata
 operation — pointer read/flip, manifest put, listing, pruning — goes
 through the :class:`~.commitstore.SnapshotStore` commit primitive.
 Every ``snapshot_dir`` parameter below accepts either a plain path
 (driver-local / shared-posix, the :class:`~.commitstore.PosixSnapshotStore`
-shape — exactly the pre-r15 on-disk layout, so existing snapshots read
-back unchanged) or a ``SnapshotStore`` instance; an S3/GCS deployment
+shape — the layout above as plain files and dirs) or a
+``SnapshotStore`` instance; an S3/GCS deployment
 implements the store against the service's conditional-put API (the
 shipped :class:`~.commitstore.InMemoryObjectStore` is the executable
 contract, and the whole sink battery runs against it in tests).  The
@@ -74,7 +72,6 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.joins import upsert_snapshot
 from .commitstore import (
     ABSENT,
     ANY,
@@ -138,58 +135,6 @@ def _check_keep_versions(keep_versions: int) -> int:
             "the just-superseded one can finish its scan"
         )
     return kv
-
-
-def read_snapshot(
-    spark: SparkSession,
-    snapshot_dir: "str | SnapshotStore",
-    version: "str | None" = None,
-) -> DataFrame:
-    """Resolve the snapshot's CURRENT pointer and read that version —
-    the reader half of :func:`start_upsert_sink`'s manifest contract.
-
-    ``version`` (e.g. ``"v000000000003"``) time-travels to a RETAINED
-    previous version instead — the audit/debug read over the
-    ``keep_versions`` horizon; a pruned or never-committed version
-    raises FileNotFoundError rather than returning an empty relation.
-    A version NEWER than the committed CURRENT also raises (r14
-    ADVICE): on-disk existence alone would let a pre-flip crash
-    leftover read back as committed data.  Exception — RECOVERY MODE:
-    when CURRENT itself is missing/damaged (the state the commit units
-    refuse with "restore CURRENT to the newest complete version"), an
-    EXPLICIT ``version`` still reads if its data exists, because that
-    inspection is exactly how an operator finds the version to restore;
-    with no pointer there is no committed horizon to validate against,
-    and the caller named the version deliberately."""
-    store = as_store(snapshot_dir)
-    cur, _ = _pointer(store)
-    if cur is None:
-        if version is not None and store.exists_prefix(version):
-            return spark.read.parquet(store.spark_path(version))
-        raise FileNotFoundError(
-            f"no CURRENT snapshot version under {store.describe()!r} "
-            + (
-                f"and version {version!r} is not on disk"
-                if version is not None
-                else "(no batch committed yet?)"
-            )
-        )
-    if version is not None:
-        vid, cid = _batch_digits(version), _batch_digits(cur)
-        if vid is not None and cid is not None and vid > cid:
-            raise FileNotFoundError(
-                f"snapshot version {version!r} is newer than the "
-                f"committed CURRENT ({cur}) under {store.describe()!r} — "
-                "a pre-flip crash leftover or never-committed version, "
-                "not committed data"
-            )
-        if not store.exists_prefix(version):
-            raise FileNotFoundError(
-                f"snapshot version {version!r} not on disk under "
-                f"{store.describe()!r} — pruned past keep_versions, or "
-                "never committed"
-            )
-    return spark.read.parquet(store.spark_path(version or cur))
 
 
 def start_parquet_append_sink(
@@ -304,48 +249,6 @@ def start_bounded_parquet_archive_sink(
     return writer.start()
 
 
-def start_upsert_sink(
-    stream: DataFrame,
-    snapshot_dir: "str | SnapshotStore",
-    checkpoint_dir: str,
-    key_cols: "list[str]",
-    trigger_once: bool = False,
-    keep_versions: int = 2,
-) -> StreamingQuery:
-    """Streaming MERGE into a versioned parquet snapshot: per
-    micro-batch, rows replace same-key snapshot rows, new keys insert,
-    untouched rows carry (``upsert_snapshot`` semantics).  The batch is
-    deduped to one row per key first (which duplicate survives is
-    arbitrary under micro-batch semantics — feed a deterministic update
-    stream, or pre-aggregate, when per-key ordering matters).
-
-    Consumers read via :func:`read_snapshot`; the newest
-    ``keep_versions`` (minimum 2) version dirs are retained per flip,
-    so a reader's lazy scan survives ``keep_versions - 1`` further
-    commits — raise it for long-running readers over a fast-flipping
-    snapshot.  See the module docstring for the pointer-swap
-    crash-safety argument; ``upsert_batch_into_snapshot`` is the
-    per-batch unit (exposed for direct use and tests)."""
-    spark = stream.sparkSession
-    store = as_store(snapshot_dir)  # fail fast at sink creation
-    _check_keep_versions(keep_versions)
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_batch_into_snapshot(
-            spark, batch_df, store, key_cols, batch_id,
-            keep_versions=keep_versions,
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def _refuse_stale_batch(
     cur_name: "str | None", batch_id: int, store: SnapshotStore
 ) -> None:
@@ -368,88 +271,12 @@ def _refuse_stale_batch(
         )
 
 
-def _prune_versions(store: SnapshotStore, keep_versions: int) -> None:
-    """Retention for the full-rewrite layout: the newest keep_versions
-    version dirs stay (an in-flight reader survives keep_versions - 1
-    further flips)."""
-    versions = sorted(
-        (
-            n for n in store.list_names()
-            if n.startswith("v") and store.exists_prefix(n)
-        ),
-        reverse=True,
-    )
-    for name in versions[_check_keep_versions(keep_versions):]:
-        store.delete_prefix(name)
-
-
-def upsert_batch_into_snapshot(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    snapshot_dir: "str | SnapshotStore",
-    key_cols: "list[str]",
-    batch_id: int,
-    keep_versions: int = 2,
-) -> None:
-    """One MERGE commit: read CURRENT, upsert the batch, write the next
-    version dir, conditionally flip the pointer, prune old versions.
-
-    Replay/crash matrix (version name is a pure function of batch_id):
-
-    - CURRENT already names this batch's version → the flip committed
-      before the crash; the replay is a NO-OP (reading + overwriting the
-      same dir would otherwise wedge the stream on a self-overwrite).
-    - version dir exists but CURRENT doesn't name it → pre-flip crash
-      leftover; mode("overwrite") rewrites it from the still-current
-      base.
-    - CURRENT missing/empty while OTHER version dirs exist → a damaged
-      pointer (the one state that must not be silently treated as an
-      empty snapshot: merging this batch alone and pruning would destroy
-      the accumulated state) → raise for operator intervention.
-
-    The pointer flip goes through the store's conditional put,
-    conditioned on the generation read at the start of this commit —
-    durable on posix (fsync-chained), race-free on object stores."""
-    store = as_store(snapshot_dir)
-    _check_keep_versions(keep_versions)  # before any write, not at prune
-    new_version = f"v{int(batch_id):012d}"
-    cur, cur_token = _pointer(store)
-    if cur == new_version:
-        # replayed already-committed batch: flip already happened; re-run
-        # retention in case the crash landed mid-prune (idempotent)
-        _prune_versions(store, keep_versions)
-        return
-    _refuse_stale_batch(cur, batch_id, store)
-    if cur is None:
-        others = [
-            n for n in store.list_names()
-            if n.startswith("v") and n != new_version
-            and store.exists_prefix(n)
-        ]
-        if others:
-            raise RuntimeError(
-                f"snapshot at {store.describe()!r} has version dirs "
-                f"{others} but no CURRENT pointer — refusing to reset the "
-                "snapshot to a single batch; restore CURRENT to the "
-                "newest complete version"
-            )
-    batch = batch_df.dropDuplicates(key_cols)
-    if cur is not None:
-        target = spark.read.parquet(store.spark_path(cur))
-        merged = upsert_snapshot(target, batch, key_cols)
-    else:
-        merged = batch
-    merged.write.mode("overwrite").parquet(store.spark_path(new_version))
-    _flip_current(store, new_version, cur_token)
-    _prune_versions(store, keep_versions)
-
-
 # ---------------------------------------------------------------------------
-# Bucketed upsert snapshot (r13 verdict item 2): the 100 TB shape the
-# full-rewrite sink's docstring promises.  Version dirs are partitioned
-# by key-hash bucket and a batch rewrites ONLY the buckets it touches;
-# untouched buckets carry by reference through a manifest, so per-batch
-# rewrite cost is O(touched-bucket data + batch), never O(snapshot).
+# Bucketed upsert snapshot (r13 verdict item 2), the one snapshot layout.
+# Version dirs are partitioned by key-hash bucket and a batch rewrites
+# ONLY the buckets it touches; untouched buckets carry by reference
+# through a manifest, so per-batch rewrite cost is O(touched-bucket
+# data + batch), never O(snapshot).
 # ---------------------------------------------------------------------------
 
 
@@ -485,9 +312,9 @@ def read_bucketed_snapshot(
     store = as_store(snapshot_dir)
     cur_name, _ = _pointer(store)
     if cur_name is None:
-        # RECOVERY MODE (mirrors read_snapshot): with a damaged/missing
-        # pointer an EXPLICIT manifest still reads if it exists — the
-        # operator inspecting retained manifests to restore CURRENT
+        # RECOVERY MODE: with a damaged/missing pointer an EXPLICIT
+        # manifest still reads if it exists — the operator inspecting
+        # retained manifests to restore CURRENT
         if manifest is not None:
             man = _load_manifest(store, manifest)
             if man is None:
@@ -526,8 +353,9 @@ def read_bucketed_snapshot(
         man = _load_manifest(store, cur_name)
         if man is None:
             raise FileNotFoundError(
-                f"no CURRENT manifest under {store.describe()!r} "
-                "(no batch committed yet?)"
+                f"bucketed snapshot at {store.describe()!r}: CURRENT names "
+                f"{cur_name!r} but that manifest is missing — damaged "
+                "snapshot; restore the manifest or repoint CURRENT"
             )
     paths = sorted({p for p in man["buckets"].values()})
     if not paths:
@@ -544,30 +372,20 @@ def read_bucketed_snapshot(
     return spark.read.parquet(*[store.spark_path(p) for p in paths])
 
 
-def start_bucketed_upsert_sink(
-    stream: DataFrame,
-    snapshot_dir: "str | SnapshotStore",
-    checkpoint_dir: str,
-    key_cols: "list[str]",
-    n_buckets: int = 16,
-    trigger_once: bool = False,
-    keep_versions: int = 2,
+def _start_snapshot_sink(
+    stream, commit, snapshot_dir, checkpoint_dir, key_cols, trigger_once,
+    **commit_kwargs,
 ) -> StreamingQuery:
-    """:func:`start_upsert_sink` with bucketed version dirs — identical
-    MERGE semantics (parity-tested), different layout: each micro-batch
-    rewrites only the key-hash buckets it touches.  Size ``n_buckets``
-    so one bucket's data fits a comfortable rewrite unit (O(100 MB–1 GB)
-    at scale — the dedup-index guidance); the bucket count is fixed at
-    snapshot creation and enforced on every later commit."""
+    """The streaming wrapper both snapshot sinks share: validate the
+    store and the retention floor at sink creation, then run one
+    ``commit`` unit per micro-batch (the unit's replay contract makes
+    the sink exactly-once)."""
     spark = stream.sparkSession
     store = as_store(snapshot_dir)  # fail fast at sink creation
-    _check_keep_versions(keep_versions)
+    _check_keep_versions(commit_kwargs["keep_versions"])
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_batch_into_bucketed_snapshot(
-            spark, batch_df, store, key_cols, batch_id,
-            n_buckets=n_buckets, keep_versions=keep_versions,
-        )
+        commit(spark, batch_df, store, key_cols, batch_id, **commit_kwargs)
 
     writer = (
         stream.writeStream.foreachBatch(merge_batch)
@@ -577,6 +395,41 @@ def start_bucketed_upsert_sink(
     if trigger_once:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def start_bucketed_upsert_sink(
+    stream: DataFrame,
+    snapshot_dir: "str | SnapshotStore",
+    checkpoint_dir: str,
+    key_cols: "list[str]",
+    n_buckets: int = 16,
+    trigger_once: bool = False,
+    keep_versions: int = 2,
+) -> StreamingQuery:
+    """Streaming MERGE into the bucketed snapshot: per micro-batch,
+    rows replace same-key snapshot rows, new keys insert, untouched
+    rows carry (``operators.joins.upsert_snapshot`` semantics,
+    parity-tested).  The batch is deduped to one row per key first
+    (which duplicate survives is arbitrary under micro-batch semantics
+    — feed a deterministic update stream, or pre-aggregate, when
+    per-key ordering matters).  Each micro-batch rewrites only the
+    key-hash buckets it touches.  Size ``n_buckets`` so one bucket's
+    data fits a comfortable rewrite unit (O(100 MB–1 GB) at scale — the
+    dedup-index guidance), or pass 1 when every batch touches most of
+    the snapshot; the bucket count is fixed at snapshot creation and
+    enforced on every later commit.
+
+    Consumers read via :func:`read_bucketed_snapshot`; the newest
+    ``keep_versions`` (minimum 2) manifests are retained per flip, so a
+    reader's lazy scan survives ``keep_versions - 1`` further commits —
+    raise it for long-running readers over a fast-flipping snapshot.
+    :func:`upsert_batch_into_bucketed_snapshot` is the per-batch unit
+    (exposed for direct use and tests)."""
+    return _start_snapshot_sink(
+        stream, upsert_batch_into_bucketed_snapshot, snapshot_dir,
+        checkpoint_dir, key_cols, trigger_once,
+        n_buckets=n_buckets, keep_versions=keep_versions,
+    )
 
 
 def upsert_batch_into_bucketed_snapshot(
@@ -596,7 +449,7 @@ def upsert_batch_into_bucketed_snapshot(
     bucket's existing dir by reference.
 
     Crash/replay matrix (manifest + version names are pure functions of
-    batch_id — same argument as :func:`upsert_batch_into_snapshot`):
+    batch_id, so a replay re-derives the same commit):
 
     - CURRENT names this batch's manifest → committed; replay NO-OPs.
     - version dir / manifest file exist but CURRENT wasn't flipped →
@@ -1090,61 +943,6 @@ def _split_cdc(batch_df: DataFrame, key_cols: "list[str]", op_col: str):
     return upserts, deletes
 
 
-def apply_cdc_batch_into_snapshot(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    snapshot_dir: "str | SnapshotStore",
-    key_cols: "list[str]",
-    batch_id: int,
-    op_col: str = "op",
-    keep_versions: int = 2,
-) -> None:
-    """One CDC commit into the full-rewrite snapshot: delete-key rows
-    vanish, upsert rows replace/insert, untouched rows carry.  Exactly
-    :func:`upsert_batch_into_snapshot`'s commit/replay/crash contract
-    (a CDC batch with no deletes is bit-identical to an upsert batch);
-    deleting an absent key is a no-op by anti-join semantics."""
-    store = as_store(snapshot_dir)
-    _check_keep_versions(keep_versions)  # before any write, not at prune
-    new_version = f"v{int(batch_id):012d}"
-    cur, cur_token = _pointer(store)
-    if cur == new_version:
-        # replayed already-committed batch: no-op merge, but re-run
-        # retention in case the crash landed mid-prune (idempotent)
-        _prune_versions(store, keep_versions)
-        return
-    _refuse_stale_batch(cur, batch_id, store)
-    if cur is None:
-        others = [
-            n for n in store.list_names()
-            if n.startswith("v") and n != new_version
-            and store.exists_prefix(n)
-        ]
-        if others:
-            raise RuntimeError(
-                f"snapshot at {store.describe()!r} has version dirs "
-                f"{others} but no CURRENT pointer — refusing to reset the "
-                "snapshot; restore CURRENT to the newest complete version"
-            )
-    upserts, deletes = _split_cdc(batch_df, key_cols, op_col)
-    if cur is not None:
-        target = spark.read.parquet(store.spark_path(cur))
-        # one anti-join drops BOTH delete targets and to-be-replaced
-        # rows (delete keys ∪ upsert keys), then upserts union back —
-        # the same single-shuffle bound as the plain MERGE
-        all_keys = deletes.unionByName(
-            upserts.select(*key_cols)
-        ).dropDuplicates(key_cols)
-        merged = target.join(all_keys, key_cols, "left_anti").unionByName(
-            upserts
-        )
-    else:
-        merged = upserts
-    merged.write.mode("overwrite").parquet(store.spark_path(new_version))
-    _flip_current(store, new_version, cur_token)
-    _prune_versions(store, keep_versions)
-
-
 def apply_cdc_batch_into_bucketed_snapshot(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -1175,41 +973,20 @@ def start_cdc_sink(
     checkpoint_dir: str,
     key_cols: "list[str]",
     op_col: str = "op",
-    n_buckets: "int | None" = None,
+    n_buckets: int = 16,
     trigger_once: bool = False,
     keep_versions: int = 2,
 ) -> StreamingQuery:
     """Streaming CDC apply: each micro-batch carries an ``op_col`` of
-    ``upsert``/``delete`` rows and commits both in ONE version flip —
+    ``upsert``/``delete`` rows and commits both in ONE manifest flip —
     the tombstone half (right-to-be-forgotten removals, retraction
-    feeds) that plain MERGE-upsert can't express.  ``n_buckets=None``
-    uses the full-rewrite layout (read via :func:`read_snapshot`);
-    an int uses the bucketed layout (read via
-    :func:`read_bucketed_snapshot`).  Idempotent under replay exactly
-    like the upsert sinks: version/manifest names are pure functions of
+    feeds) that plain MERGE-upsert can't express.  Read the result via
+    :func:`read_bucketed_snapshot`.  Idempotent under replay exactly
+    like the upsert sink: version/manifest names are pure functions of
     batch_id."""
-    spark = stream.sparkSession
-    store = as_store(snapshot_dir)  # fail fast at sink creation
-    _check_keep_versions(keep_versions)
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if n_buckets is None:
-            apply_cdc_batch_into_snapshot(
-                spark, batch_df, store, key_cols, batch_id,
-                op_col=op_col, keep_versions=keep_versions,
-            )
-        else:
-            apply_cdc_batch_into_bucketed_snapshot(
-                spark, batch_df, store, key_cols, batch_id,
-                op_col=op_col, n_buckets=int(n_buckets),
-                keep_versions=keep_versions,
-            )
-
-    writer = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_snapshot_sink(
+        stream, apply_cdc_batch_into_bucketed_snapshot, snapshot_dir,
+        checkpoint_dir, key_cols, trigger_once, op_col=op_col,
+        # fail fast at sink creation: every snapshot needs a bucket count
+        n_buckets=int(n_buckets), keep_versions=keep_versions,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -135,8 +135,8 @@ def main() -> None:
                 ),
             }
             # (c) post-evolution MERGE stays O(touched buckets): the
-            # wave is confined to 2 of the 16 buckets (same probe shape
-            # as probe_r14_bucketedupsert16x), so its bytes must track
+            # wave is confined to 2 of the 16 buckets (the probe shape of
+            # SCALE.md's r14 bucketed-upsert entry), so its bytes must track
             # ~2/16 of the snapshot, not the snapshot
             upd2 = (
                 seed.where(

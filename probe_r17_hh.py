@@ -23,7 +23,7 @@ from omics_data_integration_utilities_spark.operators.text import (  # noqa: E40
     tokens_col,
     word_ngrams_col,
 )
-from omics_data_integration_utilities_spark.plans.registry_docs import _t  # noqa: E402
+from omics_data_integration_utilities_spark.plans.registry import _spread_scan, _t  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CAPACITY = 16384
@@ -38,7 +38,7 @@ def main() -> None:
     ).groupBy("b").agg({"id": "sum"}).count()
     print(f"calibration: {time.perf_counter() - t0:.3f}s loadavg={os.getloadavg()[0]:.1f}")
 
-    docs = _t(spark, SF_DIR, "documents")
+    docs = _spread_scan(_t(spark, SF_DIR, "documents"))
     grams = docs.select(F.explode(word_ngrams_col(tokens_col("text"), 3)).alias("ngram"))
     items = grams.select("ngram").where(F.col("ngram").isNotNull())
     n_grams = items.count()

@@ -34,7 +34,7 @@ def main() -> None:
     ).groupBy("b").agg({"id": "sum"}).count()
     print(f"calibration: {time.perf_counter() - t0:.3f}s loadavg={os.getloadavg()[0]:.1f}")
 
-    from omics_data_integration_utilities_spark.plans.registry_docs import _t
+    from omics_data_integration_utilities_spark.plans.registry import _spread_scan, _t
 
     reps = 4
     phases: dict[str, list[float]] = {}
@@ -44,7 +44,7 @@ def main() -> None:
         return time.perf_counter()
 
     for rep in range(reps):
-        emb = _t(spark, SF_DIR, "embeddings")
+        emb = _spread_scan(_t(spark, SF_DIR, "embeddings"))
         path = tempfile.mkdtemp(prefix=f"r17prof_{rep}_")
         name = f"r17prof_{rep}"
         t = time.perf_counter()

@@ -22,11 +22,8 @@ from omics_data_integration_utilities_spark.streaming.commitstore import (
 )
 from omics_data_integration_utilities_spark.streaming.sinks import (
     apply_cdc_batch_into_bucketed_snapshot,
-    apply_cdc_batch_into_snapshot,
     read_bucketed_snapshot,
-    read_snapshot,
     upsert_batch_into_bucketed_snapshot,
-    upsert_batch_into_snapshot,
 )
 
 
@@ -72,6 +69,10 @@ def test_store_listing_and_prefixes(tmp_path):
         assert {"m000.json", "m001.json", "v000"} <= set(names)
         assert store.exists_prefix("v000")
         assert not store.exists_prefix("v999")
+        # a data dir is not a text object: "no object", never
+        # IsADirectoryError (a CURRENT naming a version dir must read
+        # as a missing manifest)
+        assert store.get_text("v000") is None
         store.delete_prefix("v000")
         assert not store.exists_prefix("v000")
         store.delete_text("m000.json")
@@ -162,26 +163,6 @@ def test_bucketed_battery_on_object_store(spark, tmp_path):
         )
 
 
-def test_full_rewrite_battery_on_object_store(spark, tmp_path):
-    store = InMemoryObjectStore(str(tmp_path / "snap"))
-    upsert_batch_into_snapshot(
-        spark, _df(spark, [(1, 1.0), (2, 2.0)]), store, ["k"], batch_id=0
-    )
-    apply_cdc_batch_into_snapshot(
-        spark, _cdc(spark, [(1, 0.0, "delete"), (5, 5.0, "upsert")]),
-        store, ["k"], batch_id=1,
-    )
-    got = {r["k"]: r["v"] for r in read_snapshot(spark, store).collect()}
-    assert got == {2: 2.0, 5: 5.0}
-    # time travel + horizon validation on the object store too
-    assert {
-        r["k"]: r["v"]
-        for r in read_snapshot(spark, store, version="v000000000000").collect()
-    } == {1: 1.0, 2: 2.0}
-    with pytest.raises(FileNotFoundError, match="newer than the committed"):
-        read_snapshot(spark, store, version="v000000000042")
-
-
 def test_concurrent_writer_loses_loudly(spark, tmp_path):
     """The pointer flip is CONDITIONED on the generation read at commit
     start: if another writer flips CURRENT mid-commit, this commit's
@@ -216,10 +197,11 @@ def test_concurrent_writer_loses_loudly(spark, tmp_path):
 
 def test_keep_versions_floor_raises(spark, tmp_path):
     with pytest.raises(ValueError, match="keep_versions must be >= 2"):
-        upsert_batch_into_snapshot(
+        upsert_batch_into_bucketed_snapshot(
             spark, _df(spark, [(1, 1.0)]), str(tmp_path / "s"), ["k"],
             batch_id=0, keep_versions=1,
         )
+    assert not os.path.exists(tmp_path / "s")  # refused before any write
 
 
 # ---------------------------------------------------------------------------
@@ -459,33 +441,28 @@ def test_snapshot_soak_hundreds_of_commits_with_crashes(spark, tmp_path):
 def test_recovery_mode_explicit_reads_with_damaged_pointer(spark, tmp_path):
     """r15 review finding: when CURRENT is missing (the damaged state
     the commit units answer with 'restore CURRENT'), an EXPLICIT
-    version/manifest read must still work — it is how the operator
-    finds the version to restore.  Unnamed reads still refuse."""
-    full = InMemoryObjectStore(str(tmp_path / "full"))
+    manifest read must still work — it is how the operator finds the
+    generation to restore.  Unnamed reads still refuse."""
     buck = InMemoryObjectStore(str(tmp_path / "buck"))
     for i, rows in enumerate([[(1, 1.0)], [(1, 2.0), (2, 2.0)]]):
-        upsert_batch_into_snapshot(spark, _df(spark, rows), full, ["k"], batch_id=i)
         upsert_batch_into_bucketed_snapshot(
             spark, _df(spark, rows), buck, ["k"], batch_id=i, n_buckets=4
         )
-    full.delete_text("CURRENT")
     buck.delete_text("CURRENT")
     # explicit reads of retained generations: recovery inspection works
-    got = {r["k"]: r["v"] for r in read_snapshot(
-        spark, full, version="v000000000001").collect()}
+    got = {r["k"]: r["v"] for r in read_bucketed_snapshot(
+        spark, buck, manifest="m000000000001.json").collect()}
     assert got == {1: 2.0, 2: 2.0}
     got = {r["k"]: r["v"] for r in read_bucketed_snapshot(
         spark, buck, manifest="m000000000000.json").collect()}
     assert got == {1: 1.0}
     # unnamed reads still refuse (no committed pointer to resolve)
     with pytest.raises(FileNotFoundError, match="no CURRENT"):
-        read_snapshot(spark, full)
-    with pytest.raises(FileNotFoundError, match="no CURRENT"):
         read_bucketed_snapshot(spark, buck)
     # a named-but-absent generation says so instead of claiming
     # nothing was ever committed
     with pytest.raises(FileNotFoundError, match="not on disk"):
-        read_snapshot(spark, full, version="v000000000099")
+        read_bucketed_snapshot(spark, buck, manifest="m000000000099.json")
 
 
 def test_retention_aborts_on_vanished_kept_manifest(spark, tmp_path):
@@ -1278,33 +1255,6 @@ def test_restore_current_refuses_incomplete_target(spark, tmp_path):
     assert read_bucketed_snapshot(spark, snap).count() == 3
 
 
-def test_restore_current_full_layout_uses_success_marker(spark, tmp_path):
-    from omics_data_integration_utilities_spark.streaming.recovery import (
-        restore_current,
-        snapshot_lineage,
-    )
-
-    snap = str(tmp_path / "snap")
-    upsert_batch_into_snapshot(
-        spark, _df(spark, [(1, 1.0)]), snap, ["k"], batch_id=0
-    )
-    upsert_batch_into_snapshot(
-        spark, _df(spark, [(2, 2.0)]), snap, ["k"], batch_id=1
-    )
-    os.remove(os.path.join(snap, "CURRENT"))
-    # simulate a pre-flip partial write: newest version lacks _SUCCESS
-    os.remove(os.path.join(snap, "v000000000001", "_SUCCESS"))
-    rep = snapshot_lineage(snap)
-    assert rep["layout"] == "full"
-    verdicts = {g["name"]: g["complete"] for g in rep["generations"]}
-    assert verdicts["v000000000001"] is False
-    assert verdicts["v000000000000"] is True
-    assert restore_current(snap) == "v000000000000"
-    assert {
-        r["k"]: r["v"] for r in read_snapshot(spark, snap).collect()
-    } == {1: 1.0}
-
-
 def test_restore_current_empty_and_unknown(tmp_path):
     from omics_data_integration_utilities_spark.streaming.recovery import (
         restore_current,
@@ -1313,6 +1263,36 @@ def test_restore_current_empty_and_unknown(tmp_path):
     os.makedirs(tmp_path / "empty", exist_ok=True)
     with pytest.raises(FileNotFoundError, match="nothing to restore"):
         restore_current(str(tmp_path / "empty"))
+
+
+def test_version_dir_pointer_refused_before_any_write(spark, tmp_path):
+    """A CURRENT naming a plain version dir (no manifest) is a damaged
+    snapshot in every store: commits refuse before writing, reads say
+    the manifest is missing, and recovery finds nothing restorable —
+    a version dir is never a generation on its own."""
+    from omics_data_integration_utilities_spark.streaming.recovery import (
+        restore_current,
+        snapshot_lineage,
+    )
+
+    for store in _store_matrix(tmp_path):
+        _df(spark, [(1, 1.0)]).write.parquet(store.spark_path("v000000000000"))
+        store.put_text("CURRENT", "v000000000000")
+        before = store.list_names()
+        with pytest.raises(RuntimeError, match="manifest is missing"):
+            upsert_batch_into_bucketed_snapshot(
+                spark, _df(spark, [(2, 2.0)]), store, ["k"], batch_id=1,
+                n_buckets=1,
+            )
+        assert store.list_names() == before
+        with pytest.raises(FileNotFoundError, match="manifest is missing"):
+            read_bucketed_snapshot(spark, store)
+        rep = snapshot_lineage(store)
+        assert rep["layout"] == "bucketed" and rep["generations"] == []
+        assert rep["current"] == "v000000000000"
+        assert not rep["current_complete"] and rep["newest_complete"] is None
+        with pytest.raises(RuntimeError, match="no COMPLETE generation"):
+            restore_current(store)
 
 
 def test_restore_current_on_object_store(spark, tmp_path):

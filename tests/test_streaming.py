@@ -4,6 +4,7 @@ batch-form tumbling aggregation on totals."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from omics_data_integration_utilities_spark.streaming.events import (
@@ -1096,9 +1097,9 @@ def test_upsert_sink_matches_batch_merge(spark, tmp_path):
         upsert_snapshot,
     )
     from omics_data_integration_utilities_spark.streaming.sinks import (
-        read_snapshot,
+        read_bucketed_snapshot,
+        start_bucketed_upsert_sink,
         start_parquet_append_sink,
-        start_upsert_sink,
     )
 
     feed = str(tmp_path / "feed")
@@ -1124,12 +1125,15 @@ def test_upsert_sink_matches_batch_merge(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(feed)
     )
-    q = start_upsert_sink(
+    q = start_bucketed_upsert_sink(
         stream, snapshot, str(tmp_path / "ckpt_upsert"), ["k"]
     )
     try:
         q.processAllAvailable()
-        first = {r["k"]: (r["name"], r["v"]) for r in read_snapshot(spark, snapshot).collect()}
+        first = {
+            r["k"]: (r["name"], r["v"])
+            for r in read_bucketed_snapshot(spark, snapshot).collect()
+        }
         assert first == {1: ("a", 10.0), 2: ("b", 20.0), 3: ("c", 30.0)}
         # second batch arrives: key 2 updates, key 4 inserts
         b2.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "b2"))
@@ -1140,7 +1144,10 @@ def test_upsert_sink_matches_batch_merge(spark, tmp_path):
     finally:
         q.stop()
 
-    got = {r["k"]: (r["name"], r["v"]) for r in read_snapshot(spark, snapshot).collect()}
+    got = {
+        r["k"]: (r["name"], r["v"])
+        for r in read_bucketed_snapshot(spark, snapshot).collect()
+    }
     want = {
         r["k"]: (r["name"], r["v"])
         for r in upsert_snapshot(b1, b2, ["k"]).collect()
@@ -1172,8 +1179,8 @@ def test_upsert_sink_survives_restart_from_checkpoint(spark, tmp_path):
     import os
 
     from omics_data_integration_utilities_spark.streaming.sinks import (
-        read_snapshot,
-        start_upsert_sink,
+        read_bucketed_snapshot,
+        start_bucketed_upsert_sink,
     )
 
     feed = str(tmp_path / "feed2")
@@ -1194,7 +1201,7 @@ def test_upsert_sink_survives_restart_from_checkpoint(spark, tmp_path):
 
     def run_once():
         stream = spark.readStream.schema(b1.schema).parquet(feed)
-        q = start_upsert_sink(stream, snapshot, ckpt, ["k"])
+        q = start_bucketed_upsert_sink(stream, snapshot, ckpt, ["k"])
         try:
             q.processAllAvailable()
         finally:
@@ -1202,22 +1209,19 @@ def test_upsert_sink_survives_restart_from_checkpoint(spark, tmp_path):
 
     deliver(b1, "b1")
     run_once()
-    assert {r["k"]: r["v"] for r in read_snapshot(spark, snapshot).collect()} == {
-        1: 10.0,
-        2: 20.0,
-    }
+    assert {
+        r["k"]: r["v"] for r in read_bucketed_snapshot(spark, snapshot).collect()
+    } == {1: 10.0, 2: 20.0}
     deliver(b2, "b2")
     run_once()  # fresh query object, same checkpoint: resumes, not replays
-    assert {r["k"]: r["v"] for r in read_snapshot(spark, snapshot).collect()} == {
-        1: 10.0,
-        2: 22.0,
-        3: 30.0,
-    }
+    assert {
+        r["k"]: r["v"] for r in read_bucketed_snapshot(spark, snapshot).collect()
+    } == {1: 10.0, 2: 22.0, 3: 30.0}
 
 
 def test_nightly_ingest_integration(spark, tmp_path):
     """The composed nightly-ingest shape, end to end across modules:
-    curated stream (gate + exact dedup) -> blue-green upsert snapshot ->
+    curated stream (gate + exact dedup) -> bucketed upsert snapshot ->
     persisted bucketed dedup index built FROM the snapshot -> next
     batch probed for verdicts.  Every piece is individually verified
     elsewhere; this pins the cross-module contract (schemas, id/text
@@ -1230,15 +1234,15 @@ def test_nightly_ingest_integration(spark, tmp_path):
         curate_doc_stream,
     )
     from omics_data_integration_utilities_spark.streaming.sinks import (
-        read_snapshot,
-        start_upsert_sink,
+        read_bucketed_snapshot,
+        start_bucketed_upsert_sink,
     )
     from .conftest import SF_SMOKE
 
     docs_path = f"{SF_SMOKE}/documents.parquet"
     curated = curate_doc_stream(spark, docs_path, min_quality=0.5)
     snapshot = str(tmp_path / "kept_snapshot")
-    q = start_upsert_sink(
+    q = start_bucketed_upsert_sink(
         curated, snapshot, str(tmp_path / "ckpt_ingest"), ["content_hash"]
     )
     try:
@@ -1246,7 +1250,7 @@ def test_nightly_ingest_integration(spark, tmp_path):
     finally:
         q.stop()
 
-    kept = read_snapshot(spark, snapshot)
+    kept = read_bucketed_snapshot(spark, snapshot)
     n_kept = kept.count()
     assert n_kept > 0
     assert kept.select("content_hash").distinct().count() == n_kept
@@ -1278,68 +1282,31 @@ def test_nightly_ingest_integration(spark, tmp_path):
     assert verdicts[10_000_002] == "novel"
 
 
-def test_upsert_snapshot_replay_and_damage_matrix(spark, tmp_path):
-    """The per-batch commit unit's replay/crash matrix: a replayed
-    ALREADY-COMMITTED batch is a no-op (reading + overwriting the same
-    version dir would wedge the stream); a damaged pointer (missing
-    CURRENT with other versions present) raises instead of silently
-    resetting the snapshot; object-store URIs are refused up front."""
-    import os
-
-    import pytest
-
-    from omics_data_integration_utilities_spark.streaming.sinks import (
-        read_snapshot,
-        upsert_batch_into_snapshot,
-    )
-
-    snap = str(tmp_path / "snap_matrix")
-    b1 = spark.createDataFrame([(1, 10.0), (2, 20.0)], "k long, v double")
-    b2 = spark.createDataFrame([(2, 22.0), (3, 30.0)], "k long, v double")
-    upsert_batch_into_snapshot(spark, b1, snap, ["k"], batch_id=0)
-    upsert_batch_into_snapshot(spark, b2, snap, ["k"], batch_id=1)
-    want = {1: 10.0, 2: 22.0, 3: 30.0}
-    assert {r["k"]: r["v"] for r in read_snapshot(spark, snap).collect()} == want
-
-    # replay of the committed batch 1: no-op, snapshot unchanged
-    upsert_batch_into_snapshot(spark, b2, snap, ["k"], batch_id=1)
-    assert {r["k"]: r["v"] for r in read_snapshot(spark, snap).collect()} == want
-
-    # pre-flip crash leftover: version dir exists, CURRENT names the
-    # previous one -> overwrite path re-derives the same commit
-    os.rename(os.path.join(snap, "CURRENT"), os.path.join(snap, "CURRENT.bak"))
-    with open(os.path.join(snap, "CURRENT"), "w") as f:
-        f.write("v000000000000")
-    upsert_batch_into_snapshot(spark, b2, snap, ["k"], batch_id=1)
-    assert {r["k"]: r["v"] for r in read_snapshot(spark, snap).collect()} == want
-
-    # damaged pointer: CURRENT gone, versions present -> loud refusal
-    os.remove(os.path.join(snap, "CURRENT"))
-    with pytest.raises(RuntimeError, match="no CURRENT pointer"):
-        upsert_batch_into_snapshot(spark, b2, snap, ["k"], batch_id=7)
-
-    # object-store URI: refused before any write
-    with pytest.raises(ValueError, match="driver-local"):
-        upsert_batch_into_snapshot(
-            spark, b1, "s3a://bucket/snap", ["k"], batch_id=0
-        )
-
-
 def test_upsert_snapshot_retention_horizon(spark, tmp_path):
-    """keep_versions retains the newest N version dirs so a reader's
-    lazy scan survives N-1 further flips."""
+    """keep_versions retains the newest N manifests so a reader's lazy
+    scan survives N-1 further flips.  With one bucket every commit
+    rewrites the whole snapshot, so exactly the newest N version dirs
+    stay referenced."""
     import os
 
     from omics_data_integration_utilities_spark.streaming.sinks import (
-        upsert_batch_into_snapshot,
+        read_bucketed_snapshot,
+        upsert_batch_into_bucketed_snapshot,
     )
 
     snap = str(tmp_path / "snap_keep")
     for i in range(5):
         b = spark.createDataFrame([(i, float(i))], "k long, v double")
-        upsert_batch_into_snapshot(spark, b, snap, ["k"], batch_id=i, keep_versions=3)
+        upsert_batch_into_bucketed_snapshot(
+            spark, b, snap, ["k"], batch_id=i, n_buckets=1, keep_versions=3
+        )
     versions = sorted(n for n in os.listdir(snap) if n.startswith("v"))
     assert versions == ["v000000000002", "v000000000003", "v000000000004"]
+    manifests = sorted(n for n in os.listdir(snap) if n.startswith("m"))
+    assert manifests == [f"m00000000000{i}.json" for i in (2, 3, 4)]
+    # the oldest retained generation still time-travel-reads
+    old = read_bucketed_snapshot(spark, snap, manifest="m000000000002.json")
+    assert sorted(r["k"] for r in old.collect()) == [0, 1, 2]
 
 
 def test_windowed_profile_stream_matches_batch(spark, tmp_path):
@@ -1603,24 +1570,27 @@ def test_ann_probe_stream_matches_batch(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_ann_stream_lists")
 
 
-def test_bucketed_upsert_parity_with_full_rewrite(spark, tmp_path):
-    """r13 verdict item 2: the bucketed snapshot is a LAYOUT change, not
-    a semantics change — the same batch sequence through both commit
-    units yields identical final states, and a streaming run through
-    start_bucketed_upsert_sink agrees too."""
+@pytest.mark.parametrize("n_buckets", [1, 8])
+def test_bucketed_upsert_parity_with_reference_merge(spark, tmp_path, n_buckets):
+    """r13 verdict item 2: the bucketed snapshot is a LAYOUT, not a
+    semantics change — the same batch sequence through the commit unit
+    yields exactly the pure-DataFrame MERGE reference
+    (``operators.joins.upsert_snapshot``) after every commit, and a
+    streaming run through start_bucketed_upsert_sink agrees too.
+    ``n_buckets=1`` is the whole-snapshot-rewrite shape: every commit
+    writes one ``__bucket=0`` dir."""
     import os
 
-    from pyspark.sql import functions as F
-
+    from omics_data_integration_utilities_spark.operators.joins import (
+        upsert_snapshot,
+    )
     from omics_data_integration_utilities_spark.streaming.events import (
         staged_file_stream,
     )
     from omics_data_integration_utilities_spark.streaming.sinks import (
         read_bucketed_snapshot,
-        read_snapshot,
         start_bucketed_upsert_sink,
         upsert_batch_into_bucketed_snapshot,
-        upsert_batch_into_snapshot,
     )
 
     batches = [
@@ -1630,19 +1600,24 @@ def test_bucketed_upsert_parity_with_full_rewrite(spark, tmp_path):
         )
         for i in range(3)
     ]
-    full, buck = str(tmp_path / "full"), str(tmp_path / "buck")
+    buck = str(tmp_path / "buck")
+    ref = None
     for i, b in enumerate(batches):
-        upsert_batch_into_snapshot(spark, b, full, ["k"], batch_id=i)
         upsert_batch_into_bucketed_snapshot(
-            spark, b, buck, ["k"], batch_id=i, n_buckets=8
+            spark, b, buck, ["k"], batch_id=i, n_buckets=n_buckets
         )
-    want = sorted(
-        (r["k"], r["v"]) for r in read_snapshot(spark, full).collect()
-    )
-    got = sorted(
-        (r["k"], r["v"]) for r in read_bucketed_snapshot(spark, buck).collect()
-    )
-    assert got == want and len(got) == 42
+        ref = b if ref is None else upsert_snapshot(ref, b, ["k"])
+        want = sorted((r["k"], r["v"]) for r in ref.collect())
+        got = sorted(
+            (r["k"], r["v"]) for r in read_bucketed_snapshot(spark, buck).collect()
+        )
+        assert got == want, i
+        if n_buckets == 1:
+            vdir = os.path.join(buck, f"v{i:012d}")
+            assert [
+                n for n in os.listdir(vdir) if n.startswith("__bucket=")
+            ] == ["__bucket=0"]
+    assert len(got) == 42
 
     # streaming end-to-end (one batch per staged file)
     feed = str(tmp_path / "feed")
@@ -1653,7 +1628,7 @@ def test_bucketed_upsert_parity_with_full_rewrite(spark, tmp_path):
         stream_snap,
         str(tmp_path / "ckpt_bucketed"),
         ["k"],
-        n_buckets=8,
+        n_buckets=n_buckets,
     )
     try:
         q.processAllAvailable()
@@ -1702,8 +1677,8 @@ def test_bucketed_upsert_rewrites_only_touched_buckets(spark, tmp_path):
 
 
 def test_bucketed_upsert_replay_damage_and_bucket_guards(spark, tmp_path):
-    """Crash-safety carried over from the full-rewrite sink, plus the
-    bucket-count pin: replayed committed batch no-ops; pre-flip crash
+    """The commit unit's crash-safety matrix plus the bucket-count
+    pin: replayed committed batch no-ops; pre-flip crash
     leftovers rewrite cleanly; damaged pointer raises; a different
     n_buckets on a later commit is refused; object-store URI refused."""
     import os
@@ -1792,17 +1767,15 @@ def test_bucketed_upsert_retention_keeps_referenced_dirs(spark, tmp_path):
 
 def test_cdc_apply_upsert_and_delete_both_layouts(spark, tmp_path):
     """r14 CDC apply: delete tombstones vanish, upserts replace/insert,
-    untouched rows carry — identical final state in the full-rewrite
-    and bucketed layouts, and a CDC batch with no deletes equals the
-    plain upsert commit."""
+    untouched rows carry — identical final state in the one-bucket
+    (whole-rewrite) and multi-bucket shapes, and a CDC batch with no
+    deletes equals the plain upsert commit."""
     from pyspark.sql import functions as F
 
     from omics_data_integration_utilities_spark.streaming.sinks import (
         apply_cdc_batch_into_bucketed_snapshot,
-        apply_cdc_batch_into_snapshot,
         read_bucketed_snapshot,
-        read_snapshot,
-        upsert_batch_into_snapshot,
+        upsert_batch_into_bucketed_snapshot,
     )
 
     seed = spark.createDataFrame(
@@ -1813,37 +1786,49 @@ def test_cdc_apply_upsert_and_delete_both_layouts(spark, tmp_path):
          (99, 99.0, "upsert")],
         "k long, v double, op string",
     )
-    full, buck = str(tmp_path / "cdc_full"), str(tmp_path / "cdc_buck")
-    for i, b in enumerate([seed, cdc]):
-        apply_cdc_batch_into_snapshot(spark, b, full, ["k"], batch_id=i)
-        apply_cdc_batch_into_bucketed_snapshot(
-            spark, b, buck, ["k"], batch_id=i, n_buckets=8
-        )
-    want = {k: float(k) for k in range(20) if k not in (3, 7)}
-    want[5] = 555.0
-    want[99] = 99.0
-    got_f = {r["k"]: r["v"] for r in read_snapshot(spark, full).collect()}
-    got_b = {r["k"]: r["v"] for r in read_bucketed_snapshot(spark, buck).collect()}
-    assert got_f == want and got_b == want
-    # deleting an absent key is a no-op
     ghost = spark.createDataFrame([(12345, 0.0, "delete")], "k long, v double, op string")
-    apply_cdc_batch_into_snapshot(spark, ghost, full, ["k"], batch_id=2)
-    assert {r["k"]: r["v"] for r in read_snapshot(spark, full).collect()} == want
-    # upsert-only CDC == plain upsert commit
     up_only = spark.createDataFrame([(0, -1.0, "upsert")], "k long, v double, op string")
-    plain = str(tmp_path / "plain")
-    upsert_batch_into_snapshot(spark, seed.drop("op"), plain, ["k"], batch_id=0)
-    upsert_batch_into_snapshot(spark, up_only.drop("op"), plain, ["k"], batch_id=1)
-    apply_cdc_batch_into_snapshot(spark, up_only, full, ["k"], batch_id=3)
-    want[0] = -1.0
-    assert {r["k"]: r["v"] for r in read_snapshot(spark, full).collect()} == want
+    read = lambda snap: {  # noqa: E731
+        r["k"]: r["v"] for r in read_bucketed_snapshot(spark, snap).collect()
+    }
+    for n_buckets in (1, 8):
+        snap = str(tmp_path / f"cdc_{n_buckets}")
+        for i, b in enumerate([seed, cdc]):
+            apply_cdc_batch_into_bucketed_snapshot(
+                spark, b, snap, ["k"], batch_id=i, n_buckets=n_buckets
+            )
+        want = {k: float(k) for k in range(20) if k not in (3, 7)}
+        want[5] = 555.0
+        want[99] = 99.0
+        assert read(snap) == want, n_buckets
+        # deleting an absent key is a no-op
+        apply_cdc_batch_into_bucketed_snapshot(
+            spark, ghost, snap, ["k"], batch_id=2, n_buckets=n_buckets
+        )
+        assert read(snap) == want, n_buckets
+        # upsert-only CDC == plain upsert commit
+        plain, cdc_up = (
+            str(tmp_path / f"plain_{n_buckets}"),
+            str(tmp_path / f"cdc_up_{n_buckets}"),
+        )
+        for i, b in enumerate([seed, up_only]):
+            upsert_batch_into_bucketed_snapshot(
+                spark, b.drop("op"), plain, ["k"], batch_id=i,
+                n_buckets=n_buckets,
+            )
+            apply_cdc_batch_into_bucketed_snapshot(
+                spark, b, cdc_up, ["k"], batch_id=i, n_buckets=n_buckets
+            )
+        want_up = {k: float(k) for k in range(20)}
+        want_up[0] = -1.0
+        assert read(cdc_up) == read(plain) == want_up, n_buckets
 
 
 def test_cdc_guards_conflicts_unknown_ops_and_replay(spark, tmp_path):
     """CDC contract guards: same-key upsert+delete in one batch refused
     (unordered micro-batch), unknown op refused, committed-batch replay
     no-ops, and a delete that EMPTIES a bucket drops it from the
-    bucketed manifest instead of dangling."""
+    manifest instead of dangling."""
     import json
     import os
 
@@ -1851,9 +1836,7 @@ def test_cdc_guards_conflicts_unknown_ops_and_replay(spark, tmp_path):
 
     from omics_data_integration_utilities_spark.streaming.sinks import (
         apply_cdc_batch_into_bucketed_snapshot,
-        apply_cdc_batch_into_snapshot,
         read_bucketed_snapshot,
-        read_snapshot,
     )
 
     snap = str(tmp_path / "cdc_guards")
@@ -1861,51 +1844,55 @@ def test_cdc_guards_conflicts_unknown_ops_and_replay(spark, tmp_path):
         [(1, 1.0, "upsert"), (1, 0.0, "delete")], "k long, v double, op string"
     )
     with pytest.raises(ValueError, match="BOTH an upsert and a delete"):
-        apply_cdc_batch_into_snapshot(spark, conflicted, snap, ["k"], batch_id=0)
+        apply_cdc_batch_into_bucketed_snapshot(
+            spark, conflicted, snap, ["k"], batch_id=0, n_buckets=64
+        )
     weird = spark.createDataFrame([(1, 1.0, "merge")], "k long, v double, op string")
     with pytest.raises(ValueError, match="unknown ops"):
-        apply_cdc_batch_into_snapshot(spark, weird, snap, ["k"], batch_id=0)
+        apply_cdc_batch_into_bucketed_snapshot(
+            spark, weird, snap, ["k"], batch_id=0, n_buckets=64
+        )
 
     b0 = spark.createDataFrame(
         [(1, 1.0, "upsert"), (2, 2.0, "upsert")], "k long, v double, op string"
     )
     b1 = spark.createDataFrame([(2, 0.0, "delete")], "k long, v double, op string")
-    apply_cdc_batch_into_snapshot(spark, b0, snap, ["k"], batch_id=0)
-    apply_cdc_batch_into_snapshot(spark, b1, snap, ["k"], batch_id=1)
-    want = {1: 1.0}
-    assert {r["k"]: r["v"] for r in read_snapshot(spark, snap).collect()} == want
-    # replay of committed delete batch: no-op
-    apply_cdc_batch_into_snapshot(spark, b1, snap, ["k"], batch_id=1)
-    assert {r["k"]: r["v"] for r in read_snapshot(spark, snap).collect()} == want
 
-    # bucketed: delete everything in one key's bucket -> manifest drops it
-    bsnap = str(tmp_path / "cdc_bucket_empty")
+    def current_manifest():
+        with open(os.path.join(snap, "CURRENT")) as f:
+            return json.load(open(os.path.join(snap, f.read().strip())))
+
     apply_cdc_batch_into_bucketed_snapshot(
-        spark, b0, bsnap, ["k"], batch_id=0, n_buckets=64
+        spark, b0, snap, ["k"], batch_id=0, n_buckets=64
     )
-    with open(os.path.join(bsnap, "CURRENT")) as f:
-        man0 = json.load(open(os.path.join(bsnap, f.read().strip())))
-    assert len(man0["buckets"]) == 2  # keys 1 and 2 in distinct buckets (64)
+    assert len(current_manifest()["buckets"]) == 2  # keys 1, 2: distinct buckets
+    # delete everything in key 2's bucket -> the manifest drops it
     apply_cdc_batch_into_bucketed_snapshot(
-        spark, b1, bsnap, ["k"], batch_id=1, n_buckets=64
+        spark, b1, snap, ["k"], batch_id=1, n_buckets=64
     )
-    with open(os.path.join(bsnap, "CURRENT")) as f:
-        man1 = json.load(open(os.path.join(bsnap, f.read().strip())))
-    assert len(man1["buckets"]) == 1
-    got = {r["k"]: r["v"] for r in read_bucketed_snapshot(spark, bsnap).collect()}
-    assert got == want
+    assert len(current_manifest()["buckets"]) == 1
+    want = {1: 1.0}
+    read = lambda: {  # noqa: E731
+        r["k"]: r["v"] for r in read_bucketed_snapshot(spark, snap).collect()
+    }
+    assert read() == want
+    # replay of committed delete batch: no-op
+    apply_cdc_batch_into_bucketed_snapshot(
+        spark, b1, snap, ["k"], batch_id=1, n_buckets=64
+    )
+    assert read() == want
 
 
 def test_cdc_streaming_sink_end_to_end(spark, tmp_path):
     """start_cdc_sink: a staged CDC feed (upserts then tombstones)
-    through the streaming wrapper lands the same final snapshot, in
-    both layouts."""
+    through the streaming wrapper lands the same final snapshot, at one
+    bucket and at the default bucket count; ``n_buckets=None`` is
+    refused at sink creation."""
     from omics_data_integration_utilities_spark.streaming.events import (
         staged_file_stream,
     )
     from omics_data_integration_utilities_spark.streaming.sinks import (
         read_bucketed_snapshot,
-        read_snapshot,
         start_cdc_sink,
     )
 
@@ -1916,10 +1903,7 @@ def test_cdc_streaming_sink_end_to_end(spark, tmp_path):
     followup = [(4, 0.0, "delete"), (10, 10.0, "upsert")]
     want = {k: float(k) for k in range(10) if k != 4}
     want[10] = 10.0
-    for layout, n_buckets, reader in (
-        ("full", None, read_snapshot),
-        ("bucketed", 8, read_bucketed_snapshot),
-    ):
+    for layout, kwargs in (("one_bucket", {"n_buckets": 1}), ("default", {})):
         feed = str(tmp_path / f"cdc_feed_{layout}")
         spark.createDataFrame(
             upserts, "k long, v double, op string"
@@ -1930,7 +1914,7 @@ def test_cdc_streaming_sink_end_to_end(spark, tmp_path):
             snap,
             str(tmp_path / f"cdc_ckpt_{layout}"),
             ["k"],
-            n_buckets=n_buckets,
+            **kwargs,
         )
         try:
             q.processAllAvailable()
@@ -1941,33 +1925,33 @@ def test_cdc_streaming_sink_end_to_end(spark, tmp_path):
             q.processAllAvailable()
         finally:
             q.stop()
-        got = {r["k"]: r["v"] for r in reader(spark, snap).collect()}
+        got = {r["k"]: r["v"] for r in read_bucketed_snapshot(spark, snap).collect()}
         assert got == want, layout
+    with pytest.raises(TypeError):
+        start_cdc_sink(
+            staged_file_stream(spark, feed), str(tmp_path / "cdc_none"),
+            str(tmp_path / "cdc_ckpt_none"), ["k"], n_buckets=None,
+        )
 
 
 def test_snapshot_time_travel_reads(spark, tmp_path):
-    """Both readers accept a retained previous version/manifest — the
-    audit read over the keep_versions horizon; pruned or never-committed
-    names raise instead of returning an empty relation."""
+    """The reader accepts a retained previous manifest — the audit read
+    over the keep_versions horizon; pruned or never-committed names
+    raise instead of returning an empty relation."""
     import pytest
 
     from omics_data_integration_utilities_spark.streaming.sinks import (
         read_bucketed_snapshot,
-        read_snapshot,
         upsert_batch_into_bucketed_snapshot,
-        upsert_batch_into_snapshot,
     )
 
-    full, buck = str(tmp_path / "tt_full"), str(tmp_path / "tt_buck")
+    buck = str(tmp_path / "tt_buck")
     b0 = spark.createDataFrame([(1, 1.0)], "k long, v double")
     b1 = spark.createDataFrame([(1, 2.0)], "k long, v double")
     for i, b in enumerate([b0, b1]):
-        upsert_batch_into_snapshot(spark, b, full, ["k"], batch_id=i)
         upsert_batch_into_bucketed_snapshot(
             spark, b, buck, ["k"], batch_id=i, n_buckets=4
         )
-    assert read_snapshot(spark, full).collect()[0]["v"] == 2.0
-    assert read_snapshot(spark, full, version="v000000000000").collect()[0]["v"] == 1.0
     assert read_bucketed_snapshot(spark, buck).collect()[0]["v"] == 2.0
     assert (
         read_bucketed_snapshot(spark, buck, manifest="m000000000000.json")
@@ -1976,110 +1960,99 @@ def test_snapshot_time_travel_reads(spark, tmp_path):
     # never committed / ahead of CURRENT: refused as uncommitted (r14
     # ADVICE — on-disk existence alone must not gate the read)
     with pytest.raises(FileNotFoundError, match="newer than the committed"):
-        read_snapshot(spark, full, version="v000000000042")
+        read_bucketed_snapshot(spark, buck, manifest="m000000000042.json")
+    # a PRE-FLIP CRASH LEFTOVER (manifest and version dir on disk, never
+    # flipped into CURRENT) must also refuse — it is not committed data
+    # even though it exists
+    with open(tmp_path / "tt_buck" / "m000000000000.json") as f:
+        leftover = f.read()
+    (tmp_path / "tt_buck" / "m000000000042.json").write_text(leftover)
     with pytest.raises(FileNotFoundError, match="newer than the committed"):
         read_bucketed_snapshot(spark, buck, manifest="m000000000042.json")
-    # a PRE-FLIP CRASH LEFTOVER (version dir on disk, never flipped
-    # into CURRENT) must also refuse — it is not committed data even
-    # though it exists
-    b1.write.mode("overwrite").parquet(str(tmp_path / "tt_full" / "v000000000042"))
-    with pytest.raises(FileNotFoundError, match="newer than the committed"):
-        read_snapshot(spark, full, version="v000000000042")
-    # genuinely pruned (BELOW the committed horizon, dir gone): the
+    # genuinely pruned (BELOW the committed horizon, manifest gone): the
     # retention message names keep_versions
-    b2 = spark.createDataFrame([(1, 3.0)], "k long, v double")
-    upsert_batch_into_snapshot(spark, b2, full, ["k"], batch_id=43)
-    upsert_batch_into_snapshot(
-        spark,
-        spark.createDataFrame([(1, 4.0)], "k long, v double"),
-        full,
-        ["k"],
-        batch_id=44,
-    )
+    for i, v in ((43, 3.0), (44, 4.0)):
+        upsert_batch_into_bucketed_snapshot(
+            spark,
+            spark.createDataFrame([(1, v)], "k long, v double"),
+            buck,
+            ["k"],
+            batch_id=i,
+            n_buckets=4,
+        )
     with pytest.raises(FileNotFoundError, match="pruned past keep_versions"):
-        read_snapshot(spark, full, version="v000000000000")
+        read_bucketed_snapshot(spark, buck, manifest="m000000000000.json")
 
 
 def test_cdc_delete_everything_edge(spark, tmp_path):
-    """Tombstoning every key: the full-rewrite snapshot reads back as a
-    schema-bearing EMPTY relation; the bucketed snapshot (whose manifest
-    then references zero bucket dirs, leaving no schema on disk) raises
-    a CLEAR empty-snapshot error instead of UNABLE_TO_INFER_SCHEMA.
-    Re-seeding after the wipe works in both layouts."""
+    """Tombstoning every key leaves a manifest that references zero
+    bucket dirs, so no schema is left on disk: the reader raises a
+    CLEAR empty-snapshot error instead of UNABLE_TO_INFER_SCHEMA.
+    Re-seeding after the wipe works."""
     import pytest
 
     from omics_data_integration_utilities_spark.streaming.sinks import (
         apply_cdc_batch_into_bucketed_snapshot,
-        apply_cdc_batch_into_snapshot,
         read_bucketed_snapshot,
-        read_snapshot,
     )
 
     b0 = spark.createDataFrame([(1, 1.0, "upsert")], "k long, v double, op string")
     b1 = spark.createDataFrame([(1, 0.0, "delete")], "k long, v double, op string")
     b2 = spark.createDataFrame([(2, 2.0, "upsert")], "k long, v double, op string")
-    full, buck = str(tmp_path / "wipe_full"), str(tmp_path / "wipe_buck")
+    buck = str(tmp_path / "wipe_buck")
     for i, b in enumerate([b0, b1]):
-        apply_cdc_batch_into_snapshot(spark, b, full, ["k"], batch_id=i)
         apply_cdc_batch_into_bucketed_snapshot(
             spark, b, buck, ["k"], batch_id=i, n_buckets=4
         )
-    empty = read_snapshot(spark, full)
-    assert empty.count() == 0 and "k" in empty.columns
     with pytest.raises(FileNotFoundError, match="EMPTY"):
         read_bucketed_snapshot(spark, buck)
     # life after the wipe
-    apply_cdc_batch_into_snapshot(spark, b2, full, ["k"], batch_id=2)
     apply_cdc_batch_into_bucketed_snapshot(
         spark, b2, buck, ["k"], batch_id=2, n_buckets=4
     )
-    assert {r["k"] for r in read_snapshot(spark, full).collect()} == {2}
     assert {r["k"] for r in read_bucketed_snapshot(spark, buck).collect()} == {2}
 
 
 def test_stale_batch_id_refused_on_existing_snapshot(spark, tmp_path):
     """Review regression (r14): a batch_id BELOW the committed one (a
     stream restarted with a FRESH checkpoint against an existing
-    snapshot) must be refused loudly in all three commit units —
-    proceeding would overwrite a version dir kept manifests still
-    reference and then prune the just-flipped name, destroying data."""
+    snapshot) must be refused loudly by both commit units — proceeding
+    would overwrite a version dir kept manifests still reference and
+    then prune the just-flipped name, destroying data."""
     import pytest
 
     from omics_data_integration_utilities_spark.streaming.sinks import (
-        apply_cdc_batch_into_snapshot,
+        apply_cdc_batch_into_bucketed_snapshot,
         read_bucketed_snapshot,
-        read_snapshot,
         upsert_batch_into_bucketed_snapshot,
-        upsert_batch_into_snapshot,
     )
 
     b = lambda k, v: spark.createDataFrame([(k, v)], "k long, v double")  # noqa: E731
-    full, buck, cdc = (
-        str(tmp_path / "stale_full"),
-        str(tmp_path / "stale_buck"),
-        str(tmp_path / "stale_cdc"),
-    )
+    buck, cdc = str(tmp_path / "stale_buck"), str(tmp_path / "stale_cdc")
     for i in (3, 4, 5):
-        upsert_batch_into_snapshot(spark, b(i, float(i)), full, ["k"], batch_id=i)
         upsert_batch_into_bucketed_snapshot(
             spark, b(i, float(i)), buck, ["k"], batch_id=i, n_buckets=4
         )
-    with pytest.raises(RuntimeError, match="fresh\\s+checkpoint"):
-        upsert_batch_into_snapshot(spark, b(9, 9.0), full, ["k"], batch_id=0)
     with pytest.raises(RuntimeError, match="fresh\\s+checkpoint"):
         upsert_batch_into_bucketed_snapshot(
             spark, b(9, 9.0), buck, ["k"], batch_id=0, n_buckets=4
         )
     cdc_b = spark.createDataFrame([(1, 1.0, "upsert")], "k long, v double, op string")
-    apply_cdc_batch_into_snapshot(spark, cdc_b, cdc, ["k"], batch_id=7)
+    apply_cdc_batch_into_bucketed_snapshot(
+        spark, cdc_b, cdc, ["k"], batch_id=7, n_buckets=4
+    )
     with pytest.raises(RuntimeError, match="fresh\\s+checkpoint"):
-        apply_cdc_batch_into_snapshot(spark, cdc_b, cdc, ["k"], batch_id=2)
+        apply_cdc_batch_into_bucketed_snapshot(
+            spark, cdc_b, cdc, ["k"], batch_id=2, n_buckets=4
+        )
     # snapshots intact after the refusals; replay of the committed id
     # still no-ops
-    assert {r["k"] for r in read_snapshot(spark, full).collect()} == {3, 4, 5}
     assert {r["k"] for r in read_bucketed_snapshot(spark, buck).collect()} == {3, 4, 5}
-    upsert_batch_into_snapshot(spark, b(5, 5.0), full, ["k"], batch_id=5)
-    assert {r["k"] for r in read_snapshot(spark, full).collect()} == {3, 4, 5}
+    assert {r["k"] for r in read_bucketed_snapshot(spark, cdc).collect()} == {1}
+    upsert_batch_into_bucketed_snapshot(
+        spark, b(5, 5.0), buck, ["k"], batch_id=5, n_buckets=4
+    )
+    assert {r["k"] for r in read_bucketed_snapshot(spark, buck).collect()} == {3, 4, 5}
 
 
 def test_prune_batch_partitions_unit(tmp_path):
