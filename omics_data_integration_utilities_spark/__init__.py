@@ -21,7 +21,8 @@ Layout
 - ``plans``      : end-to-end pipelines mirroring the reference entry points
                    (mass annotation, multi-omics correlation, transition match)
 - ``analytics``  : DriverNet / MethylMix-style per-group statistical kernels
-- ``streaming``  : Structured Streaming over the events table
+- ``streaming``  : event-time windows and joins over the events table,
+                   and the bucketed snapshot commits
 """
 
 __version__ = "0.3.0"

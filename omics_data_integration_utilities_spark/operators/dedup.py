@@ -66,40 +66,10 @@ def shingles_from_tokens(toks: Column, width: int = SHINGLE_WIDTH) -> Column:
     )
 
 
-def shingles_col(text: Column | str, width: int = SHINGLE_WIDTH) -> Column:
-    """Distinct ``width``-word shingles of a text column — pure array ops,
-    no explode, no UDF.  Prefer the two-step (materialize tokens, then
-    :func:`shingles_from_tokens`) in hot paths."""
-    return shingles_from_tokens(tokens_col(text), width)
-
-
-def shingle_hashes_col(text: Column | str, width: int = SHINGLE_WIDTH) -> Column:
-    """Shingle set → array of md5-derived ints reduced mod P (minhash input)."""
-    return F.transform(
-        shingles_col(text, width),
-        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long") % MINHASH_P,
-    )
-
-
 def _perm_lambda(a: int, b: int):
     # NB: must be a real 1-arg lambda — default-arg closures change the
     # visible arity and break Spark's higher-order-function binding
     return lambda h: (F.lit(a) * h + F.lit(b)) % MINHASH_P
-
-
-def minhash_signature_col(text: Column | str, width: int = SHINGLE_WIDTH) -> Column:
-    """16-element MinHash signature as an array column — computed row-local
-    with higher-order functions (no shuffle).
-
-    NOTE for performance-sensitive paths: prefer :func:`with_minhash_signature`,
-    which materializes the shingle-hash array in its own projection so the
-    16 permutation expressions reference a column instead of inlining the
-    md5 chain 16× (16× the work + codegen blowup → interpreted fallback).
-    """
-    hashes = shingle_hashes_col(text, width)
-    return F.array(
-        *[F.array_min(F.transform(hashes, _perm_lambda(a, b))) for a, b in MINHASH_PERMS]
-    )
 
 
 def with_shingle_hashes(

@@ -872,11 +872,11 @@ SELECT ms_name, structure_id, Ion_name, mm, ppm_error FROM (
 
 
 # --------------------------------------------------------------------------
-# streaming-equivalent batch window
+# event-time windows
 # --------------------------------------------------------------------------
 
 def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window event aggregation (batch form of streaming/events)."""
+    """Tumbling-window event aggregation (streaming/events.py)."""
     return tumbling_event_agg(_t(spark, sf_dir, "events"), 3600)
 
 
@@ -980,10 +980,9 @@ WINDOWED_PROFILE_COLS = ("value", "user_id")
 
 
 def q_events_windowed_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Windowed feed-drift profile (batch twin of
-    ``streaming/profile.windowed_profile_stream``, stream==batch parity
-    tested): per hourly epoch bucket × watched column, the streaming-
-    combinable moments a feed monitor alarms on.  Exact integer bucket
+    """Windowed feed-drift profile: per hourly epoch bucket × watched
+    column, the combinable moments a feed monitor alarms on
+    (``streaming/profile.windowed_profile_agg``).  Exact integer bucket
     arithmetic — the same ``div`` chain as ``events_tumbling``."""
     from ..streaming.profile import windowed_profile_agg
 
@@ -1174,8 +1173,7 @@ FROM x GROUP BY ws, event_type
 
 def q_events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user session windows (built-in ``F.session_window``, 6-hour
-    gap) — the streaming-native sessionization in batch form; oracle is
-    the classic gap-islands construction (lag + running break count)."""
+    gap); oracle is the classic gap-islands construction (lag + running break count)."""
     from ..streaming.events import session_window_agg
 
     return session_window_agg(_t(spark, sf_dir, "events"), gap_seconds=21600)
@@ -1203,12 +1201,9 @@ FROM s GROUP BY user_id, sid
 
 
 def q_events_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch form of the stream-stream interval join
-    (streaming/joins.py): click events joined to same-user purchase
-    events within [0, 1h] after the click.  The identical logical join
-    runs under readStream with watermarks on both sides — batch==stream
-    parity is proven in tests/test_streaming.py; this registered batch
-    form pins the values against a plain SQL range join."""
+    """Interval join (streaming/joins.py): click events joined to
+    same-user purchase events within [0, 1h] after the click, pinned
+    against a plain SQL range join."""
     from ..streaming.joins import interval_join
 
     ev = _t(spark, sf_dir, "events")
@@ -1236,12 +1231,9 @@ FROM l JOIN r ON l.user_id = r.user_id AND r.t BETWEEN l.t AND l.t + 3600
 
 
 def q_events_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT-OUTER form of the stream-stream interval join — the other
-    production shape ("click with no purchase within the hour"): every
-    click row survives, unmatched ones with null right columns.  Same
-    logical join runs under readStream with how='left_outer' (null rows
-    emit when the watermark proves no match can arrive); batch==stream
-    parity in tests/test_streaming.py."""
+    """LEFT-OUTER form of the interval join — the other production
+    shape ("click with no purchase within the hour"): every click row
+    survives, unmatched ones with null right columns."""
     from ..streaming.joins import interval_join
 
     ev = _t(spark, sf_dir, "events")

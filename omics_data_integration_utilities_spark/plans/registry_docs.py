@@ -653,12 +653,11 @@ def q_pipeline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of streaming/pipeline.curate_doc_stream (gate on the
-    SAME quality_expr → exact-dedup counts): per-source (n_in, n_gated,
-    n_kept_hashes) plus the __all__ row whose kept count is the global
-    distinct-content cardinality — the stream's kept-state size, so the
-    driver hash-checks the curation stream's algebra end-to-end the way
-    events_funnel does for the funnel stream (r11 verdict item 7)."""
+    """Ingest curation report (streaming/pipeline.curate_doc_batch_counts:
+    gate on the SAME quality_expr → exact-dedup counts): per-source
+    (n_in, n_gated, n_kept_hashes) plus the __all__ row whose kept count
+    is the global distinct-content cardinality, so the driver hash-checks
+    the curation algebra end-to-end (r11 verdict item 7)."""
     from ..streaming.pipeline import curate_doc_batch_counts
 
     return curate_doc_batch_counts(
@@ -697,10 +696,9 @@ FROM q
 # DuckDB sum(CASE..) returns HUGEINT — CAST every count to BIGINT (the
 # r9 doc_pack_chunks fetched-dtype lesson)
 def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-tumbling-window stage-survival funnel over the events feed —
-    the batch twin of streaming/funnel.windowed_funnel_stream (the
-    stream==batch parity test pins the two equal on identical input);
-    registered so the driver hash-checks the windowed funnel algebra."""
+    """Per-tumbling-window stage-survival funnel over the events feed
+    (streaming/funnel.windowed_funnel_batch); registered so the driver
+    hash-checks the windowed funnel algebra."""
     from ..streaming.funnel import windowed_funnel_batch
 
     events = _spread_scan(_t(spark, sf_dir, "events"))

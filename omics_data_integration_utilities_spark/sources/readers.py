@@ -161,33 +161,6 @@ def _with_corrupt_col(schema: T.StructType | str, corrupt_col: str) -> T.StructT
     )
 
 
-def read_jsonl_stream(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | str,
-    corrupt_col: str = "_corrupt_record",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming twin of :func:`read_jsonl`: a ``readStream`` JSON-lines
-    source with the same required-schema + PERMISSIVE corrupt-record
-    quarantine contract, for curation pipelines that ingest documents as
-    they land (one shard file per upload) instead of in batches.  Any
-    stateless curation op in ``operators/text.py`` composes on the
-    result unchanged — batch==stream parity is pinned in
-    tests/test_streaming.py.  ``max_files_per_trigger`` bounds
-    per-micro-batch work (backpressure when a backfill drops thousands
-    of shards at once)."""
-    schema = _with_corrupt_col(schema, corrupt_col)
-    reader = (
-        spark.readStream.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    return reader.json(path)
-
-
 def _byte_conf(spark: SparkSession, key: str, default: str) -> int:
     """A byte-suffixed Spark conf value ("128MB", "4m", "134217728b") as
     an int, via the same JVM parser Spark itself uses."""

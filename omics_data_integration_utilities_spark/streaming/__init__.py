@@ -1,7 +1,5 @@
-from .events import windowed_event_counts_stream, tumbling_event_agg  # noqa: F401
+from .events import tumbling_event_agg  # noqa: F401
 from .profile import (  # noqa: F401
     drift_flags,
     windowed_profile_agg,
-    windowed_profile_stream,
 )
-from .ann import start_ann_probe_sink  # noqa: F401

@@ -46,7 +46,8 @@ Implementations here:
   server-side-atomic conditional puts, no rename), with the data plane
   backed by a local directory so local[k] Spark can still read/write
   parquet.  It is both the contract's executable specification (the
-  sink battery runs against it in tests/test_streaming.py) and the
+  snapshot commit battery runs against it in tests/test_commitstore.py
+  and tests/test_streaming.py) and the
   template a real boto3/gcs implementation fills in method-for-method.
 - :class:`S3SnapshotStore` — that real implementation (r15 verdict
   item 4): boto3-shaped calls with S3 native conditional writes
@@ -287,7 +288,8 @@ class InMemoryObjectStore(SnapshotStore):
     spark_path           s3a://bucket/prefix/rel
     ===================  ==========================================
 
-    Used by tests/test_streaming.py to run the ENTIRE sink battery
+    Used by tests/test_commitstore.py and tests/test_streaming.py to
+    run the ENTIRE snapshot commit battery
     (commit, replay no-op, stale refusal, damage matrix, CDC, time
     travel, retention) against conditional-put semantics — proving the
     protocol never relies on rename or on posix atomicity."""

@@ -1,8 +1,8 @@
-"""Structured Streaming over the events table.
+"""Event-time windowed aggregation over the events table.
 
-The reference is strictly batch (SURVEY §2.10) — this is north-star
-surface: the same tumbling-window aggregation exposed both as a batch
-query (oracle-checkable) and as a watermarked streaming query.
+The reference is strictly batch (SURVEY §2.10), and so is this module:
+tumbling, session, hopping and multi-resolution windows, each a batch
+DataFrame the registry checks against a DuckDB oracle.
 
 Timestamp handling: the events parquet has shipped ``ts`` both as
 TIMESTAMP(NANOS) (read as int64 nanoseconds under
@@ -16,87 +16,8 @@ under any driver session timezone.
 
 from __future__ import annotations
 
-import contextlib
-import os
-import tempfile
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
-
-
-@contextlib.contextmanager
-def nanos_long_read_conf(spark: SparkSession):
-    """Scoped enable of the legacy TIMESTAMP(NANOS)→long parquet read,
-    restoring the session's prior value (or unsetting) on exit — the
-    shared conf-scoped reader helper for every streaming entry point,
-    so building a stream never permanently mutates the caller's session.
-
-    The streaming entry points wrap only their batch SCHEMA INFERENCE
-    in this scope: for the shipped TIMESTAMP(MICROS) feeds the conf is
-    a no-op at execution, so the running stream needs nothing.  A
-    genuinely TIMESTAMP(NANOS) feed is decoded under this conf at
-    EXECUTION time too — for that case hold the scope open around the
-    whole stream lifetime (enter before building, exit after
-    ``q.stop()``)."""
-    try:
-        prev = spark.conf.get(_NANOS_CONF)
-    except Exception:
-        prev = None
-    spark.conf.set(_NANOS_CONF, "true")
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(_NANOS_CONF)
-        else:
-            spark.conf.set(_NANOS_CONF, prev)
-
-
-def _parquet_has_nanos(path: str) -> bool:
-    """Footer inspection: does the parquet at ``path`` (file or dir)
-    carry any timestamp[ns] column?  Errs toward True on unreadable /
-    non-local paths — the safe direction is keeping the legacy conf."""
-    try:
-        import pyarrow.parquet as pq
-
-        target = path
-        if os.path.isdir(path):
-            files = [
-                f for f in sorted(os.listdir(path)) if f.endswith(".parquet")
-            ]
-            if not files:
-                return True
-            target = os.path.join(path, files[0])
-        return any(
-            str(f.type).startswith("timestamp[ns")
-            for f in pq.read_schema(target)
-        )
-    except Exception:
-        return True
-
-
-def stream_source_schema(spark: SparkSession, path: str):
-    """Schema inference for a file-stream source with nanos-AWARE conf
-    handling (shared by every streaming entry point):
-
-    - TIMESTAMP(MICROS)/other feeds (the shipped testdata): the legacy
-      ``nanosAsLong`` conf is scoped to the inference and restored — no
-      session mutation (building a stream leaves the caller's conf
-      untouched).
-    - Genuine TIMESTAMP(NANOS) feeds (footer-inspected): the conf is
-      set and LEFT SET, because the RUNNING stream decodes nanos only
-      under it — restoring after inference would kill the first
-      micro-batch with an Illegal-Parquet-type error.  The session-wide
-      side effect is the price of a nanos feed and matches the
-      pre-scoping behavior those callers relied on.
-    """
-    if _parquet_has_nanos(path):
-        spark.conf.set(_NANOS_CONF, "true")
-        return spark.read.parquet(path).schema
-    with nanos_long_read_conf(spark):
-        return spark.read.parquet(path).schema
 
 
 def ts_event_micros(df: DataFrame, col: str = "ts") -> Column:
@@ -109,8 +30,6 @@ def ts_event_micros(df: DataFrame, col: str = "ts") -> Column:
       result is independent of ``spark.sql.session.timeZone``; a cast to
       TIMESTAMP would not be).
     - ``timestamp``: instant type → ``unix_micros`` directly.
-
-    Works on batch and streaming DataFrames (schema is known either way).
     """
     return F.expr(ts_event_micros_sql(df, col))
 
@@ -161,55 +80,13 @@ def tumbling_event_agg(events: DataFrame, window_seconds: int = 3600) -> DataFra
     )
 
 
-def staged_file_stream(spark: SparkSession, path: str) -> DataFrame:
-    """The shared file-source opener: nanos-aware schema inference (see
-    ``stream_source_schema``) + the single-file symlink staging the file
-    streaming source needs (it only accepts directories).  Every
-    streaming entry point that reads a parquet path goes through here so
-    the staging/inference logic lives once."""
-    schema = stream_source_schema(spark, path)
-    if os.path.isfile(path):
-        staged = tempfile.mkdtemp(prefix="omics_stream_")
-        os.symlink(path, os.path.join(staged, os.path.basename(path)))
-        path = staged
-    return spark.readStream.schema(schema).parquet(path)
-
-
-def windowed_event_counts_stream(
-    spark: SparkSession,
-    events_path: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming variant: file source → watermark → windowed agg.
-
-    Late rows beyond the watermark are dropped; state is bounded by the
-    watermark horizon — the standard production shape for the events feed.
-    Returns the (unstarted) streaming DataFrame; callers attach a sink::
-
-        q = (df.writeStream.outputMode("append").format("memory")
-               .queryName("out").start())
-        q.processAllAvailable()
-    """
-    stream = staged_file_stream(spark, events_path)
-    return (
-        stream.withColumn("__event_time", _event_time(stream))
-        .withWatermark("__event_time", watermark)
-        .groupBy(F.window("__event_time", window), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
-    )
-
-
 def session_window_agg(events: DataFrame, gap_seconds: int = 21600) -> DataFrame:
     """Batch-form session windows via the built-in ``F.session_window``:
     per user, events closer than ``gap_seconds`` merge into one session
     ([start, last_event + gap) ranges merge while they overlap — an event
     exactly ``gap`` after the previous one starts a NEW session).
 
-    Same streaming-first shape as the tumbling variant: the identical
-    expression works under ``readStream`` + watermark (session windows
-    are Structured Streaming's native sessionization).  Value sums go
-    through DECIMAL so both engines agree exactly.
+    Value sums go through DECIMAL so both engines agree exactly.
 
     Returns (user_id, session_start_us, session_end_us, n, sum_value).
     """
@@ -240,9 +117,7 @@ def hopping_window_agg(
 ) -> DataFrame:
     """Batch-form hopping (sliding) windows via the built-in ``F.window``
     with a slide: each event lands in ``window/slide`` overlapping
-    buckets.  Same streaming-first shape as the tumbling variant (the
-    identical expression runs under readStream + watermark).  DECIMAL
-    value sums for cross-engine exactness.
+    buckets.  DECIMAL value sums for cross-engine exactness.
 
     Returns (window_start_us, window_end_us, event_type, n, sum_value).
     """
@@ -288,13 +163,15 @@ def multires_rollup(
     drift with grouping order and break rollup(rollup(x)) == rollup(x))
     and emerge as rounded doubles only in the final projection.
 
-    ``resolutions`` must be ascending with each coarser level an integer
-    multiple of the previous (the bucket arithmetic is integer division
+    ``resolutions`` must be non-empty, positive and ascending, with each
+    coarser level an integer multiple of the previous (the bucket arithmetic is integer division
     on the finer bucket id).  Returns
     (resolution_s, bucket, event_type, n, sum_value) stacked across
     levels; ``bucket`` is epoch-micros // (resolution·1e6).
     """
     res = [int(r) for r in resolutions]
+    if not res or res[0] <= 0:
+        raise ValueError(f"resolutions must be non-empty and positive: {res}")
     if sorted(res) != res or len(set(res)) != len(res):
         raise ValueError("resolutions must be strictly ascending")
     for fine, coarse in zip(res, res[1:]):

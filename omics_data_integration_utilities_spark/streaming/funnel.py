@@ -1,27 +1,20 @@
-"""Windowed pipeline-funnel monitoring over a live feed.
+"""Windowed pipeline-funnel monitoring over the events table.
 
 ``operators.aggregates.funnel_counts`` gives the one-scan cumulative
-stage-survival table for a batch corpus; a production ingest pipeline
-wants the same table PER TIME WINDOW over the arriving stream ("did the
-english-filter suddenly start eating everything this hour?").  The
-funnel is pure conditional aggregation — stateless beyond the window
-group — so the streaming form is exactly the batch aggregate behind a
-watermark: bounded state, append-mode emission on window close.
-
-Batch/stream parity is structural: both forms call the same
-``funnel_counts`` with the window bucket as the group column; the tests
-assert value equality on the same input (the engine's standing
-batch==stream proof pattern, tests/test_streaming.py).
+stage-survival table for a corpus; an ingest pipeline wants the same
+table PER TIME WINDOW ("did the english-filter suddenly start eating
+everything this hour?").  The funnel is pure conditional aggregation,
+so the windowed form is ``funnel_counts`` with the epoch bucket as the
+group column.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.aggregates import funnel_counts
-from .dedup import _stage_dir
-from .events import _event_time, stream_source_schema, ts_event_micros_sql
+from .events import ts_event_micros_sql
 
 
 def windowed_funnel_batch(
@@ -29,42 +22,10 @@ def windowed_funnel_batch(
     stages: "list[tuple[str, object]]",
     window_seconds: int = 3600,
 ) -> DataFrame:
-    """Batch twin: integer epoch bucket (timezone/encoding-proof, same
+    """Integer epoch bucket (timezone/encoding-proof, same
     rule as :func:`tumbling_event_agg`) × the funnel stages."""
     window_us = int(window_seconds) * 1_000_000
     bucket = F.expr(f"{ts_event_micros_sql(events)} div {window_us}")
     return funnel_counts(
         events.withColumn("bucket", bucket), stages, group_cols=["bucket"]
     )
-
-
-def windowed_funnel_stream(
-    spark: SparkSession,
-    events_path: str,
-    stages: "list[tuple[str, object]]",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming form: file source → watermark → per-window funnel.
-
-    Returns the unstarted streaming DataFrame (callers attach a sink);
-    output rows are ``(win_start, stage, stage_idx, n_in, n_surviving,
-    n_dropped)`` — one funnel row-set per closed window, emitted once
-    the watermark passes (append mode), state bounded by the horizon.
-
-    No session-conf side effect for MICROS feeds (the shipped shape):
-    the legacy ``nanosAsLong`` read is scoped to the schema inference
-    and restored.  A genuine TIMESTAMP(NANOS) feed (footer-inspected)
-    keeps the conf set for the stream's lifetime — the running stream
-    decodes nanos only under it (see
-    :func:`..streaming.events.stream_source_schema`).
-    """
-    schema = stream_source_schema(spark, events_path)
-    stream = spark.readStream.schema(schema).parquet(_stage_dir(events_path))
-    windowed = (
-        stream.withColumn("__event_time", _event_time(stream))
-        .withWatermark("__event_time", watermark)
-        .withColumn("win", F.window("__event_time", window))
-    )
-    out = funnel_counts(windowed, stages, group_cols=["win"])
-    return out.select(F.col("win.start").alias("win_start"), *out.columns[1:])

@@ -1,31 +1,20 @@
-"""Stream-stream interval join over the events feed (north-star streaming
-surface; the reference is batch-only).
+"""Interval join over the events table (the reference is batch-only).
 
-The production shape: two event streams equi-join on a key with an
-event-time interval constraint (``t_right ∈ [t_left + lower, t_left +
-upper]``).  In Structured Streaming this is THE stateful join form —
-both sides buffer rows in state, and the watermarks plus the time-range
-condition bound how long either side is retained (Spark derives the
-state eviction horizon from the interval, so state cannot grow with the
-stream).
+Two event relations equi-join on a key with an event-time interval
+constraint (``t_right ∈ [t_left + lower, t_left + upper]``).  Key
+equality carries the one shuffle; the range predicate filters inside
+each key group.
 
-The batch form is the same logical join — key equality carries the one
-shuffle, the range predicate filters inside each key group — so batch
-output == streaming output on the same data, which is what the tests
-prove (the same parity discipline as the session/hopping windows).
-
-Scale shape: shuffle is |left| + |right| keyed rows, state is bounded
-by (watermark + interval width) per key, and skewed keys fall to AQE
-skew handling like any equi-join.  No UDFs anywhere.
+Scale shape: shuffle is |left| + |right| keyed rows, and skewed keys
+fall to AQE skew handling like any equi-join.  No UDFs anywhere.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .events import _event_time, stream_source_schema
-from .neardup import _stage_dir
+from .events import _event_time
 
 
 def interval_join(
@@ -83,85 +72,4 @@ def interval_join(
             "left_value",
             "right_value",
         )
-    )
-
-
-def interval_join_stream(
-    spark: SparkSession,
-    left_path: str,
-    right_path: str,
-    key: str = "user_id",
-    lower_seconds: int = 0,
-    upper_seconds: int = 3600,
-    watermark: str = "2 hours",
-    max_files_per_trigger: int | None = None,
-    how: str = "inner",
-) -> DataFrame:
-    """Streaming form of :func:`interval_join`: file sources → watermark
-    BOTH sides → stateful join with the time-range condition.
-
-    Spark uses the watermarks + interval to evict join state: a left row
-    is dropped once the right watermark passes ``left_time +
-    upper_seconds`` (and symmetrically), so state is bounded by the
-    watermark horizon plus the interval width — the property that makes
-    this run forever on an unbounded feed.  Output columns match the
-    batch form exactly; tests assert set equality.
-
-    ``how='left_outer'``: an unmatched left row emits with null right
-    columns only once the watermark proves no match can still arrive
-    (``left_time + upper_seconds`` behind the right watermark) — so on a
-    finite feed the last rows stay pending unless a later event advances
-    the watermark past them (the parity test appends a future sentinel
-    on the right for exactly this).
-    """
-    def _src(path: str):
-        # each side reads ITS OWN parquet schema — applying the left
-        # schema to the right feed would silently misread a right source
-        # whose columns differ (file streams don't validate the schema).
-        # Nanos-aware inference: no session mutation for MICROS feeds,
-        # conf kept for genuine NANOS feeds (stream_source_schema).
-        reader = spark.readStream.schema(stream_source_schema(spark, path))
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-        return reader.parquet(_stage_dir(path))
-
-    lraw = _src(left_path)
-    l = (
-        lraw.withColumn("__lt", _event_time(lraw))
-        .withWatermark("__lt", watermark)
-        .select(
-            F.col(key).alias("k"),
-            F.col("__lt"),
-            F.col("event_type").alias("left_type"),
-            F.col("value").alias("left_value"),
-        )
-    )
-    rraw = _src(right_path)
-    r = (
-        rraw.withColumn("__rt", _event_time(rraw))
-        .withWatermark("__rt", watermark)
-        .select(
-            F.col(key).alias("rk"),
-            F.col("__rt"),
-            F.col("event_type").alias("right_type"),
-            F.col("value").alias("right_value"),
-        )
-    )
-    joined = l.join(
-        r,
-        on=[
-            F.col("k") == F.col("rk"),
-            F.col("__rt") >= F.col("__lt") + F.expr(f"INTERVAL {int(lower_seconds)} SECONDS"),
-            F.col("__rt") <= F.col("__lt") + F.expr(f"INTERVAL {int(upper_seconds)} SECONDS"),
-        ],
-        how=how,
-    )
-    return joined.select(
-        F.col("k").alias(key),
-        F.unix_timestamp("__lt").alias("left_time"),
-        F.unix_timestamp("__rt").alias("right_time"),
-        "left_type",
-        "right_type",
-        "left_value",
-        "right_value",
     )

@@ -1,38 +1,28 @@
-"""Streaming curation pipeline: quality gate → exact dedup on arrival.
+"""Ingest curation report: quality gate → exact dedup by content hash.
 
-The batch flagship (``plans/data_pipeline.py``) curates a corpus in one
-composed plan; this is the INGEST-time sibling — documents stream in,
-low-quality ones drop at the gate (a pure JVM projection, the same
-``quality_expr`` the batch scorer uses), and exact duplicates are
-suppressed as they arrive (``dropDuplicates`` on the content hash —
-state is one row per distinct kept hash, the standard global-dedup
-trade; pass a watermark column upstream and switch to
-``dropDuplicatesWithinWatermark`` when the horizon-bounded form is
-wanted, as in ``streaming/dedup.py``).
-
-Parity contract (tests/test_streaming.py): the kept CONTENT-HASH SET
-equals the batch equivalent (same gate, then distinct hashes) on the
-same input.  Which duplicate's id survives is arrival-order-dependent —
-exactly like any streaming dedup — so parity is on hashes and counts,
-never representative ids.
+The flagship (``plans/data_pipeline.py``) curates a corpus in one
+composed plan; this is the INGEST-time report — low-quality documents
+drop at the gate (a pure JVM projection, the same ``quality_expr`` the
+scorer uses), and exact duplicates collapse on the content hash.
+Which duplicate's id survives a dedup is order-dependent, so the report
+counts hashes, never representative ids.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.text import quality_expr
-from .dedup import _stage_dir
 
 
 def _gated_projection(
     df: DataFrame, text_col: str, id_col: str, min_quality: float
 ) -> DataFrame:
     """The shared gate: one JVM projection (id, source, content_hash,
-    quality) filtered at ``min_quality`` — the SINGLE source of truth
-    both the stream and the batch-twin counts apply, so parity is
-    structural rather than re-implemented."""
+    quality) filtered at ``min_quality`` — the single source of truth
+    for the gate, shared by the curation report and by ingest callers
+    that dedup and commit the gated rows."""
     return df.select(
         F.col(id_col),
         F.col("source"),
@@ -41,42 +31,22 @@ def _gated_projection(
     ).where(F.col("quality") >= F.lit(float(min_quality)))
 
 
-def curate_doc_stream(
-    spark: SparkSession,
-    docs_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_quality: float = 0.5,
-) -> DataFrame:
-    """File-source document stream → quality gate → exact dedup.
-
-    Returns the unstarted streaming DataFrame
-    (id, source, content_hash, quality): one row per kept document.
-    """
-    schema = spark.read.parquet(docs_path).schema
-    stream = spark.readStream.schema(schema).parquet(_stage_dir(docs_path))
-    gated = _gated_projection(stream, text_col, id_col, min_quality)
-    return gated.dropDuplicates(["content_hash"])
-
-
 def curate_doc_batch_counts(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     min_quality: float = 0.5,
 ) -> DataFrame:
-    """Batch twin of :func:`curate_doc_stream`, aggregated to the
-    deterministic curation report: per source ``(n_in, n_gated,
+    """The deterministic curation report: per source ``(n_in, n_gated,
     n_kept_hashes)`` plus an ``__all__`` row whose ``n_kept_hashes`` is
-    the GLOBAL distinct-content count — exactly the stream's kept-state
-    size (which duplicate's id survives the stream is arrival-order-
-    dependent, so the deterministic cross-form invariant is hash-set
-    cardinality, never representative ids; per-source kept counts use
-    within-source distinct for the same reason).
+    the GLOBAL distinct-content count — the number of rows a
+    ``dropDuplicates(["content_hash"])`` on the gated projection keeps
+    (which duplicate's id survives is order-dependent, so the invariant
+    is hash-set cardinality, never representative ids; per-source kept
+    counts use within-source distinct for the same reason).
 
-    Scale shape: the gate is the same single projection the stream
-    applies (no shuffle), then one groupBy(source) with a distinct-
-    count — partial aggregation on (source, hash) before the exchange —
+    Scale shape: the gate is one projection (no shuffle), then one
+    groupBy(source) with a distinct-count — partial aggregation on (source, hash) before the exchange —
     plus one global aggregate; no joins, no windows, no collect.
     """
     gated = _gated_projection(df, text_col, id_col, min_quality)

@@ -1,34 +1,28 @@
-"""Streaming data-quality / drift monitor — the windowed twin of
+"""Data-quality / drift monitor — the windowed twin of
 ``operators/profile.profile_numeric``: per tumbling window, per watched
 column, the moments a feed monitor alarms on (count, null count, mean,
 sample stddev, min, max).
 
 Production shape at scale: every aggregate here is a single-pass
-streaming-combinable JVM aggregate (count/avg/stddev/min/max — no
-percentile, whose exact form buffers values and has no bounded
-streaming state), watermarked so state is bounded by the horizon, and
-the per-window wide row is unpivoted AFTER aggregation (a projection on
-one row per window — free, same 1-row ``stack`` trick as the batch
-profiler).  Drift detection composes downstream: join the emitted
-window rows against a reference profile and flag shifted moments
-(:func:`drift_flags`), which is plain DataFrame algebra on the tiny
-profile relation, not on the feed.
+combinable JVM aggregate (count/avg/stddev/min/max — no percentile,
+whose exact form buffers values), and the per-window wide row is
+unpivoted AFTER aggregation (a projection on one row per window — free,
+same 1-row ``stack`` trick as the batch profiler).  Drift detection
+composes downstream: join the emitted window rows against a reference
+profile and flag shifted moments (:func:`drift_flags`), which is plain
+DataFrame algebra on the tiny profile relation, not on the feed.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .events import (
-    _event_time,
-    staged_file_stream,
-    ts_event_micros_sql,
-)
+from .events import ts_event_micros_sql
 
-__all__ = ["windowed_profile_agg", "windowed_profile_stream", "drift_flags"]
+__all__ = ["windowed_profile_agg", "drift_flags"]
 
 _STATS = ("n_nonnull", "n_nulls", "mean", "stddev", "min_value", "max_value")
 
@@ -70,7 +64,7 @@ def windowed_profile_agg(
     columns: Sequence[str],
     window_seconds: int = 3600,
 ) -> DataFrame:
-    """Batch form: integer epoch bucket (timezone-proof, engine-exact —
+    """Integer epoch bucket (timezone-proof, engine-exact —
     same ``div`` arithmetic as ``tumbling_event_agg``) × watched column
     → ``(bucket, col_name, n_nonnull, n_nulls, mean, stddev, min_value,
     max_value)``."""
@@ -81,30 +75,6 @@ def windowed_profile_agg(
     bucket = F.expr(f"{ts_event_micros_sql(events)} div {window_us}")
     wide = events.groupBy(bucket.alias("bucket")).agg(*_col_aggs(cols))
     return _unpivot(wide, cols, ["bucket"])
-
-
-def windowed_profile_stream(
-    spark: SparkSession,
-    events_path: str,
-    columns: Sequence[str],
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming form: file source → watermark → windowed wide agg →
-    per-window unpivot.  Returns the unstarted streaming DataFrame;
-    callers attach a sink.  State per window is |cols| fixed-size
-    aggregation buffers, bounded overall by the watermark horizon."""
-    cols = list(columns)
-    if not cols:
-        raise ValueError("windowed_profile_stream: need at least one column")
-    stream = staged_file_stream(spark, events_path)
-    wide = (
-        stream.withColumn("__event_time", _event_time(stream))
-        .withWatermark("__event_time", watermark)
-        .groupBy(F.window("__event_time", window))
-        .agg(*_col_aggs(cols))
-    )
-    return _unpivot(wide, cols, ["window"])
 
 
 def drift_flags(

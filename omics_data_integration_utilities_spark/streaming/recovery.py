@@ -121,7 +121,7 @@ def restore_current(
     partial data — refused).  When CURRENT already names a complete
     generation the snapshot is NOT damaged and the restore is refused
     unless ``force=True`` (an explicit rollback — note that commits
-    after a rollback will be refused as stale until the stream resumes
+    after a rollback will be refused as stale until the writer resumes
     from a batch_id above the rolled-back-to one, which is the safe
     default for an operation that rewrites history).  Returns the
     restored name.  The flip is a conditional put on the generation

@@ -1,35 +1,31 @@
-"""Streaming sinks: the write-side conventions the streaming entry
-points leave to callers (north-star surface; the reference is strictly
-batch — its sinks are plain CSV/SQLite writes, the to_csv/to_sql call
-sites in integrative_omics/gizmos.py).
+"""Snapshot commits: the write side of the engine (the reference is
+strictly batch — its sinks are plain CSV/SQLite writes, the
+to_csv/to_sql call sites in integrative_omics/gizmos.py).
 
-Two production shapes:
+:func:`upsert_batch_into_bucketed_snapshot` is MERGE as a commit unit:
+each call upserts one batch into a versioned parquet SNAPSHOT with the
+semantics of ``operators.joins.upsert_snapshot`` (anti-join + union —
+no Delta/Iceberg machinery).  The snapshot has ONE layout: version dirs
+``v{batch}/__bucket=B/`` partitioned by key-hash bucket, a manifest
+``m{batch}.json`` mapping every bucket to the version dir holding it,
+and an atomically swapped ``CURRENT`` pointer naming the live manifest.
+A batch rewrites ONLY the buckets it touches; untouched buckets carry
+by reference, so per-commit cost is O(touched-bucket data + batch),
+never O(snapshot) (SCALE.md r14, "Bucketed upsert snapshot": bytes
+written per commit are ~touched/n_buckets of the snapshot at every
+scale, ~25× less with 2/64 buckets touched).  Readers resolve through
+:func:`read_bucketed_snapshot` and only ever see a complete manifest.
+The newest ``keep_versions`` manifests are retained per flip so
+in-flight readers of a superseded generation finish their scan; older
+generations are pruned.
 
-- :func:`start_parquet_append_sink` — the plain durable feed archive:
-  append-mode parquet files + checkpoint, the downstream input for every
-  batch recount/verify job in this engine (the Lambda split the
-  heavy-hitter and dedup docstrings describe needs the archived feed).
-
-- :func:`start_bucketed_upsert_sink` — streaming MERGE: each micro-batch
-  upserts into a versioned parquet SNAPSHOT with the semantics of
-  ``operators.joins.upsert_snapshot`` (anti-join + union — no
-  Delta/Iceberg machinery).  The snapshot has ONE layout: version dirs
-  ``v{batch}/__bucket=B/`` partitioned by key-hash bucket, a manifest
-  ``m{batch}.json`` mapping every bucket to the version dir holding
-  it, and an atomically swapped ``CURRENT`` pointer naming the live
-  manifest.  A batch rewrites ONLY the buckets it touches; untouched
-  buckets carry by reference, so per-commit cost is O(touched-bucket
-  data + batch), never O(snapshot) (SCALE.md r14, "Bucketed upsert
-  snapshot": bytes written per commit are ~touched/n_buckets of the
-  snapshot at every scale, ~25× less with 2/64 buckets touched).
-  Crash-safe at every boundary — a crash before the pointer flip
-  leaves ``CURRENT`` on the previous complete manifest, and Structured
-  Streaming's replay of the uncommitted batch re-derives the same next
-  version from it; a replayed ALREADY-committed batch is a no-op.
-  Readers resolve through :func:`read_bucketed_snapshot` and only ever
-  see a complete manifest.  The newest ``keep_versions`` manifests are
-  retained per flip so in-flight readers of a superseded generation
-  finish their scan; older generations are pruned.
+Replay contract, per ``batch_id``: the caller numbers its commits with
+a monotone ``batch_id``, and every version and manifest name is a pure
+function of it.  Re-running a commit whose ``CURRENT`` flip happened is
+a no-op; re-running one that crashed before the flip re-derives the
+same next version from the still-current manifest; a ``batch_id``
+below the committed one is refused.  So a caller that retries a failed
+batch under its original id gets exactly-once output.
 
 ``n_buckets=1`` is the whole-snapshot-rewrite shape: one bucket and one
 file per commit, plus a manifest put.  It is the cheaper choice when
@@ -40,13 +36,14 @@ manifest pins ``n_buckets``, the key schema and the row schema;
 :func:`rebucket_bucketed_snapshot` is the one sanctioned way to change
 them.
 
-CDC apply (r14): :func:`start_cdc_sink` adds DELETE tombstones — each
-micro-batch carries an op column of ``upsert``/``delete`` rows and
-commits both in one manifest flip (one anti-join drops replaced AND
-deleted rows, upserts union back: the same single-shuffle bound as
-plain MERGE).  This is the right-to-be-forgotten half a training-data
-snapshot needs; same-key mixed ops within one unordered micro-batch are
-refused loudly rather than applied in an undefined order.
+CDC apply (r14): :func:`apply_cdc_batch_into_bucketed_snapshot` adds
+DELETE tombstones — each batch carries an op column of
+``upsert``/``delete`` rows and commits both in one manifest flip (one
+anti-join drops replaced AND deleted rows, upserts union back: the same
+single-shuffle bound as plain MERGE).  This is the right-to-be-forgotten
+half a training-data snapshot needs; same-key mixed ops within one
+unordered batch are refused loudly rather than applied in an undefined
+order.
 
 Deployment shape (r15, r14 verdict item 2): every driver-side metadata
 operation — pointer read/flip, manifest put, listing, pruning — goes
@@ -57,12 +54,12 @@ shape — the layout above as plain files and dirs) or a
 ``SnapshotStore`` instance; an S3/GCS deployment
 implements the store against the service's conditional-put API (the
 shipped :class:`~.commitstore.InMemoryObjectStore` is the executable
-contract, and the whole sink battery runs against it in tests).  The
+contract, and the whole commit battery runs against it in tests).  The
 pointer flip is CONDITIONED on the generation read at commit start, so
 on object stores a concurrent writer on the same snapshot loses loudly
 (:class:`~.commitstore.CommitConflict`) instead of silently dropping a
 commit; on posix the condition is best-effort emulation (single-writer
-by construction — one streaming query owns a snapshot).
+by construction — one writer owns a snapshot).
 """
 
 from __future__ import annotations
@@ -70,7 +67,6 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
 from .commitstore import (
     ABSENT,
@@ -137,129 +133,17 @@ def _check_keep_versions(keep_versions: int) -> int:
     return kv
 
 
-def start_parquet_append_sink(
-    stream: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    trigger_once: bool = False,
-) -> StreamingQuery:
-    """Append-mode parquet archive with checkpointing — the durable feed
-    copy batch verifiers recount against.  Returns the started query.
-
-    Growth contract (r14 verdict item 3): this archive grows without
-    bound BY DESIGN — it is the replayable history, and whoever owns
-    the deployment owns its expiry (downstream compaction, or object-
-    store lifecycle rules at scale).  For a SELF-bounding archive use
-    :func:`start_bounded_parquet_archive_sink` instead: batch_id-
-    partitioned with keep-last-N retention applied inside every
-    trigger."""
-    writer = (
-        stream.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def prune_batch_partitions(output_path: str, keep_batches: int) -> "list[str]":
-    """Keep the newest ``keep_batches`` ``batch_id=N`` partitions under
-    ``output_path`` and remove the rest; returns the pruned partition
-    names.  The shared retention unit behind
-    :func:`start_bounded_parquet_archive_sink` and the streaming ANN
-    probe sink's ``keep_batches`` option — driver-side posix (these
-    archive paths are plain Spark output dirs; on an object store,
-    prefer the service's native lifecycle/expiry rules, which do the
-    same thing without a driver in the loop).
-
-    A non-posix URI is REFUSED up front (r15 ADVICE): os.listdir on an
-    ``s3a://...`` path raises FileNotFoundError, which the empty-dir
-    handling below would swallow — a keep_batches-bounded archive
-    pointed at an object store would appear to work while never
-    pruning, with no signal."""
-    import os
-    import shutil
-    from urllib.parse import urlparse
-
-    scheme = urlparse(output_path).scheme
-    if scheme not in ("", "file"):
-        raise ValueError(
-            f"prune_batch_partitions needs a driver-local (or shared-"
-            f"posix) path; got scheme {scheme!r} in {output_path!r} — on "
-            "an object store use the service's lifecycle/expiry rules "
-            "(keep_batches retention would otherwise silently never prune)"
-        )
-    if int(keep_batches) < 1:
-        raise ValueError(f"keep_batches must be >= 1 (got {keep_batches})")
-    try:
-        names = [
-            n for n in os.listdir(output_path) if n.startswith("batch_id=")
-        ]
-    except FileNotFoundError:
-        return []
-    names.sort(key=lambda n: int(n.split("=", 1)[1]), reverse=True)
-    pruned = names[int(keep_batches):]
-    for n in pruned:
-        shutil.rmtree(os.path.join(output_path, n), ignore_errors=True)
-    return pruned
-
-
-def start_bounded_parquet_archive_sink(
-    stream: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    keep_batches: int,
-    trigger_once: bool = False,
-) -> StreamingQuery:
-    """The bounded-disk archive (r14 verdict item 5): each micro-batch
-    lands in its own ``batch_id=N`` partition via dynamic partition
-    overwrite (replay rewrites instead of appending duplicates — the
-    same exactly-once-output contract as the ANN probe sink), then
-    retention keeps the newest ``keep_batches`` partitions.  Use when
-    the archive is a rolling window (recent-feed verification, probe
-    result serving) rather than the full replayable history —
-    :func:`start_parquet_append_sink` keeps everything by design.
-
-    Retention is deterministic under replay: a replayed batch N is the
-    newest partition at its own write time, so the prune set is a pure
-    function of the committed batch ids."""
-    from pyspark.sql import functions as F
-
-    if int(keep_batches) < 1:
-        raise ValueError(f"keep_batches must be >= 1 (got {keep_batches})")
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-        prune_batch_partitions(out_dir, keep_batches)
-
-    writer = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def _refuse_stale_batch(
     cur_name: "str | None", batch_id: int, store: SnapshotStore
 ) -> None:
-    """A batch_id BELOW the committed one can only mean a stream
-    restarted against an existing snapshot with a FRESH checkpoint
-    (batch ids are monotone per checkpoint).  Proceeding would be
+    """A batch_id BELOW the committed one can only mean a writer
+    restarted its batch numbering against an existing snapshot (batch
+    ids are monotone per lineage).  Proceeding would be
     destructive twice over: mode("overwrite") clobbers a version dir
     that kept manifests still reference, and retention then prunes the
     just-flipped name as lexicographically old, leaving CURRENT
-    dangling.  Refuse loudly — resume from the original checkpoint, or
-    point the new checkpoint lineage at a NEW snapshot dir."""
+    dangling.  Refuse loudly — continue the original numbering, or
+    point the new lineage at a NEW snapshot dir."""
     committed = _batch_digits(cur_name)
     if committed is not None and int(batch_id) < committed:
         raise RuntimeError(
@@ -298,7 +182,7 @@ def read_bucketed_snapshot(
     snapshot_dir: "str | SnapshotStore",
     manifest: "str | None" = None,
 ) -> DataFrame:
-    """Reader half of :func:`start_bucketed_upsert_sink`: resolve the
+    """Reader half of the bucketed commit units: resolve the
     CURRENT manifest and union-read the per-bucket dirs it references.
     A manifest only ever names COMPLETE bucket dirs (the flip happens
     after the data write), so readers never see a partial bucket.
@@ -372,66 +256,6 @@ def read_bucketed_snapshot(
     return spark.read.parquet(*[store.spark_path(p) for p in paths])
 
 
-def _start_snapshot_sink(
-    stream, commit, snapshot_dir, checkpoint_dir, key_cols, trigger_once,
-    **commit_kwargs,
-) -> StreamingQuery:
-    """The streaming wrapper both snapshot sinks share: validate the
-    store and the retention floor at sink creation, then run one
-    ``commit`` unit per micro-batch (the unit's replay contract makes
-    the sink exactly-once)."""
-    spark = stream.sparkSession
-    store = as_store(snapshot_dir)  # fail fast at sink creation
-    _check_keep_versions(commit_kwargs["keep_versions"])
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        commit(spark, batch_df, store, key_cols, batch_id, **commit_kwargs)
-
-    writer = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def start_bucketed_upsert_sink(
-    stream: DataFrame,
-    snapshot_dir: "str | SnapshotStore",
-    checkpoint_dir: str,
-    key_cols: "list[str]",
-    n_buckets: int = 16,
-    trigger_once: bool = False,
-    keep_versions: int = 2,
-) -> StreamingQuery:
-    """Streaming MERGE into the bucketed snapshot: per micro-batch,
-    rows replace same-key snapshot rows, new keys insert, untouched
-    rows carry (``operators.joins.upsert_snapshot`` semantics,
-    parity-tested).  The batch is deduped to one row per key first
-    (which duplicate survives is arbitrary under micro-batch semantics
-    — feed a deterministic update stream, or pre-aggregate, when
-    per-key ordering matters).  Each micro-batch rewrites only the
-    key-hash buckets it touches.  Size ``n_buckets`` so one bucket's
-    data fits a comfortable rewrite unit (O(100 MB–1 GB) at scale — the
-    dedup-index guidance), or pass 1 when every batch touches most of
-    the snapshot; the bucket count is fixed at snapshot creation and
-    enforced on every later commit.
-
-    Consumers read via :func:`read_bucketed_snapshot`; the newest
-    ``keep_versions`` (minimum 2) manifests are retained per flip, so a
-    reader's lazy scan survives ``keep_versions - 1`` further commits —
-    raise it for long-running readers over a fast-flipping snapshot.
-    :func:`upsert_batch_into_bucketed_snapshot` is the per-batch unit
-    (exposed for direct use and tests)."""
-    return _start_snapshot_sink(
-        stream, upsert_batch_into_bucketed_snapshot, snapshot_dir,
-        checkpoint_dir, key_cols, trigger_once,
-        n_buckets=n_buckets, keep_versions=keep_versions,
-    )
-
-
 def upsert_batch_into_bucketed_snapshot(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -446,7 +270,11 @@ def upsert_batch_into_bucketed_snapshot(
     ``v{batch}/__bucket=B/`` dir per touched bucket (a single
     partitionBy job), then atomically flip CURRENT to a new manifest
     that repoints the touched buckets and carries every untouched
-    bucket's existing dir by reference.
+    bucket's existing dir by reference.  The batch is deduped to one row
+    per key first (which duplicate survives is arbitrary — pre-aggregate
+    when per-key ordering matters).  Size ``n_buckets`` so one bucket's
+    data fits a comfortable rewrite unit (O(100 MB–1 GB) at scale), or
+    pass 1 when every batch touches most of the snapshot.
 
     Crash/replay matrix (manifest + version names are pure functions of
     batch_id, so a replay re-derives the same commit):
@@ -721,11 +549,11 @@ def rebucket_bucketed_snapshot(
     Cost is O(snapshot) BY DESIGN — this is the maintenance job a
     deployment runs when per-bucket data outgrows the O(100 MB–1 GB)
     rewrite-unit band (see SCALE.md's r15 sizing guidance), not a
-    per-trigger operation.  Operational contract: the snapshot's
-    streaming writer must be STOPPED first and restarted with the new
-    ``n_buckets`` afterwards (the sink pins the modulus per commit, so
-    a restarted stream passing the old value is refused by the
-    standard pin check — nothing can silently write the old layout).
+    per-commit operation.  Operational contract: the snapshot's writer
+    must be STOPPED first and resumed with the new ``n_buckets``
+    afterwards (every commit is checked against the pinned modulus, so
+    a writer passing the old value is refused by the standard pin
+    check — nothing can silently write the old layout).
 
     Same commit skeleton as every other unit (version/manifest names
     are pure functions of batch_id, so the crash/replay matrix carries
@@ -735,7 +563,7 @@ def rebucket_bucketed_snapshot(
     resize keeps time-travel-reading while retained (readers never
     consult n_buckets, only the bucket map).  ``batch_id`` continues
     the snapshot's monotone lineage (use the next unused id); a stale
-    id is refused exactly like a stale stream batch.
+    id is refused exactly like any stale batch.
 
     ``key_cols`` must MATCH the manifest's pinned key schema (r15
     ADVICE): bucketing by different columns while the new manifest
@@ -890,7 +718,7 @@ def rebucket_bucketed_snapshot(
 # CDC apply (r14): upsert + DELETE tombstones in one commit — the
 # "right to be forgotten" half a real training-data snapshot needs that
 # plain MERGE-upsert can't express.  Same crash/replay matrix as the
-# upsert sinks (version/manifest names are pure functions of batch_id).
+# upsert commit (version/manifest names are pure functions of batch_id).
 # ---------------------------------------------------------------------------
 
 CDC_UPSERT = "upsert"
@@ -899,7 +727,7 @@ CDC_DELETE = "delete"
 
 def _split_cdc(batch_df: DataFrame, key_cols: "list[str]", op_col: str):
     """Validate and split a CDC batch: one op per key per batch (a key
-    carrying BOTH an upsert and a delete in one micro-batch has no
+    carrying BOTH an upsert and a delete in one batch has no
     defined order — refused loudly), ops restricted to
     upsert/delete.  Returns (upserts_without_op_col, delete_keys)."""
     from pyspark.sql import functions as F
@@ -964,29 +792,4 @@ def apply_cdc_batch_into_bucketed_snapshot(
     _bucketed_commit(
         spark, snapshot_dir, key_cols, batch_id, n_buckets, keep_versions,
         upserts, delete_keys=deletes,
-    )
-
-
-def start_cdc_sink(
-    stream: DataFrame,
-    snapshot_dir: "str | SnapshotStore",
-    checkpoint_dir: str,
-    key_cols: "list[str]",
-    op_col: str = "op",
-    n_buckets: int = 16,
-    trigger_once: bool = False,
-    keep_versions: int = 2,
-) -> StreamingQuery:
-    """Streaming CDC apply: each micro-batch carries an ``op_col`` of
-    ``upsert``/``delete`` rows and commits both in ONE manifest flip —
-    the tombstone half (right-to-be-forgotten removals, retraction
-    feeds) that plain MERGE-upsert can't express.  Read the result via
-    :func:`read_bucketed_snapshot`.  Idempotent under replay exactly
-    like the upsert sink: version/manifest names are pure functions of
-    batch_id."""
-    return _start_snapshot_sink(
-        stream, apply_cdc_batch_into_bucketed_snapshot, snapshot_dir,
-        checkpoint_dir, key_cols, trigger_once, op_col=op_col,
-        # fail fast at sink creation: every snapshot needs a bucket count
-        n_buckets=int(n_buckets), keep_versions=keep_versions,
     )

@@ -1143,21 +1143,6 @@ def test_rebucket_transform_must_preserve_keys(spark, tmp_path):
     )
 
 
-def test_prune_batch_partitions_refuses_object_store_uri(tmp_path):
-    """r15 ADVICE: os.listdir on s3a:// raises FileNotFoundError which
-    the empty-dir handling swallows — a bounded archive pointed at an
-    object store would appear to work but never prune.  Refused up
-    front instead."""
-    from omics_data_integration_utilities_spark.streaming.sinks import (
-        prune_batch_partitions,
-    )
-
-    with pytest.raises(ValueError, match="driver-local"):
-        prune_batch_partitions("s3a://bucket/archive", keep_batches=3)
-    # local paths keep working (missing dir is still an empty no-op)
-    assert prune_batch_partitions(str(tmp_path / "nope"), 3) == []
-
-
 # ---------------------------------------------------------------------------
 # r16: snapshot lineage inspection + guarded pointer recovery — the
 # workflow the damage-matrix errors instruct ("restore CURRENT to the

@@ -850,12 +850,15 @@ def test_attach_dedup_index_reregisters_bucket_spec(spark, tmp_path):
 
 
 def test_wide_form_index_matches_ref_df_form(spark, tmp_path):
-    """ref_dedup_verdicts_wide(index=...) — the stream-side shape — must
-    equal the ref_df derivation, and exactly one source must be given."""
+    """ref_dedup_verdicts_wide is exactly the first two stages of
+    incremental_dedup_verdicts (exact_ref/near_ref agree; every in-batch
+    or novel verdict is wide 'novel'); its index= form equals the ref_df
+    derivation, and exactly one source must be given."""
     import pytest
 
     from omics_data_integration_utilities_spark.operators.dedup import (
         build_dedup_index,
+        incremental_dedup_verdicts,
         ref_dedup_verdicts_wide,
     )
 
@@ -865,6 +868,15 @@ def test_wide_form_index_matches_ref_df_form(spark, tmp_path):
         (r["doc_id"], r["verdict"])
         for r in ref_dedup_verdicts_wide(batch, ref, "text", "doc_id").collect()
     }
+    full = {
+        r["doc_id"]: r["verdict"]
+        for r in incremental_dedup_verdicts(batch, ref, "text", "doc_id").collect()
+    }
+    assert want == {
+        (i, v if v in ("exact_ref", "near_ref") else "novel")
+        for i, v in full.items()
+    }
+    assert {"exact_ref", "near_ref"} <= set(full.values())
     got = {
         (r["doc_id"], r["verdict"])
         for r in ref_dedup_verdicts_wide(

@@ -216,14 +216,11 @@ def test_write_jsonl_gzip_roundtrip(spark, tmp_path):
 
 def test_read_jsonl_does_not_mutate_caller_schema(spark, tmp_path):
     """r9 review regression: StructType.add appends IN PLACE, so the
-    readers must add the quarantine column on a copy — the caller's
-    schema object stays exactly as built (batch and streaming)."""
+    reader must add the quarantine column on a copy — the caller's
+    schema object stays exactly as built."""
     from pyspark.sql import types as T
 
-    from omics_data_integration_utilities_spark.sources.readers import (
-        read_jsonl,
-        read_jsonl_stream,
-    )
+    from omics_data_integration_utilities_spark.sources.readers import read_jsonl
 
     p = tmp_path / "s"
     p.mkdir()
@@ -235,8 +232,6 @@ def test_read_jsonl_does_not_mutate_caller_schema(spark, tmp_path):
         ]
     )
     read_jsonl(spark, str(p), schema)
-    assert schema.fieldNames() == ["doc_id", "text"]
-    read_jsonl_stream(spark, str(p), schema)
     assert schema.fieldNames() == ["doc_id", "text"]
 
 
