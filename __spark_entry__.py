@@ -123,11 +123,11 @@ def entry(spark: SparkSession) -> DataFrame:
 # source_overlap, sim_centroid_drift, text_length_quantiles,
 # text_top_ngrams — each sf0.01-green locally in r11 and re-verified
 # this session), zeroing the never-checked backlog; (b) pipeline_curate
-# (NEW r12 — the batch twin of streaming/pipeline.curate_doc_stream:
-# same quality_expr gate via the shared _gated_projection, per-source
-# (n_in, n_gated, n_kept_hashes) + an __all__ row whose kept count is
-# the stream's kept-state cardinality; exact SQL oracle + stream==batch
-# parity test — registered IN-WINDOW immediately per the new budget
+# (NEW r12 — batch document curation, streaming/pipeline.py
+# curate_doc_batch_counts: the quality_expr gate via the shared
+# _gated_projection, per-source (n_in, n_gated, n_kept_hashes) + an
+# __all__ row with the total kept-hash count; exact SQL oracle —
+# registered IN-WINDOW immediately per the new budget
 # rule below, so it never joins a backlog); (c) nine of the fifteen
 # r7-stale rows (staleness 4): w1_mutual_rank, p6_mad_filter,
 # methylmix_em, k9_linear_filter, k6_pairwise_corr, k13_roc,
@@ -212,9 +212,8 @@ def entry(spark: SparkSession) -> DataFrame:
 # duplicate-cluster canonicalization, operators/dedup.py
 # keep_best_per_component composed pairs→components→representative;
 # exact recursive-CTE + window oracle), plus events_funnel (NEW r11 —
-# per-tumbling-window stage-survival funnel, the batch twin of
-# streaming/funnel.windowed_funnel_stream with a stream==batch parity
-# test; exact conditional-aggregation oracle), and source_overlap (NEW
+# per-tumbling-window stage-survival funnel, streaming/funnel.py
+# windowed_funnel_batch; exact conditional-aggregation oracle), and source_overlap (NEW
 # r11 — cross-source n-gram overlap matrix via set_overlap_matrix;
 # exact oracle, gram granularity because the testdata has no
 # cross-source exact duplicates at correctness scales), and

@@ -2313,7 +2313,10 @@ def q_doc_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # previous generation of the CDC snapshot dir (r14), cleaned on next
 # entry + by cleanup_registry_state — same single-live-generation
-# discipline as the index registrations above
+# discipline as the index registrations above.  The snapshot queries
+# below read ``documents`` WITHOUT _spread_scan: a commit has no per-row
+# compute for the fan-out to spread, and its extra exchange would sit
+# under every action of every commit.
 _SNAP_LAST: list[str] = []
 
 
@@ -2339,7 +2342,7 @@ def q_doc_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(_SNAP_LAST.pop(), ignore_errors=True)
     path = tempfile.mkdtemp(prefix="doc_forget_snap_")
     _SNAP_LAST.append(path)
-    docs = _spread_scan(_t(spark, sf_dir, "documents")).select("doc_id", "source", "n_chars")
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
     seed = docs.withColumn("op", F.lit("upsert"))
     apply_cdc_batch_into_bucketed_snapshot(
         spark, seed, path, ["doc_id"], batch_id=0, n_buckets=16
@@ -2399,7 +2402,7 @@ def q_doc_snapshot_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(_SNAP_LAST.pop(), ignore_errors=True)
     path = tempfile.mkdtemp(prefix="doc_tt_snap_")
     _SNAP_LAST.append(path)
-    docs = _spread_scan(_t(spark, sf_dir, "documents")).select("doc_id", "source", "n_chars")
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
     upsert_batch_into_bucketed_snapshot(
         spark, docs, path, ["doc_id"], batch_id=0, n_buckets=16
     )
@@ -2463,7 +2466,7 @@ def q_doc_snapshot_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(_SNAP_LAST.pop(), ignore_errors=True)
     path = tempfile.mkdtemp(prefix="doc_rebucket_snap_")
     _SNAP_LAST.append(path)
-    docs = _spread_scan(_t(spark, sf_dir, "documents")).select("doc_id", "source", "n_chars")
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
     upsert_batch_into_bucketed_snapshot(
         spark, docs, path, ["doc_id"], batch_id=0, n_buckets=4
     )
@@ -2533,7 +2536,7 @@ def q_doc_snapshot_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(_SNAP_LAST.pop(), ignore_errors=True)
     path = tempfile.mkdtemp(prefix="doc_evolve_snap_")
     _SNAP_LAST.append(path)
-    docs = _spread_scan(_t(spark, sf_dir, "documents")).select("doc_id", "source", "n_chars")
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
     upsert_batch_into_bucketed_snapshot(
         spark, docs, path, ["doc_id"], batch_id=0, n_buckets=8
     )

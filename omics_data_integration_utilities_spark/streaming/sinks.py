@@ -177,6 +177,30 @@ def _load_manifest(store: SnapshotStore, name: str) -> "dict | None":
     return json.loads(got[0]) if got is not None else None
 
 
+def _read_buckets(
+    spark: SparkSession, store: SnapshotStore, man: dict, paths: "list[str]"
+) -> DataFrame:
+    """Read bucket dirs with the manifest's pinned ``value_schema`` as
+    the read schema, so no job opens parquet footers to infer one.  A
+    pre-r16 manifest without the pin, or a pin whose nested field names
+    the DDL parser cannot read back (``simpleString`` does not quote
+    them), falls back to inference."""
+    from pyspark.errors import ParseException
+
+    reader = spark.read
+    pinned = man.get("value_schema")
+    if pinned:
+        ddl = ", ".join(
+            f"`{name.replace('`', '``')}` {dtype}"
+            for name, dtype in pinned.items()
+        )
+        try:
+            reader = reader.schema(ddl)
+        except ParseException:
+            pass
+    return reader.parquet(*[store.spark_path(p) for p in paths])
+
+
 def read_bucketed_snapshot(
     spark: SparkSession,
     snapshot_dir: "str | SnapshotStore",
@@ -212,7 +236,7 @@ def read_bucketed_snapshot(
                     f"bucketed snapshot at {store.describe()!r}: manifest "
                     f"{man.get('batch_id')} references no buckets (EMPTY)"
                 )
-            return spark.read.parquet(*[store.spark_path(p) for p in paths])
+            return _read_buckets(spark, store, man, paths)
         raise FileNotFoundError(
             f"no CURRENT manifest under {store.describe()!r} "
             "(no batch committed yet?)"
@@ -253,7 +277,7 @@ def read_bucketed_snapshot(
             "deleted); there is no schema to produce an empty relation "
             "from"
         )
-    return spark.read.parquet(*[store.spark_path(p) for p in paths])
+    return _read_buckets(spark, store, man, paths)
 
 
 def upsert_batch_into_bucketed_snapshot(
@@ -298,10 +322,9 @@ def upsert_batch_into_bucketed_snapshot(
     snapshot seeded with longs would hash to a different bucket and
     duplicate the key — a commit with mismatched key dtypes is refused
     with a cast instruction instead."""
-    upserts = batch_df.dropDuplicates(key_cols)
     _bucketed_commit(
         spark, snapshot_dir, key_cols, batch_id, n_buckets, keep_versions,
-        upserts, delete_keys=None,
+        batch_df, op_col=None,
     )
 
 
@@ -312,16 +335,22 @@ def _bucketed_commit(
     batch_id: int,
     n_buckets: int,
     keep_versions: int,
-    upserts: DataFrame,
-    delete_keys: "DataFrame | None",
+    batch: DataFrame,
+    op_col: "str | None",
 ) -> None:
-    """The shared bucketed commit engine behind the upsert and CDC
-    forms: touched buckets come from upsert ∪ delete keys, ONE anti-join
-    drops both replaced and deleted rows from the touched buckets' data,
-    upserts union back, one partitionBy job writes the touched buckets,
-    and the manifest repoints them — DROPPING any touched bucket the
-    commit emptied (a delete-only bucket with nothing left writes no
-    subdir and must vanish from the bucket map, not dangle)."""
+    """The shared bucketed commit engine behind the upsert form
+    (``op_col=None``) and the CDC form (``op_col`` names the
+    upsert/delete column of ``batch``).  After the pointer, replay and
+    pin checks, ONE summary action over the raw batch validates the CDC
+    ops and yields the touched buckets (:func:`_touched_buckets`); ONE
+    anti-join against the raw batch keys drops both replaced and deleted
+    rows from the touched buckets' data, the deduplicated upserts union
+    back, one partitionBy job writes the touched buckets, and the
+    manifest repoints them — DROPPING any touched bucket the commit
+    emptied (a delete-only bucket with nothing left writes no subdir and
+    must vanish from the bucket map, not dangle)."""
+    from pyspark.sql import functions as F
+
     store = as_store(snapshot_dir)
     keep = _check_keep_versions(keep_versions)
     version = f"v{int(batch_id):012d}"
@@ -363,6 +392,11 @@ def _bucketed_commit(
             f"n_buckets={cur['n_buckets']}, got {n_buckets} — the bucket "
             "count is fixed for the snapshot's lifetime"
         )
+    upserts = batch
+    if op_col is not None:
+        upserts = batch.where(F.col(op_col) == CDC_UPSERT).drop(op_col)
+    # which duplicate of a key survives is arbitrary (see the upsert form)
+    upserts = upserts.dropDuplicates(key_cols)
     # key-schema pin (r14 ADVICE): the bucket function hashes the key
     # VALUES AS TYPED — int 7 and long 7 hash differently — so the key
     # dtypes are part of the snapshot's identity, exactly like n_buckets
@@ -418,24 +452,15 @@ def _bucketed_commit(
             "re-shape the batch upstream, or evolve the schema on purpose "
             "with rebucket_bucketed_snapshot(transform=...)"
         )
+    touched = _touched_buckets(batch, key_cols, n_buckets, op_col)
     bucket = _bucket_expr(key_cols, n_buckets)
-    # NO key dedup here (r17, guide §2.3 — shuffle fewer bytes): both
-    # callers already deduplicate (upsert_batch_into_bucketed_snapshot's
-    # dropDuplicates; _split_cdc dedups each side and refuses a key
-    # carrying both ops), and every downstream use is duplicate-
-    # invariant anyway — the touched-bucket distinct collapses map-side
-    # to <= n_buckets rows per partition, and a left_anti join's result
-    # does not change with duplicate build keys.  The former
-    # dropDuplicates paid a full batch-key shuffle TWICE per commit
-    # (once under the touched collect, once under the write job's
-    # anti-join).
-    all_keys = upserts.select(*key_cols)
-    if delete_keys is not None:
-        all_keys = all_keys.unionByName(delete_keys.select(*key_cols))
-    touched = sorted(
-        r["__bucket"]
-        for r in all_keys.select(bucket.alias("__bucket")).distinct().collect()
-    )
+    # the anti-join's build side is the RAW batch keys, not a deduped
+    # upsert ∪ delete key set: the summary action refused every op but
+    # upsert/delete, so the raw keys ARE that set, and a left_anti
+    # join's result does not change with duplicate build keys — a
+    # dropDuplicates (or a union of two deduped sides) here would only
+    # add a batch-key shuffle under the write job
+    all_keys = batch.select(*key_cols)
     old_buckets: "dict[str, str]" = dict(cur["buckets"]) if cur else {}
     written: "set[int]" = set()
     if touched:
@@ -444,9 +469,9 @@ def _bucketed_commit(
             {old_buckets[str(b)] for b in touched if str(b) in old_buckets}
         )
         if target_paths:
-            target = spark.read.parquet(
-                *[store.spark_path(p) for p in target_paths]
-            ).withColumn("__bucket", bucket)  # same pure function of keys
+            target = _read_buckets(spark, store, cur, target_paths).withColumn(
+                "__bucket", bucket
+            )  # same pure function of keys
             # one anti-join drops BOTH replaced and deleted rows
             merged = target.join(all_keys, key_cols, "left_anti").unionByName(
                 up_b
@@ -497,7 +522,8 @@ def _bucketed_retention(store: SnapshotStore, keep: int) -> None:
     manifests; a version dir survives while ANY kept manifest
     references one of its buckets (untouched buckets keep old version
     dirs alive by reference — the in-flight-reader guarantee is per
-    MANIFEST, same as the full-rewrite sink's per-version one).
+    MANIFEST: a reader that resolved a kept manifest can finish its
+    scan while fewer than ``keep`` newer commits flip after it).
     Idempotent: re-running after a mid-prune crash converges."""
     manifests = sorted(
         (
@@ -725,50 +751,62 @@ CDC_UPSERT = "upsert"
 CDC_DELETE = "delete"
 
 
-def _split_cdc(batch_df: DataFrame, key_cols: "list[str]", op_col: str):
-    """Validate and split a CDC batch: one op per key per batch (a key
-    carrying BOTH an upsert and a delete in one batch has no
-    defined order — refused loudly), ops restricted to
-    upsert/delete.  Returns (upserts_without_op_col, delete_keys)."""
+def _touched_buckets(
+    batch: DataFrame,
+    key_cols: "list[str]",
+    n_buckets: int,
+    op_col: "str | None",
+) -> "list[int]":
+    """The commit's ONE summary action over the raw batch: the sorted
+    touched buckets and, for a CDC batch, its validation — one op per
+    key per batch (a key carrying BOTH an upsert and a delete in one
+    batch has no defined order — refused loudly), ops restricted to
+    upsert/delete.  Both refusals raise before anything is written.
+
+    One action, because under AQE every shuffle beneath a one-row
+    driver aggregate is its own job: the CDC form groups by key once
+    for the per-key op set and reduces that to one row of (touched
+    buckets, all distinct ops, most ops on any key); the bucket set is
+    duplicate-invariant, so the upsert form reduces the raw rows
+    directly.  An empty batch yields ([], [], NULL) and validates
+    clean."""
     from pyspark.sql import functions as F
 
-    # ONE validation job per micro-batch (this sits on the streaming hot
-    # path): per-key op sets folded into (all distinct ops, max ops per
-    # key) — an empty batch yields ([], NULL) and validates clean
-    row = (
-        batch_df.groupBy(*key_cols)
-        .agg(F.collect_set(F.col(op_col)).alias("__ops"))
-        .agg(
+    rows, checks = batch, []
+    if op_col is not None:
+        # each op wrapped in an array because collect_set skips NULLs:
+        # a NULL op must surface as an unknown op, not vanish (its key
+        # is still in the raw batch keys the anti-join drops)
+        rows = batch.groupBy(*key_cols).agg(
+            F.flatten(F.collect_set(F.array(F.col(op_col)))).alias("__ops")
+        )
+        checks = [
             F.array_distinct(F.flatten(F.collect_list("__ops"))).alias(
                 "__all_ops"
             ),
             F.max(F.size("__ops")).alias("__max_ops"),
-        )
-        .collect()[0]
-    )
-    bad = [o for o in (row["__all_ops"] or []) if o not in (CDC_UPSERT, CDC_DELETE)]
-    if bad:
-        raise ValueError(
-            f"CDC batch has unknown ops {bad!r} in column {op_col!r} — "
-            f"allowed: {CDC_UPSERT!r}, {CDC_DELETE!r}"
-        )
-    if (row["__max_ops"] or 0) > 1:
-        raise ValueError(
-            "CDC batch carries BOTH an upsert and a delete for the same "
-            "key — micro-batches are unordered, so apply order would be "
-            "undefined; resolve per key upstream (keep the latest op)"
-        )
-    upserts = (
-        batch_df.where(F.col(op_col) == CDC_UPSERT)
-        .drop(op_col)
-        .dropDuplicates(key_cols)
-    )
-    deletes = (
-        batch_df.where(F.col(op_col) == CDC_DELETE)
-        .select(*key_cols)
-        .dropDuplicates(key_cols)
-    )
-    return upserts, deletes
+        ]
+    row = rows.agg(
+        F.collect_set(_bucket_expr(key_cols, n_buckets)).alias("__touched"),
+        *checks,
+    ).collect()[0]
+    if op_col is not None:
+        bad = [
+            o for o in (row["__all_ops"] or [])
+            if o not in (CDC_UPSERT, CDC_DELETE)
+        ]
+        if bad:
+            raise ValueError(
+                f"CDC batch has unknown ops {bad!r} in column {op_col!r} — "
+                f"allowed: {CDC_UPSERT!r}, {CDC_DELETE!r}"
+            )
+        if (row["__max_ops"] or 0) > 1:
+            raise ValueError(
+                "CDC batch carries BOTH an upsert and a delete for the same "
+                "key — micro-batches are unordered, so apply order would be "
+                "undefined; resolve per key upstream (keep the latest op)"
+            )
+    return sorted(row["__touched"])
 
 
 def apply_cdc_batch_into_bucketed_snapshot(
@@ -788,8 +826,7 @@ def apply_cdc_batch_into_bucketed_snapshot(
     the manifest, not left dangling.  Same crash/replay matrix,
     n_buckets pin, and key-schema pin as
     :func:`upsert_batch_into_bucketed_snapshot`."""
-    upserts, deletes = _split_cdc(batch_df, key_cols, op_col)
     _bucketed_commit(
         spark, snapshot_dir, key_cols, batch_id, n_buckets, keep_versions,
-        upserts, delete_keys=deletes,
+        batch_df, op_col=op_col,
     )

@@ -835,3 +835,182 @@ def test_stale_batch_id_refused_on_existing_snapshot(spark, tmp_path):
         spark, b(5, 5.0), buck, ["k"], batch_id=5, n_buckets=4
     )
     assert {r["k"] for r in read_bucketed_snapshot(spark, buck).collect()} == {3, 4, 5}
+
+
+def _jobs_fired(spark, fn) -> int:
+    """Spark jobs ``fn()`` fires, counted through a job group the way
+    perfbench/worker.py does.  The status tracker is fed by the listener
+    bus, so the bus is drained before the count is read."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _tree_bytes(root) -> dict:
+    """Every file under ``root`` (relative path -> content)."""
+    import os
+
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            p = os.path.join(d, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = fh.read()
+    return out
+
+
+def test_cdc_rejected_batch_writes_nothing(spark, tmp_path):
+    """After a committed batch, a CDC batch refused by the commit's
+    summary action (unknown op, a NULL op, both ops on one key) raises
+    ValueError and leaves CURRENT, every manifest and every version dir
+    byte-for-byte as they were.  Replaying the committed batch is a
+    no-op that fires no Spark job at all."""
+    from omics_data_integration_utilities_spark.streaming.sinks import (
+        apply_cdc_batch_into_bucketed_snapshot,
+        read_bucketed_snapshot,
+    )
+
+    schema = "k long, v double, op string"
+    snap = str(tmp_path / "cdc_rejected")
+    b0 = spark.createDataFrame(
+        [(k, float(k), "upsert") for k in range(12)], schema
+    )
+    apply_cdc_batch_into_bucketed_snapshot(
+        spark, b0, snap, ["k"], batch_id=0, n_buckets=4
+    )
+    before = _tree_bytes(snap)
+    assert {"CURRENT", "m000000000000.json"} <= set(before)
+    assert any(p.startswith("v000000000000/") for p in before)
+    refused = [
+        ("unknown ops", [(1, 0.0, "merge"), (2, 0.0, "delete")]),
+        ("unknown ops", [(3, 0.0, None), (4, 4.5, "upsert")]),
+        ("BOTH an upsert and a delete", [(5, 5.5, "upsert"), (5, 0.0, "delete")]),
+    ]
+    for msg, rows in refused:
+        with pytest.raises(ValueError, match=msg):
+            apply_cdc_batch_into_bucketed_snapshot(
+                spark, spark.createDataFrame(rows, schema), snap, ["k"],
+                batch_id=1, n_buckets=4,
+            )
+        assert _tree_bytes(snap) == before, msg
+    assert _jobs_fired(
+        spark,
+        lambda: apply_cdc_batch_into_bucketed_snapshot(
+            spark, b0, snap, ["k"], batch_id=0, n_buckets=4
+        ),
+    ) == 0
+    assert _tree_bytes(snap) == before
+    assert {r["k"] for r in read_bucketed_snapshot(spark, snap).collect()} == set(
+        range(12)
+    )
+
+
+# Jobs one CDC commit (2 deletes, 1 replace, 1 insert) fires into an
+# existing 4-bucket snapshot under the test session's settings: 9 with
+# the single summary action and the pinned-schema target read, against
+# 15 with separate validation and touched-bucket collects and an
+# inferred target schema.
+_CDC_COMMIT_JOBS = 9
+
+
+def test_snapshot_commit_and_read_job_budget(spark, tmp_path):
+    """The fixed job cost of a snapshot commit and read stays pinned:
+    a read of a manifest that pins ``value_schema`` fires no job before
+    an action (no footer schema inference), and one CDC commit into an
+    existing 4-bucket snapshot fires at most ``_CDC_COMMIT_JOBS``."""
+    from omics_data_integration_utilities_spark.streaming.sinks import (
+        apply_cdc_batch_into_bucketed_snapshot,
+        read_bucketed_snapshot,
+    )
+
+    schema = "k long, v double, op string"
+    snap = str(tmp_path / "budget")
+    seed = spark.createDataFrame(
+        [(k, float(k), "upsert") for k in range(40)], schema
+    )
+    apply_cdc_batch_into_bucketed_snapshot(
+        spark, seed, snap, ["k"], batch_id=0, n_buckets=4
+    )
+    for manifest in (None, "m000000000000.json"):
+        assert _jobs_fired(
+            spark, lambda: read_bucketed_snapshot(spark, snap, manifest=manifest)
+        ) == 0
+    cdc = spark.createDataFrame(
+        [(3, 0.0, "delete"), (7, 0.0, "delete"), (5, 55.0, "upsert"),
+         (99, 99.0, "upsert")],
+        schema,
+    )
+    jobs = _jobs_fired(
+        spark,
+        lambda: apply_cdc_batch_into_bucketed_snapshot(
+            spark, cdc, snap, ["k"], batch_id=1, n_buckets=4
+        ),
+    )
+    assert 0 < jobs <= _CDC_COMMIT_JOBS, jobs
+    want = {k: float(k) for k in range(40) if k not in (3, 7)}
+    want.update({5: 55.0, 99: 99.0})
+    got = {r["k"]: r["v"] for r in read_bucketed_snapshot(spark, snap).collect()}
+    assert got == want
+
+
+def test_pinned_schema_read_roundtrips_ddl(spark, tmp_path):
+    """The pinned-schema read builds a DDL from the manifest's
+    ``value_schema``; for decimal, timestamp_ntz, array, struct and a
+    column name that needs backtick quoting it must give exactly the
+    schema and rows that footer inference gives."""
+    import datetime
+    import decimal
+    import json
+    import os
+
+    from omics_data_integration_utilities_spark.streaming.sinks import (
+        read_bucketed_snapshot,
+        upsert_batch_into_bucketed_snapshot,
+    )
+
+    schema = (
+        "k long, `amount (usd)` decimal(18,4), `odd``name` string, "
+        "ts timestamp_ntz, tags array<string>, meta struct<a:int,b:string>"
+    )
+    rows = [
+        (k, decimal.Decimal(f"{k}.1234"), f"n{k}",
+         datetime.datetime(2024, 1, 1 + k, 12, 30), [f"t{k}", "x"],
+         (k, f"b{k}"))
+        for k in range(6)
+    ] + [(6, None, None, None, None, None)]
+    snap = str(tmp_path / "ddl")
+    upsert_batch_into_bucketed_snapshot(
+        spark, spark.createDataFrame(rows, schema), snap, ["k"],
+        batch_id=0, n_buckets=2,
+    )
+    with open(os.path.join(snap, "m000000000000.json")) as f:
+        man = json.load(f)
+    assert "amount (usd)" in man["value_schema"]
+    pinned = read_bucketed_snapshot(spark, snap)
+    inferred = spark.read.parquet(
+        *[os.path.join(snap, p) for p in sorted(set(man["buckets"].values()))]
+    )
+    assert pinned.schema == inferred.schema
+    by_key = lambda df: sorted(df.collect(), key=lambda r: r["k"])  # noqa: E731
+    assert by_key(pinned) == by_key(inferred)
+    assert len(by_key(pinned)) == 7
+    # a nested field name that needs quoting: the pin's simpleString
+    # does not quote it, the DDL does not parse, and the read falls back
+    # to inference instead of failing
+    nested = str(tmp_path / "ddl_nested")
+    upsert_batch_into_bucketed_snapshot(
+        spark,
+        spark.createDataFrame([(1, (2,))], "k long, meta struct<`x y`:int>"),
+        nested, ["k"], batch_id=0, n_buckets=2,
+    )
+    back = read_bucketed_snapshot(spark, nested)
+    assert back.schema.simpleString() == "struct<k:bigint,meta:struct<x y:int>>"
+    assert [tuple(r) for r in back.collect()] == [(1, (2,))]
