@@ -410,7 +410,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # hot-key detector COMPOSED with skew.salted_join — sketch-detected hot
 # keys route through the salted join, cold keys take the plain join,
 # result provably routing-invariant so the oracle is the plain SQL
-# join; the skew speedup itself is measured in probe_r13_saltedjoin.py).
+# join; the skew speedup itself is measured in SCALE.md r13).
 # Both new queries sf0.001+sf0.01 oracle-green locally pre-rotation.
 #
 # Twenty-six out, each hash-green in r12's 50/50 window with an

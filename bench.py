@@ -170,7 +170,7 @@ SLOW_TIER = [
     # plan-locked Expand-free) and the layout round-trip (partitioned+
     # clustered WRITE per rep plus the pruned scan — write-heavy by
     # design; the pruning benefit itself is measured in
-    # probe_r13_layout16x.py, wall here just guards regressions)
+    # SCALE.md r13's layout probe, wall here just guards regressions)
     "doc_profile",
     "doc_pruned_scan",
     # late round 13: numeric-moments profiler (exact-percentile form —
@@ -205,7 +205,7 @@ SLOW_TIER = [
     # evolve maintenance rewrite + 2 inline pin-refusal proofs per rep
     # — the commit-machinery wall for the maintenance path, the
     # doc_forget analog for evolution; bytes-level scale evidence
-    # lives in probe_r16_evolve16x.py)
+    # lives in SCALE.md r16's evolve probe)
     "doc_snapshot_evolve",
 ]
 

@@ -2,29 +2,23 @@ from .joins import (  # noqa: F401
     band_join,
     band_join_broadcast,
     adduct_expand,
-    transition_match,
     bipartite_event_join,
 )
 from .filters import (  # noqa: F401
     threshold_filter,
     remove_zeros,
-    mad_filter,
     group_mad,
     outlier_flags,
-    na_fraction_filter,
     nonzero_transition_filter,
-    drop_null_any,
 )
 from .windows import (  # noqa: F401
     rank_in_group,
     top_k_per_group,
     arg_extreme_dedup,
     mutual_rank,
-    lag_diff,
 )
 from .aggregates import (  # noqa: F401
     group_count,
-    set_union_agg,
     na_fraction,
     pairwise_corr,
     corr_pvalues,

@@ -27,16 +27,6 @@ def group_count(df: DataFrame, key_cols: list[str], count_col: str = "n") -> Dat
     return df.groupBy(*key_cols).agg(F.count(F.lit(1)).alias(count_col))
 
 
-def set_union_agg(
-    df: DataFrame, key_cols: list[str], value_col: str, out_col: str = "members"
-) -> DataFrame:
-    """A4: per-group set union, canonical sorted array (reference
-    ``gizmos.py:350-354`` does ``set.union(*series)`` over ``;``-cells)."""
-    return df.groupBy(*key_cols).agg(
-        F.array_sort(F.array_distinct(F.flatten(F.collect_list(value_col)))).alias(out_col)
-    )
-
-
 def na_fraction(df: DataFrame, key_cols: list[str], value_col: str) -> DataFrame:
     """A9: per-group missing-value fraction."""
     return df.groupBy(*key_cols).agg(

@@ -846,7 +846,7 @@ def minhash_estimate_accuracy(
     """
     # r17 measured rejection (verdict item 1) of the r16 shared-signature
     # rewrite (materialize with_minhash_signature once, derive band keys
-    # from it): load-matched interleaved A/B (probe_r17_ab.py) showed it
+    # from it): load-matched interleaved A/B (OPTIMIZATION_r17.md item 1) showed it
     # NEVER wins — 0.98x at sf0.1, 1.01x at 16x quadratic-pair
     # duplication, and 0.95x at 16x LINEAR growth (texts perturbed per
     # copy, the regime where the saved per-row md5 chain should dominate;
@@ -951,7 +951,7 @@ def set_overlap_matrix(
     rewrite (``collect_set(src)`` per key + in-row pair expansion,
     SMJ 3→0 / Exchange 52→34 by plan) was settled with load-matched
     interleaved A/B at sf0.1 AND a 16× shared-boilerplate worst-case
-    probe (probe_r17_ab.py): 0.84× at 1× (old min 1.62s vs new 1.93s),
+    probe (OPTIMIZATION_r17.md item 1): 0.84× at 1× (old min 1.62s vs new 1.93s),
     0.98× at 16× (old 6.34s vs new 6.48s, medians 6.37 vs 6.73) — the
     saved exchanges never beat the collect_set buffering + in-row
     expansion at any measured scale, and the gap does not close with
@@ -1512,7 +1512,7 @@ def _write_index_table(
     # per bucket.  Without this the writer emits |upstream partitions| ×
     # |buckets| files (measured: a 16-bucket ANN index built from a
     # 32-partition corpus scanned 4× SLOWER than the no-index path at
-    # 16× corpus — pure file-open overhead, probe_r13_annindex16x.py).
+    # 16× corpus — pure file-open overhead, SCALE.md r13 ANN-index probe).
     (
         df.repartition(n_buckets, F.col(bucket_col))
         .write.mode("overwrite")

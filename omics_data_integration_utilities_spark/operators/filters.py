@@ -6,7 +6,7 @@ shuffle (window or groupBy+join on the same key, which Catalyst reuses).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -23,29 +23,6 @@ def remove_zeros(df: DataFrame, key_cols: list[str], value_col: str) -> DataFram
     shuffle to find offending keys, broadcast-anti back."""
     bad = df.where(F.col(value_col) == 0).select(*key_cols).distinct()
     return df.join(bad, key_cols, "left_anti")
-
-
-def mad_filter(
-    df: DataFrame,
-    key_cols: list[str],
-    value_col: str,
-    min_mad: float = 0.0,
-) -> DataFrame:
-    """P6: keep groups whose median-absolute-deviation exceeds ``min_mad``
-    (reference ``gizmos.py:15-25,121-130``).
-
-    Exact medians (not approx) so the DuckDB oracle agrees.  Two
-    aggregations over the same key — the second groupBy reuses the
-    partitioning of the first join's shuffle.
-    """
-    med = df.groupBy(*key_cols).agg(F.median(value_col).alias("__med"))
-    mad = (
-        df.join(med, key_cols)
-        .groupBy(*key_cols)
-        .agg(F.median(F.abs(F.col(value_col) - F.col("__med"))).alias("mad"))
-        .where(F.col("mad") > min_mad)
-    )
-    return df.join(mad.select(*key_cols), key_cols, "left_semi")
 
 
 def group_mad(df: DataFrame, key_cols: list[str], value_col: str) -> DataFrame:
@@ -92,28 +69,8 @@ def outlier_flags(
     ).drop("__mu", "__sd")
 
 
-def na_fraction_filter(
-    df: DataFrame,
-    key_cols: list[str],
-    value_col: str,
-    max_na_fraction: float = 0.2,
-) -> DataFrame:
-    """P9: drop groups with more than ``max_na_fraction`` missing values
-    (MethylMix ``Download_Preprocess.R:791-819``)."""
-    frac = (
-        df.groupBy(*key_cols)
-        .agg(F.avg(F.col(value_col).isNull().cast("int")).alias("na_frac"))
-        .where(F.col("na_frac") <= max_na_fraction)
-    )
-    return df.join(frac.select(*key_cols), key_cols, "left_semi")
-
-
 def nonzero_transition_filter(df: DataFrame, col: str) -> DataFrame:
     """P4: drop rows whose rounded transition is exactly zero
     (reference ``pathMassTransitions.py:278-288``)."""
     return df.where(F.abs(F.col(col)) > 0)
 
-
-def drop_null_any(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
-    """P7: ``dropna(how='any')`` / subset variant."""
-    return df.na.drop("any", subset=subset)

@@ -99,36 +99,6 @@ def adduct_expand(
     )
 
 
-def transition_match(
-    masses: DataFrame,
-    transitions: DataFrame,
-    mass_col: str,
-    delta_col: str,
-    digits: int = 2,
-    candidate_mass_col: str | None = None,
-) -> DataFrame:
-    """Self-join on a computed rounded key (J6), reference
-    ``pathMassTransitions.py:196-224``.
-
-    candidate product mass = mass + delta, rounded to ``digits``; matched
-    back against the mass table keyed on its own rounded mass.  The
-    reference materializes an n×m matrix then melts it (documented OOM at
-    2.18 M rows, ``pathMassTransitions.py:206-210``); the crossJoin→match
-    formulation below never materializes the wide matrix and shuffles only
-    on the rounded-mass key.
-    """
-    candidate_mass_col = candidate_mass_col or mass_col
-    cand = (
-        masses.crossJoin(F.broadcast(transitions))
-        .withColumn("__match_key", F.round(F.col(mass_col) + F.col(delta_col), digits))
-    )
-    targets = masses.select(
-        F.round(F.col(candidate_mass_col), digits).alias("__match_key"),
-        *[F.col(c).alias(f"product_{c}") for c in masses.columns],
-    )
-    return cand.join(targets, "__match_key").drop("__match_key")
-
-
 def bipartite_event_join(
     mutations: DataFrame,
     edges: DataFrame,

@@ -1227,7 +1227,7 @@ def ann_recall_certificate(
     # rewrite, verdict item 1): deriving every setting from ONE
     # candidate pass at the largest setting + a conditional running-
     # count window measured SLOWER at every scale in load-matched
-    # interleaved A/B (probe_r17_ab.py: 0.86x at sf0.1, 0.65x at 16x —
+    # interleaved A/B (OPTIMIZATION_r17.md item 1: 0.86x at sf0.1, 0.65x at 16x —
     # old min 9.62s vs new 14.73s): the per-query window over the
     # O(queries x probed-corpus) candidate set sorts MORE rows than the
     # three smaller probe passes it replaced, and the gap WIDENS with

@@ -125,8 +125,8 @@ def frequent_items(
     When a partition's distinct keys never exceed ``capacity`` the
     sketch is lossless and the recount shuffles what the brute force
     would — the capacity-bounded savings appear exactly when
-    per-partition distinct >> capacity (probe_r12_heavyhitters16x.py
-    measures both regimes on the n-gram instantiation).
+    per-partition distinct >> capacity (SCALE.md r12's heavy_hitters
+    probe measures both regimes on the n-gram instantiation).
 
     Besides corpus analysis, this is the hot-key detector for shuffle
     skew: run it on a join key BEFORE the join and salt (or

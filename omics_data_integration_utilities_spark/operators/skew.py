@@ -82,7 +82,7 @@ def skew_aware_join(
     hot when it owns more than ``hot_threshold`` of the scanned rows.
     Pass ``detect_sample_fraction`` to detect on a sample — for ROUTING
     a ≥1%-hot key is found by a 2% sample with near-certainty, at a
-    fraction of the scan (measured: probe_r13_saltedjoin.py); exact
+    fraction of the scan (measured: SCALE.md r13, salted-join probe); exact
     detection only matters when the hot set feeds a cost model.  Or
     pass ``hot_keys`` explicitly (e.g. from a previous run on the same
     key distribution) and skip detection entirely.
@@ -91,7 +91,7 @@ def skew_aware_join(
     ``skewed.join(other, on, how)`` — which the registered
     ``events_salted_join`` query proves against a plain-SQL-join
     oracle; the straggler-collapse measurement lives in
-    probe_r13_saltedjoin.py / SCALE.md r13.
+    SCALE.md r13.
 
     Use when AQE's runtime skew splitting can't rewrite the exchange
     (aggregation-feeding joins, pre-partitioned state) or when the hot

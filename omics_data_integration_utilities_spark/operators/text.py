@@ -828,7 +828,7 @@ def heavy_hitters(
     candidate recount -> certificate machinery runs over the gram
     column; see that docstring for the MG bound, the measured-count
     join-strategy guard, and the lossless/trimming regime split
-    (probe_r12_heavyhitters16x.py measures both on this operator).
+    (SCALE.md r12's heavy_hitters probe measures both on this operator).
 
     100 TB shape: ``top_ngrams``'s groupBy shuffles the full distinct-
     gram space (map-side combine helps the heavy head, not the huge

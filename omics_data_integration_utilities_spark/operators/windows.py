@@ -103,16 +103,3 @@ def mutual_rank(
         "rank_ba", F.row_number().over(wb)
     )
     return ranked.withColumn("mr", F.sqrt(F.col("rank_ab") * F.col("rank_ba")))
-
-
-def lag_diff(
-    df: DataFrame,
-    part_cols: list[str],
-    order_col: str,
-    value_col: str,
-    diff_col: str = "diff",
-) -> DataFrame:
-    """W3: ordered difference within a partition (MethylMix flip-over
-    detection ``MethylMix.R:458-520``)."""
-    w = Window.partitionBy(*part_cols).orderBy(F.col(order_col).asc())
-    return df.withColumn(diff_col, F.col(value_col) - F.lag(value_col).over(w))

@@ -1096,7 +1096,7 @@ def q_events_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment.  The result is routing-invariant — identical to one plain
     join — so a hash-green run PROVES the salted path's semantics; the
     skew SPEEDUP under a genuinely hot key is measured separately
-    (probe_r13_saltedjoin.py, SCALE.md)."""
+    (SCALE.md r13, the salted-join probe)."""
     from ..operators.skew import skew_aware_join
 
     ev = _t(spark, sf_dir, "events").where(F.col("user_id").isNotNull())

@@ -100,7 +100,6 @@ def q_plan_enzyme_annotation(
     spark: SparkSession,
     sf_dir: str,
     checkpoint: bool = True,
-    checkpoint_storage: str = "local",
 ) -> DataFrame:
     """The reference's enzyme-annotation chain composed end-to-end
     (``gizmos.load_enzyme_input``, gizmos.py:654-745, plus the
@@ -140,26 +139,7 @@ def q_plan_enzyme_annotation(
     ``checkpoint=False`` (tests only) skips the branch-point
     localCheckpoint so plan-shape assertions can see the full upstream
     lineage the checkpoint otherwise hides.
-
-    ``checkpoint_storage="disk"`` materializes the branch point with
-    ``persist(StorageLevel.DISK_ONLY)`` instead of localCheckpoint:
-    serialized blocks on local disk rather than deserialized rows in
-    the block manager.  Measured at the 16× scaling-probe size
-    (SCALE.md §r10): identical results and identical cold wall
-    (675.6 s local vs 674.1 s disk at 16 GiB heap — the wall is the
-    join/shuffle work, not the branch-block storage).  The practical
-    difference is that ``persist`` registers the branch point in the
-    CacheManager by canonical logical plan, so REPEAT invocations of
-    the plan in the same session reuse the materialized branch
-    (measured 17 s warm vs a full re-run; localCheckpoint is invisible
-    to later query plans).  Default stays "local": one-shot callers
-    get identical performance without holding cache entries that need
-    explicit unpersist.
     """
-    if checkpoint_storage not in ("local", "disk"):
-        raise ValueError(
-            f"checkpoint_storage must be 'local' or 'disk', got {checkpoint_storage!r}"
-        )
     from pyspark.sql import Window
 
     from ..operators.aggregates import correlate_long_matrices
@@ -271,12 +251,7 @@ def q_plan_enzyme_annotation(
         enzyme = enzyme.repartition(
             spark.sparkContext.defaultParallelism, F.col("gene")
         )
-        if checkpoint_storage == "disk":
-            from pyspark import StorageLevel
-
-            enzyme = enzyme.persist(StorageLevel.DISK_ONLY)
-        else:
-            enzyme = enzyme.localCheckpoint(eager=False)
+        enzyme = enzyme.localCheckpoint(eager=False)
 
     # 6. per-reaction transitions; substrate/product renames; outer merge
     types = (

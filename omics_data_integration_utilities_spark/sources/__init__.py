@@ -6,8 +6,6 @@ from .readers import (  # noqa: F401
 )
 from .writers import (  # noqa: F401
     write_parquet,
-    write_csv,
-    write_edge_file,
     write_bucketed_table,
 )
 from .layout import read_table, write_clustered, write_partitioned  # noqa: F401

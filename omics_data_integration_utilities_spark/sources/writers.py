@@ -30,25 +30,6 @@ def write_parquet(
     w.parquet(path)
 
 
-def write_csv(
-    df: DataFrame,
-    path: str,
-    header: bool = True,
-    sep: str = ",",
-    single_file: bool = False,
-) -> None:
-    """S8 CSV sink.  ``single_file`` coalesces to one part — only for
-    small result tables (the reference's results.csv shape); large outputs
-    stay multi-part."""
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").option("header", header).option("sep", sep).csv(path)
-
-
-def write_edge_file(df: DataFrame, path: str) -> None:
-    """S10: headerless space-separated edge list (ClusterOne input)."""
-    df.write.mode("overwrite").option("sep", " ").option("header", False).csv(path)
-
-
 def write_bucketed_table(
     df: DataFrame,
     name: str,

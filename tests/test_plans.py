@@ -164,26 +164,6 @@ def test_enzyme_annotation_plan_shape(spark):
     assert "BroadcastHashJoin" in full          # dict/type lookups
 
 
-def test_enzyme_annotation_disk_storage_parity(spark):
-    """checkpoint_storage='disk' (DISK_ONLY persist at the branch point,
-    CacheManager-visible for repeat queries) must produce exactly the
-    localCheckpoint default's rows."""
-    from omics_data_integration_utilities_spark.plans.registry_pathway import (
-        q_plan_enzyme_annotation,
-    )
-
-    base = q_plan_enzyme_annotation(spark, SF_SMOKE)
-    disk_df = q_plan_enzyme_annotation(spark, SF_SMOKE, checkpoint_storage="disk")
-    try:
-        a = sorted(map(tuple, base.collect()))
-        b = sorted(map(tuple, disk_df.collect()))
-        assert a == b and len(a) > 0
-    finally:
-        # the persist is on the internal branch-point frame, not the
-        # returned one — clear the cache so the shared session is clean
-        spark.catalog.clearCache()
-
-
 def test_substring_dedup_plan_shape(spark):
     """The exact-substring dedup family must keep its 100 TB shape: pure
     JVM (array expressions + explode, no Python workers), duplicate
