@@ -1533,10 +1533,10 @@ def _write_index_meta(spark: SparkSession, idx: DedupIndex) -> None:
     declares the wrong count makes Spark route join keys to the wrong
     bucket and silently miss duplicates — so it must never depend on
     the caller remembering a number."""
-    from ..sources.writers import local_rows_df
+    from ..sources.readers import local_frame
 
     (
-        local_rows_df(spark, [(idx.name, idx.n_buckets)], "name string, n_buckets int")
+        local_frame(spark, [(idx.name, idx.n_buckets)], "name string, n_buckets int")
         .write.mode("overwrite")
         .json(os.path.join(idx.path, _INDEX_META_DIR))
     )

@@ -549,13 +549,12 @@ def _probe_scored_topk(
         )
     d2 = ((qm[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
     probe_lists = np.argsort(d2, axis=1)[:, :n_probes]
-    # ONE slice (r17): bare createDataFrame slices this driver-local
-    # relation defaultParallelism ways, so materializing it for the
-    # broadcast pays one Python-worker round trip per slice — the same
-    # tiny-sidecar cost local_rows_df was introduced for in r16
-    from ..sources.writers import local_rows_df
+    # a local relation: createDataFrame(list) would slice this
+    # driver-local list defaultParallelism ways, and materializing it
+    # for the broadcast would pay one Python-worker round trip per slice
+    from ..sources.readers import local_frame
 
-    probes = local_rows_df(
+    probes = local_frame(
         spark,
         [
             (int(qids[i]), [int(x) for x in probe_lists[i]])
@@ -975,10 +974,10 @@ def _write_ann_sidecars(spark, idx: AnnIndex) -> None:
     corpus attached as ARRAY<DOUBLE> breaks the first probe scan)."""
     import os as _os
 
-    from ..sources.writers import local_rows_df
+    from ..sources.readers import local_frame
 
     (
-        local_rows_df(
+        local_frame(
             spark,
             [
                 (int(i), [float(x) for x in idx.centroids[i]])
@@ -986,11 +985,12 @@ def _write_ann_sidecars(spark, idx: AnnIndex) -> None:
             ],
             "list_id long, centroid array<double>",
         )
+        .coalesce(1)
         .write.mode("overwrite")
         .parquet(_os.path.join(idx.path, _ANN_CENTROIDS_DIR))
     )
     (
-        local_rows_df(
+        local_frame(
             spark,
             [
                 (

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..operators.joins import adduct_expand, band_join
 from ..operators.windows import arg_extreme_dedup
+from ..sources.readers import local_frame
 
 # ESI adduct reference rows (Ion_name, Mass offset, Mult divisor) — shape of
 # FIXTURES.md §2; values here are the three most common positive-mode adducts.
@@ -31,7 +32,7 @@ DEFAULT_ADDUCTS: list[tuple[str, float, float]] = [
 
 
 def default_adducts(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(DEFAULT_ADDUCTS, "Ion_name string, Mass double, Mult double")
+    return local_frame(spark, DEFAULT_ADDUCTS, "Ion_name string, Mass double, Mult double")
 
 
 def mass_annotation_plan(

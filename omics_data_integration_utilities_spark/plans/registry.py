@@ -37,19 +37,13 @@ from ..operators.constants import (
     MINHASH_ROWS_PER_BAND,
     SIMHASH_BITS,
 )
+from ..sources.readers import local_frame, read_parquet_table
 from ..streaming.events import tumbling_event_agg
 from .mass_annotation import DEFAULT_ADDUCTS, default_adducts, mass_annotation_plan
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # events.ts has shipped as both TIMESTAMP(NANOS) and TIMESTAMP(MICROS)
-    # parquet; the legacy conf makes the NANOS form readable (as int64
-    # nanos) and is a no-op for MICROS (read as TIMESTAMP_NTZ).  Every
-    # ts-consuming query normalizes via streaming.events.ts_event_micros,
-    # which dispatches on the resulting dtype — integer/wall-clock ops
-    # only, so buckets are exact and session-timezone-proof.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet_table(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _spread_scan(df: DataFrame) -> DataFrame:
@@ -360,7 +354,7 @@ def q_j6_transition_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J6 self-join on computed rounded key (pathMassTransitions.py:196-224)
     — integer match key (price·10) so no cross-engine float-equality risk."""
     part = _t(spark, sf_dir, "part").select("p_partkey", "p_retailprice")
-    trans = spark.createDataFrame(TRANSITIONS, "transition string, delta double")
+    trans = local_frame(spark, TRANSITIONS, "transition string, delta double")
     cand = (
         part.crossJoin(F.broadcast(trans))
         .withColumn(

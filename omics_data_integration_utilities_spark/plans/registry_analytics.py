@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..analytics.combat import combat_adjust, combat_mean_only
 from ..analytics.drivernet import greedy_driver_selection, permutation_null_coverage
+from ..sources.readers import local_frame
 from .registry import _j12_events, _j12_tables, _t
 
 
@@ -32,7 +33,8 @@ def q_drivernet_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-5 covering brands with newly-covered event counts."""
     events = _j12_events(spark, sf_dir)
     picks = greedy_driver_selection(events, k=5)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, g, int(c)) for i, (g, c) in enumerate(picks)],
         "pick long, mut_gene string, covered long",
     )
@@ -56,7 +58,8 @@ def q_drivernet_significance(spark: SparkSession, sf_dir: str) -> DataFrame:
     single lazy aggregation plan (no per-gene actions)."""
     events = _j12_events(spark, sf_dir)
     picks = greedy_driver_selection(events, k=5)
-    picks_df = spark.createDataFrame(
+    picks_df = local_frame(
+        spark,
         [(i + 1, g, int(c)) for i, (g, c) in enumerate(picks)],
         "pick long, mut_gene string, covered long",
     )

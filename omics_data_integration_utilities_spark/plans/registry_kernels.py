@@ -25,6 +25,7 @@ from ..analytics.permutation import (
 )
 from ..operators.containment import rule_bfs
 from ..operators.multimodal import documents_as_media, extract_features, fake_decoder
+from ..sources.readers import local_frame
 from .registry import _t
 
 
@@ -207,8 +208,8 @@ def q_plan_reaction_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     subs = structs.where(F.col("sid") % 3 == 0).select(
         F.col("sid").alias("substrate_id"), F.col("smarts").alias("substrate")
     )
-    rules = spark.createDataFrame(
-        RXN_MASS_RULES, "rule_id string, pattern string, replacement string"
+    rules = local_frame(
+        spark, RXN_MASS_RULES, "rule_id string, pattern string, replacement string"
     )
     prods = apply_reactions(subs, rules, kernel=structural_reaction_kernel).withColumn(
         "mm", F.round(smarts_mass(F.col("product")), 3)
@@ -744,7 +745,7 @@ def q_k3_substructure(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("[CH3]"),
         ).alias("outer_smarts"),
     )
-    probes = spark.createDataFrame(K3_PROBES, "probe_id string, inner_smarts string")
+    probes = local_frame(spark, K3_PROBES, "probe_id string, inner_smarts string")
     pairs = structs.crossJoin(F.broadcast(probes))
     return structural_substructure_verify(pairs).select(
         "p_partkey", "probe_id", "is_substruct"
@@ -990,8 +991,8 @@ def q_k1_reaction_products(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.reactions import apply_reactions
 
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") % 10 == 0)
-    rules = spark.createDataFrame(
-        REACTION_RULES, "rule_id string, pattern string, replacement string"
+    rules = local_frame(
+        spark, REACTION_RULES, "rule_id string, pattern string, replacement string"
     )
     reacted = apply_reactions(docs, rules, id_col="doc_id", substrate_col="text")
     return reacted.select(
@@ -1101,7 +1102,8 @@ def q_k1_graph_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     subs = part.select(
         F.col("p_partkey").alias("substrate_id"), substrate.alias("substrate")
     )
-    rules = spark.createDataFrame(
+    rules = local_frame(
+        spark,
         [(r, p, t) for r, p, t, _ in GRAPH_RXN_RULES],
         "rule_id string, pattern string, replacement string",
     )

@@ -14,6 +14,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.readers import local_frame
 from .pathway_expand import iterative_expand
 from .registry import _spread_scan, _t, TRANSITIONS, TRANSITIONS_SQL_VALUES
 
@@ -30,7 +31,7 @@ def q_pathway_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_partkey").alias("structure_id"), F.col("p_retailprice").alias("mm")
     )
     roots = all_structs.where(F.col("structure_id") % ROOT_MOD == 0)
-    trans = spark.createDataFrame(TRANSITIONS, "transition string, delta double")
+    trans = local_frame(spark, TRANSITIONS, "transition string, delta double")
     paths = iterative_expand(roots, trans, iterations=ITERATIONS, known=all_structs)
     agg = paths.groupBy("round").agg(
         F.count(F.lit(1)).alias("n_paths"),

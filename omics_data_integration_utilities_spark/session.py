@@ -38,6 +38,12 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # events.ts has shipped as both TIMESTAMP(NANOS) and
+        # TIMESTAMP(MICROS) parquet; this makes the NANOS form readable
+        # (as int64 nanos) and is a no-op for MICROS.  Every ts-consuming
+        # query normalizes via streaming.events.ts_event_micros, which
+        # dispatches on the resulting dtype.
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("OMICS_SPARK_DRIVER_MEM", "8g"))
         # ContextCleaner is GC-driven: shuffle files, localCheckpoint
         # blocks and broadcasts from completed queries are only released

@@ -11,7 +11,12 @@ gets predicate pushdown + column pruning for free.
 
 from __future__ import annotations
 
+import os
+import stat
+import threading
+from collections import OrderedDict
 from collections.abc import Sequence
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -50,14 +55,104 @@ def read_tsv_with_comments(
     )
 
 
+# Parquet confs that change what footer inference returns for one file.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_SCHEMA_CACHE_SIZE = 64
+_schema_cache: OrderedDict[tuple, T.StructType] = OrderedDict()
+_schema_cache_lock = threading.Lock()
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """Cache key of a local single parquet file: its identity plus the
+    session's inference confs.  ``None`` (infer as Spark always does)
+    for a directory, a glob, a non-local URI or a path that cannot be
+    statted."""
+    parsed = urlparse(path)
+    if parsed.scheme not in ("", "file"):
+        return None
+    local = parsed.path if parsed.scheme else path
+    if any(c in local for c in "{}[]*?\\"):
+        return None
+    try:
+        real = os.path.realpath(local)
+        st = os.stat(real)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    return (real, st.st_ino, st.st_size, st.st_mtime_ns) + confs
+
+
 def read_parquet_table(spark: SparkSession, path: str, columns: Sequence[str] | None = None) -> DataFrame:
     """Parquet scan (the engine's canonical storage; SQLite tables are
     ingested once to Parquet — S3-S5 — then every filtered scan gets
-    pushdown)."""
-    df = spark.read.parquet(path)
+    pushdown).  The one table reader: every registry ``_t`` read lands
+    here.
+
+    Footer schema inference is a Spark job (a median 103 ms per read on
+    a 4-vCPU VM; the same read given its schema is 13.5 ms and no job;
+    SCALE.md 2026-10-19).
+    A local single file's schema is therefore inferred once, by Spark
+    itself, and kept in a small process-wide LRU keyed on the file's
+    realpath, inode, size and mtime and on the session's
+    :data:`_INFERENCE_CONFS`; a later read of the unchanged file passes
+    that schema.  Directories, globs, non-local URIs and unstattable
+    paths infer on every read, exactly as ``spark.read.parquet``.
+    Reads no session conf it does not key on and sets none."""
+    key = _schema_key(spark, path)
+    with _schema_cache_lock:
+        schema = _schema_cache.get(key) if key is not None else None
+        if schema is not None:
+            _schema_cache.move_to_end(key)
+    if schema is not None:
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if key is not None:
+            with _schema_cache_lock:
+                _schema_cache[key] = df.schema
+                while len(_schema_cache) > _SCHEMA_CACHE_SIZE:
+                    _schema_cache.popitem(last=False)
     if columns:
         df = df.select(*columns)
     return df
+
+
+def local_frame(spark: SparkSession, rows: Sequence[tuple], ddl: str) -> DataFrame:
+    """A small driver-local constant table as a ``LocalRelation``.
+
+    ``spark.createDataFrame(list, ddl)`` plans as ``Scan ExistingRDD``
+    over pickled Python slices, so broadcasting or writing it runs a job
+    through Python workers.  Here the rows become a column-wise
+    ``pyarrow.Table`` typed from ``ddl``, which Spark plans as
+    ``LocalTableScan``: its broadcast job runs in the JVM alone (one
+    warm ``meantools`` pass, 4-vCPU VM: 15-33 ms per broadcast against
+    333-356 ms; SCALE.md 2026-10-19).  ``None`` stays NULL and ``float('nan')`` stays NaN (no
+    pandas round trip, whose Arrow conversion masks NaN to NULL), and
+    every field is nullable as ``createDataFrame(list, ddl)`` makes it.
+
+    The rows are inlined into the plan, so use this for bounded inputs
+    only (rule tables, adducts, sidecar metadata); data-dependent row
+    sets stay on ``createDataFrame``.  ``LocalTableScan`` splits up to
+    one partition per row: ``.coalesce(1)`` before a write that must
+    leave one part file."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = T.StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def rename_by_position(df: DataFrame, names: Sequence[str]) -> DataFrame:

@@ -16,20 +16,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 
 
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: Sequence[str] | None = None,
-) -> None:
-    """Canonical sink (replaces S9 SQLite appends): columnar, splittable,
-    statistics for pushdown on re-read."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
 def write_bucketed_table(
     df: DataFrame,
     name: str,
@@ -68,8 +54,8 @@ def write_sqlite_table(
     for SMALL RESULT TABLES (the reference's own regime — its outputs are
     final annotation/rule tables, not the 100 TB scan): rows stream to
     the driver via ``toLocalIterator`` (no full collect) and insert in
-    batched transactions.  Large outputs belong in
-    :func:`write_parquet` / :func:`write_bucketed_table`.
+    batched transactions.  Large outputs belong in parquet
+    (``df.write.parquet``, :func:`write_bucketed_table`).
 
     ``mode``: 'replace' drops + recreates, 'append' adds to an existing
     table.  Returns the number of rows written.
@@ -172,17 +158,3 @@ def write_jsonl(
             except Exception:
                 pass
 
-
-def local_rows_df(spark, data: Sequence[tuple], schema: str) -> DataFrame:
-    """ONE-partition DataFrame from a small driver-local row list.
-
-    ``spark.createDataFrame(data, schema)`` slices local data into
-    ``defaultParallelism`` pickled partitions; a later ``coalesce(1)``
-    (the natural move before a sidecar write) then pays one sequential
-    Python-worker round trip PER SLICE inside the single merged task —
-    measured ~6 s for a 1-row frame at local[32] (r16).  Parallelizing
-    to one slice up front makes the same write ~0.5 s and still yields
-    a single part file.  Use for metadata sidecars / tiny dimension
-    frames only — real data should arrive pre-partitioned.
-    """
-    return spark.createDataFrame(spark.sparkContext.parallelize(data, 1), schema)

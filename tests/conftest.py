@@ -168,3 +168,20 @@ def compare_query_to_oracle(spark, duck, name, fn, sql, sf_dir):
             f"  spark-only: {only_s}\n  duck-only: {only_d}"
         )
     return len(sn)
+
+
+def jobs_fired(spark, fn) -> int:
+    """Spark jobs ``fn()`` fires, counted through a job group the way
+    perfbench/worker.py does.  The status tracker is fed by the listener
+    bus, so the bus is drained before the count is read."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -4,13 +4,18 @@ replace the reference's append-loop sinks (S8-S10)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from omics_data_integration_utilities_spark.sources import (
+    local_frame,
     read_csv,
+    read_parquet_table,
     read_tsv_with_comments,
     rename_by_position,
 )
+
+from .conftest import SF_SMOKE, jobs_fired
 
 
 def test_read_csv_declared_schema(spark, tmp_path):
@@ -355,3 +360,182 @@ def test_spread_scan_still_fans_out_local_single_file(spark):
     df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     out = _spread_scan(df)
     assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+def test_parquet_schema_cache_reads_without_a_job(spark, tmp_path):
+    """The second read of one unchanged local file passes the cached
+    schema: no footer-inference job, and the same schema and rows as a
+    fresh inference (TIMESTAMP(NANOS) under the session's
+    ``nanosAsLong`` included).  Rewriting the file with another schema
+    is seen on the next read."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    ts = [datetime.datetime(2024, 1, 1, 0, 0, k) for k in range(3)]
+    pq.write_table(
+        pa.table(
+            {
+                "k": pa.array([1, 2, None], pa.int64()),
+                "v": pa.array([0.5, float("nan"), None], pa.float64()),
+                "ts": pa.array(ts, pa.timestamp("ns")),
+            }
+        ),
+        path,
+    )
+    assert jobs_fired(spark, lambda: read_parquet_table(spark, path)) >= 1
+    box = []
+    assert jobs_fired(spark, lambda: box.append(read_parquet_table(spark, path))) == 0
+    cached, fresh = box[0], spark.read.parquet(path)
+    assert cached.schema == fresh.schema
+    assert dict(fresh.dtypes)["ts"] == "bigint"
+    assert sorted(map(repr, cached.collect())) == sorted(map(repr, fresh.collect()))
+
+    pq.write_table(pa.table({"name": ["a", "b"], "w": [1.0, 2.0]}), path)
+    after = read_parquet_table(spark, path)
+    assert after.schema == spark.read.parquet(path).schema
+    assert after.columns == ["name", "w"]
+    assert sorted(r["name"] for r in after.collect()) == ["a", "b"]
+
+
+def test_parquet_schema_cache_keys_on_inference_confs(spark, tmp_path):
+    """Flipping ``binaryAsString`` between two reads of a file with an
+    unannotated BINARY column gives what fresh inference gives."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "bin.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"x", b"yz"], pa.binary())}), path)
+    key = "spark.sql.parquet.binaryAsString"
+    saved = spark.conf.get(key, None)
+    try:
+        for flag in ("false", "true", "false"):
+            spark.conf.set(key, flag)
+            got = read_parquet_table(spark, path)
+            assert got.schema == spark.read.parquet(path).schema, flag
+            want = "string" if flag == "true" else "binary"
+            assert dict(got.dtypes)["b"] == want
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+
+
+def test_parquet_directory_read_still_infers(spark, tmp_path):
+    """A directory is outside the cache: every read infers, as
+    ``spark.read.parquet`` does."""
+    path = str(tmp_path / "dir")
+    spark.range(10).write.parquet(path)
+    for _ in range(2):
+        assert jobs_fired(spark, lambda: read_parquet_table(spark, path)) >= 1
+    assert read_parquet_table(spark, path).count() == 10
+
+
+def test_reader_leaves_session_conf_unset(spark):
+    """The table reader sets no session conf: ``nanosAsLong`` comes from
+    ``get_spark`` only, and a session without it keeps it unset."""
+    from omics_data_integration_utilities_spark.plans.registry import _t
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    from_get_spark = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        assert _t(spark, SF_SMOKE, "part").count() > 0
+        assert spark.conf.get(key, None) is None
+    finally:
+        spark.conf.set(key, "true")
+    assert from_get_spark == "true"
+
+
+# Every DDL a constant table is built from, with rows that carry NULLs,
+# NaNs and empty arrays where the type allows them.
+_LOCAL_FRAME_CASES = [
+    ("Ion_name string, Mass double, Mult double",
+     [("M+H", 1.007276, 1.0), ("M+Na", float("nan"), None), (None, 0.0, 2.0)]),
+    ("transition string, delta double", [("methyl", 14.01565), ("x", None)]),
+    ("rule_id string, pattern string, replacement string",
+     [("r1", "[aeiou]{2,}", "_"), ("r2", None, "")]),
+    ("probe_id string, inner_smarts string", [("p1", "[N&X3:2]")]),
+    ("pick long, mut_gene string, covered long", [(0, "g1", 7), (1, None, None)]),
+    ("name string, n_buckets int", [("idx", 16)]),
+    ("query_id long, probe_lists array<long>", [(1, [3, 1]), (2, []), (3, None)]),
+    ("list_id long, centroid array<double>",
+     [(0, [0.5, float("nan")]), (1, [None, 1.0]), (2, [])]),
+    ("name string, n_lists int, n_buckets int, vec_col string, "
+     "id_col string, id_type string, vec_type string",
+     [("ann", 4, 2, "vec", "id", "bigint", "array<double>")]),
+]
+
+
+@pytest.mark.parametrize("ddl,rows", _LOCAL_FRAME_CASES)
+def test_local_frame_matches_create_dataframe(spark, ddl, rows):
+    """``local_frame`` gives the rows, schema and nullability that
+    ``createDataFrame(list, ddl)`` gives (NULL stays NULL, NaN stays
+    NaN), plans as a ``LocalTableScan`` with no Python RDD behind it,
+    and ``[]`` gives an empty frame with the schema."""
+    import math
+
+    got = local_frame(spark, rows, ddl)
+    ref = spark.createDataFrame(rows, ddl)
+    assert got.schema == ref.schema
+
+    def canon(v):
+        if isinstance(v, float) and math.isnan(v):
+            return "nan"
+        if isinstance(v, list):
+            return [canon(x) for x in v]
+        return v
+
+    def canon_rows(df):
+        return sorted(repr([canon(v) for v in r]) for r in df.collect())
+
+    assert canon_rows(got) == canon_rows(ref)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    empty = local_frame(spark, [], ddl)
+    assert empty.schema == ref.schema
+    assert empty.collect() == []
+
+
+def test_meantools_builds_fire_no_read_or_constant_jobs(spark):
+    """Warm builds of the MEANtools plans run no Spark job: table
+    schemas come from the reader's cache and constant tables are local
+    relations.  ``k12_perm_fdr`` fires only its eager
+    ``localCheckpoint``."""
+    import __spark_entry__
+
+    queries = __spark_entry__.queries()
+    budget = {"plan_mass_annotation": 0, "k1_graph_rewrite": 0, "k12_perm_fdr": 2}
+    for name, most in budget.items():
+        build = queries[name]
+        build(spark, SF_SMOKE)
+        assert jobs_fired(spark, lambda: build(spark, SF_SMOKE)) <= most, name
+
+
+def test_plans_read_through_one_reader():
+    """No plan module reads parquet or builds a DataFrame from rows
+    directly: tables go through ``read_parquet_table`` (via
+    ``registry._t``) and constant tables through ``local_frame``."""
+    import ast
+    import pathlib
+
+    import omics_data_integration_utilities_spark.plans as plans
+
+    root = pathlib.Path(plans.__file__).parent
+    hits = []
+    for path in sorted(root.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.Call) or not isinstance(node.func, ast.Attribute):
+                continue
+            f = node.func
+            direct_read = (
+                f.attr == "parquet"
+                and isinstance(f.value, ast.Attribute)
+                and f.value.attr == "read"
+            )
+            if direct_read or f.attr == "createDataFrame":
+                hits.append(f"{path.name}:{node.lineno}: {f.attr}")
+    assert hits == []

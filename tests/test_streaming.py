@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, jobs_fired
 
 
 def test_package_is_batch_only():
@@ -837,23 +837,6 @@ def test_stale_batch_id_refused_on_existing_snapshot(spark, tmp_path):
     assert {r["k"] for r in read_bucketed_snapshot(spark, buck).collect()} == {3, 4, 5}
 
 
-def _jobs_fired(spark, fn) -> int:
-    """Spark jobs ``fn()`` fires, counted through a job group the way
-    perfbench/worker.py does.  The status tracker is fed by the listener
-    bus, so the bus is drained before the count is read."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _tree_bytes(root) -> dict:
     """Every file under ``root`` (relative path -> content)."""
     import os
@@ -901,7 +884,7 @@ def test_cdc_rejected_batch_writes_nothing(spark, tmp_path):
                 batch_id=1, n_buckets=4,
             )
         assert _tree_bytes(snap) == before, msg
-    assert _jobs_fired(
+    assert jobs_fired(
         spark,
         lambda: apply_cdc_batch_into_bucketed_snapshot(
             spark, b0, snap, ["k"], batch_id=0, n_buckets=4
@@ -940,7 +923,7 @@ def test_snapshot_commit_and_read_job_budget(spark, tmp_path):
         spark, seed, snap, ["k"], batch_id=0, n_buckets=4
     )
     for manifest in (None, "m000000000000.json"):
-        assert _jobs_fired(
+        assert jobs_fired(
             spark, lambda: read_bucketed_snapshot(spark, snap, manifest=manifest)
         ) == 0
     cdc = spark.createDataFrame(
@@ -948,7 +931,7 @@ def test_snapshot_commit_and_read_job_budget(spark, tmp_path):
          (99, 99.0, "upsert")],
         schema,
     )
-    jobs = _jobs_fired(
+    jobs = jobs_fired(
         spark,
         lambda: apply_cdc_batch_into_bucketed_snapshot(
             spark, cdc, snap, ["k"], batch_id=1, n_buckets=4
