@@ -676,17 +676,18 @@ def main() -> None:
 
     # heavy imports AFTER arg parsing so --help never touches Spark
     from omics_data_integration_utilities_spark.session import get_spark
+    from omics_data_integration_utilities_spark.sources.readers import read_parquet_table
     import __spark_entry__ as entrymod
 
     spark = get_spark("omics-spark-bench")
 
     queries = dict(entrymod.queries())
     queries.update(_extra_bench())
-    # warm up the session: JVM, AQE machinery, parquet reader paths
+    # warm up the session: JVM, AQE machinery, parquet reader paths; the
+    # table reader caches each file's schema, so no timed read infers one
     spark.range(1000).count()
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     for t in ("supplier", "part", "lineitem", "orders", "documents", "embeddings", "events"):
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").limit(1).count()
+        read_parquet_table(spark, f"{sf_dir}/{t}.parquet").limit(1).count()
     # warm the Arrow / python-worker path (mapInPandas machinery)
     spark.range(100).mapInPandas(
         lambda it: (pdf.assign(x=pdf.id) for pdf in it), schema="id long, x long"

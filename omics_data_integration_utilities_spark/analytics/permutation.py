@@ -1,68 +1,38 @@
-"""Permutation null + FDR machinery (SURVEY §2 K12, Gohs method).
+"""Permutation null + FDR machinery (SURVEY §2 K12, Gohs method), one lazy plan.
 
 Reference semantics, re-expressed Spark-first:
 
 * mismatched-pair null distribution — ``Gohs_method/
   integrated_aCGH_expression_relationships.R:109-131`` (``null.distb.m``
-  correlates randomly re-paired rows; the Spark restatement uses a
-  deterministic cyclic-shift derangement by md5 rank so both engines and
-  repeated runs agree),
+  correlates modality A of one variable with modality B of another; the
+  Spark restatement pairs each variable with its successor in md5-rank
+  order, a deterministic cyclic derangement, so both engines and repeated
+  runs agree),
 * permutation p-value = fraction of the null at least as extreme,
   with the reference's prepended sentinel making it never zero —
   ``...R:130`` (``c(0, ...)``) and ``:157``
   (``length(which(comb.pv.rand<=x))/length(comb.pv.rand)``),
 * Benjamini-Hochberg adjust — ``...R:158`` (``p.adjust(method="fdr")``).
 
-Everything here is pure DataFrame algebra (no UDF): the null-rank count
-is a union + one window pass (nulls sorted before observations on ties),
-and BH is the classic reverse cumulative-min window — both
-whole-stage-codegen'd and DuckDB-oracle-able, and both scale: no
-``collect``, one shuffle per window partition key.
+:func:`permutation_fdr` builds the whole operator as one plan with no
+action, no UDF and one shuffle per key set:
+
+1. a broadcast rank table: per block, the variables in ``(md5(var), var)``
+   order (``collect_set`` → ``array_sort`` → ``posexplode``) and their count;
+2. one ``groupBy(blk, s)`` collects each sample's entries sorted by rank and
+   ``zip_with``s the array against itself shifted by one, so every entry
+   emits its observed pair and, when the next entry is its cyclic successor,
+   its null pair — O(k log k) per sample of k variables, no per-key lookup;
+3. one ``groupBy(blk, var, is_obs)`` for ``corr`` and ``count``;
+4. one window pass per block: nulls order before observations on ties, so
+   the running null count at an observed row is ``#null >= r``, and BH is
+   the reverse cumulative-min window over the same partitioning.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def permutation_pvalues(
-    obs: DataFrame,
-    null: DataFrame,
-    stat_col: str,
-    block_cols: list[str],
-    greater: bool = True,
-) -> DataFrame:
-    """Attach ``perm_pv`` to each observed row: the fraction of the
-    block's null statistics at least as extreme (≥ when ``greater``),
-    with +1 smoothing mirroring the reference's prepended 0 sentinel
-    (R:130) so a p-value is never exactly zero.
-
-    Implemented as union + one window: nulls order before observations on
-    ties, so the running null count at an observed row is exactly
-    ``#null >= stat``.  Null rows need only ``block_cols + [stat_col]``.
-    """
-    o = obs.withColumn("__is_obs", F.lit(1))
-    n = null.select(
-        *[F.col(c) for c in block_cols], F.col(stat_col), F.lit(0).alias("__is_obs")
-    )
-    # align schemas: null side gets nulls for the obs-only columns
-    for c in o.columns:
-        if c not in n.columns:
-            n = n.withColumn(c, F.lit(None).cast(o.schema[c].dataType))
-    u = o.select(*o.columns).unionByName(n.select(*o.columns))
-    order = [F.desc(stat_col)] if greater else [F.asc(stat_col)]
-    w_cum = Window.partitionBy(*block_cols).orderBy(*order, F.asc("__is_obs"))
-    w_all = Window.partitionBy(*block_cols)
-    ranked = u.select(
-        *u.columns,
-        F.sum(1 - F.col("__is_obs")).over(w_cum).alias("__null_le"),
-        F.sum(1 - F.col("__is_obs")).over(w_all).alias("__null_n"),
-    ).where(F.col("__is_obs") == 1)
-    return ranked.withColumn(
-        "perm_pv",
-        F.round((F.col("__null_le") + 1.0) / (F.col("__null_n") + 1.0), 6),
-    ).drop("__is_obs", "__null_le", "__null_n")
 
 
 def bh_adjust(
@@ -94,62 +64,67 @@ def bh_adjust(
     ).drop("__raw")
 
 
-def mismatched_pair_null(
-    df: DataFrame,
-    block_col: str,
-    var_col: str,
-    sample_col: str,
-    a_col: str,
-    b_col: str,
-) -> DataFrame:
-    """Deterministic mismatched re-pairing for the null (R:109-131
-    ``null.distb.m`` correlates modality A of a random gene with
-    modality B of another; here each variable's A-series is paired with
-    the B-series of its successor in md5-rank order — a derangement, so
-    every null pair is genuinely mismatched, and deterministic for the
-    oracle).  Returns per (block, var_a, var_b) the Pearson r of the
-    mismatched series over shared samples."""
-    ranked_vars = (
-        df.select(block_col, var_col)
-        .distinct()
-        .withColumn(
-            "__rk",
-            F.row_number().over(
-                Window.partitionBy(block_col).orderBy(F.md5(F.col(var_col)), F.col(var_col))
-            ),
+def cyclic_pair_stats(series: DataFrame) -> DataFrame:
+    """Per ``(blk, var, is_obs)`` the Pearson ``r`` (rounded to 6) and the
+    pair count ``n`` over the shared samples of ``series`` (one row per
+    ``(blk, var, s)`` with modalities ``va``, ``vb``).  ``is_obs = 1``
+    correlates the variable's own ``va`` and ``vb``; ``is_obs = 0`` its
+    ``va`` with the ``vb`` of its md5-rank successor, never itself (R:109-131
+    ``null.distb.m``).  A NULL block or variable is grouped like any other
+    key, but a pair with a NULL variable on either side is no null pair."""
+    ranks = (
+        series.groupBy("blk")
+        .agg(F.array_sort(F.collect_set(F.struct(F.md5("var"), "var"))).alias("vs"))
+        .select(F.col("blk").alias("rb"), F.size("vs").alias("nn"), F.posexplode("vs"))
+        .select("rb", "nn", "pos", F.col("col.var").alias("rv"))
+    )
+    entries = (
+        series.join(
+            F.broadcast(ranks),
+            F.col("blk").eqNullSafe(F.col("rb")) & F.col("var").eqNullSafe(F.col("rv")),
         )
+        .groupBy("blk", "s")
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "nn", "var", "va", "vb"))).alias("e"))
     )
-    n_vars = ranked_vars.groupBy(block_col).agg(F.count(F.lit(1)).alias("__n"))
-    a_side = ranked_vars.select(
-        F.col(block_col), F.col(var_col).alias("var_a"), F.col("__rk").alias("__rka")
-    )
-    b_side = ranked_vars.select(
-        F.col(block_col).alias("__blk_b"),
-        F.col(var_col).alias("var_b"),
-        F.col("__rk").alias("__rkb"),
-    )
-    pairing = (
-        a_side.join(n_vars, on=block_col)
-        .join(
-            b_side,
-            (F.col(block_col) == F.col("__blk_b"))
-            & (F.col("__rkb") == (F.col("__rka") % F.col("__n")) + 1),
+    shifted = F.concat(F.slice("e", 2, F.size("e")), F.slice("e", 1, 1))
+
+    def pair(is_obs, x, y):
+        return F.struct(
+            F.lit(is_obs).alias("is_obs"), x["var"].alias("var"),
+            x["va"].alias("va"), y["vb"].alias("vb"),
         )
-        .select(block_col, "var_a", "var_b")
-        .where(F.col("var_a") != F.col("var_b"))
-    )
-    a = df.select(
-        F.col(block_col), F.col(var_col).alias("var_a"),
-        F.col(sample_col).alias("__s"), F.col(a_col).alias("__va"),
-    )
-    b = df.select(
-        F.col(block_col), F.col(var_col).alias("var_b"),
-        F.col(sample_col).alias("__s"), F.col(b_col).alias("__vb"),
-    )
-    joined = pairing.join(a, [block_col, "var_a"]).join(b, [block_col, "var_b", "__s"])
+
+    pairs = F.zip_with("e", shifted, lambda x, y: F.array(
+        pair(1, x, x),
+        F.when((y["pos"] == (x["pos"] + 1) % x["nn"]) & (y["var"] != x["var"]), pair(0, x, y)),
+    ))
     return (
-        joined.groupBy(block_col, "var_a", "var_b")
-        .agg(F.corr("__va", "__vb").alias("r"), F.count(F.lit(1)).alias("n"))
+        entries.select("blk", F.inline(F.filter(F.flatten(pairs), lambda p: p.isNotNull())))
+        .groupBy("blk", "var", "is_obs")
+        .agg(F.round(F.corr("va", "vb"), 6).alias("r"), F.count(F.lit(1)).alias("n"))
         .where(F.col("r").isNotNull())
-        .select(block_col, "var_a", "var_b", F.round("r", 6).alias("r"), "n")
     )
+
+
+def permutation_fdr(series: DataFrame) -> DataFrame:
+    """Per observed ``(blk, var)``: ``r``, ``n``, ``perm_pv`` = the fraction
+    of the block's null ``r`` at least as extreme (ties count), with +1
+    smoothing mirroring the reference's prepended 0 sentinel (R:130), and
+    its BH ``pv_adj`` (R:158).  ``series`` is as for
+    :func:`cyclic_pair_stats`; the plan fires no job until an action."""
+    nulls = 1 - F.col("is_obs")
+    w = Window.partitionBy("blk")
+    pv = (
+        cyclic_pair_stats(series)
+        .select(
+            "blk", "var", "r", "n", "is_obs",
+            F.sum(nulls).over(w.orderBy(F.desc("r"), "is_obs")).alias("ge"),
+            F.sum(nulls).over(w).alias("nulls"),
+        )
+        .where(F.col("is_obs") == 1)
+        .select(
+            "blk", "var", "r", "n",
+            F.round((F.col("ge") + 1.0) / (F.col("nulls") + 1.0), 6).alias("perm_pv"),
+        )
+    )
+    return bh_adjust(pv, "perm_pv", ["blk"], ["var"])

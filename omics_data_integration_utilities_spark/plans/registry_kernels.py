@@ -18,11 +18,7 @@ from ..analytics.kernels import (
     pca_batch_check,
     roc_auc,
 )
-from ..analytics.permutation import (
-    bh_adjust,
-    mismatched_pair_null,
-    permutation_pvalues,
-)
+from ..analytics.permutation import permutation_fdr
 from ..operators.containment import rule_bfs
 from ..operators.multimodal import documents_as_media, extract_features, fake_decoder
 from ..sources.readers import local_frame
@@ -380,10 +376,10 @@ def q_k12_perm_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample — the acgh-vs-expr pairing); null = mismatched-variable
     correlations via deterministic md5-rank cyclic shift (null.distb.m,
     R:109-131); perm_pv = fraction of null ≥ observed (+1 sentinel
-    smoothing, R:130); pv_adj = p.adjust(method='fdr') (R:158).  Pure
-    window algebra → DuckDB-oracle hash check."""
-    ev = _t(spark, sf_dir, "events")
-    series = ev.groupBy(
+    smoothing, R:130); pv_adj = p.adjust(method='fdr') (R:158).  One lazy
+    plan (:func:`permutation_fdr`, no action at build) → DuckDB-oracle hash
+    check."""
+    series = _t(spark, sf_dir, "events").groupBy(
         (F.col("user_id") % 2).cast("string").alias("blk"),
         F.col("event_type").alias("var"),
         F.col("user_id").alias("s"),
@@ -391,24 +387,7 @@ def q_k12_perm_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.avg("value").alias("va"),
         F.count(F.lit(1)).cast("double").alias("vb"),
     )
-    # the obs/null/pairing branches all re-derive from `series`; without a
-    # materialization Catalyst re-plans the aggregation per branch — SIX
-    # full input scans.  One localCheckpoint = one scan; the checkpointed
-    # set is |blocks × vars × samples|, tiny relative to the input.
-    series = series.localCheckpoint()
-    obs = (
-        series.groupBy("blk", "var")
-        .agg(
-            F.round(F.corr("va", "vb"), 6).alias("r"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .where(F.col("r").isNotNull())
-    )
-    null = mismatched_pair_null(series, "blk", "var", "s", "va", "vb").select("blk", "r")
-    pv = permutation_pvalues(obs, null, "r", ["blk"], greater=True)
-    return bh_adjust(pv, "perm_pv", ["blk"], ["var"]).select(
-        "blk", "var", "r", "n", "perm_pv", "pv_adj"
-    )
+    return permutation_fdr(series)
 
 
 SQL_K12_PERM_FDR = """

@@ -400,40 +400,126 @@ def test_bh_adjust_matches_r_p_adjust(spark):
         assert abs(out[k] - v) < 1e-6, (k, out[k], v)
 
 
-def test_permutation_pvalues_counts_null_at_least_as_extreme(spark):
-    from omics_data_integration_utilities_spark.analytics.permutation import (
-        permutation_pvalues,
-    )
+def _md5_order(names):
+    import hashlib
 
-    obs = spark.createDataFrame(
-        [("b", "x", 0.9), ("b", "y", 0.5), ("b", "z", 0.1)], "blk string, var string, r double"
-    )
-    null = spark.createDataFrame(
-        [("b", 0.8), ("b", 0.5), ("b", 0.2), ("b", 0.0)], "blk string, r double"
-    )
-    out = {r["var"]: r["perm_pv"] for r in
-           permutation_pvalues(obs, null, "r", ["blk"], greater=True).collect()}
-    # x: 0 null >= 0.9 → (0+1)/5; y: 2 null >= 0.5 (tie counts) → 3/5; z: 3 → 4/5
-    assert abs(out["x"] - 0.2) < 1e-9
-    assert abs(out["y"] - 0.6) < 1e-9
-    assert abs(out["z"] - 0.8) < 1e-9
+    return sorted(names, key=lambda v: (hashlib.md5(v.encode()).hexdigest(), v))
 
 
-def test_mismatched_pair_null_is_derangement(spark):
-    from omics_data_integration_utilities_spark.analytics.permutation import (
-        mismatched_pair_null,
-    )
+def _rotation_series(spark, obs, nulls):
+    """A K12 ``series`` (blk, var, s, va, vb) over 8 samples whose
+    correlations are set by angle: every series is cos(t)·e1 + sin(t)·e2
+    for orthonormal zero-mean e1, e2, so corr = cos(Δt).  The k variables
+    in md5 order get observed r ``obs`` (the last one's follows from
+    closing the cycle) and null r ``nulls[i]`` against their successor."""
+    import math
 
-    rows = []
-    for s in range(8):
-        for v in ("a", "b", "c"):
-            rows.append(("blk", v, s, float(s) + hash(v) % 3, float(s * 2)))
+    names = _md5_order([f"v{i}" for i in range(len(nulls))])
+    beta, rows = 0.0, []
+    for i, v in enumerate(names):
+        alpha = beta + math.acos(obs[i]) if i < len(obs) else math.acos(nulls[-1])
+        for s in range(8):
+            e1, e2 = math.cos(2 * math.pi * s / 8), math.sin(2 * math.pi * s / 8)
+            rows.append(("b", v, s, math.cos(alpha) * e1 + math.sin(alpha) * e2,
+                         math.cos(beta) * e1 + math.sin(beta) * e2))
+        beta = alpha - math.acos(nulls[i])
     df = spark.createDataFrame(rows, "blk string, var string, s long, va double, vb double")
-    out = mismatched_pair_null(df, "blk", "var", "s", "va", "vb").collect()
-    assert len(out) == 3  # cyclic shift over 3 vars
-    for r in out:
-        assert r["var_a"] != r["var_b"]
-        assert r["n"] == 8
+    return df, names
+
+
+def test_permutation_fdr_counts_null_at_least_as_extreme(spark):
+    from omics_data_integration_utilities_spark.analytics.permutation import permutation_fdr
+
+    series, (x, y, z, w) = _rotation_series(spark, [0.9, 0.5, 0.1], [0.8, 0.5, 0.2, 0.0])
+    out = {r["var"]: r["perm_pv"] for r in permutation_fdr(series).collect()}
+    # x: 0 null >= 0.9 → (0+1)/5; y: 2 null >= 0.5 (tie counts) → 3/5;
+    # z: 3 → 4/5; w closes the cycle at r ≈ -0.09, below every null → 5/5
+    assert abs(out[x] - 0.2) < 1e-9
+    assert abs(out[y] - 0.6) < 1e-9
+    assert abs(out[z] - 0.8) < 1e-9
+    assert abs(out[w] - 1.0) < 1e-9
+
+
+def test_cyclic_pair_null_is_derangement(spark):
+    from omics_data_integration_utilities_spark.analytics.permutation import cyclic_pair_stats
+
+    nulls = [0.7, -0.3, 0.1]
+    series, names = _rotation_series(spark, [0.95, 0.4], nulls)
+    out = cyclic_pair_stats(series).collect()
+    null = {r["var"]: r for r in out if r["is_obs"] == 0}
+    obs = {r["var"]: r["r"] for r in out if r["is_obs"] == 1}
+    assert len(null) == 3  # cyclic shift over 3 vars
+    for v, want in zip(names, nulls):
+        # the md5-order successor's vb, never the variable's own
+        assert abs(null[v]["r"] - want) < 1e-6, (v, null[v]["r"], want)
+        assert abs(null[v]["r"] - obs[v]) > 1e-3
+        assert null[v]["n"] == 8
+
+
+def test_k12_perm_fdr_edge_cases_match_oracle(spark, tmp_path):
+    """One-variable block, a sample missing a variable, NULL values and an
+    observed r tied with a null r: Spark equals the DuckDB oracle.  A NULL
+    ``event_type`` raises nothing and leaves the other variables' r and n
+    as they are."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from omics_data_integration_utilities_spark.plans.registry_kernels import (
+        SQL_K12_PERM_FDR,
+        q_k12_perm_fdr,
+    )
+
+    from .conftest import normalize_rows
+
+    rng = np.random.default_rng(7)
+    w, y, v2, v3 = _md5_order(["a", "b", "c", "d"])
+    rows = []  # (user_id, event_type, value); block "0" = even users
+    for u in range(0, 16, 2):
+        ys = rng.normal(size=int(rng.integers(1, 4))).round(3).tolist()
+        rows += [(u, y, x) for x in ys]
+        # w's values average to y's, so w's null (w.va vs y.vb) ties y's r
+        rows += [(u, w, float(np.mean(ys)))] * int(rng.integers(1, 4))
+        if u != 14:  # sample 14 lacks v2, so y's null pair (y → v2) skips it
+            rows += [(u, v2, float(x)) for x in rng.normal(size=int(rng.integers(1, 4)))]
+        # NULL values: sample 4's v3 has only NULLs (va NULL), sample 2's some
+        vals = {4: [None], 2: [float(rng.normal()), None]}.get(u, [float(rng.normal())])
+        rows += [(u, v3, x) for x in vals * int(rng.integers(1, 3))]
+    for u in range(1, 12, 2):  # block "1": one variable, no null pair
+        rows += [(u, "solo", float(x)) for x in rng.normal(size=int(rng.integers(1, 4)))]
+
+    def k12(name, rows):
+        d = tmp_path / name
+        d.mkdir()
+        path = str(d / "events.parquet")
+        cols = list(zip(*rows))
+        pq.write_table(pa.table({
+            "user_id": pa.array(cols[0], pa.int64()),
+            "event_type": pa.array(cols[1], pa.string()),
+            "value": pa.array(cols[2], pa.float64()),
+        }), path)
+        df = q_k12_perm_fdr(spark, str(d))
+        got = [r.asDict() for r in df.collect()]
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW events AS SELECT * FROM '{path}'")
+        res = con.execute(SQL_K12_PERM_FDR)
+        want = normalize_rows([c[0] for c in res.description], res.fetchall())
+        tail = SQL_K12_PERM_FDR.rindex("SELECT blk, var, r, n, perm_pv,")
+        ties = con.execute(
+            SQL_K12_PERM_FDR[:tail] + "SELECT count(*) FROM obs JOIN nullr USING (blk, r)"
+        ).fetchone()[0]
+        con.close()
+        assert normalize_rows(df.columns, [tuple(r.values()) for r in got]) == want, name
+        return {r["var"]: r for r in got}, ties
+
+    base, ties = k12("base", rows)
+    assert ties >= 1
+    assert base["solo"]["blk"] == "1" and base["solo"]["perm_pv"] == 1.0
+    assert {v for v, r in base.items() if r["blk"] == "0"} == {w, y, v2, v3}
+
+    nulled, _ = k12("null_var", rows + [(0, None, 1.0), (0, None, 3.0), (2, None, -2.0)])
+    for v, r in base.items():
+        assert (nulled[v]["r"], nulled[v]["n"]) == (r["r"], r["n"]), v
 
 
 # --------------------------------------------------------------------------
