@@ -23,7 +23,9 @@ verdict, with ``better`` and ``bound`` taken from ``BENCHMARK.json``:
 - no regression: otherwise.
 
 ``--trace`` adds one traced pair (seed 1) and prints every per-layer count
-that differs between the two revisions.  Exit status 1 means a regression or
+that differs between the two revisions, then every per-query ``jobs``,
+``stages`` and ``tasks`` that differs (read from each checkout's
+``.perfbench_work/trace-<workload>-1.json``).  Exit status 1 means a regression or
 a run that failed or missed an oracle.
 """
 
@@ -44,6 +46,7 @@ import tempfile
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 BENCH_FILES = ("BENCHMARK.json", "perfbench")
+QUERY_COUNTS = ("jobs", "stages", "tasks")
 
 
 def quartiles(xs: list[float]) -> tuple[float, float, float]:
@@ -113,10 +116,23 @@ def run_one(root: str, spec: dict, workload: str, seed: int, trace: bool) -> dic
             proc.wait()
             raise
     try:
-        return json.loads(stdout.strip().splitlines()[-1])
+        out = json.loads(stdout.strip().splitlines()[-1])
     except (IndexError, json.JSONDecodeError):
         sys.stderr.write(stderr[-2000:])
         return {"correct": False, "attempted": 0, "failed": 1, "metrics": {}}
+    if trace:
+        out["per_query"] = read_per_query(root, workload, seed)
+    return out
+
+
+def read_per_query(root: str, workload: str, seed: int) -> dict:
+    """The per-query breakdown a traced run left in its checkout."""
+    path = os.path.join(root, ".perfbench_work", f"trace-{workload}-{seed}.json")
+    try:
+        with open(path) as fh:
+            return json.load(fh).get("per_query", {})
+    except (OSError, json.JSONDecodeError):
+        return {}
 
 
 def run_pair(roots: dict, spec: dict, workload: str, seed: int, trace: bool) -> dict:
@@ -177,6 +193,16 @@ def report_trace(workload: str, pair: dict, spec: dict) -> bool:
     for n in differ:
         print(f"DIFFERS {n}: parent {_value(a, n)}  change {_value(b, n)}")
     print("identical: " + ", ".join(f"{n}={_fmt(_value(a, n))}" for n in counts if n not in differ))
+    qa, qb = pair["parent"].get("per_query", {}), pair["change"].get("per_query", {})
+    same = []
+    for q in sorted(set(qa) | set(qb)):
+        for k in QUERY_COUNTS:
+            x, y = qa.get(q, {}).get(k), qb.get(q, {}).get(k)
+            if x != y:
+                print(f"DIFFERS {q}.{k}: parent {_fmt(x)}  change {_fmt(y)}")
+            else:
+                same.append(f"{q}.{k}={_fmt(x)}")
+    print("identical per query: " + (", ".join(same) or "-"))
     return bad
 
 

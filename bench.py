@@ -343,18 +343,21 @@ METHODOLOGY = (
 # these queries are read against the new workload.  Deliberate PLAN
 # changes ride here too (same read: the delta is expected).
 WORKLOAD_CHANGES = {
-    "dedup_ngram_jaccard": "r12 plan change: shuffle_hash hints replace "
-    "the planner's broadcast of the pair-scale `inter` relation (blew "
-    "the 1 GiB driver collect at 16x duplication — SCALE.md r12); at "
-    "sf0.1 the correct two-shuffle plan costs ~0.5s over the unsafe "
-    "broadcast, the deliberate trade",
-    "dedup_minhash_accuracy": "r12 plan change: same shuffle_hash/merge "
-    "hints (pairs/exact sides were broadcast-collected pre-fix)",
-    "dedup_keep_best": "r12 plan change inherited: composes "
-    "ngram_jaccard_pairs, so the shuffle_hash hints ride along "
-    "(measured quiet-machine min 4.81s r11 -> 6.0s r12 at sf0.1 — "
-    "the cost of the scale-correct two-shuffle plan over the unsafe "
-    "pair broadcast)",
+    "dedup_ngram_jaccard": "2026-10-20 plan change: one lazy plan (no "
+    "localCheckpoint, no size-table count at build); the two size "
+    "joins are LEFT joins with the pair-scale `inter` on the left, so "
+    "no planner can broadcast it (the r12 1 GiB driver collect at 16x "
+    "duplication — SCALE.md r12); the doc-scale size table is "
+    "broadcast under AQE's measured threshold, else sort-merge joined "
+    "(SCALE.md 'n-gram Jaccard pairs as one lazy plan')",
+    "dedup_minhash_accuracy": "r12 plan change: shuffle_hash/merge "
+    "hints on the signature and est-exact joins (pairs/exact sides "
+    "were broadcast-collected pre-fix); its exact side inherits the "
+    "2026-10-20 lazy ngram_jaccard_pairs plan",
+    "dedup_keep_best": "2026-10-20 plan change inherited: composes "
+    "ngram_jaccard_pairs, so its lazy LEFT-join plan rides along (r12 "
+    "measured quiet-machine min 4.81s r11 -> 6.0s r12 at sf0.1 for "
+    "the former shuffle_hash plan)",
     "k3_substructure": "39 -> 68 probes (late-r10 extended chirality "
     "classes [C@TH1H3]Cl/[C@OH1]/[c@SP3] and expression-qualified "
     "ring closures c~1ccccc1 / C~1CCCC1 / c-1ccccc:1; earlier r10: "

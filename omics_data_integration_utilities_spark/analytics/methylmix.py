@@ -627,11 +627,13 @@ def linear_filter(
     covariance/variance, R² from corr² — no UDF, one shuffle."""
     from pyspark.sql import functions as F
 
+    from ..functions.scalars import pearson_corr
+
     agg = df.groupBy(group_col).agg(
         F.count(F.lit(1)).alias("n"),
         F.covar_pop(x_col, y_col).alias("__cov"),
         F.var_pop(x_col).alias("__var"),
-        F.corr(x_col, y_col).alias("__r"),
+        pearson_corr(x_col, y_col).alias("__r"),
     )
     out = (
         agg.where((F.col("n") >= min_n) & (F.col("__var") > 0) & F.col("__r").isNotNull())

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.scalars import pearson_corr
+
 
 def bh_adjust(
     df: DataFrame,
@@ -101,7 +103,7 @@ def cyclic_pair_stats(series: DataFrame) -> DataFrame:
     return (
         entries.select("blk", F.inline(F.filter(F.flatten(pairs), lambda p: p.isNotNull())))
         .groupBy("blk", "var", "is_obs")
-        .agg(F.round(F.corr("va", "vb"), 6).alias("r"), F.count(F.lit(1)).alias("n"))
+        .agg(F.round(pearson_corr("va", "vb"), 6).alias("r"), F.count(F.lit(1)).alias("n"))
         .where(F.col("r").isNotNull())
     )
 

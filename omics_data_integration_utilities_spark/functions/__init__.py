@@ -5,4 +5,5 @@ from .scalars import (  # noqa: F401
     concat_key,
     conditional_swap,
     round_signed,
+    pearson_corr,
 )

@@ -8,6 +8,7 @@ codegen.  Each mirrors a reference helper:
 - ``concat_key``      ← ``heraldPathways.py:148`` (reaction_substrate key)
 - ``conditional_swap``← ``heraldPathways.py:111-133`` (direction −1 swap)
 - ``round_signed``    ← ``getMassTransitions.py:105-106``
+- ``pearson_corr``    ← ``corrMultiomics.py:52-63`` (NULL on zero variance)
 """
 
 from __future__ import annotations
@@ -63,3 +64,17 @@ def round_signed(col: Column | str, digits: int) -> Column:
     """Round keeping sign semantics used for transition matching keys."""
     c = F.col(col) if isinstance(col, str) else col
     return F.round(c, digits)
+
+
+def pearson_corr(x: Column | str, y: Column | str) -> Column:
+    """Pearson correlation aggregate that is NULL, not an error, when
+    either side has zero variance (DuckDB's ``corr``).  Spark's ``corr``
+    divides inside its own evaluation, so under ANSI mode a constant
+    series raises ``[DIVIDE_BY_ZERO]`` and no expression around it can
+    catch that.  Rows where either value is NULL are skipped, as in
+    ``corr``; the formula is DuckDB's own, cov_pop / (sd_pop_x * sd_pop_y)."""
+    x = F.col(x) if isinstance(x, str) else x
+    y = F.col(y) if isinstance(y, str) else y
+    both = x.isNotNull() & y.isNotNull()
+    xs, ys = F.when(both, x), F.when(both, y)
+    return F.covar_pop(x, y) / F.nullif(F.stddev_pop(xs) * F.stddev_pop(ys), F.lit(0.0))

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.scalars import pearson_corr
+
 
 def group_count(df: DataFrame, key_cols: list[str], count_col: str = "n") -> DataFrame:
     """A1: group-count (reference hand-rolls a dict loop,
@@ -65,7 +67,7 @@ def pairwise_corr(
 
     agg = df.groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("n"),
-        F.corr(x_col, y_col).alias("r"),
+        pearson_corr(x_col, y_col).alias("r"),
     )
     out = agg.where((F.col("n") >= min_n) & F.col("r").isNotNull())
     t = F.col("r") * F.sqrt((F.col("n") - 2) / (1 - F.col("r") * F.col("r")))

@@ -268,7 +268,6 @@ def ngram_jaccard_pairs(
     min_jaccard: float = 0.2,
     width: int = SHINGLE_WIDTH,
     max_posting: int = MAX_POSTING,
-    max_broadcast_docs: int = 2_000_000,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for every pair sharing ≥1 shingle.
 
@@ -295,21 +294,16 @@ def ngram_jaccard_pairs(
     # below the projection, re-inlining the shingle chain; null shingle
     # rows produce no pairs so outer is result-identical
     sh = shingle_arr.select(F.col(id_col), F.explode_outer("__sh").alias("s"))
-    # ONE posting aggregation feeds both the sizes and the pair expansion
-    # (localCheckpoint: without it Catalyst re-derives the whole shingle
-    # pipeline per branch — the scan-dedup lesson); the checkpointed set
-    # is the capped doc-shingle stream, bounded by the input itself.
-    # LAZY (r17, guide §1.2 — fewer jobs): the sizes count below is the
-    # first action and it scans every partition, so ONE job runs the
-    # shingle pipeline, persists the postings, persists the derived
-    # size table and counts it — the former shape paid three sequential
-    # jobs (posts ckpt, sizes ckpt, count) for the same work.
+    # ONE posting aggregation feeds both the sizes and the pair expansion.
+    # The plan stays lazy: both branches share the same groupBy("s")
+    # exchange, which AQE runs once and re-reads as a ReusedExchange, so
+    # the shingle pipeline runs once without a checkpoint and the build
+    # fires no job (SCALE.md "n-gram Jaccard pairs as one lazy plan").
     posts = (
         sh.where(F.col("s").isNotNull())
         .groupBy("s")
         .agg(F.collect_list(id_col).alias("__ids"))
         .where(F.size("__ids") <= max_posting)
-        .localCheckpoint(eager=False)
     )
     sizes = (
         posts.select(F.explode("__ids").alias(id_col))
@@ -322,29 +316,18 @@ def ngram_jaccard_pairs(
         .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    sizes = sizes.localCheckpoint(eager=False)  # materialized by n_docs below
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
-    # Join-strategy guard (r12 probe finding): both join inputs are
-    # post-checkpoint relations the static planner cannot size, and
-    # unguarded it guesses the PAIR-scale `inter` small and broadcasts
-    # it — measured collecting >1 GiB to the driver at 16x duplication.
-    # The DOC-scale size table is the side that is always safe to build
-    # from (pairs >> docs), and its cardinality is KNOWN here (one count
-    # over the checkpointed relation): broadcast it under the cap — the
-    # pair stream then never shuffles at all — else per-partition
-    # shuffle_hash build from the same side; the pair relation is never
-    # the build side in either regime, and nothing sorts.
-    n_docs = sizes.count()
-    def _doc_side(rel):
-        return (
-            F.broadcast(rel)
-            if n_docs <= max_broadcast_docs
-            else rel.hint("shuffle_hash")
-        )
+    # LEFT joins with the pair-scale `inter` on the left: Spark can only
+    # build a LEFT OUTER join from its right side, so neither the static
+    # planner nor AQE can ever broadcast `inter` (the r12 >1 GiB driver
+    # collect).  The doc-scale size table is broadcast when AQE measures
+    # it under the threshold, else both sides shuffle.  Rows equal the
+    # inner join's: every id in a surviving posting has a size, because
+    # `sizes` counts the same capped postings.
     return (
-        inter.join(_doc_side(sa), "id_a")
-        .join(_doc_side(sb), "id_b")
+        inter.join(sa, "id_a", "left")
+        .join(sb, "id_b", "left")
         .withColumn(
             "jaccard",
             F.round(F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6),
@@ -819,7 +802,6 @@ def minhash_estimate_accuracy(
     id_col: str,
     max_posting: int = MAX_POSTING,
     max_broadcast_sig_docs: int = 200_000,
-    max_broadcast_docs: int = 2_000_000,
 ) -> DataFrame:
     """Sketch-accuracy report: for every LSH candidate pair, the MinHash
     Jaccard ESTIMATE (fraction of equal signature slots) next to the
@@ -833,16 +815,17 @@ def minhash_estimate_accuracy(
     exact Jaccard (inverted index, exact under the posting cap) — plus
     two hash joins on the pair ids; nothing new shuffles.  Rows are
     candidate pairs, already sub-quadratic by LSH design.  Join-strategy
-    guard (r12 probe finding): every relation here sits above a
-    localCheckpoint, so the static planner has NO stats and guesses the
+    guard (r12 probe finding): the planner once guessed the
     post-aggregation PAIR-scale sides small enough to broadcast —
     measured collecting >1 GiB to the driver at 16× duplication.  The
     pair⋈signature joins build from the DOC-scale signature side under
     a MEASURED count guard (broadcast under ``max_broadcast_sig_docs``,
     per-partition shuffle_hash past it — never a sort of the pair
-    stream, never the pair side as build); the final est⋈exact join
-    hints ``merge`` (both sides pair-scale — nothing is safe to
-    hash-build wholesale).
+    stream, never the pair side as build); the exact side builds its
+    own size joins from the doc side by construction (LEFT joins in
+    :func:`ngram_jaccard_pairs`), and the final est⋈exact join hints
+    ``merge`` (both sides pair-scale — nothing is safe to hash-build
+    wholesale).
     """
     # r17 measured rejection (verdict item 1) of the r16 shared-signature
     # rewrite (materialize with_minhash_signature once, derive band keys
@@ -862,18 +845,16 @@ def minhash_estimate_accuracy(
         id_col,
         min_jaccard=0.0,
         max_posting=max_posting,
-        max_broadcast_docs=max_broadcast_docs,
     ).select("id_a", "id_b", "jaccard")
     n_perms = len(MINHASH_PERMS)
-    # Join-strategy guard on the signature side: pairs is PAIR-scale and
-    # post-checkpoint (the static planner would guess it small and
-    # broadcast it — the >1 GiB driver collect the r12 probe measured);
-    # signatures are doc-scale with a KNOWN row count, so broadcast them
-    # under the cap (signature rows are ~1 KiB — n_perms longs — hence
-    # the lower cap than the slim size-table guard in
-    # ngram_jaccard_pairs) and the pair stream never shuffles; past the
-    # cap, per-partition shuffle_hash build from the same side.  The
-    # pair relation is never the build side in either regime.
+    # Join-strategy guard on the signature side: pairs is PAIR-scale (the
+    # planner once guessed it small and broadcast it — the >1 GiB driver
+    # collect the r12 probe measured); signatures are doc-scale with a
+    # KNOWN row count, so broadcast them under the cap (signature rows
+    # are ~1 KiB — n_perms longs — hence a low cap) and the pair stream
+    # never shuffles; past the cap, per-partition shuffle_hash build
+    # from the same side.  The pair relation is never the build side in
+    # either regime.
     n_docs = df.count()
     def _sig_side(rel):
         return (

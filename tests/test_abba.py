@@ -3,6 +3,8 @@ synthetic samples: no Spark, no subprocess."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 import abba
@@ -85,3 +87,25 @@ def test_mismatched_benchmark_files_are_refused(tmp_path, path, text):
     (tmp_path / "b" / path).write_text(text)
     with pytest.raises(ValueError, match="differ"):
         abba.check_same_benchmark(a, b)
+
+
+def test_trace_prints_per_query_counts_that_differ(tmp_path, capsys):
+    work = tmp_path / ".perfbench_work"
+    work.mkdir()
+    rows = {"q1": {"jobs": 8.0, "stages": 8.0, "tasks": 12.0, "wall_s": 1.5}}
+    (work / "trace-w-1.json").write_text('{"per_query": %s}' % json.dumps(rows))
+    parent = abba.read_per_query(str(tmp_path), "w", 1)
+    assert parent == rows
+    assert abba.read_per_query(str(tmp_path), "w", 2) == {}
+
+    run = {"correct": True, "failed": 0, "attempted": 1, "metrics": {}}
+    change = {"q1": {"jobs": 6.0, "stages": 6.0, "tasks": 12.0, "wall_s": 1.0}, "q2": {"jobs": 1.0}}
+    pair = {"parent": {**run, "per_query": parent}, "change": {**run, "per_query": change}}
+    spec = {"per_layer": [{"name": "spark.jobs", "unit": "count"}]}
+    assert not abba.report_trace("w", pair, spec)
+    out = capsys.readouterr().out
+    assert "DIFFERS q1.jobs: parent 8  change 6" in out
+    assert "DIFFERS q1.stages: parent 8  change 6" in out
+    assert "DIFFERS q2.jobs: parent -  change 1" in out
+    assert "identical per query: q1.tasks=12, q2.stages=-, q2.tasks=-" in out
+    assert "wall_s" not in out

@@ -456,11 +456,11 @@ def test_cyclic_pair_null_is_derangement(spark):
         assert null[v]["n"] == 8
 
 
-def test_k12_perm_fdr_edge_cases_match_oracle(spark, tmp_path):
-    """One-variable block, a sample missing a variable, NULL values and an
-    observed r tied with a null r: Spark equals the DuckDB oracle.  A NULL
-    ``event_type`` raises nothing and leaves the other variables' r and n
-    as they are."""
+def _k12_vs_oracle(spark, tmp_path, name, rows):
+    """Write ``rows`` (user_id, event_type, value) as an ``events`` table,
+    run ``q_k12_perm_fdr`` on it and assert it equals ``SQL_K12_PERM_FDR``
+    in DuckDB.  Returns the Spark rows by variable and the number of
+    observed r tied with a null r (through the oracle's own CTEs)."""
     import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -472,6 +472,35 @@ def test_k12_perm_fdr_edge_cases_match_oracle(spark, tmp_path):
 
     from .conftest import normalize_rows
 
+    d = tmp_path / name
+    d.mkdir()
+    path = str(d / "events.parquet")
+    cols = list(zip(*rows))
+    pq.write_table(pa.table({
+        "user_id": pa.array(cols[0], pa.int64()),
+        "event_type": pa.array(cols[1], pa.string()),
+        "value": pa.array(cols[2], pa.float64()),
+    }), path)
+    df = q_k12_perm_fdr(spark, str(d))
+    got = [r.asDict() for r in df.collect()]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{path}'")
+    res = con.execute(SQL_K12_PERM_FDR)
+    want = normalize_rows([c[0] for c in res.description], res.fetchall())
+    tail = SQL_K12_PERM_FDR.rindex("SELECT blk, var, r, n, perm_pv,")
+    ties = con.execute(
+        SQL_K12_PERM_FDR[:tail] + "SELECT count(*) FROM obs JOIN nullr USING (blk, r)"
+    ).fetchone()[0]
+    con.close()
+    assert normalize_rows(df.columns, [tuple(r.values()) for r in got]) == want, name
+    return {r["var"]: r for r in got}, ties
+
+
+def test_k12_perm_fdr_edge_cases_match_oracle(spark, tmp_path):
+    """One-variable block, a sample missing a variable, NULL values and an
+    observed r tied with a null r: Spark equals the DuckDB oracle.  A NULL
+    ``event_type`` raises nothing and leaves the other variables' r and n
+    as they are."""
     rng = np.random.default_rng(7)
     w, y, v2, v3 = _md5_order(["a", "b", "c", "d"])
     rows = []  # (user_id, event_type, value); block "0" = even users
@@ -488,38 +517,32 @@ def test_k12_perm_fdr_edge_cases_match_oracle(spark, tmp_path):
     for u in range(1, 12, 2):  # block "1": one variable, no null pair
         rows += [(u, "solo", float(x)) for x in rng.normal(size=int(rng.integers(1, 4)))]
 
-    def k12(name, rows):
-        d = tmp_path / name
-        d.mkdir()
-        path = str(d / "events.parquet")
-        cols = list(zip(*rows))
-        pq.write_table(pa.table({
-            "user_id": pa.array(cols[0], pa.int64()),
-            "event_type": pa.array(cols[1], pa.string()),
-            "value": pa.array(cols[2], pa.float64()),
-        }), path)
-        df = q_k12_perm_fdr(spark, str(d))
-        got = [r.asDict() for r in df.collect()]
-        con = duckdb.connect()
-        con.execute(f"CREATE VIEW events AS SELECT * FROM '{path}'")
-        res = con.execute(SQL_K12_PERM_FDR)
-        want = normalize_rows([c[0] for c in res.description], res.fetchall())
-        tail = SQL_K12_PERM_FDR.rindex("SELECT blk, var, r, n, perm_pv,")
-        ties = con.execute(
-            SQL_K12_PERM_FDR[:tail] + "SELECT count(*) FROM obs JOIN nullr USING (blk, r)"
-        ).fetchone()[0]
-        con.close()
-        assert normalize_rows(df.columns, [tuple(r.values()) for r in got]) == want, name
-        return {r["var"]: r for r in got}, ties
-
-    base, ties = k12("base", rows)
+    base, ties = _k12_vs_oracle(spark, tmp_path, "base", rows)
     assert ties >= 1
     assert base["solo"]["blk"] == "1" and base["solo"]["perm_pv"] == 1.0
     assert {v for v, r in base.items() if r["blk"] == "0"} == {w, y, v2, v3}
 
-    nulled, _ = k12("null_var", rows + [(0, None, 1.0), (0, None, 3.0), (2, None, -2.0)])
+    nulled, _ = _k12_vs_oracle(
+        spark, tmp_path, "null_var", rows + [(0, None, 1.0), (0, None, 3.0), (2, None, -2.0)]
+    )
     for v, r in base.items():
         assert (nulled[v]["r"], nulled[v]["n"]) == (r["r"], r["n"]), v
+
+
+def test_k12_perm_fdr_constant_series_match_oracle(spark, tmp_path):
+    """A variable with exactly one event per sample (constant ``vb``) and
+    one with a constant value (constant ``va``) have zero variance: their
+    r is NULL as in DuckDB, so they drop out instead of raising
+    ``[DIVIDE_BY_ZERO]``, and the rest still equals the oracle."""
+    rng = np.random.default_rng(11)
+    rows = []
+    for u in range(0, 16, 2):
+        rows += [(u, "once", float(rng.normal()))]
+        rows += [(u, "flat", 2.5)] * int(rng.integers(1, 4))
+        for v in ("p", "q"):
+            rows += [(u, v, float(x)) for x in rng.normal(size=int(rng.integers(1, 4)))]
+    got, _ = _k12_vs_oracle(spark, tmp_path, "constant", rows)
+    assert set(got) == {"p", "q"}
 
 
 # --------------------------------------------------------------------------

@@ -98,6 +98,64 @@ def test_corr_pvalue_pipeline(spark):
     assert 0.0 < out["p"] < 1.0
 
 
+def _lineitem_vs_oracle(spark, tmp_path, build, sql, rows):
+    """Write ``rows`` (l_partkey, l_quantity, l_discount) as a
+    ``lineitem`` table, run the registered ``build`` on it and assert it
+    equals the oracle ``sql`` in DuckDB; returns the Spark rows."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from .conftest import normalize_rows
+
+    path = str(tmp_path / "lineitem.parquet")
+    cols = list(zip(*rows))
+    pq.write_table(pa.table({
+        "l_partkey": pa.array(cols[0], pa.int64()),
+        "l_quantity": pa.array(cols[1], pa.float64()),
+        "l_discount": pa.array(cols[2], pa.float64()),
+    }), path)
+    df = build(spark, str(tmp_path))
+    got = df.collect()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{path}'")
+    res = con.execute(sql)
+    want = normalize_rows([c[0] for c in res.description], res.fetchall())
+    con.close()
+    assert normalize_rows(df.columns, [tuple(r) for r in got]) == want
+    return got
+
+
+def _constant_series_lineitem():
+    """Part 1 has a constant quantity, part 2 a constant discount, parts
+    3 and 4 vary (part 4 with a negative slope)."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    rows = []
+    for i in range(8):
+        d = float(rng.uniform(0, 0.1))
+        rows += [(1, 7.0, d), (2, float(rng.integers(1, 50)), 0.04)]
+        rows += [(3, float(rng.integers(1, 50)), float(rng.uniform(0, 0.1)))]
+        rows += [(4, 40.0 - 300 * d + float(rng.normal()), d)]
+    return rows
+
+
+def test_pairwise_corr_constant_series_match_oracle(spark, tmp_path):
+    """A group whose x or y is constant has zero variance: r is NULL as
+    in DuckDB and the group is dropped, where Spark's own ``corr`` raises
+    ``[DIVIDE_BY_ZERO]`` under ANSI mode."""
+    from omics_data_integration_utilities_spark.plans.registry import (
+        SQL_K6,
+        q_k6_pairwise_corr,
+    )
+
+    got = _lineitem_vs_oracle(
+        spark, tmp_path, q_k6_pairwise_corr, SQL_K6, _constant_series_lineitem()
+    )
+    assert {r["l_partkey"] for r in got} == {3, 4}
+
+
 def test_spearman_with_ties_matches_numpy_ranks(spark):
     import numpy as np
 
@@ -270,6 +328,22 @@ def test_methylmix_spark_matches_numpy_replica(spark):
     for c in range(1, k + 1):
         assert abs(by_comp[c]["mu"] - round(float(res["mu"][c - 1]), 6)) < 1e-9
         assert abs(by_comp[c]["a"] - round(float(res["a"][c - 1]), 6)) < 1e-9
+
+
+def test_linear_filter_constant_series_match_oracle(spark, tmp_path):
+    """K9's per-gene screen over a constant x (zero variance) or constant
+    y (zero covariance): the group is dropped with r NULL as in DuckDB,
+    where Spark's own ``corr`` raises ``[DIVIDE_BY_ZERO]``."""
+    from omics_data_integration_utilities_spark.plans.registry_more import (
+        SQL_K9,
+        q_k9_linear_filter,
+    )
+
+    got = _lineitem_vs_oracle(
+        spark, tmp_path, q_k9_linear_filter, SQL_K9, _constant_series_lineitem()
+    )
+    parts = {r["l_partkey"] for r in got}
+    assert 4 in parts and not parts & {1, 2}
 
 
 def test_set_codec_roundtrip(spark):

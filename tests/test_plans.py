@@ -257,48 +257,86 @@ def test_events_funnel_single_conditional_scan(spark):
     assert plan.count("Scan parquet") == 1
 
 
+def _final_joins(node):
+    """Join nodes of an executed plan, descending into AQE's final plan
+    and its query stages (a join can sit under a later stage's
+    exchange)."""
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        yield from _final_joins(node.executedPlan())
+        return
+    if cls.endswith("QueryStageExec"):
+        yield from _final_joins(node.plan())
+        return
+    if "Join" in cls:
+        yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _final_joins(children.apply(i))
+
+
+def _assert_pair_side_left_outer(df) -> tuple[list, list[str]]:
+    """Every join in ``df``'s final plan is LEFT OUTER with the pair-scale
+    relation (the one carrying ``inter``) on the left, so it can never be
+    the build side; returns the sorted rows and the join node names."""
+    rows = sorted(map(tuple, df.collect()))
+    names = []
+    for j in _final_joins(df._jdf.queryExecution().executedPlan()):
+        names.append(j.getClass().getSimpleName())
+        assert j.joinType().toString() == "LeftOuter", names[-1]
+        out = j.left().output()
+        assert "inter" in [out.apply(i).name() for i in range(out.size())]
+    assert len(names) == 2, names
+    return rows, names
+
+
 def test_pair_scale_relations_never_broadcast(spark):
-    """r12 probe finding: relations above a localCheckpoint carry no
-    stats, and the static planner used to guess the post-aggregation
+    """r12 probe finding: the planner used to guess the post-aggregation
     PAIR-scale sides (inter / pairs / exact) small and broadcast them —
-    a >1 GiB driver collect at 16x duplication.  The fix (r12-final
-    form): the DOC-scale side is the build side in BOTH regimes of a
-    MEASURED count guard — broadcast under the cap (the pair stream
-    never shuffles), per-partition shuffle_hash past it.  Lock both
-    regimes: past-cap plans carry zero broadcast joins; under-cap plans
-    broadcast (the doc side, by construction — only sa/sb/sigs are ever
-    passed to F.broadcast) and are result-identical."""
+    a >1 GiB driver collect at 16x duplication.  ``ngram_jaccard_pairs``
+    rules that out by shape: both size joins are LEFT OUTER with the
+    pair relation on the left, and Spark builds a left outer join only
+    from its right side, so no planner can broadcast ``inter``.  Lock
+    both regimes on the FINAL plan: with broadcasts switched off by
+    session conf (the scale path) no join broadcasts; with defaults the
+    doc-scale size table is broadcast; and the two regimes agree
+    exactly.  ``minhash_estimate_accuracy`` keeps its own measured
+    signature-side guard (cap 0: per-partition shuffle_hash)."""
     from omics_data_integration_utilities_spark.operators.dedup import (
         minhash_estimate_accuracy,
         ngram_jaccard_pairs,
     )
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    # past-cap regime (cap 0): the scale path — no broadcast anywhere
-    for out in (
-        ngram_jaccard_pairs(docs, "text", "doc_id", max_broadcast_docs=0),
-        minhash_estimate_accuracy(
-            docs, "text", "doc_id", max_broadcast_sig_docs=0, max_broadcast_docs=0
-        ),
-    ):
-        plan = out._jdf.queryExecution().executedPlan().toString()
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    prev = {k: spark.conf.get(k, None) for k in keys}
+    # past-cap regime: the scale path — no broadcast anywhere
+    for k in keys:
+        spark.conf.set(k, "-1")
+    try:
+        b, joins = _assert_pair_side_left_outer(ngram_jaccard_pairs(docs, "text", "doc_id"))
+        assert "BroadcastHashJoinExec" not in joins, joins
+        plan = (
+            minhash_estimate_accuracy(docs, "text", "doc_id", max_broadcast_sig_docs=0)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
         assert "BroadcastHashJoin" not in plan
         assert "ShuffledHashJoin" in plan
-    # under-cap regime (defaults): doc-side broadcast restored, and the
-    # two regimes agree exactly
-    for name in ("dedup_ngram_jaccard", "dedup_minhash_accuracy"):
-        plan = _plan(spark, name)
-        assert "BroadcastHashJoin" in plan, name
-    a = sorted(map(tuple, ngram_jaccard_pairs(docs, "text", "doc_id").collect()))
-    b = sorted(
-        map(
-            tuple,
-            ngram_jaccard_pairs(
-                docs, "text", "doc_id", max_broadcast_docs=0
-            ).collect(),
-        )
-    )
-    assert a == b
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    # under-cap regime (defaults): the doc-side size table is broadcast,
+    # and the two regimes agree exactly
+    a, joins = _assert_pair_side_left_outer(ngram_jaccard_pairs(docs, "text", "doc_id"))
+    assert joins == ["BroadcastHashJoinExec"] * 2, joins
+    assert "BroadcastHashJoin" in _plan(spark, "dedup_minhash_accuracy")
+    assert a and a == b
 
 
 def test_heavy_hitters_certified_path_is_local(spark):

@@ -521,6 +521,41 @@ def test_meantools_builds_fire_no_read_or_constant_jobs(spark):
     assert jobs_fired(spark, run) <= 7
 
 
+def test_ngram_jaccard_builds_fire_no_jobs(spark):
+    """``ngram_jaccard_pairs`` is one lazy plan: no checkpoint and no
+    count at build, so a warm ``dedup_ngram_jaccard`` build runs no
+    Spark job, and the build plus its ``noop`` write runs at most 6 (the
+    shingle scan spread, the shared posting exchange, the pair and size
+    aggregations, the one size-table broadcast and the write; 8 with the
+    former checkpoint-and-count build).  Every other registered query
+    over the operator runs no more jobs for build plus write than the
+    checkpoint-and-count build did (SCALE.md "n-gram Jaccard pairs as
+    one lazy plan" has the counts by query)."""
+    import __spark_entry__
+
+    queries = __spark_entry__.queries()
+    build = queries["dedup_ngram_jaccard"]
+    build(spark, SF_SMOKE)
+    assert jobs_fired(spark, lambda: build(spark, SF_SMOKE)) == 0
+
+    budgets = {
+        "dedup_ngram_jaccard": 6,
+        "dedup_components": 33,
+        "dedup_keep_best": 38,
+        "dedup_minhash_accuracy": 16,
+        "plan_data_pipeline": 13,
+        "doc_split_leakage_safe": 33,
+    }
+    fired = {}
+    for name in budgets:
+        def run(name=name):
+            queries[name](spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+
+        run()
+        fired[name] = jobs_fired(spark, run)
+    assert all(fired[n] <= budgets[n] for n in budgets), fired
+
+
 def test_plans_read_through_one_reader():
     """No plan module reads parquet or builds a DataFrame from rows
     directly: tables go through ``read_parquet_table`` (via
