@@ -350,10 +350,13 @@ WORKLOAD_CHANGES = {
     "duplication — SCALE.md r12); the doc-scale size table is "
     "broadcast under AQE's measured threshold, else sort-merge joined "
     "(SCALE.md 'n-gram Jaccard pairs as one lazy plan')",
-    "dedup_minhash_accuracy": "r12 plan change: shuffle_hash/merge "
-    "hints on the signature and est-exact joins (pairs/exact sides "
-    "were broadcast-collected pre-fix); its exact side inherits the "
-    "2026-10-20 lazy ngram_jaccard_pairs plan",
+    "dedup_minhash_accuracy": "2026-10-20 plan change: no doc count "
+    "at build; the two signature joins are LEFT joins with the pair "
+    "stream on the left, so only the doc-scale signatures can be "
+    "broadcast (under AQE's measured threshold, else sort-merge "
+    "joined); the est-exact join keeps its merge hint, and the exact "
+    "side is the lazy ngram_jaccard_pairs plan (SCALE.md 'join safety "
+    "by plan shape')",
     "dedup_keep_best": "2026-10-20 plan change inherited: composes "
     "ngram_jaccard_pairs, so its lazy LEFT-join plan rides along (r12 "
     "measured quiet-machine min 4.81s r11 -> 6.0s r12 at sf0.1 for "

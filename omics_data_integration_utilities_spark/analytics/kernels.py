@@ -239,21 +239,6 @@ def count_glm_offset(
     return df.groupBy(block_col).applyInPandas(fit, schema=schema)
 
 
-def poisson_glm_offset(
-    df: DataFrame,
-    block_col: str,
-    count_col: str,
-    group_col: str,
-    offset_col: str,
-    max_iter: int = 25,
-) -> DataFrame:
-    """Poisson special case of :func:`count_glm_offset` (dispersion=0),
-    kept for callers that want the plain rate-ratio screen."""
-    return count_glm_offset(
-        df, block_col, count_col, group_col, offset_col, dispersion=0.0, max_iter=max_iter
-    ).select(block_col, "coef", "estimate", "se", "z")
-
-
 def roc_curve(
     df: DataFrame,
     score_col: str,

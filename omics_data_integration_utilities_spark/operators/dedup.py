@@ -801,7 +801,6 @@ def minhash_estimate_accuracy(
     text_col: str,
     id_col: str,
     max_posting: int = MAX_POSTING,
-    max_broadcast_sig_docs: int = 200_000,
 ) -> DataFrame:
     """Sketch-accuracy report: for every LSH candidate pair, the MinHash
     Jaccard ESTIMATE (fraction of equal signature slots) next to the
@@ -813,19 +812,21 @@ def minhash_estimate_accuracy(
     Scale shape: reuses the production machinery verbatim — signatures
     (zero-shuffle array HOFs), candidate pairs (banded posting lists),
     exact Jaccard (inverted index, exact under the posting cap) — plus
-    two hash joins on the pair ids; nothing new shuffles.  Rows are
-    candidate pairs, already sub-quadratic by LSH design.  Join-strategy
-    guard (r12 probe finding): the planner once guessed the
-    post-aggregation PAIR-scale sides small enough to broadcast —
-    measured collecting >1 GiB to the driver at 16× duplication.  The
-    pair⋈signature joins build from the DOC-scale signature side under
-    a MEASURED count guard (broadcast under ``max_broadcast_sig_docs``,
-    per-partition shuffle_hash past it — never a sort of the pair
-    stream, never the pair side as build); the exact side builds its
-    own size joins from the doc side by construction (LEFT joins in
-    :func:`ngram_jaccard_pairs`), and the final est⋈exact join hints
-    ``merge`` (both sides pair-scale — nothing is safe to hash-build
-    wholesale).
+    two joins on the pair ids.  Rows are candidate pairs, already
+    sub-quadratic by LSH design.  Join safety by plan shape (r12 probe
+    finding: the planner once guessed the post-aggregation PAIR-scale
+    sides small enough to broadcast — measured collecting >1 GiB to the
+    driver at 16× duplication): the pair⋈signature joins are LEFT OUTER
+    joins with the pair stream on the left, and Spark builds a left
+    outer join only from its right side, so the pair stream is never
+    the build side; AQE broadcasts the doc-scale signatures when it
+    measures them small at run time.  Every id in a candidate pair has
+    a signature (``collect_list`` drops NULL ids and ``sigs`` has one
+    row per doc), so the rows are the inner join's.  The exact side
+    builds its own size joins from the doc side the same way (LEFT
+    joins in :func:`ngram_jaccard_pairs`), and the final est⋈exact join
+    hints ``merge`` (both sides pair-scale — nothing is safe to
+    hash-build wholesale).
     """
     # r17 measured rejection (verdict item 1) of the r16 shared-signature
     # rewrite (materialize with_minhash_signature once, derive band keys
@@ -847,34 +848,11 @@ def minhash_estimate_accuracy(
         max_posting=max_posting,
     ).select("id_a", "id_b", "jaccard")
     n_perms = len(MINHASH_PERMS)
-    # Join-strategy guard on the signature side: pairs is PAIR-scale (the
-    # planner once guessed it small and broadcast it — the >1 GiB driver
-    # collect the r12 probe measured); signatures are doc-scale with a
-    # KNOWN row count, so broadcast them under the cap (signature rows
-    # are ~1 KiB — n_perms longs — hence a low cap) and the pair stream
-    # never shuffles; past the cap, per-partition shuffle_hash build
-    # from the same side.  The pair relation is never the build side in
-    # either regime.
-    n_docs = df.count()
-    def _sig_side(rel):
-        return (
-            F.broadcast(rel)
-            if n_docs <= max_broadcast_sig_docs
-            else rel.hint("shuffle_hash")
-        )
+    sig_a = sigs.select(F.col(id_col).alias("id_a"), F.col("__sig").alias("__sa"))
+    sig_b = sigs.select(F.col(id_col).alias("id_b"), F.col("__sig").alias("__sb"))
     est = (
-        pairs.join(
-            _sig_side(
-                sigs.select(F.col(id_col).alias("id_a"), F.col("__sig").alias("__sa"))
-            ),
-            "id_a",
-        )
-        .join(
-            _sig_side(
-                sigs.select(F.col(id_col).alias("id_b"), F.col("__sig").alias("__sb"))
-            ),
-            "id_b",
-        )
+        pairs.join(sig_a, "id_a", "left")
+        .join(sig_b, "id_b", "left")
         .select(
             "id_a",
             "id_b",

@@ -117,7 +117,7 @@ def cosine_neardup_pairs(
 # hard cap on the rows any GEMM path may collect to the driver: at a
 # typical dim 64 float64 this is ~512 MB of matrix — the documented
 # "one side fits in memory" contract, now MEASURED instead of trusted
-# (the r12 buildside discipline: never let a planner guess or a caller
+# (the r12 pair-relation lesson: never let a planner guess or a caller
 # assumption size a driver-side collect)
 GEMM_MAX_BUILD_ROWS = 1_000_000
 

@@ -88,7 +88,6 @@ def frequent_items(
     key_col: str,
     k: int = 50,
     capacity: int = 4096,
-    max_broadcast_candidates: int = 2_000_000,
     count_col: str = "n_occurrences",
     weight_col: str | None = None,
     return_total: bool = False,
@@ -107,13 +106,11 @@ def frequent_items(
        — <= ``capacity`` candidates per partition; the only shuffle is
        the candidate distinct, O(capacity x partitions) rows no matter
        how many distinct keys exist.
-    2. Exact recount of candidates over a second scan.  The join
-       strategy is picked from the MEASURED candidate count (the
-       post-checkpoint relation has no stats a planner could use):
-       broadcast up to ``max_broadcast_candidates``, else shuffle_hash
-       building from the bounded candidate side — cluster-scale
-       partition counts can never turn the candidate union into a
-       forced driver-killing broadcast.
+    2. Exact recount of candidates over a second scan: the item stream
+       LEFT SEMI joins the candidate distinct.  Spark builds a left semi
+       join only from its right side, so the unbounded item stream can
+       never be broadcast; AQE broadcasts the candidate set when it
+       measures it small at run time, and sort-merges otherwise.
     3. Certificate: by the MG bound any key absent from every partition
        summary has global mass <= N/(capacity+1) (N = total row count,
        or total weight in the weighted form), so if the k-th recounted
@@ -179,14 +176,9 @@ def frequent_items(
         .first()[0]
         or 0
     )
-    from .buildside import bounded_build_side
-
-    cand_side, n_candidates = bounded_build_side(
-        summary.where(F.col(key_col).isNotNull()).select(key_col).distinct(),
-        max_broadcast_candidates,
-    )
+    cands = summary.where(F.col(key_col).isNotNull()).select(key_col).distinct()
     exact = (
-        items.join(cand_side, key_col)
+        items.join(cands, key_col, "left_semi")
         .groupBy(key_col)
         .agg(mass.alias(count_col))
     )

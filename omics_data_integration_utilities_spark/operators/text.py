@@ -375,7 +375,6 @@ def ngram_decontaminate(
     text_col: str,
     id_col: str,
     n: int = 3,
-    max_broadcast_grams: int = 2_000_000,
 ) -> DataFrame:
     """Test-set decontamination by word n-gram collision (the standard
     published recipe — GPT-3 appendix C / PaLM / Llama use 8-13-gram
@@ -386,14 +385,13 @@ def ngram_decontaminate(
     Returns one row per training doc: (id, n_shared_ngrams = DISTINCT
     shared n-grams, contaminated).  Scale shape: the test side collapses
     to a DISTINCT n-gram set — orders of magnitude smaller than the
-    training corpus — and is broadcast while its MEASURED count stays
-    under ``max_broadcast_grams``; past that (decontaminating against a
-    huge benchmark suite or a second corpus) it flips to a shuffle-hash
-    join BUILDING from the bounded gram-set side, so the plan can never
-    force a driver-killing broadcast (the r12 pair-relation lesson: a
-    derived post-aggregation relation has no stats a planner could use,
-    so the guard must measure).  Either way the training side is one
-    scan + one explode; the per-doc count groups on the training doc id.
+    training corpus — and the training grams LEFT SEMI join it.  Spark
+    builds a left semi join only from its right side, so the training
+    stream can never be broadcast; AQE broadcasts the gram set when it
+    measures it small at run time and sort-merges past that
+    (decontaminating against a huge benchmark suite or a second corpus).
+    Either way the training side is one scan + one explode; the per-doc
+    count groups on the training doc id.
     """
     t_grams = lambda d: d.select(  # noqa: E731
         F.col(id_col),
@@ -401,14 +399,9 @@ def ngram_decontaminate(
             F.array_distinct(word_ngrams_col(tokens_col(text_col), n))
         ).alias("g"),
     )
-    from .buildside import bounded_build_side
-
-    test_side, _ = bounded_build_side(
-        t_grams(test).select("g").distinct(), max_broadcast_grams
-    )
     hits = (
         t_grams(train)
-        .join(test_side, "g")
+        .join(t_grams(test).select("g").distinct(), "g", "left_semi")
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("__hits"))
     )
@@ -429,7 +422,6 @@ def contamination_report(
     text_col: str,
     id_col: str,
     n: int = 3,
-    max_broadcast_grams: int = 2_000_000,
 ) -> DataFrame:
     """Per-TEST-document contamination attribution — the transpose of
     :func:`ngram_decontaminate` (which flags TRAIN docs): for every
@@ -445,9 +437,13 @@ def contamination_report(
     lowest id; NULL when clean), worst_shared = that gram count).
 
     Scale shape: per-doc-DISTINCT gram explosion on both sides, join on
-    the gram; the test side (grams WITH their doc ids) is broadcast
-    under a measured-count cap, shuffle_hash from the bounded test side
-    past it.  The (test, train) pair fan-out per gram is inherent in
+    the gram.  The training grams LEFT SEMI join the test grams, then
+    LEFT OUTER join the test side (grams WITH their doc ids); every row
+    that passes the semi join has a match, so the rows are the inner
+    join's.  Spark builds both joins only from the right (test) side,
+    so the training stream can never be broadcast; AQE broadcasts the
+    test side when it measures it small at run time and sort-merges
+    past that.  The (test, train) pair fan-out per gram is inherent in
     the exact semantics — a boilerplate gram shared by many docs on
     both sides IS that much pairwise evidence; cap hot grams upstream
     (``dedup.hot_posting_keys``) when approximate attribution is
@@ -461,14 +457,18 @@ def contamination_report(
             F.array_distinct(word_ngrams_col(tokens_col(text_col), n))
         ).alias("g"),
     )
-    from .buildside import bounded_build_side
-
-    te_side, _ = bounded_build_side(grams(test, "test_id"), max_broadcast_grams)
+    # NULL test ids are dropped up front, so no pair carries a NULL
+    # test_id and the null-safe join back below matches exactly what an
+    # equality join would.  It is null-safe because an equality join
+    # lets the optimizer infer test_id IS NOT NULL under the aggregates
+    # and turn the left pair join back into an inner one.
+    te = grams(test.where(F.col(id_col).isNotNull()), "test_id")
     # both sides are per-doc DISTINCT, so count(*) per (test, train)
     # pair IS the distinct shared-gram count
     pair = (
         grams(train, "train_id")
-        .join(te_side, "g")
+        .join(te.select("g"), "g", "left_semi")
+        .join(te, "g", "left")
         .groupBy("test_id", "train_id")
         .agg(F.count(F.lit(1)).alias("shared"))
     )
@@ -476,7 +476,7 @@ def contamination_report(
     # id — min(struct(-shared, train_id)) is largest-shared-then-lowest-
     # id for string/uuid ids exactly as for longs (negating the id would
     # NULL out non-numeric ids and pick an arbitrary offender)
-    rep = pair.groupBy("test_id").agg(
+    rep = pair.groupBy(F.col("test_id").alias("__tid")).agg(
         F.count(F.lit(1)).alias("n_train_docs"),
         F.min(
             F.struct((-F.col("shared")).alias("ns"), F.col("train_id").alias("tid"))
@@ -484,7 +484,7 @@ def contamination_report(
     )
     return (
         test.select(F.col(id_col).alias("test_id"))
-        .join(rep, "test_id", "left")
+        .join(rep, F.col("test_id").eqNullSafe(F.col("__tid")), "left")
         .select(
             "test_id",
             F.coalesce(F.col("n_train_docs"), F.lit(0)).cast("long").alias(
@@ -818,7 +818,6 @@ def heavy_hitters(
     n: int = 3,
     k: int = 50,
     capacity: int = 4096,
-    max_broadcast_candidates: int = 2_000_000,
 ) -> DataFrame:
     """Exact corpus top-``k`` word ``n``-grams WITHOUT a full
     gram-cardinality shuffle — the scale path behind :func:`top_ngrams`
@@ -826,8 +825,9 @@ def heavy_hitters(
     of :func:`..sketches.frequent_items`: grams are exploded row-locally
     (never shuffled), then the generic Misra-Gries sketch -> exact
     candidate recount -> certificate machinery runs over the gram
-    column; see that docstring for the MG bound, the measured-count
-    join-strategy guard, and the lossless/trimming regime split
+    column; see that docstring for the MG bound, the left-semi recount
+    join that can never broadcast the gram stream, and the
+    lossless/trimming regime split
     (SCALE.md r12's heavy_hitters probe measures both on this operator).
 
     100 TB shape: ``top_ngrams``'s groupBy shuffles the full distinct-
@@ -845,10 +845,4 @@ def heavy_hitters(
 
     toks = tokens_col(text_col)
     grams = df.select(F.explode(word_ngrams_col(toks, n)).alias("ngram"))
-    return frequent_items(
-        grams,
-        "ngram",
-        k=k,
-        capacity=capacity,
-        max_broadcast_candidates=max_broadcast_candidates,
-    )
+    return frequent_items(grams, "ngram", k=k, capacity=capacity)

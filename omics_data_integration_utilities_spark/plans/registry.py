@@ -1015,7 +1015,7 @@ FROM events"""
 def q_events_hot_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-20 users by event count via the GENERIC Misra-Gries
     path (operators/sketches.frequent_items over the LONG user_id key —
-    the hot-join-key detector): sketch -> measured-count recount ->
+    the hot-join-key detector): sketch -> left-semi recount ->
     certificate, same machinery text_heavy_hitters certifies on the
     gram column, here driver-checked on a numeric key against the
     brute-force oracle.  capacity=2048 certifies at sf0.01/sf0.1

@@ -2002,11 +2002,15 @@ FROM pd
 def q_plan_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """North-star composite: the full curation pipeline (Gopher filter →
     PII scrub → exact dedup on scrubbed text → near-dup drop → token
-    accounting → split) in one lazy plan — the LLM-side flagship, the
-    analogue of `plan_mass_annotation` for the omics side.  Deterministic
-    PII is planted from the doc id (same construction as
-    `text_pii_scrub`) so redaction does real work, and scrub-before-dedup
-    makes docs differing only in contact details collapse."""
+    accounting → split) — the LLM-side flagship, the analogue of
+    `plan_mass_annotation` for the omics side.  Deterministic PII is
+    planted from the doc id (same construction as `text_pii_scrub`) so
+    redaction does real work, and scrub-before-dedup makes docs differing
+    only in contact details collapse.  Not a fully lazy plan: the build
+    fires the shuffle-map jobs AQE runs beneath the lazy checkpoint of
+    the deduplicated docs (``curate_documents``' branch point), which
+    saves a job at write time (SCALE.md 2026-10-20, "join safety by plan
+    shape")."""
     from .data_pipeline import curate_documents
 
     docs = _spread_scan(_t(spark, sf_dir, "documents")).select(

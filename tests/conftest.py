@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -185,3 +186,25 @@ def jobs_fired(spark, fn) -> int:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@contextlib.contextmanager
+def broadcasts_off(spark):
+    """Switch off broadcast joins, static and AQE, for the block: the
+    scale regime, where every join side is past the broadcast threshold.
+    The session's previous values are restored on exit."""
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    prev = {k: spark.conf.get(k, None) for k in keys}
+    for k in keys:
+        spark.conf.set(k, "-1")
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

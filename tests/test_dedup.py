@@ -145,6 +145,8 @@ def test_ngram_decontaminate_flags_only_overlapping_train_docs(spark):
         ngram_decontaminate,
     )
 
+    from .conftest import broadcasts_off
+
     test = spark.createDataFrame(
         [(100, "the quick brown fox jumps")], "doc_id long, text string"
     )
@@ -163,16 +165,13 @@ def test_ngram_decontaminate_flags_only_overlapping_train_docs(spark):
     assert got[2] == (0, False)
     assert set(got) == {1, 2}    # test docs never appear in the output
 
-    # beyond-broadcast path: a gram cap below the test-set size flips
-    # the exact-verify join to shuffle_hash building from the gram side;
-    # the answer must be identical (measured-count guard, never a plan
-    # dependent result)
-    past_cap = {
-        r["doc_id"]: (r["n_shared_ngrams"], r["contaminated"])
-        for r in ngram_decontaminate(
-            train, test, "text", "doc_id", n=3, max_broadcast_grams=1
-        ).collect()
-    }
+    # past the broadcast threshold (broadcasts switched off) the gram
+    # set is joined without a broadcast; the answer must be identical
+    with broadcasts_off(spark):
+        past_cap = {
+            r["doc_id"]: (r["n_shared_ngrams"], r["contaminated"])
+            for r in ngram_decontaminate(train, test, "text", "doc_id", n=3).collect()
+        }
     assert past_cap == got
 
 
@@ -1336,6 +1335,8 @@ def test_contamination_report_attribution_and_ties(spark):
         contamination_report,
     )
 
+    from .conftest import broadcasts_off
+
     test = spark.createDataFrame(
         [
             (100, "alpha beta gamma delta epsilon"),  # contaminated
@@ -1361,14 +1362,24 @@ def test_contamination_report_attribution_and_ties(spark):
     }
     assert got[100] == (3, 2, 3)
     assert got[200] == (0, None, 0)
-    # past-cap path identical (measured-count guard)
-    past = {
-        r["test_id"]: (r["n_train_docs"], r["worst_train_id"], r["worst_shared"])
-        for r in contamination_report(
-            train, test, "text", "doc_id", n=3, max_broadcast_grams=1
-        ).collect()
-    }
+    # past the broadcast threshold (broadcasts switched off): identical
+    with broadcasts_off(spark):
+        past = {
+            r["test_id"]: (r["n_train_docs"], r["worst_train_id"], r["worst_shared"])
+            for r in contamination_report(train, test, "text", "doc_id", n=3).collect()
+        }
     assert past == got
+    # a test doc with a NULL id keeps its row and is attributed nothing,
+    # even when it shares grams with the training side
+    nulled = test.union(
+        spark.createDataFrame([(None, "alpha beta gamma delta epsilon")], test.schema)
+    )
+    rows = contamination_report(train, nulled, "text", "doc_id", n=3).collect()
+    assert sorted(
+        ((r["test_id"] is None, r["n_train_docs"], r["worst_train_id"], r["worst_shared"])
+         for r in rows),
+        key=repr,
+    ) == [(False, 0, None, 0), (False, 3, 2, 3), (True, 0, None, 0)]
 
     # generic id contract: STRING ids through the same argmax (negating
     # an id column would NULL non-numeric ids and corrupt attribution)

@@ -11,9 +11,9 @@ from omics_data_integration_utilities_spark.analytics.clustering import (
     cluster_probes,
 )
 from omics_data_integration_utilities_spark.analytics.kernels import (
+    count_glm_offset,
     knn_impute,
     partial_correlations,
-    poisson_glm_offset,
 )
 from omics_data_integration_utilities_spark.operators.multimodal import (
     documents_as_media,
@@ -95,7 +95,7 @@ def test_poisson_glm_recovers_rate_ratio(spark):
             ("blk", "a", 110.0, 1100.0), ("blk", "b", 320.0, 1050.0)]
     df = spark.createDataFrame(rows, "block string, grp string, n double, exposure double")
     out = {r["coef"]: r for r in
-           poisson_glm_offset(df, "block", "n", "grp", "exposure").collect()}
+           count_glm_offset(df, "block", "n", "grp", "exposure", dispersion=0.0).collect()}
     est = out["grp=b"]["estimate"]
     assert abs(est - np.log(3)) < 0.1
     assert out["grp=b"]["z"] > 5

@@ -6,8 +6,10 @@ and no pathological Generate-filter re-inlining (the minhash regression).
 
 from __future__ import annotations
 
+import pytest
+
 import __spark_entry__ as entrymod
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, broadcasts_off
 
 QUERIES = entrymod.queries()
 
@@ -257,22 +259,33 @@ def test_events_funnel_single_conditional_scan(spark):
     assert plan.count("Scan parquet") == 1
 
 
-def _final_joins(node):
-    """Join nodes of an executed plan, descending into AQE's final plan
-    and its query stages (a join can sit under a later stage's
-    exchange)."""
+def _walk(node):
+    """Nodes of an executed plan, descending into AQE's final plan, its
+    query stages and reused exchanges (a join can sit under a later
+    stage's exchange)."""
     cls = node.getClass().getSimpleName()
     if cls == "AdaptiveSparkPlanExec":
-        yield from _final_joins(node.executedPlan())
+        yield from _walk(node.executedPlan())
         return
     if cls.endswith("QueryStageExec"):
-        yield from _final_joins(node.plan())
+        yield from _walk(node.plan())
         return
-    if "Join" in cls:
-        yield node
+    if cls == "ReusedExchangeExec":
+        yield from _walk(node.child())
+        return
+    yield node
     children = node.children()
     for i in range(children.size()):
-        yield from _final_joins(children.apply(i))
+        yield from _walk(children.apply(i))
+
+
+def _final_joins(node):
+    return [n for n in _walk(node) if "Join" in n.getClass().getSimpleName()]
+
+
+def _cols(node) -> set[str]:
+    out = node.output()
+    return {out.apply(i).name() for i in range(out.size())}
 
 
 def _assert_pair_side_left_outer(df) -> tuple[list, list[str]]:
@@ -284,8 +297,7 @@ def _assert_pair_side_left_outer(df) -> tuple[list, list[str]]:
     for j in _final_joins(df._jdf.queryExecution().executedPlan()):
         names.append(j.getClass().getSimpleName())
         assert j.joinType().toString() == "LeftOuter", names[-1]
-        out = j.left().output()
-        assert "inter" in [out.apply(i).name() for i in range(out.size())]
+        assert "inter" in _cols(j.left())
     assert len(names) == 2, names
     return rows, names
 
@@ -300,43 +312,129 @@ def test_pair_scale_relations_never_broadcast(spark):
     both regimes on the FINAL plan: with broadcasts switched off by
     session conf (the scale path) no join broadcasts; with defaults the
     doc-scale size table is broadcast; and the two regimes agree
-    exactly.  ``minhash_estimate_accuracy`` keeps its own measured
-    signature-side guard (cap 0: per-partition shuffle_hash)."""
+    exactly."""
     from omics_data_integration_utilities_spark.operators.dedup import (
-        minhash_estimate_accuracy,
         ngram_jaccard_pairs,
     )
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    keys = (
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold",
-    )
-    prev = {k: spark.conf.get(k, None) for k in keys}
-    # past-cap regime: the scale path — no broadcast anywhere
-    for k in keys:
-        spark.conf.set(k, "-1")
-    try:
+    with broadcasts_off(spark):
         b, joins = _assert_pair_side_left_outer(ngram_jaccard_pairs(docs, "text", "doc_id"))
-        assert "BroadcastHashJoinExec" not in joins, joins
-        plan = (
-            minhash_estimate_accuracy(docs, "text", "doc_id", max_broadcast_sig_docs=0)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "BroadcastHashJoin" not in plan
-        assert "ShuffledHashJoin" in plan
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    # under-cap regime (defaults): the doc-side size table is broadcast,
-    # and the two regimes agree exactly
+    assert "BroadcastHashJoinExec" not in joins, joins
     a, joins = _assert_pair_side_left_outer(ngram_jaccard_pairs(docs, "text", "doc_id"))
     assert joins == ["BroadcastHashJoinExec"] * 2, joins
-    assert "BroadcastHashJoin" in _plan(spark, "dedup_minhash_accuracy")
     assert a and a == b
+
+
+@pytest.fixture(scope="module")
+def split_docs(spark, tmp_path_factory):
+    """The smoke corpus split as the registered text queries split it
+    (every 20th doc held out), each half in its own parquet dir so a
+    plan's scans say which half they read."""
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    root = tmp_path_factory.mktemp("split")
+    docs.where("doc_id % 20 != 0").write.parquet(str(root / "train"))
+    docs.where("doc_id % 20 = 0").write.parquet(str(root / "test"))
+    return str(root / "train"), str(root / "test")
+
+
+def _scans(node, path: str) -> bool:
+    return any(
+        n.getClass().getSimpleName() == "FileSourceScanExec"
+        and path in n.relation().location().rootPaths().mkString()
+        for n in _walk(node)
+    )
+
+
+def _bounded_side_join(j, train: str) -> tuple[bool, bool]:
+    """Whether ``j`` joins the unbounded relation to a bounded side, and
+    whether the unbounded relation is on its left.  The bounded side is
+    a relation that never scans ``train`` (a gram set, the test grams,
+    the sketch candidates), or one doc-scale signature side against the
+    pair stream."""
+    left, right = _cols(j.left()), _cols(j.right())
+    if right & {"__sa", "__sb"}:
+        return True, {"id_a", "id_b"} <= left
+    if not _scans(j.right(), train):
+        return True, _scans(j.left(), train)
+    return False, False
+
+
+def _run_recording_joins(monkeypatch, build) -> tuple[list, list]:
+    """Collect ``build()``; return its rows and the final-plan joins of
+    every frame collected on the way (``frequent_items`` runs its
+    recount join inside the certificate's own collect)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    frames = []
+    collect = DataFrame.collect
+
+    def recording(self):
+        frames.append(self)
+        return collect(self)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrame, "collect", recording)
+        rows = sorted(map(tuple, build().collect()), key=repr)
+    joins = [
+        j for f in frames for j in _final_joins(f._jdf.queryExecution().executedPlan())
+    ]
+    return rows, joins
+
+
+@pytest.mark.parametrize(
+    "op, n_joins",
+    [
+        ("frequent_items", 1),
+        ("ngram_decontaminate", 1),
+        ("contamination_report", 2),
+        ("minhash_estimate_accuracy", 2),
+    ],
+)
+def test_bounded_side_joins_by_plan_shape(spark, split_docs, monkeypatch, op, n_joins):
+    """The joins that pair an unbounded relation with a bounded one are
+    safe by shape, not by a count taken at build: each is LEFT SEMI or
+    LEFT OUTER with the unbounded relation on the left, and Spark builds
+    those joins only from the right side, so no planner can broadcast
+    the unbounded relation.  On the FINAL plan: with broadcasts switched
+    off by session conf (the scale path) no join broadcasts; with
+    defaults AQE broadcasts the bounded side; and the two regimes
+    return identical rows."""
+    from omics_data_integration_utilities_spark.operators import dedup, text
+
+    train_path, test_path = split_docs
+    train, test = spark.read.parquet(train_path), spark.read.parquet(test_path)
+    build = {
+        "frequent_items": lambda: text.heavy_hitters(train, "text", k=20, capacity=512),
+        "ngram_decontaminate": lambda: text.ngram_decontaminate(
+            train, test, "text", "doc_id"
+        ),
+        "contamination_report": lambda: text.contamination_report(
+            train, test, "text", "doc_id"
+        ),
+        "minhash_estimate_accuracy": lambda: dedup.minhash_estimate_accuracy(
+            train, "text", "doc_id"
+        ),
+    }[op]
+
+    def bounded_joins(joins):
+        picked = []
+        for j in joins:
+            bounded, unbounded_left = _bounded_side_join(j, train_path)
+            if bounded:
+                assert j.joinType().toString() in ("LeftSemi", "LeftOuter"), j
+                assert unbounded_left, j
+                picked.append(j.getClass().getSimpleName())
+        assert len(picked) == n_joins, picked
+        return picked
+
+    with broadcasts_off(spark):
+        off_rows, joins = _run_recording_joins(monkeypatch, build)
+    bounded_joins(joins)
+    assert not [j for j in joins if "Broadcast" in j.getClass().getSimpleName()]
+    rows, joins = _run_recording_joins(monkeypatch, build)
+    assert bounded_joins(joins) == ["BroadcastHashJoinExec"] * n_joins
+    assert rows and rows == off_rows
 
 
 def test_heavy_hitters_certified_path_is_local(spark):
@@ -363,11 +461,9 @@ def test_heavy_hitters_fallback_is_exact_groupby(spark):
     assert "Exchange" in plan or "AdaptiveSparkPlan" in plan
 
 
-def test_heavy_hitters_recount_join_adapts_past_broadcast_cap(spark):
-    """The recount join must flip from broadcast to a candidate-side
-    shuffle_hash when the measured candidate count exceeds the cap —
-    never a forced broadcast of an unbounded union (and never a sort of
-    the gram stream).  Result stays exact either way."""
+def test_heavy_hitters_recount_exact_with_broadcasts_off(spark):
+    """The recount stays exact with broadcasts switched off (the scale
+    regime, where the candidate set is past the broadcast threshold)."""
     from omics_data_integration_utilities_spark.operators.text import (
         heavy_hitters,
         top_ngrams,
@@ -378,14 +474,16 @@ def test_heavy_hitters_recount_join_adapts_past_broadcast_cap(spark):
         (300 + i, f"q{i}a q{i}b q{i}c q{i}d") for i in range(200)
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string").repartition(8)
-    out = heavy_hitters(
-        df, "text", n=3, k=4, capacity=64, max_broadcast_candidates=3
-    )
+    with broadcasts_off(spark):
+        got = [
+            (r["ngram"], r["n_occurrences"])
+            for r in heavy_hitters(df, "text", n=3, k=4, capacity=64).collect()
+        ]
     want = [
         (r["ngram"], r["n_occurrences"])
         for r in top_ngrams(df, "text", n=3, k=4).collect()
     ]
-    assert [(r["ngram"], r["n_occurrences"]) for r in out.collect()] == want
+    assert got == want
 
 
 def test_salted_join_routing_plan_shape(spark):

@@ -542,9 +542,45 @@ def test_ngram_jaccard_builds_fire_no_jobs(spark):
         "dedup_ngram_jaccard": 6,
         "dedup_components": 33,
         "dedup_keep_best": 38,
-        "dedup_minhash_accuracy": 16,
+        "dedup_minhash_accuracy": 10,
         "plan_data_pipeline": 13,
         "doc_split_leakage_safe": 33,
+    }
+    fired = {}
+    for name in budgets:
+        def run(name=name):
+            queries[name](spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+
+        run()
+        fired[name] = jobs_fired(spark, run)
+    assert all(fired[n] <= budgets[n] for n in budgets), fired
+
+
+def test_bounded_side_joins_fire_no_jobs_at_build(spark):
+    """The joins of an unbounded relation with a bounded one are safe by
+    plan shape (LEFT SEMI or LEFT OUTER, unbounded side on the left), so
+    no operator checkpoints or counts a join side at build: warm builds
+    of ``text_decontaminate``, ``text_contamination_report`` and
+    ``dedup_minhash_accuracy`` run no Spark job.  Build plus ``noop``
+    write runs no more jobs than measured for the shape (SCALE.md "join
+    safety by plan shape" has the counts by query).  The sketch queries
+    still fire their certificate actions at build."""
+    import __spark_entry__
+
+    queries = __spark_entry__.queries()
+    for name in ("text_decontaminate", "text_contamination_report", "dedup_minhash_accuracy"):
+        build = queries[name]
+        build(spark, SF_SMOKE)
+        assert jobs_fired(spark, lambda: build(spark, SF_SMOKE)) == 0, name
+
+    budgets = {
+        "text_heavy_hitters": 9,
+        "events_hot_users": 8,
+        "events_hot_users_bytes": 8,
+        "events_salted_join": 11,
+        "text_decontaminate": 8,
+        "text_contamination_report": 11,
+        "dedup_minhash_accuracy": 10,
     }
     fired = {}
     for name in budgets:
