@@ -90,26 +90,6 @@ RESIZED_SCHEMA = "media_id long, media binary, width int, height int, n_bytes lo
 FRAME_SCHEMA = "media_id long, frame_idx int, ts_ms long, frame binary, frame_len long"
 
 
-def fake_probe(payload: bytes) -> dict:
-    """Deterministic stand-in for a decode/probe: pseudo-dimensions from
-    the md5 of the payload (a real codec returns the true header data)."""
-    h = hashlib.md5(payload).digest()
-    return {
-        "width": 16 * (1 + h[0] % 64),
-        "height": 16 * (1 + h[1] % 64),
-        "n_channels": 1 + h[2] % 4,
-    }
-
-
-def fake_resizer(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic stand-in for a real resize: output length scales
-    with the target area, content derived from the payload (a real
-    resizer decodes, scales, re-encodes under this exact signature)."""
-    n = max(8, (width * height) // 64)
-    rep = (payload or b"\x00") * (n // max(1, len(payload or b"\x00")) + 1)
-    return rep[:n]
-
-
 def fake_frame_decoder(payload: bytes, ts_ms: int, duration_ms: int) -> bytes:
     """Deterministic stand-in for frame extraction: an 8-byte slice whose
     offset is proportional to the timestamp (a real decoder seeks and

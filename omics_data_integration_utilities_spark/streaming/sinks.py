@@ -4,8 +4,8 @@ to_csv/to_sql call sites in integrative_omics/gizmos.py).
 
 :func:`upsert_batch_into_bucketed_snapshot` is MERGE as a commit unit:
 each call upserts one batch into a versioned parquet SNAPSHOT with the
-semantics of ``operators.joins.upsert_snapshot`` (anti-join + union —
-no Delta/Iceberg machinery).  The snapshot has ONE layout: version dirs
+semantics of ``operators.joins.upsert_snapshot`` (no Delta/Iceberg
+machinery).  The snapshot has ONE layout: version dirs
 ``v{batch}/__bucket=B/`` partitioned by key-hash bucket, a manifest
 ``m{batch}.json`` mapping every bucket to the version dir holding it,
 and an atomically swapped ``CURRENT`` pointer naming the live manifest.
@@ -36,14 +36,14 @@ manifest pins ``n_buckets``, the key schema and the row schema;
 :func:`rebucket_bucketed_snapshot` is the one sanctioned way to change
 them.
 
-CDC apply (r14): :func:`apply_cdc_batch_into_bucketed_snapshot` adds
-DELETE tombstones — each batch carries an op column of
-``upsert``/``delete`` rows and commits both in one manifest flip (one
-anti-join drops replaced AND deleted rows, upserts union back: the same
-single-shuffle bound as plain MERGE).  This is the right-to-be-forgotten
-half a training-data snapshot needs; same-key mixed ops within one
-unordered batch are refused loudly rather than applied in an undefined
-order.
+A commit runs two Spark jobs: an Observation of the batch's buckets (a
+seed commit skips it) and one merge write with one exchange.  CDC apply
+(r14): :func:`apply_cdc_batch_into_bucketed_snapshot` adds DELETE
+tombstones — an op column of ``upsert``/``delete`` rows, committed in
+one manifest flip by the same merge: the right-to-be-forgotten half a
+training-data snapshot needs.  An unknown op, or both ops on one key of
+an unordered batch, fails the merge write (``raise_error``); the
+version dir is deleted and the caller gets a ``ValueError``.
 
 Deployment shape (r15, r14 verdict item 2): every driver-side metadata
 operation — pointer read/flip, manifest put, listing, pruning — goes
@@ -65,8 +65,9 @@ by construction — one writer owns a snapshot).
 from __future__ import annotations
 
 import json
+import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from .commitstore import (
     ABSENT,
@@ -164,17 +165,40 @@ def _refuse_stale_batch(
 # ---------------------------------------------------------------------------
 
 
-def _bucket_expr(key_cols: "list[str]", n_buckets: int):
-    from pyspark.sql import functions as F
+def _quote(name: str) -> str:
+    """A column name as a SQL identifier (backticks doubled, dots kept)."""
+    return "`" + name.replace("`", "``") + "`"
 
-    return F.pmod(
-        F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(int(n_buckets))
-    )
+
+def _bucket_sql(key_cols: "list[str]", n_buckets: int) -> str:
+    keys = ", ".join(_quote(c) for c in key_cols)
+    return f"pmod(xxhash64({keys}), {int(n_buckets)})"
 
 
 def _load_manifest(store: SnapshotStore, name: str) -> "dict | None":
     got = store.get_text(name)
     return json.loads(got[0]) if got is not None else None
+
+
+def _current_manifest(
+    store: SnapshotStore, cur_name: str, error: type = RuntimeError
+) -> dict:
+    man = _load_manifest(store, cur_name)
+    if man is None:
+        raise error(
+            f"bucketed snapshot at {store.describe()!r}: CURRENT names "
+            f"{cur_name!r} but that manifest is missing — damaged "
+            "snapshot; restore the manifest or repoint CURRENT"
+        )
+    return man
+
+
+def _written_buckets(store: SnapshotStore, version: str) -> "set[int]":
+    return {
+        int(n.split("=", 1)[1])
+        for n in store.list_names(version)
+        if n.startswith("__bucket=")
+    }
 
 
 def _read_buckets(
@@ -219,29 +243,17 @@ def read_bucketed_snapshot(
     as committed data)."""
     store = as_store(snapshot_dir)
     cur_name, _ = _pointer(store)
-    if cur_name is None:
-        # RECOVERY MODE: with a damaged/missing pointer an EXPLICIT
-        # manifest still reads if it exists — the operator inspecting
-        # retained manifests to restore CURRENT
-        if manifest is not None:
-            man = _load_manifest(store, manifest)
-            if man is None:
-                raise FileNotFoundError(
-                    f"no CURRENT manifest under {store.describe()!r} and "
-                    f"manifest {manifest!r} is not on disk"
-                )
-            paths = sorted({p for p in man["buckets"].values()})
-            if not paths:
-                raise FileNotFoundError(
-                    f"bucketed snapshot at {store.describe()!r}: manifest "
-                    f"{man.get('batch_id')} references no buckets (EMPTY)"
-                )
-            return _read_buckets(spark, store, man, paths)
-        raise FileNotFoundError(
-            f"no CURRENT manifest under {store.describe()!r} "
-            "(no batch committed yet?)"
-        )
-    if manifest is not None:
+    if manifest is None:
+        if cur_name is None:
+            raise FileNotFoundError(
+                f"no CURRENT manifest under {store.describe()!r} "
+                "(no batch committed yet?)"
+            )
+        man = _current_manifest(store, cur_name, FileNotFoundError)
+    else:
+        # with a damaged/missing pointer an EXPLICIT manifest still reads
+        # if it exists (RECOVERY MODE: the operator inspecting retained
+        # manifests to restore CURRENT)
         mid, cid = _batch_digits(manifest), _batch_digits(cur_name)
         if mid is not None and cid is not None and mid > cid:
             raise FileNotFoundError(
@@ -257,15 +269,7 @@ def read_bucketed_snapshot(
                 f"{store.describe()!r} — pruned past keep_versions, or "
                 "never committed"
             )
-    else:
-        man = _load_manifest(store, cur_name)
-        if man is None:
-            raise FileNotFoundError(
-                f"bucketed snapshot at {store.describe()!r}: CURRENT names "
-                f"{cur_name!r} but that manifest is missing — damaged "
-                "snapshot; restore the manifest or repoint CURRENT"
-            )
-    paths = sorted({p for p in man["buckets"].values()})
+    paths = sorted(set(man["buckets"].values()))
     if not paths:
         # a CDC commit can legitimately empty the snapshot (every key
         # tombstoned) — the manifest then references zero bucket dirs
@@ -289,14 +293,14 @@ def upsert_batch_into_bucketed_snapshot(
     n_buckets: int = 16,
     keep_versions: int = 2,
 ) -> None:
-    """One bucketed MERGE commit: bucket the batch by key hash, read
-    ONLY the touched buckets' current data, upsert, write one
-    ``v{batch}/__bucket=B/`` dir per touched bucket (a single
-    partitionBy job), then atomically flip CURRENT to a new manifest
-    that repoints the touched buckets and carries every untouched
-    bucket's existing dir by reference.  The batch is deduped to one row
-    per key first (which duplicate survives is arbitrary — pre-aggregate
-    when per-key ordering matters).  Size ``n_buckets`` so one bucket's
+    """One bucketed MERGE commit: read ONLY the touched buckets' data,
+    merge the batch into it in one plan writing one
+    ``v{batch}/__bucket=B/`` dir (one file) per touched bucket, then
+    atomically flip CURRENT to a new manifest that repoints the touched
+    buckets and carries every untouched bucket's dir by reference.  A
+    key keeps one batch row (which duplicate survives is arbitrary —
+    pre-aggregate when per-key ordering matters); a snapshot row with a
+    NULL key is never replaced.  Size ``n_buckets`` so one bucket's
     data fits a comfortable rewrite unit (O(100 MB–1 GB) at scale), or
     pass 1 when every batch touches most of the snapshot.
 
@@ -341,14 +345,15 @@ def _bucketed_commit(
     """The shared bucketed commit engine behind the upsert form
     (``op_col=None``) and the CDC form (``op_col`` names the
     upsert/delete column of ``batch``).  After the pointer, replay and
-    pin checks, ONE summary action over the raw batch validates the CDC
-    ops and yields the touched buckets (:func:`_touched_buckets`); ONE
-    anti-join against the raw batch keys drops both replaced and deleted
-    rows from the touched buckets' data, the deduplicated upserts union
-    back, one partitionBy job writes the touched buckets, and the
-    manifest repoints them — DROPPING any touched bucket the commit
-    emptied (a delete-only bucket with nothing left writes no subdir and
-    must vanish from the bucket map, not dangle)."""
+    pin checks, an Observation over a ``noop`` write of the raw batch
+    yields the touched buckets in one narrow job (a seed commit, with no
+    buckets to read, skips it and takes the buckets its write produced);
+    the merge plan (:func:`_merge_plan`) writes the touched buckets in
+    one job, failing on a refused CDC batch, whose partial version dir
+    is then deleted; and the manifest repoints the touched buckets —
+    DROPPING any the commit emptied (a delete-only bucket with nothing
+    left writes no subdir and must vanish from the bucket map, not
+    dangle).  An empty touched set writes nothing."""
     from pyspark.sql import functions as F
 
     store = as_store(snapshot_dir)
@@ -365,13 +370,7 @@ def _bucketed_commit(
         _bucketed_retention(store, keep)
         return
     _refuse_stale_batch(cur_name, batch_id, store)
-    cur = _load_manifest(store, cur_name) if cur_name is not None else None
-    if cur_name is not None and cur is None:
-        raise RuntimeError(
-            f"bucketed snapshot at {store.describe()!r}: CURRENT names "
-            f"{cur_name!r} but that manifest is missing — damaged "
-            "snapshot; restore the manifest or repoint CURRENT"
-        )
+    cur = _current_manifest(store, cur_name) if cur_name is not None else None
     if cur is None:
         leftovers = [
             n for n in store.list_names()
@@ -392,17 +391,11 @@ def _bucketed_commit(
             f"n_buckets={cur['n_buckets']}, got {n_buckets} — the bucket "
             "count is fixed for the snapshot's lifetime"
         )
-    upserts = batch
-    if op_col is not None:
-        upserts = batch.where(F.col(op_col) == CDC_UPSERT).drop(op_col)
-    # which duplicate of a key survives is arbitrary (see the upsert form)
-    upserts = upserts.dropDuplicates(key_cols)
+    rows = batch.drop(op_col) if op_col is not None else batch
     # key-schema pin (r14 ADVICE): the bucket function hashes the key
     # VALUES AS TYPED — int 7 and long 7 hash differently — so the key
     # dtypes are part of the snapshot's identity, exactly like n_buckets
-    key_types = {
-        c: upserts.schema[c].dataType.simpleString() for c in key_cols
-    }
+    key_types = {c: rows.schema[c].dataType.simpleString() for c in key_cols}
     pinned = cur.get("key_schema") if cur is not None else None
     # ORDER matters, not just membership: xxhash64(a, b) != xxhash64(b,
     # a), so a commit naming the same key columns in a different order
@@ -440,7 +433,7 @@ def _bucketed_commit(
     # :func:`rebucket_bucketed_snapshot`'s ``transform`` (an O(snapshot)
     # rewrite that re-pins on purpose).
     full_schema = {
-        f.name: f.dataType.simpleString() for f in upserts.schema.fields
+        f.name: f.dataType.simpleString() for f in rows.schema.fields
     }
     pinned_values = cur.get("value_schema") if cur is not None else None
     if pinned_values is not None and pinned_values != full_schema:
@@ -452,56 +445,45 @@ def _bucketed_commit(
             "re-shape the batch upstream, or evolve the schema on purpose "
             "with rebucket_bucketed_snapshot(transform=...)"
         )
-    touched = _touched_buckets(batch, key_cols, n_buckets, op_col)
-    bucket = _bucket_expr(key_cols, n_buckets)
-    # the anti-join's build side is the RAW batch keys, not a deduped
-    # upsert ∪ delete key set: the summary action refused every op but
-    # upsert/delete, so the raw keys ARE that set, and a left_anti
-    # join's result does not change with duplicate build keys — a
-    # dropDuplicates (or a union of two deduped sides) here would only
-    # add a batch-key shuffle under the write job
-    all_keys = batch.select(*key_cols)
+    bucket = _bucket_sql(key_cols, n_buckets)
     old_buckets: "dict[str, str]" = dict(cur["buckets"]) if cur else {}
+    touched: "list[int]" = []
+    if old_buckets:
+        # one narrow job, no shuffle: the bucket set rides an Observation
+        # of a noop write over the raw batch
+        obs = Observation()
+        batch.selectExpr(f"{bucket} AS b").observe(
+            obs, F.collect_set("b").alias("t")
+        ).write.format("noop").mode("overwrite").save()
+        touched = sorted(obs.get["t"])
     written: "set[int]" = set()
-    if touched:
-        up_b = upserts.withColumn("__bucket", bucket)
-        target_paths = sorted(
+    if touched or not old_buckets:  # a seed commit skips the Observation
+        paths = sorted(
             {old_buckets[str(b)] for b in touched if str(b) in old_buckets}
         )
-        if target_paths:
-            target = _read_buckets(spark, store, cur, target_paths).withColumn(
-                "__bucket", bucket
-            )  # same pure function of keys
-            # one anti-join drops BOTH replaced and deleted rows
-            merged = target.join(all_keys, key_cols, "left_anti").unionByName(
-                up_b
+        target = _read_buckets(spark, store, cur, paths) if paths else None
+        cols = list(pinned_values or full_schema)
+        merged = _merge_plan(batch, target, key_cols, bucket, cols, op_col)
+        try:
+            merged.write.mode("overwrite").partitionBy("__bucket").parquet(
+                store.spark_path(version)
             )
-        else:
-            merged = up_b
-        # ONE job writes every surviving touched bucket:
-        # v{batch}/__bucket=B/...  Cluster by bucket first: without it
-        # every input task writes a slice of every touched bucket
-        # (tasks x buckets files per commit — 32x16 = 512 at local
-        # defaults), and each later commit's anti-join re-opens all of
-        # them; clustered, a bucket is ONE file, the natural rewrite
-        # unit (n_buckets is sized so a bucket is O(100 MB-1 GB) at
-        # scale).  The exchange moves only O(touched + batch) rows —
-        # the same data the write was already going to move.
-        merged.repartition("__bucket").write.mode("overwrite").partitionBy(
-            "__bucket"
-        ).parquet(store.spark_path(version))
-        written = {
-            int(n.split("=", 1)[1])
-            for n in store.list_names(version)
-            if n.startswith("__bucket=")
-        }
-    new_buckets = dict(old_buckets)
-    for b in touched:
-        if b in written:
-            new_buckets[str(b)] = f"{version}/__bucket={b}"
-        else:
-            # the commit emptied this bucket (delete-only, nothing left)
-            new_buckets.pop(str(b), None)
+        except Exception as exc:
+            # uncommitted: CURRENT still names the base, so dropping the
+            # partial version dir leaves the snapshot as it was
+            store.delete_prefix(version)
+            refusal = _REFUSAL.search(str(exc))
+            if refusal is not None:
+                raise ValueError(refusal.group(0)) from exc
+            raise
+        written = _written_buckets(store, version)
+    # a touched bucket the commit emptied (delete-only) leaves the map
+    new_buckets = {
+        b: p for b, p in old_buckets.items() if int(b) not in touched
+    }
+    new_buckets.update(
+        {str(b): f"{version}/__bucket={b}" for b in sorted(written)}
+    )
     manifest = {
         "batch_id": int(batch_id),
         "n_buckets": int(n_buckets),
@@ -630,17 +612,11 @@ def rebucket_bucketed_snapshot(
             f"no CURRENT manifest under {store.describe()!r} — nothing "
             "to rebucket (seed the snapshot first)"
         )
-    cur = _load_manifest(store, cur_name)
-    if cur is None:
-        raise RuntimeError(
-            f"bucketed snapshot at {store.describe()!r}: CURRENT names "
-            f"{cur_name!r} but that manifest is missing — damaged "
-            "snapshot; restore the manifest or repoint CURRENT"
-        )
+    cur = _current_manifest(store, cur_name)
     # key-cols pin (r15 ADVICE): bucketing by the caller's columns while
     # carrying the manifest's old pin forward would pass every later
     # commit's pin check against a layout bucketed by something else —
-    # the per-bucket anti-join then misses same-key rows and duplicates
+    # the per-bucket merge then misses same-key rows and duplicates
     # keys silently.  Refuse a mismatched maintenance run before any
     # write; dtypes are re-verified against the read data below.
     pinned_keys = cur.get("key_schema")
@@ -693,22 +669,18 @@ def rebucket_bucketed_snapshot(
                     "— xxhash64 bucketing is type-sensitive; keys must "
                     "survive evolution unchanged"
                 )
-        bucket = _bucket_expr(key_cols, new_n_buckets)
-        # clustered write: one file per bucket (see _bucketed_commit) —
-        # for the COMPACTION use of this maintenance commit the single
-        # file per bucket is the entire point
-        data.withColumn("__bucket", bucket).repartition(
+        bucket = _bucket_sql(key_cols, new_n_buckets)
+        # clustered write: one file per bucket (see _merge_plan) — for
+        # the COMPACTION use of this maintenance commit the single file
+        # per bucket is the entire point
+        data.selectExpr("*", f"{bucket} AS __bucket").repartition(
             "__bucket"
         ).write.mode("overwrite").partitionBy("__bucket").parquet(
             store.spark_path(version)
         )
-        written = {
-            int(n.split("=", 1)[1])
-            for n in store.list_names(version)
-            if n.startswith("__bucket=")
-        }
         new_buckets = {
-            str(b): f"{version}/__bucket={b}" for b in sorted(written)
+            str(b): f"{version}/__bucket={b}"
+            for b in sorted(_written_buckets(store, version))
         }
         key_schema = pinned_keys or {
             c: data.schema[c].dataType.simpleString() for c in key_cols
@@ -751,62 +723,82 @@ CDC_UPSERT = "upsert"
 CDC_DELETE = "delete"
 
 
-def _touched_buckets(
-    batch: DataFrame,
-    key_cols: "list[str]",
-    n_buckets: int,
-    op_col: "str | None",
-) -> "list[int]":
-    """The commit's ONE summary action over the raw batch: the sorted
-    touched buckets and, for a CDC batch, its validation — one op per
-    key per batch (a key carrying BOTH an upsert and a delete in one
-    batch has no defined order — refused loudly), ops restricted to
-    upsert/delete.  Both refusals raise before anything is written.
+def _sql_string(text: str) -> str:
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-    One action, because under AQE every shuffle beneath a one-row
-    driver aggregate is its own job: the CDC form groups by key once
-    for the per-key op set and reduces that to one row of (touched
-    buckets, all distinct ops, most ops on any key); the bucket set is
-    duplicate-invariant, so the upsert form reduces the raw rows
-    directly.  An empty batch yields ([], [], NULL) and validates
-    clean."""
+
+# a CDC refusal raised by the merge plan, found in the failed write's error
+_REFUSAL = re.compile(
+    r"CDC batch (?:has unknown ops .*? — allowed: 'upsert', 'delete'"
+    r"|carries BOTH .*?\(keep the latest op\))",
+    re.S,
+)
+
+
+def _merge_plan(
+    batch: DataFrame,
+    target: "DataFrame | None",
+    key_cols: "list[str]",
+    bucket: str,
+    cols: "list[str]",
+    op_col: "str | None",
+) -> DataFrame:
+    """The touched buckets' merged rows (``cols`` plus ``__bucket``) in
+    one exchange: ``target`` rows (``__src`` 0) and the raw batch
+    (``__src`` 1) are hash-partitioned on ``__bucket``, which clusters
+    the per-key grouping too, so a bucket is one task and one file.  A
+    key keeps a batch row over its snapshot row (which batch duplicate
+    survives is arbitrary) unless its batch op is delete; an unknown or
+    NULL op (ops are wrapped in arrays so collect_set keeps a NULL) or
+    both ops on one key is a ``raise_error``.  A snapshot row with a
+    NULL key is its own group (a unique id in the grouping key), so no
+    batch row replaces or deletes it, as in ``upsert_snapshot``."""
     from pyspark.sql import functions as F
 
-    rows, checks = batch, []
-    if op_col is not None:
-        # each op wrapped in an array because collect_set skips NULLs:
-        # a NULL op must surface as an unknown op, not vanish (its key
-        # is still in the raw batch keys the anti-join drops)
-        rows = batch.groupBy(*key_cols).agg(
-            F.flatten(F.collect_set(F.array(F.col(op_col)))).alias("__ops")
-        )
-        checks = [
-            F.array_distinct(F.flatten(F.collect_list("__ops"))).alias(
-                "__all_ops"
-            ),
-            F.max(F.size("__ops")).alias("__max_ops"),
-        ]
-    row = rows.agg(
-        F.collect_set(_bucket_expr(key_cols, n_buckets)).alias("__touched"),
-        *checks,
-    ).collect()[0]
-    if op_col is not None:
-        bad = [
-            o for o in (row["__all_ops"] or [])
-            if o not in (CDC_UPSERT, CDC_DELETE)
-        ]
-        if bad:
-            raise ValueError(
-                f"CDC batch has unknown ops {bad!r} in column {op_col!r} — "
-                f"allowed: {CDC_UPSERT!r}, {CDC_DELETE!r}"
-            )
-        if (row["__max_ops"] or 0) > 1:
-            raise ValueError(
-                "CDC batch carries BOTH an upsert and a delete for the same "
-                "key — micro-batches are unordered, so apply order would be "
-                "undefined; resolve per key upstream (keep the latest op)"
-            )
-    return sorted(row["__touched"])
+    # SQL text rather than Column calls: one parse per expression, where
+    # the Column form costs hundreds of Py4J calls per commit
+    values, keys = [_quote(c) for c in cols], [_quote(k) for k in key_cols]
+    up, delete = _sql_string(CDC_UPSERT), _sql_string(CDC_DELETE)
+    op = up if op_col is None else f"CAST({_quote(op_col)} AS STRING)"
+    merged = batch.selectExpr(
+        *values, f"{bucket} AS __bucket", "1 AS __src", f"{op} AS __op",
+        "CAST(NULL AS BIGINT) AS __nk",
+    )
+    if target is not None:
+        null_key = " OR ".join(f"{k} IS NULL" for k in keys)
+        merged = target.selectExpr(
+            *values, f"{bucket} AS __bucket", "0 AS __src",
+            "CAST(NULL AS STRING) AS __op",
+            f"CASE WHEN {null_key} THEN monotonically_increasing_id() END"
+            " AS __nk",
+        ).union(merged)
+    bad = f"filter(__ops, o -> o IS NULL OR o NOT IN ({up}, {delete}))"
+    quote = _sql_string("'")
+    shown = (
+        f"array_join(transform({bad}, "
+        f"o -> coalesce(concat({quote}, o, {quote}), 'None')), ', ')"
+    )
+    unknown = _sql_string(
+        f"] in column {op_col!r} — allowed: {CDC_UPSERT!r}, {CDC_DELETE!r}"
+    )
+    both = _sql_string(
+        "CDC batch carries BOTH an upsert and a delete for the same key — "
+        "micro-batches are unordered, so apply order would be undefined; "
+        "resolve per key upstream (keep the latest op)"
+    )
+    return merged.repartition("__bucket").groupBy(
+        "__bucket", *keys, "__nk"
+    ).agg(
+        F.expr(f"max_by(struct({', '.join(values)}), __src)").alias("__row"),
+        F.expr(
+            "flatten(collect_set(CASE WHEN __src = 1 THEN array(__op) END))"
+        ).alias("__ops"),
+    ).where(
+        f"CASE WHEN size({bad}) > 0 THEN raise_error(concat("
+        f"'CDC batch has unknown ops [', {shown}, {unknown})) "
+        f"WHEN size(__ops) > 1 THEN raise_error({both}) "
+        f"ELSE size(__ops) = 0 OR array_contains(__ops, {up}) END"
+    ).selectExpr(*[f"__row.{v} AS {v}" for v in values], "__bucket")
 
 
 def apply_cdc_batch_into_bucketed_snapshot(

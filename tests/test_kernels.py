@@ -125,14 +125,31 @@ def test_multimodal_decode_resize_frames(spark):
     binary-column plumbing: real Arrow batch iteration and schemas, fake
     codecs; corrupt media yields ok=false rows, not task failures; the
     frame sampler is a true 1->N fan-out capped per video."""
+    import hashlib
+
     from omics_data_integration_utilities_spark.operators.multimodal import (
         decode_media,
         fake_frame_decoder,
-        fake_probe,
-        fake_resizer,
         resize_media,
         sample_frames,
     )
+
+    def fake_probe(payload: bytes) -> dict:
+        # pseudo-dimensions from the md5 of the payload (a real codec
+        # returns the true header data)
+        h = hashlib.md5(payload).digest()
+        return {
+            "width": 16 * (1 + h[0] % 64),
+            "height": 16 * (1 + h[1] % 64),
+            "n_channels": 1 + h[2] % 4,
+        }
+
+    def fake_resizer(payload: bytes, width: int, height: int) -> bytes:
+        # output length scales with the target area, content derived
+        # from the payload (a real resizer decodes, scales, re-encodes)
+        n = max(8, (width * height) // 64)
+        rep = (payload or b"\x00") * (n // max(1, len(payload or b"\x00")) + 1)
+        return rep[:n]
 
     docs = spark.createDataFrame(
         [(1, "hello world"), (2, "a much longer document body for slicing frames")],

@@ -850,12 +850,31 @@ def _tree_bytes(root) -> dict:
     return out
 
 
-def test_cdc_rejected_batch_writes_nothing(spark, tmp_path):
-    """After a committed batch, a CDC batch refused by the commit's
-    summary action (unknown op, a NULL op, both ops on one key) raises
-    ValueError and leaves CURRENT, every manifest and every version dir
-    byte-for-byte as they were.  Replaying the committed batch is a
-    no-op that fires no Spark job at all."""
+def _store_state(snap) -> tuple:
+    """Everything a snapshot holds: an ``InMemoryObjectStore``'s objects
+    with their generations and its data dir, or a posix dir's files."""
+    from omics_data_integration_utilities_spark.streaming.commitstore import (
+        InMemoryObjectStore,
+    )
+
+    if isinstance(snap, InMemoryObjectStore):
+        return dict(snap._objects), _tree_bytes(snap.data_dir)
+    return {}, _tree_bytes(snap)
+
+
+@pytest.mark.parametrize("store_kind", ["posix", "object"])
+def test_cdc_rejected_batch_writes_nothing(spark, tmp_path, store_kind):
+    """After a committed batch, a CDC batch refused by the checks in the
+    commit's write plan (unknown op, a NULL op, both ops on one key)
+    raises ValueError naming the offending ops, drops the uncommitted
+    ``v000000000001`` dir and leaves CURRENT, every manifest and every
+    version dir byte-for-byte as they were, on a posix dir and on an
+    object store.  Replaying the committed batch is a no-op that fires
+    no Spark job at all."""
+    from omics_data_integration_utilities_spark.streaming.commitstore import (
+        InMemoryObjectStore,
+        as_store,
+    )
     from omics_data_integration_utilities_spark.streaming.sinks import (
         apply_cdc_batch_into_bucketed_snapshot,
         read_bucketed_snapshot,
@@ -863,18 +882,20 @@ def test_cdc_rejected_batch_writes_nothing(spark, tmp_path):
 
     schema = "k long, v double, op string"
     snap = str(tmp_path / "cdc_rejected")
+    if store_kind == "object":
+        snap = InMemoryObjectStore(snap)
     b0 = spark.createDataFrame(
         [(k, float(k), "upsert") for k in range(12)], schema
     )
     apply_cdc_batch_into_bucketed_snapshot(
         spark, b0, snap, ["k"], batch_id=0, n_buckets=4
     )
-    before = _tree_bytes(snap)
-    assert {"CURRENT", "m000000000000.json"} <= set(before)
-    assert any(p.startswith("v000000000000/") for p in before)
+    before = _store_state(snap)
+    names = set(as_store(snap).list_names())
+    assert {"CURRENT", "m000000000000.json", "v000000000000"} <= names
     refused = [
-        ("unknown ops", [(1, 0.0, "merge"), (2, 0.0, "delete")]),
-        ("unknown ops", [(3, 0.0, None), (4, 4.5, "upsert")]),
+        (r"unknown ops \['merge'\]", [(1, 0.0, "merge"), (2, 0.0, "delete")]),
+        (r"unknown ops \[None\]", [(3, 0.0, None), (4, 4.5, "upsert")]),
         ("BOTH an upsert and a delete", [(5, 5.5, "upsert"), (5, 0.0, "delete")]),
     ]
     for msg, rows in refused:
@@ -883,32 +904,79 @@ def test_cdc_rejected_batch_writes_nothing(spark, tmp_path):
                 spark, spark.createDataFrame(rows, schema), snap, ["k"],
                 batch_id=1, n_buckets=4,
             )
-        assert _tree_bytes(snap) == before, msg
+        assert not as_store(snap).exists_prefix("v000000000001"), msg
+        assert _store_state(snap) == before, msg
     assert jobs_fired(
         spark,
         lambda: apply_cdc_batch_into_bucketed_snapshot(
             spark, b0, snap, ["k"], batch_id=0, n_buckets=4
         ),
     ) == 0
-    assert _tree_bytes(snap) == before
+    assert _store_state(snap) == before
     assert {r["k"] for r in read_bucketed_snapshot(spark, snap).collect()} == set(
         range(12)
     )
 
 
+def test_null_key_rows_are_never_replaced_or_deleted(spark, tmp_path):
+    """NULL keys follow ``operators.joins.upsert_snapshot``: a NULL key
+    equals nothing, so a snapshot row with a NULL key survives every
+    later upsert and delete of a NULL key, and each such row stays its
+    own row.  Within one batch, NULL-key upserts are duplicates of each
+    other and collapse to one row, as ``dropDuplicates`` collapses
+    them."""
+    from omics_data_integration_utilities_spark.streaming.sinks import (
+        apply_cdc_batch_into_bucketed_snapshot,
+        read_bucketed_snapshot,
+        upsert_batch_into_bucketed_snapshot,
+    )
+
+    snap = str(tmp_path / "null_keys")
+    rows = lambda: sorted(  # noqa: E731
+        (tuple(r) for r in read_bucketed_snapshot(spark, snap).collect()),
+        key=lambda r: (r[0] is not None, r[0] or 0, r[1]),
+    )
+    upsert_batch_into_bucketed_snapshot(
+        spark, spark.createDataFrame([(1, 1.0), (None, 10.0)], "k long, v double"),
+        snap, ["k"], batch_id=0, n_buckets=4,
+    )
+    assert rows() == [(None, 10.0), (1, 1.0)]
+    upsert_batch_into_bucketed_snapshot(
+        spark,
+        spark.createDataFrame(
+            [(None, 20.0), (None, 30.0), (1, 1.5)], "k long, v double"
+        ),
+        snap, ["k"], batch_id=1, n_buckets=4,
+    )
+    got = rows()
+    assert got[0] == (None, 10.0) and got[-1] == (1, 1.5), got
+    assert len(got) == 3 and got[1] in ((None, 20.0), (None, 30.0)), got
+    apply_cdc_batch_into_bucketed_snapshot(
+        spark,
+        spark.createDataFrame(
+            [(None, 0.0, "delete"), (1, 0.0, "delete")],
+            "k long, v double, op string",
+        ),
+        snap, ["k"], batch_id=2, n_buckets=4,
+    )
+    assert rows() == got[:2]
+
+
 # Jobs one CDC commit (2 deletes, 1 replace, 1 insert) fires into an
-# existing 4-bucket snapshot under the test session's settings: 9 with
-# the single summary action and the pinned-schema target read, against
-# 15 with separate validation and touched-bucket collects and an
-# inferred target schema.
-_CDC_COMMIT_JOBS = 9
+# existing 4-bucket snapshot under the test session's settings: 3 with
+# the touched buckets from an Observation and the checks in the merge
+# plan (9 with a summary aggregate, 15 with separate validation and
+# touched-bucket collects).  The seed commit skips the Observation.
+_CDC_COMMIT_JOBS = 3
+_SEED_COMMIT_JOBS = 2
 
 
 def test_snapshot_commit_and_read_job_budget(spark, tmp_path):
     """The fixed job cost of a snapshot commit and read stays pinned:
     a read of a manifest that pins ``value_schema`` fires no job before
-    an action (no footer schema inference), and one CDC commit into an
-    existing 4-bucket snapshot fires at most ``_CDC_COMMIT_JOBS``."""
+    an action (no footer schema inference), a seed commit fires at most
+    ``_SEED_COMMIT_JOBS`` and one CDC commit into an existing 4-bucket
+    snapshot at most ``_CDC_COMMIT_JOBS``."""
     from omics_data_integration_utilities_spark.streaming.sinks import (
         apply_cdc_batch_into_bucketed_snapshot,
         read_bucketed_snapshot,
@@ -919,9 +987,13 @@ def test_snapshot_commit_and_read_job_budget(spark, tmp_path):
     seed = spark.createDataFrame(
         [(k, float(k), "upsert") for k in range(40)], schema
     )
-    apply_cdc_batch_into_bucketed_snapshot(
-        spark, seed, snap, ["k"], batch_id=0, n_buckets=4
+    seed_jobs = jobs_fired(
+        spark,
+        lambda: apply_cdc_batch_into_bucketed_snapshot(
+            spark, seed, snap, ["k"], batch_id=0, n_buckets=4
+        ),
     )
+    assert 0 < seed_jobs <= _SEED_COMMIT_JOBS, seed_jobs
     for manifest in (None, "m000000000000.json"):
         assert jobs_fired(
             spark, lambda: read_bucketed_snapshot(spark, snap, manifest=manifest)
@@ -942,6 +1014,41 @@ def test_snapshot_commit_and_read_job_budget(spark, tmp_path):
     want.update({5: 55.0, 99: 99.0})
     got = {r["k"]: r["v"] for r in read_bucketed_snapshot(spark, snap).collect()}
     assert got == want
+
+
+def test_snapshot_queries_job_budget(spark):
+    """The registered queries that commit snapshots inside their
+    builders fire no more jobs than measured for a commit of one
+    Observation job (skipped by a seed commit) and one merge write:
+    warm build / build + ``noop`` write at sf0.001.  The summary
+    aggregate and anti-join commit fired 13/15, 11/15, 20/22 and 20/22
+    (SCALE.md "snapshot MERGE in one exchange" has the counts by call
+    site)."""
+    import __spark_entry__
+
+    queries = __spark_entry__.queries()
+    budgets = {
+        "doc_forget": (5, 7),
+        "doc_snapshot_timetravel": (5, 9),
+        "doc_snapshot_rebucket": (11, 13),
+        "doc_snapshot_evolve": (11, 13),
+    }
+    fired = {}
+    for name in budgets:
+        build = queries[name]
+
+        def run(build=build):
+            build(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+
+        run()
+        fired[name] = (
+            jobs_fired(spark, lambda: build(spark, SF_SMOKE)),
+            jobs_fired(spark, run),
+        )
+    assert all(
+        fired[n][0] <= budgets[n][0] and fired[n][1] <= budgets[n][1]
+        for n in budgets
+    ), fired
 
 
 def test_pinned_schema_read_roundtrips_ddl(spark, tmp_path):
