@@ -28,10 +28,21 @@ Algorithm (deterministic, ties broken on the node key):
 
 from __future__ import annotations
 
+import warnings
 from collections import defaultdict
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import materialize
+
+# Up to this many seeds the greedy grows on the driver; above it each seed
+# grows in a task against a broadcast adjacency.
+SEED_PARALLEL_THRESHOLD = 512
+# Ego delivery: first BFS radius, and how many times it doubles for the
+# seeds whose growth escaped their ball before the full-adjacency backstop.
+EGO_RADIUS = 2
+EGO_MAX_DOUBLINGS = 2
 
 
 def _cohesiveness(w_in: float, w_bound: float, size: int, penalty: float) -> float:
@@ -160,87 +171,66 @@ def _merge_overlaps(raw: list, overlap_threshold: float) -> list:
     return merged
 
 
-def _grow_ego_blocks(
-    spark, sym: DataFrame, seeds: list, penalty: float, radius: int, n_blocks: int
-) -> dict:
-    """One ego-delivery round: BFS each pending seed's radius-``radius``
-    ball distributed, join every block's ball union to its incident edge
-    rows, and grow all of the block's seeds inside one cogrouped
-    ``applyInPandas`` task.  A task never sees the full graph — only the
-    edges incident to its block's ball nodes.  Returns
+def _ego_hops(sym: DataFrame, ball: DataFrame, frontier: DataFrame, hops: int):
+    """Extend every seed's ``(block, seed, node)`` ball by ``hops`` BFS
+    hops over the symmetric edge list ``sym (node, v, w)`` from its
+    frontier (the nodes the last hop added).  Each hop's
+    frontier is materialized and counted — the count is the job that
+    computes it, and a 0 ends the hops early — then ``ball ∪ frontier``
+    is materialized, so no hop re-derives an earlier one."""
+    for _ in range(hops):
+        nxt = frontier.join(sym, "node").select("block", "seed", F.col("v").alias("node")).distinct()
+        frontier = materialize(nxt.join(ball, ["block", "seed", "node"], "left_anti"))
+        if frontier.count() == 0:
+            break
+        ball = materialize(ball.unionByName(frontier))
+    return ball, frontier
+
+
+def _grow_ego_blocks(sym: DataFrame, ball: DataFrame, penalty: float) -> dict:
+    """One ego-delivery round: join every block's ball union to its
+    incident edge rows, and grow all of the block's seeds inside one
+    cogrouped ``applyInPandas`` task.  A task never sees the full graph —
+    only the edges incident to its block's ball nodes.  Returns
     ``{seed: (ok, members)}``; ``ok=False`` means growth escaped the
     delivered ball (EgoOverflow) and the caller must escalate the
     radius for that seed."""
     import pandas as pd
 
-    seed_df = spark.createDataFrame(
-        [(i % n_blocks, s) for i, s in enumerate(seeds)], "block int, seed string"
+    edges_b = (
+        ball.select("block", "node")
+        .distinct()
+        .join(sym, "node")
+        # fresh attributes for block (block + 0) and node (alias u): the
+        # cogroup below keys both sides on "block", and edges_b's columns
+        # descend from ball's — a shared exprId would trip the
+        # ambiguous-self-join check
+        .select((F.col("block") + F.lit(0)).alias("block"), F.col("node").alias("u"), "v", "w")
     )
-    ball = seed_df.select("block", "seed", F.col("seed").alias("node"))
-    frontier = ball
-    for _ in range(radius):
-        # the frontier/ball lineages share ancestors — alias every side so
-        # the self-join column references stay unambiguous
-        nxt = (
-            frontier.alias("f")
-            .join(sym.alias("s"), F.col("f.node") == F.col("s.u"))
-            .select(
-                F.col("f.block").alias("block"),
-                F.col("f.seed").alias("seed"),
-                F.col("s.v").alias("node"),
-            )
-            .distinct()
-        )
-        frontier = (
-            nxt.alias("n")
-            .join(
-                ball.alias("b"),
-                (F.col("n.seed") == F.col("b.seed"))
-                & (F.col("n.node") == F.col("b.node")),
-                "left_anti",
-            )
-            .select("n.block", "n.seed", "n.node")
-        )
-        ball = ball.unionByName(frontier)
-    ball = ball.persist()
-    try:
-        block_nodes = ball.select("block", "node").distinct()
-        edges_b = (
-            block_nodes.alias("bn")
-            .join(sym.alias("s2"), F.col("bn.node") == F.col("s2.u"))
-            # (block + 0) mints a fresh attribute: the cogroup below keys both
-            # sides on "block", and edges_b's block descends from ball's — the
-            # shared exprId would trip the ambiguous-self-join check
-            .select(
-                (F.col("bn.block") + F.lit(0)).alias("block"), "s2.u", "s2.v", "s2.w"
-            )
-        )
 
-        def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            local: dict = defaultdict(dict)
-            for u, v, w in right[["u", "v", "w"]].itertuples(index=False):
-                local[u][v] = float(w)
-            out = {"seed": [], "members": [], "ok": []}
-            for s, grp in left.groupby("seed"):
-                comp = set(grp["node"])
-                try:
-                    mem = sorted(_grow(s, local, penalty, complete=comp))
-                    ok = True
-                except EgoOverflow:
-                    mem, ok = [], False
-                out["seed"].append(s)
-                out["members"].append(mem)
-                out["ok"].append(ok)
-            return pd.DataFrame(out)
+    def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        local: dict = defaultdict(dict)
+        for u, v, w in right[["u", "v", "w"]].itertuples(index=False):
+            local[u][v] = float(w)
+        out = {"seed": [], "members": [], "ok": []}
+        for s, grp in left.groupby("seed"):
+            comp = set(grp["node"])
+            try:
+                mem = sorted(_grow(s, local, penalty, complete=comp))
+                ok = True
+            except EgoOverflow:
+                mem, ok = [], False
+            out["seed"].append(s)
+            out["members"].append(mem)
+            out["ok"].append(ok)
+        return pd.DataFrame(out)
 
-        rows = (
-            ball.groupBy("block")
-            .cogroup(edges_b.groupBy("block"))
-            .applyInPandas(kernel, "seed string, members array<string>, ok boolean")
-            .collect()
-        )
-    finally:
-        ball.unpersist()
+    rows = (
+        ball.groupBy("block")
+        .cogroup(edges_b.groupBy("block"))
+        .applyInPandas(kernel, "seed string, members array<string>, ok boolean")
+        .collect()
+    )
     return {r["seed"]: (r["ok"], r["members"]) for r in rows}
 
 
@@ -251,18 +241,19 @@ def _cluster_one_ego(
     overlap_threshold: float,
     min_size: int,
     min_density: float,
-    radius: int,
-    max_doublings: int,
 ) -> DataFrame:
     """ClusterOne without any full-graph driver materialization: the
     driver holds only the node/degree list (O(V)), the grown sets and
     the final cluster stats; the edge list stays distributed.
 
     Growth runs under :func:`_grow_ego_blocks` with escalating radius
-    (doubled per round, ``max_doublings`` times) for the seeds whose
-    greedy escaped the delivered ball; any stubborn residue after the
-    last escalation falls back to one full-adjacency collect — the
-    documented exactness backstop.  Per-seed growth provably equals the
+    (``EGO_RADIUS``, doubled per round ``EGO_MAX_DOUBLINGS`` times) for
+    the seeds whose greedy escaped the delivered ball.  Each round
+    carries the pending seeds' ``(ball, frontier)`` on and extends it by
+    the radius difference, keeping each seed's round-1 block.  Any
+    stubborn residue after the last escalation falls back to one
+    full-adjacency collect — the documented exactness backstop, which
+    warns.  Per-seed growth provably equals the
     broadcast path's (same adjacency values reach ``_grow``).  Final
     per-cluster w_in/w_bound/density are computed as distributed joins
     of the membership table against the edge list, replacing the
@@ -279,34 +270,49 @@ def _cluster_one_ego(
     parity fixtures, and at scale the output difference is bounded by
     that degeneracy, not by the strategy."""
     sym = (
-        und.selectExpr("a AS u", "b AS v", "w")
-        .unionByName(und.selectExpr("b AS u", "a AS v", "w"))
+        und.selectExpr("a AS node", "b AS v", "w")
+        .unionByName(und.selectExpr("b AS node", "a AS v", "w"))
         .persist()
     )
     # try/finally: a kernel failure mid-growth must not leave the cached
     # union pinned for the session (sym is only needed during growth —
     # the final stats joins below read the smaller `und` directly)
     try:
-        degree = {r["u"]: float(r["d"]) for r in sym.groupBy("u").agg(F.sum("w").alias("d")).collect()}
+        degree = {r["node"]: float(r["d"]) for r in sym.groupBy("node").agg(F.sum("w").alias("d")).collect()}
         seeds = sorted(degree, key=lambda u: (-degree[u], u))
         n_blocks = max(2, spark.sparkContext.defaultParallelism)
 
+        ball = spark.createDataFrame(
+            [(i % n_blocks, s, s) for i, s in enumerate(seeds)],
+            "block int, seed string, node string",
+        )
+        frontier = ball
         grown_map: dict = {}
         pending = seeds
-        r = radius
-        rounds = 0
-        while pending and rounds <= max_doublings:
-            res = _grow_ego_blocks(spark, sym, pending, penalty, r, n_blocks)
-            for s, (ok, mem) in res.items():
+        reached = 0
+        for rounds in range(EGO_MAX_DOUBLINGS + 1):
+            if rounds:
+                keep = spark.createDataFrame([(s,) for s in pending], "seed string")
+                ball = ball.join(keep, "seed", "semi")
+                frontier = frontier.join(keep, "seed", "semi")
+            radius = EGO_RADIUS << rounds
+            ball, frontier = _ego_hops(sym, ball, frontier, radius - reached)
+            reached = radius
+            for s, (ok, mem) in _grow_ego_blocks(sym, ball, penalty).items():
                 if ok:
                     grown_map[s] = frozenset(mem)
             pending = [s for s in pending if s not in grown_map]
-            r *= 2
-            rounds += 1
+            if not pending:
+                break
         if pending:
             # exactness backstop: growth for these seeds escaped every
             # escalated ball — rare (deep greedy walks), and the only point
             # where the ego path may touch the full edge list
+            warnings.warn(
+                f"cluster_one: {len(pending)} seeds escaped their radius-{reached} "
+                "ego balls; growing them over the collected full adjacency",
+                RuntimeWarning,
+            )
             adj = _collect_adj(und)
             for s in pending:
                 grown_map[s] = _grow(s, adj, penalty)
@@ -430,10 +436,7 @@ def cluster_one(
     overlap_threshold: float = 0.8,
     min_size: int = 3,
     min_density: float = 0.5,
-    seed_parallel_threshold: int = 512,
     ego_edge_threshold: int = 2_000_000,
-    ego_radius: int = 2,
-    ego_max_doublings: int = 2,
 ) -> DataFrame:
     """Run the ClusterOne greedy over an undirected weighted edge list.
 
@@ -445,7 +448,7 @@ def cluster_one(
 
     Triple strategy (the drivernet/rule-BFS pattern, one more rung):
 
-    - ≤ ``seed_parallel_threshold`` seeds: driver-loop growth over the
+    - ≤ ``SEED_PARALLEL_THRESHOLD`` seeds: driver-loop growth over the
       collected adjacency (the jar's single-node operating point);
     - more seeds, ≤ ``ego_edge_threshold`` aggregated edges: per-seed
       growth fans out over executors against a broadcast adjacency
@@ -475,14 +478,7 @@ def cluster_one(
     try:
         if und.count() > ego_edge_threshold:
             return _cluster_one_ego(
-                spark,
-                und,
-                penalty,
-                overlap_threshold,
-                min_size,
-                min_density,
-                ego_radius,
-                ego_max_doublings,
+                spark, und, penalty, overlap_threshold, min_size, min_density
             )
         adj = _collect_adj(und)
     finally:
@@ -491,7 +487,7 @@ def cluster_one(
     degree = {u: sum(nb.values()) for u, nb in adj.items()}
     seeds = sorted(degree, key=lambda u: (-degree[u], u))
     grown_map: dict = {}
-    if len(seeds) > seed_parallel_threshold:
+    if len(seeds) > SEED_PARALLEL_THRESHOLD:
         n_blocks = max(2, spark.sparkContext.defaultParallelism)
         grown_map = _grow_distributed(spark, adj, seeds, penalty, n_blocks)
     clustered: set = set()

@@ -8,7 +8,7 @@ Two pieces:
   the K-round loop itself runs as K tiny Spark jobs (groupBy + top-1 +
   anti-join), collecting only one winner row per round.  Event data never
   leaves the cluster — at 100 TB the anti-join shrinks the working set
-  every round, and ``localCheckpoint`` keeps lineage flat.
+  every round, and ``materialize`` keeps lineage flat.
 
 - :func:`permutation_null_coverage` — the reference's 500 randomized
   greedy re-runs (``SignificanceTest.R:28-74``) as a broadcast-once +
@@ -25,13 +25,18 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
+# Distinct event tables up to this many rows are collected and the greedy
+# runs on the driver.
+GREEDY_COLLECT_THRESHOLD = 2_000_000
+
 
 def greedy_driver_selection(
     events: DataFrame,
     mut_col: str = "mut_gene",
     event_cols: tuple[str, str] = ("patient", "out_gene"),
     k: int = 5,
-    collect_threshold: int = 2_000_000,
 ) -> list[tuple[str, int]]:
     """Greedy set cover: repeatedly pick the mutated gene covering the most
     remaining (patient, outlier-gene) events; remove covered events.
@@ -42,22 +47,21 @@ def greedy_driver_selection(
     Two physical strategies with identical output (SURVEY §2.6 O3):
 
     - when the distinct event table fits the driver
-      (``<= collect_threshold`` rows), collect once and run the loop
+      (``<= GREEDY_COLLECT_THRESHOLD`` rows), collect once and run the loop
       in-memory — K rounds of full-stage Spark scheduling collapse into
       ONE job + a driver loop (on a real cluster the 2·K job round-trips
       dominate at small K×small data, which is the common case: the
       event table is patients × genes);
     - otherwise the distributed loop: K tiny jobs (groupBy + top-1 +
-      anti-join), collecting only one winner row per round, with
-      ``localCheckpoint`` keeping lineage flat.
+      anti-join), collecting only one winner row per round, with a
+      lazy ``materialize`` per round keeping lineage flat: the next
+      round's top-1 aggregation is the job that stores it, and its empty
+      result ends the loop.
     """
     ev = list(event_cols)
-    # lazy checkpoint (r17): the count is the first action and scans
-    # every partition, so one job computes, persists and counts the
-    # distinct event table instead of two
-    distinct = events.select(mut_col, *ev).distinct().localCheckpoint(eager=False)
+    distinct = materialize(events.select(mut_col, *ev).distinct())
     n_events = distinct.count()
-    if n_events <= collect_threshold:
+    if n_events <= GREEDY_COLLECT_THRESHOLD:
         pdf = distinct.toPandas()
         pdf = pdf.assign(
             event=pdf[ev[0]].astype(str) + "\x1f" + pdf[ev[1]].astype(str)
@@ -78,9 +82,7 @@ def greedy_driver_selection(
         gene, cov = top[0][0], top[0][1]
         out.append((gene, cov))
         covered = remaining.where(F.col(mut_col) == gene).select(*ev).distinct()
-        remaining = remaining.join(covered, ev, "left_anti").localCheckpoint()
-        if remaining.isEmpty():
-            break
+        remaining = materialize(remaining.join(covered, ev, "left_anti"))
     return out
 
 

@@ -26,8 +26,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from .constants import MAX_POSTING, SHINGLE_WIDTH
 from .dedup import shingles_from_tokens
+
+# Rule maps up to this many rules are collected and looped on the driver.
+RULE_BFS_COLLECT_THRESHOLD = 500_000
 
 
 def containment_pairs(
@@ -57,12 +61,12 @@ def containment_pairs(
 
     # one posting aggregation feeds both sizes and pair expansion (see
     # ngram_jaccard_pairs); direction is decided afterwards from the sizes
-    posts = (
+    posts = materialize(
         e.where(F.col("s").isNotNull())
         .groupBy("s")
         .agg(F.collect_list(id_col).alias("__ids"))
-        .where(F.size("__ids") <= max_posting)
-        .localCheckpoint()
+        .where(F.size("__ids") <= max_posting),
+        eager=True,
     )
     sizes = (
         posts.select(F.explode("__ids").alias(id_col))
@@ -166,7 +170,6 @@ def rule_bfs(
     is_in_col: str = "is_in",
     has_col: str = "has",
     max_rounds: int = 10,
-    collect_threshold: int = 500_000,
 ) -> DataFrame:
     """K4: prerequisite-gated level-wise rule BFS (the reference's
     ``get_next_rules`` / ``filter_df_with_map`` loop,
@@ -188,24 +191,26 @@ def rule_bfs(
     rounds, gizmos.py:364-366); tested rules never re-test.
 
     Two physical strategies, identical output: rule maps that fit the
-    driver (``<= collect_threshold`` rules — the reference's own regime,
-    its map_df is a pandas frame) collect once and loop over sets,
-    collapsing ~5 joins × rounds of full-stage scheduling into one job;
-    larger maps run the distributed loop of hash joins with
-    ``localCheckpoint`` per round (bounded lineage, no collect).
+    driver (``<= RULE_BFS_COLLECT_THRESHOLD`` rules — the reference's own
+    regime, its map_df is a pandas frame) collect once and loop over
+    sets, collapsing ~5 joins × rounds of full-stage scheduling into one
+    job; larger maps run the distributed loop of hash joins, carrying
+    one state table ``(rule_id, round, passed)`` that is materialized
+    once per round (bounded lineage, no collect).
 
     Returns (rule_id, round, passed) for every rule that got tested.
     """
-    m = map_df.select(
-        F.col(id_col),
-        F.col(base_col).alias("__base"),
-        F.col(passes_col).alias("__ok"),
-        F.col(is_in_col).alias("__is_in"),
-        F.col(has_col).alias("__has"),
-    ).localCheckpoint(eager=False)  # map construction computes ONCE; the
-    # count below is the first action (full scan), so one job computes,
-    # persists and counts it (r17) — collect/loop then reuse the blocks
-    if m.count() <= collect_threshold:
+    # map construction computes ONCE: the count is the job that stores it
+    m = materialize(
+        map_df.select(
+            F.col(id_col),
+            F.col(base_col).alias("__base"),
+            F.col(passes_col).alias("__ok"),
+            F.col(is_in_col).alias("__is_in"),
+            F.col(has_col).alias("__has"),
+        )
+    )
+    if m.count() <= RULE_BFS_COLLECT_THRESHOLD:
         rows = m.collect()
         ok = {r[0]: bool(r[2]) for r in rows}
         base = [r[0] for r in rows if r[1]]
@@ -231,23 +236,18 @@ def rule_bfs(
         return spark.createDataFrame(
             out_rows, f"{id_col} string, round int, passed boolean"
         )
-    out = (
-        m.where(F.col("__base"))
-        .select(id_col, F.lit(0).alias("round"), F.col("__ok").alias("passed"))
-        .localCheckpoint()
+    # tested = every rule in the state; passed_all = its passed rows
+    state = m.where(F.col("__base")).select(
+        id_col, F.lit(0).alias("round"), F.col("__ok").alias("passed")
     )
-    tested = out.select(id_col)
-    passed_all = out.where(F.col("passed")).select(id_col)
     for rnd in range(1, max_rounds + 1):
+        passed_all = state.where(F.col("passed")).select(id_col)
         cand_ids = (
             m.join(passed_all, id_col, "semi")
             .select(F.explode("__is_in").alias(id_col))
             .distinct()
         )
-        cand = (
-            m.join(cand_ids, id_col, "semi")
-            .join(tested, id_col, "left_anti")
-        )
+        cand = m.join(cand_ids, id_col, "semi").join(state, id_col, "left_anti")
         unmet = (
             cand.select(F.col(id_col), F.explode_outer("__has").alias("__pr"))
             .where(F.col("__pr").isNotNull())
@@ -257,14 +257,12 @@ def rule_bfs(
             .select(id_col)
             .distinct()
         )
-        to_test = cand.join(unmet, id_col, "left_anti").localCheckpoint()
-        if to_test.isEmpty():
+        to_test = cand.join(unmet, id_col, "left_anti")
+        state = materialize(
+            state.unionByName(
+                to_test.select(id_col, F.lit(rnd).alias("round"), F.col("__ok").alias("passed"))
+            )
+        )
+        if state.where(F.col("round") == rnd).count() == 0:
             break
-        out = out.unionByName(
-            to_test.select(id_col, F.lit(rnd).alias("round"), F.col("__ok").alias("passed"))
-        ).localCheckpoint()
-        tested = tested.unionByName(to_test.select(id_col)).localCheckpoint()
-        passed_all = passed_all.unionByName(
-            to_test.where(F.col("__ok")).select(id_col)
-        ).localCheckpoint()
-    return out
+    return state

@@ -36,6 +36,7 @@ from .constants import (
     SHINGLE_WIDTH,
     SIMHASH_BITS,
 )
+from ..session import materialize
 
 
 def content_hash(col: Column | str) -> Column:
@@ -409,7 +410,7 @@ def connected_components(
     right) under DIFFERENT partitionings, so exchange reuse cannot
     dedupe them and a lazy segment re-executes the previous round's
     work ~4×; fully lazy, the tree doubles per round and the optimizer
-    stalls for minutes (both measured r16 — per-round localCheckpoint
+    stalls for minutes (both measured r16 — per-round materialisation
     is the right shape here).  EVERY round is self-checking at no extra
     join: the round carries its input label through as ``__prev``, so
     the per-round checkpoint doubles as the convergence evidence (one
@@ -420,17 +421,14 @@ def connected_components(
     converged graph never pays another edge pass.
     """
     import warnings
-    # lazy checkpoint (r17, guide §1.2 — fewer jobs): the edge relation
-    # is only marked here; the labels checkpoint job below is the first
-    # action that computes it, so setup costs ONE Spark job instead of
-    # two.  Every round reads the then-persisted blocks as before.
-    edges = (
+    # the edge relation is only marked here; the eager labels mark below
+    # is the first action that computes it
+    edges = materialize(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(
             pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
     nodes = edges.select(F.col("src").alias("id")).distinct()
     if vertices is not None:
@@ -438,7 +436,7 @@ def connected_components(
         nodes = nodes.unionByName(
             vertices.select(F.col(vcol).alias("id"))
         ).distinct()
-    labels = nodes.select("id", F.col("id").alias("component")).localCheckpoint()
+    labels = materialize(nodes.select("id", F.col("id").alias("component")), eager=True)
 
     def _round(lbl: DataFrame) -> DataFrame:
         # hashmin: min neighbour label (input label rides along as
@@ -473,13 +471,9 @@ def connected_components(
 
     converged = False
     for _ in range(max_iterations):
-        # lazy checkpoint + count = ONE job per round (r17): the changed
-        # count is the first action over the marked round output, so the
-        # same job that computes the round materializes its blocks (the
-        # count filter runs ABOVE the row-complete RDD, so every
-        # partition is computed and persisted in full); the former shape
-        # paid an eager-checkpoint job AND a count job per round.
-        out = _round(labels).localCheckpoint(eager=False)
+        # the changed count is the round's one job: it computes and
+        # stores the marked round output in full
+        out = materialize(_round(labels))
         changed = out.where(F.col("component") < F.col("__prev")).count()
         labels = out.select("id", "component")
         if changed == 0:
@@ -525,7 +519,7 @@ def simhash_pairs(
     Returns (id_a, id_b, hamming).
     """
     assert max_hamming <= n_bands - 1, "pigeonhole completeness needs max_hamming <= n_bands - 1"
-    sh = simhash_table(df, text_col, id_col).localCheckpoint()  # 1 scan, reused 3x
+    sh = materialize(simhash_table(df, text_col, id_col), eager=True)  # 1 scan, reused 3x
     band_bits = SIMHASH_BITS // n_bands
     mask = (1 << band_bits) - 1
     bands = sh.select(

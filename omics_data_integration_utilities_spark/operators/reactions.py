@@ -38,17 +38,6 @@ from pyspark.sql import functions as F
 ReactionKernel = Callable[[pd.DataFrame], pd.DataFrame]
 
 
-def regexp_kernel_pandas(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Pandas replica of the default JVM regexp kernel — stands in for an
-    RDKit ``RunReactants`` kernel in tests of the injectable path."""
-    out = pdf.copy()
-    out["product"] = [
-        __import__("re").sub(p, r, s)
-        for s, p, r in zip(pdf["substrate"], pdf["pattern"], pdf["replacement"])
-    ]
-    return out
-
-
 def apply_reactions(
     substrates: DataFrame,
     rules: DataFrame,

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 
 def _dbl(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -814,10 +816,9 @@ def diversity_sample(
         # the sizes collect below is an ACTION: without a checkpoint the
         # per-cluster greedy would re-run the whole assignment GEMM (and
         # the source scan) a second time — Spark never reuses results
-        # across actions.  localCheckpoint materializes the assignment
-        # once (executor block store, memory-and-disk); both the count
-        # and the greedy read the materialized form.
-        assigned = assigned.localCheckpoint(eager=False)
+        # across actions.  Both the sizes aggregation and the greedy
+        # read the materialized assignment.
+        assigned = materialize(assigned)
     sizes = {
         int(r["list_id"]): int(r["n"])
         for r in assigned.groupBy("list_id").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -1221,8 +1222,8 @@ def ann_recall_certificate(
             score_digits=score_digits,
         )
         .select("query_id", "cand_id")
-        .localCheckpoint()  # reused by every setting below
     )
+    exact = materialize(exact, eager=True)  # reused by every setting below
     # Per-setting probe passes (r17 revert of the r16 single-pass
     # rewrite, verdict item 1): deriving every setting from ONE
     # candidate pass at the largest setting + a conditional running-

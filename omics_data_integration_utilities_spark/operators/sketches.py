@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 
 def _misra_gries_partition(key_col: str, capacity: int, weight_col: str | None = None):
     """Arrow-batched per-partition Misra-Gries summary over a key column
@@ -159,17 +161,14 @@ def frequent_items(
             F.col(key_col).isNotNull() & F.col(weight_col).isNotNull()
         )
         mass = F.sum(weight_col)
-    # phase 1 runs once and feeds candidates AND N.  The checkpoint is
-    # LAZY (r17, guide §1.2 — fewer jobs): the n_total aggregation below
-    # is the first action over the marked RDD, so ONE job runs the MG
-    # scan, persists the summary blocks and reduces the sentinel rows —
-    # the former eager checkpoint paid a separate job for the same scan
-    # (an aggregation computes every partition, so the materialization
-    # is complete).
-    summary = items.mapInPandas(
-        _misra_gries_partition(key_col, capacity, weight_col),
-        schema=f"`{key_col}` {key_type}, part_rows long",
-    ).localCheckpoint(eager=False)
+    # phase 1 runs once and feeds candidates AND N; the n_total
+    # aggregation below is the job that runs the MG scan and stores it
+    summary = materialize(
+        items.mapInPandas(
+            _misra_gries_partition(key_col, capacity, weight_col),
+            schema=f"`{key_col}` {key_type}, part_rows long",
+        )
+    )
     n_total = (
         summary.where(F.col(key_col).isNull())
         .agg(F.sum("part_rows"))

@@ -43,6 +43,7 @@ from ..operators.text import (
     scrub_pii,
     token_count_col,
 )
+from ..session import materialize
 
 
 def curate_documents(
@@ -79,12 +80,10 @@ def curate_documents(
     # branch.  Re-spread first: AQE coalesces the small post-window
     # shuffle to one partition, which would serialize the heavy per-row
     # shingle/pair expansion downstream (bytes-based coalescing cannot
-    # see per-row compute cost).  Cluster note: swap for reliable
-    # checkpoint()/cache to survive executor loss, same as the
-    # iterative plans.
-    uniq = uniq.repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-    ).localCheckpoint(eager=False)
+    # see per-row compute cost).
+    uniq = materialize(
+        uniq.repartition(docs.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
+    )
 
     # single-pass near-dup drop: lose the higher id of every pair
     pairs = ngram_jaccard_pairs(

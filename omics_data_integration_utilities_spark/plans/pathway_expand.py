@@ -17,7 +17,7 @@ iterate.  Spark restatement (SURVEY §7 M6):
   ``ReusedExchange`` dedupes the shared per-round subtrees, removing the
   per-round materialization jobs and their driver round-trips
   (optimization guide §1.2 step 1 / §3.3 — measured 6.4× at sf0.1);
-- for deeper expansions ``localCheckpoint()`` per round cuts the growing
+- for deeper expansions a per-round ``materialize`` cuts the growing
   lineage (the K5 risk note in SURVEY §7; the unrolled plan grows
   O(rounds²) and planning time would dominate) and enables the
   empty-frontier early exit;
@@ -35,10 +35,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 # Rounds up to which the loop stays lazy (one job, ReusedExchange dedupes
 # the shared subtrees).  Beyond this the unrolled plan's O(rounds²) growth
 # makes planning itself the bottleneck (guide §3.3), so the loop falls
-# back to per-round localCheckpoint materialization with early exit.
+# back to per-round materialization with early exit.
 UNROLL_ROUNDS = 4
 
 
@@ -51,7 +53,6 @@ def iterative_expand(
     delta_col: str = "delta",
     digits: int = 1,
     known: DataFrame | None = None,
-    unroll: bool | None = None,
 ) -> DataFrame:
     """Breadth-first expansion: returns (root, structure_id, round) for
     every structure reachable from each root in ≤ ``iterations`` rounds.
@@ -62,14 +63,13 @@ def iterative_expand(
     shuffled equi-join per round on the integer price-grid key; the
     anti-join dedup keeps the frontier minimal.
 
-    ``unroll`` (default: auto, ``iterations <= UNROLL_ROUNDS``): when
-    True the loop builds one lazy composite plan — no per-round jobs, no
-    driver round-trips, identical results (an empty round contributes
-    zero rows either way, so skipping the early exit changes nothing).
+    Up to ``UNROLL_ROUNDS`` rounds the loop builds one lazy composite
+    plan — no per-round jobs, no driver round-trips, identical results
+    (an empty round contributes zero rows either way, so skipping the
+    early exit changes nothing).
     """
     scale = 10 ** digits
-    if unroll is None:
-        unroll = iterations <= UNROLL_ROUNDS
+    unroll = iterations <= UNROLL_ROUNDS
     known_src = known if known is not None else structures
     known = known_src.select(
         F.round(F.col(mass_col) * scale, 0).cast("long").alias("__key"),
@@ -81,7 +81,7 @@ def iterative_expand(
         # so the scan + key projection run once instead of per round (in
         # the unrolled form ReusedExchange serves the same purpose inside
         # the single job)
-        known = known.localCheckpoint(eager=False)
+        known = materialize(known)
 
     frontier = structures.select(
         F.col(id_col).alias("root"), F.col(id_col).alias("structure_id"), F.col(mass_col)
@@ -105,7 +105,7 @@ def iterative_expand(
             .join(reached, ["root", "structure_id"], "left_anti")
         )
         if not unroll:
-            new = new.localCheckpoint()
+            new = materialize(new, eager=True)
             if new.isEmpty():
                 break
         out = out.unionByName(new.select("root", "structure_id").withColumn("round", F.lit(rnd)))

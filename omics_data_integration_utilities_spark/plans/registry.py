@@ -37,6 +37,7 @@ from ..operators.constants import (
     MINHASH_ROWS_PER_BAND,
     SIMHASH_BITS,
 )
+from ..session import materialize
 from ..sources.readers import local_frame, read_parquet_table
 from ..streaming.events import tumbling_event_agg
 from .mass_annotation import DEFAULT_ADDUCTS, default_adducts, mass_annotation_plan
@@ -443,11 +444,11 @@ def _j12_tables(
     )
     # mutations, the outlier stats and the outlier join-back all re-derive
     # this 3-table join — without materialization the plan scans the
-    # inputs 10 times (3 derivations x 3 tables + edges).  One
-    # localCheckpoint = one join pass; downstream reads are local.
-    joined = joined.select(
-        "o_custkey", "p_brand", "p_type", "l_extendedprice"
-    ).localCheckpoint()
+    # inputs 10 times (3 derivations x 3 tables + edges).  One eager
+    # materialisation = one join pass; downstream reads are local.
+    joined = materialize(
+        joined.select("o_custkey", "p_brand", "p_type", "l_extendedprice"), eager=True
+    )
     mutations = joined.select(
         F.col("o_custkey").alias("patient"), F.col("p_brand").alias("gene")
     ).distinct()
@@ -456,7 +457,7 @@ def _j12_tables(
     ).distinct()
     # broadcast_stats=True: the stats table is one row per p_type (~150
     # at any TPC-H scale — the key is a fixed category vocabulary, not a
-    # growing id space), but it sits above the localCheckpoint so the
+    # growing id space), but it sits above the checkpoint so the
     # static planner has no stats and picks a sort-merge join, shuffling
     # the full checkpointed relation on a 150-key column (skew by
     # construction).  The explicit broadcast keeps the big side unshuffled.

@@ -14,6 +14,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from ..sources.readers import local_frame
 from .pathway_expand import iterative_expand
 from .registry import _spread_scan, _t, TRANSITIONS, TRANSITIONS_SQL_VALUES
@@ -252,7 +253,7 @@ def q_plan_enzyme_annotation(
         enzyme = enzyme.repartition(
             spark.sparkContext.defaultParallelism, F.col("gene")
         )
-        enzyme = enzyme.localCheckpoint(eager=False)
+        enzyme = materialize(enzyme)
 
     # 6. per-reaction transitions; substrate/product renames; outer merge
     types = (

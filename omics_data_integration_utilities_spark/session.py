@@ -1,4 +1,4 @@
-"""SparkSession factory.
+"""SparkSession factory and the one materialisation primitive.
 
 Local testing runs one JVM with N threads; the configs below are the ones
 that matter at cluster scale too (AQE for runtime re-planning and skew
@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -65,3 +65,25 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Cut ``df``'s lineage — the package's one checkpoint primitive.
+
+    With a checkpoint dir on the SparkContext (``sc.setCheckpointDir``,
+    Spark's own deployment setting) this is a reliable ``checkpoint``,
+    which survives executor loss and costs a write job per call; without
+    one it is an executor-local ``localCheckpoint``.
+
+    What a mark costs:
+
+    - under AQE even a lazy mark runs the plan's shuffle-map stages at
+      once, when it asks for the plan's RDD;
+    - a lazy mark followed by the caller's own full-scan action is ONE
+      job that computes, stores and answers.  A ``count`` or an
+      aggregation scans every partition; ``isEmpty`` or a bare ``first``
+      or ``limit`` does not, so those want ``eager=True``.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager)
+    return df.localCheckpoint(eager)

@@ -88,19 +88,20 @@ def test_cluster_one_min_size_one_and_density_guard(spark):
             tuple,
             _cluster_one_ego(
                 spark, und, penalty=2.0, overlap_threshold=0.8, min_size=1,
-                min_density=0.0, radius=2, max_doublings=2,
+                min_density=0.0,
             ).collect(),
         )
     )
     assert ego == rows
 
 
-def test_cluster_one_seed_parallel_parity(spark):
+def test_cluster_one_seed_parallel_parity(spark, monkeypatch):
     """The seed-parallel growth path (threshold 0 forces it) must be
     bit-identical to the driver-loop core on a planted-module graph with
     noise bridges: _grow(seed) is a pure function of (seed, adj), the
     sequential `clustered` set only decides whether a seed grows, so the
     grow-all-then-replay strategy reproduces the sequential output."""
+    from omics_data_integration_utilities_spark.analytics import clusterone
     from omics_data_integration_utilities_spark.analytics.clusterone import cluster_one
 
     # 24 nodes in four K6-ish blocks, plus deterministic cross bridges
@@ -116,21 +117,21 @@ def test_cluster_one_seed_parallel_parity(spark):
     edges = spark.createDataFrame(rows, "src string, dst string, weight double")
 
     driver = sorted(map(tuple, cluster_one(edges).collect()))
-    dist = sorted(
-        map(tuple, cluster_one(edges, seed_parallel_threshold=0).collect())
-    )
+    monkeypatch.setattr(clusterone, "SEED_PARALLEL_THRESHOLD", 0)
+    dist = sorted(map(tuple, cluster_one(edges).collect()))
     assert driver == dist
     assert len({r[0] for r in driver}) >= 2
 
 
-def test_cluster_one_auto_switch_parity_large_graph(spark):
-    """Above seed_parallel_threshold the dual strategy switches to the
+def test_cluster_one_auto_switch_parity_large_graph(spark, monkeypatch):
+    """Above SEED_PARALLEL_THRESHOLD the dual strategy switches to the
     distributed grow path AUTOMATICALLY; on a 600-node planted-module
     graph (100 hexagon blocks + weak bridges) the auto-switched run must
     equal a driver-loop-forced run exactly."""
     import pytest
 
     pytest.importorskip("pandas")
+    from omics_data_integration_utilities_spark.analytics import clusterone
     from omics_data_integration_utilities_spark.analytics.clusterone import cluster_one
 
     rows = []
@@ -147,9 +148,8 @@ def test_cluster_one_auto_switch_parity_large_graph(spark):
     edges = spark.createDataFrame(rows, "src string, dst string, weight double")
 
     auto = sorted(map(tuple, cluster_one(edges).collect()))          # 600 > 512 → distributed
-    forced_driver = sorted(
-        map(tuple, cluster_one(edges, seed_parallel_threshold=10**9).collect())
-    )
+    monkeypatch.setattr(clusterone, "SEED_PARALLEL_THRESHOLD", 10**9)
+    forced_driver = sorted(map(tuple, cluster_one(edges).collect()))
     assert auto == forced_driver
     assert len({r[0] for r in auto}) > 50
 
@@ -157,23 +157,21 @@ def test_cluster_one_auto_switch_parity_large_graph(spark):
     # never collected/broadcast, each task sees only its block's
     # radius-2 ego edges) must be bit-identical on the same 600-node
     # planted-module graph
-    ego = sorted(
-        map(
-            tuple,
-            cluster_one(
-                edges, seed_parallel_threshold=10**9, ego_edge_threshold=0
-            ).collect(),
-        )
-    )
+    ego = sorted(map(tuple, cluster_one(edges, ego_edge_threshold=0).collect()))
     assert ego == forced_driver
 
 
-def test_cluster_one_ego_radius_escalation_parity(spark):
+def test_cluster_one_ego_radius_escalation_parity(spark, monkeypatch):
     """Ego-delivery with radius 1 forces EgoOverflow for every seed whose
     greedy reaches 2 hops out; the escalation loop (1 → 2 → 4) must
     recover them and the output must still equal the driver path — this
     exercises the overflow guard, the escalation rounds AND (with
-    max_doublings=0) the full-collect backstop."""
+    EGO_MAX_DOUBLINGS=0) the full-collect backstop, which warns."""
+    import warnings
+
+    import pytest
+
+    from omics_data_integration_utilities_spark.analytics import clusterone
     from omics_data_integration_utilities_spark.analytics.clusterone import cluster_one
 
     rows = []
@@ -188,28 +186,12 @@ def test_cluster_one_ego_radius_escalation_parity(spark):
     edges = spark.createDataFrame(rows, "src string, dst string, weight double")
 
     driver = sorted(map(tuple, cluster_one(edges).collect()))
-    escalated = sorted(
-        map(
-            tuple,
-            cluster_one(
-                edges,
-                seed_parallel_threshold=10**9,
-                ego_edge_threshold=0,
-                ego_radius=1,
-            ).collect(),
-        )
-    )
+    monkeypatch.setattr(clusterone, "EGO_RADIUS", 1)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        escalated = sorted(map(tuple, cluster_one(edges, ego_edge_threshold=0).collect()))
     assert escalated == driver
-    backstop = sorted(
-        map(
-            tuple,
-            cluster_one(
-                edges,
-                seed_parallel_threshold=10**9,
-                ego_edge_threshold=0,
-                ego_radius=1,
-                ego_max_doublings=0,
-            ).collect(),
-        )
-    )
+    monkeypatch.setattr(clusterone, "EGO_MAX_DOUBLINGS", 0)
+    with pytest.warns(RuntimeWarning, match="seeds escaped their radius-1 ego balls"):
+        backstop = sorted(map(tuple, cluster_one(edges, ego_edge_threshold=0).collect()))
     assert backstop == driver

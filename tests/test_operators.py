@@ -542,9 +542,11 @@ def test_smarts_mass_known_values(spark):
         assert abs(got[s] - expected) < 1e-6, (s, got[s], expected)
 
 
-def test_greedy_distributed_path_matches_fast_path(spark):
-    """Force the distributed K-round loop (collect_threshold=0) and check
-    it returns exactly what the collected fast path returns."""
+def test_greedy_distributed_path_matches_fast_path(spark, monkeypatch):
+    """Force the distributed K-round loop (GREEDY_COLLECT_THRESHOLD=0)
+    and check it returns exactly what the collected fast path returns."""
+    from omics_data_integration_utilities_spark.analytics import drivernet
+
     rows = [
         ("A", "p1", "g1"), ("A", "p2", "g1"), ("A", "p3", "g2"),
         ("B", "p1", "g1"), ("B", "p4", "g3"), ("B", "p5", "g1"),
@@ -552,12 +554,13 @@ def test_greedy_distributed_path_matches_fast_path(spark):
     ]
     ev = spark.createDataFrame(rows, "mut_gene string, patient string, out_gene string")
     fast = greedy_driver_selection(ev, k=4)
-    slow = greedy_driver_selection(ev, k=4, collect_threshold=0)
+    monkeypatch.setattr(drivernet, "GREEDY_COLLECT_THRESHOLD", 0)
+    slow = greedy_driver_selection(ev, k=4)
     assert fast == slow
     assert fast[0][0] == "A"
 
 
-def test_rule_bfs_distributed_matches_fast_path(spark):
+def test_rule_bfs_distributed_matches_fast_path(spark, monkeypatch):
     rows = [
         ("A", True, True, ["B", "C", "D"], []),
         ("B", False, False, ["C"], ["A"]),
@@ -565,6 +568,7 @@ def test_rule_bfs_distributed_matches_fast_path(spark):
         ("D", False, True, ["E"], ["A"]),
         ("E", False, True, [], ["D"]),
     ]
+    from omics_data_integration_utilities_spark.operators import containment
     from omics_data_integration_utilities_spark.operators.containment import rule_bfs
 
     df = spark.createDataFrame(
@@ -573,17 +577,27 @@ def test_rule_bfs_distributed_matches_fast_path(spark):
         "is_in array<string>, has array<string>",
     )
     fast = sorted(tuple(r) for r in rule_bfs(df).collect())
-    slow = sorted(tuple(r) for r in rule_bfs(df, collect_threshold=0).collect())
+    monkeypatch.setattr(containment, "RULE_BFS_COLLECT_THRESHOLD", 0)
+    slow = sorted(tuple(r) for r in rule_bfs(df).collect())
     assert fast == slow
 
 
 def test_reaction_kernel_injection_matches_jvm_path(spark):
     """The mapInPandas kernel slot (where RDKit RunReactants would go)
     produces identical products/ids to the default JVM regexp path."""
-    from omics_data_integration_utilities_spark.operators.reactions import (
-        apply_reactions,
-        regexp_kernel_pandas,
-    )
+    import re
+
+    from omics_data_integration_utilities_spark.operators.reactions import apply_reactions
+
+    def regexp_kernel_pandas(pdf):
+        """Pandas replica of the default JVM regexp kernel — stands in
+        for an RDKit ``RunReactants`` kernel."""
+        out = pdf.copy()
+        out["product"] = [
+            re.sub(p, r, s)
+            for s, p, r in zip(pdf["substrate"], pdf["pattern"], pdf["replacement"])
+        ]
+        return out
 
     subs = spark.createDataFrame(
         [(1, "CCOCl"), (2, "c1ccccc1N"), (3, "plain")],

@@ -592,14 +592,15 @@ def test_registry_cleanup_drops_final_generation(spark):
         assert not spark.catalog.tableExists(t), t
 
 
-def test_pathway_expand_unrolled_matches_materialized(spark):
+def test_pathway_expand_unrolled_matches_materialized(spark, monkeypatch):
     """r16 optimization: the lazy-unrolled expansion (one job,
     ReusedExchange-deduped subtrees) must produce exactly the rows of the
-    per-round localCheckpoint loop — including when a round dries up
+    per-round materialized loop — including when a round dries up
     (the materialized path early-exits, the unrolled path just unions
     zero rows)."""
     from pyspark.sql import functions as F
 
+    from omics_data_integration_utilities_spark.plans import pathway_expand
     from omics_data_integration_utilities_spark.plans.pathway_expand import (
         iterative_expand,
     )
@@ -611,14 +612,9 @@ def test_pathway_expand_unrolled_matches_materialized(spark):
         [("up", 0.5), ("down", -0.5)], "transition string, delta double"
     )
     for roots in (structs, structs.where(F.col("structure_id") == 4)):
-        a = sorted(
-            map(tuple, iterative_expand(roots, trans, 3, known=structs,
-                                        unroll=True).collect())
-        )
-        b = sorted(
-            map(tuple, iterative_expand(roots, trans, 3, known=structs,
-                                        unroll=False).collect())
-        )
+        # 3 rounds <= UNROLL_ROUNDS: the unrolled plan
+        a = sorted(map(tuple, iterative_expand(roots, trans, 3, known=structs).collect()))
+        with monkeypatch.context() as m:
+            m.setattr(pathway_expand, "UNROLL_ROUNDS", 0)
+            b = sorted(map(tuple, iterative_expand(roots, trans, 3, known=structs).collect()))
         assert a == b and len(a) > 0
-    # default resolves by round count: small unrolls, deep materializes
-    assert iterative_expand(structs, trans, 3, known=structs) is not None
