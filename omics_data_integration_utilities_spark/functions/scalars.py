@@ -3,11 +3,9 @@
 All JVM-side built-ins — no Python UDFs — so they stay inside whole-stage
 codegen.  Each mirrors a reference helper:
 
-- ``ppm_window``      ← ``gizmos.py:133-144`` (±ppm mass tolerance)
 - ``set_encode/decode`` ← ``gizmos.py:40-80`` (``;``-separated set cells)
 - ``concat_key``      ← ``heraldPathways.py:148`` (reaction_substrate key)
 - ``conditional_swap``← ``heraldPathways.py:111-133`` (direction −1 swap)
-- ``round_signed``    ← ``getMassTransitions.py:105-106``
 - ``pearson_corr``    ← ``corrMultiomics.py:52-63`` (NULL on zero variance)
 """
 
@@ -15,13 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def ppm_window(value: Column | str, ppm: float) -> tuple[Column, Column]:
-    """(low, high) bounds of a ±ppm tolerance window around ``value``."""
-    v = F.col(value) if isinstance(value, str) else value
-    tol = v * F.lit(ppm) / F.lit(1_000_000.0)
-    return (v - tol, v + tol)
 
 
 def set_decode(col: Column | str, sep: str = ";") -> Column:
@@ -58,12 +49,6 @@ def conditional_swap(df: DataFrame, flag: Column, pairs: list[tuple[str, str]]) 
         exprs[a] = F.when(flag, F.col(b)).otherwise(F.col(a))
         exprs[b] = F.when(flag, F.col(a)).otherwise(F.col(b))
     return df.withColumns(exprs)
-
-
-def round_signed(col: Column | str, digits: int) -> Column:
-    """Round keeping sign semantics used for transition matching keys."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(c, digits)
 
 
 def pearson_corr(x: Column | str, y: Column | str) -> Column:

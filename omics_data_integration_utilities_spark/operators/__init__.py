@@ -25,7 +25,6 @@ from .aggregates import (  # noqa: F401
     correlate_long_matrices,
 )
 from .dedup import (  # noqa: F401
-    content_hash,
     exact_dedup,
     minhash_signatures,
     lsh_band_keys,

@@ -39,12 +39,6 @@ from .constants import (
 from ..session import materialize
 
 
-def content_hash(col: Column | str) -> Column:
-    """60-bit integer content hash, identical in Spark and DuckDB."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-
-
 def tokens_col(text: Column | str, sep: str = " ") -> Column:
     c = F.col(text) if isinstance(text, str) else text
     return F.split(c, sep)
@@ -1522,12 +1516,16 @@ def extend_dedup_index(
     already compacts; between extends the probe semantics only require
     the index to cover the kept corpus as of the last generation.
     """
-    if name == index.name or path == index.path:
+    same_path = _normalize_table_location(path) == _normalize_table_location(
+        index.path
+    )
+    if name == index.name or same_path:
         # a shared NAME breaks blue-green even when the path differs (the
         # DROP below would unregister the old generation's catalog
         # entries — the very tables live probes resolve by name — before
-        # the new data exists); a shared PATH would overwrite the old
-        # generation's metadata dir
+        # the new data exists); a shared PATH, in any spelling (trailing
+        # slash, relative), would overwrite the old generation's metadata
+        # dir
         raise ValueError(
             "extend_dedup_index: the new generation needs a different "
             "name AND path (same-name write would unregister the "

@@ -58,6 +58,10 @@ def get_spark(
             "spark.cleaner.periodicGC.interval",
             os.environ.get("OMICS_SPARK_PERIODIC_GC", "45s"),
         )
+        # materialize's reliable checkpoints (a checkpoint dir set on the
+        # SparkContext) are deleted once their RDD is garbage; without a
+        # checkpoint dir this does nothing
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

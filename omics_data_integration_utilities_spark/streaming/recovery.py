@@ -20,8 +20,10 @@ that workflow as code:
   racing the recovery loses loudly (the exact ABA window the r16
   posix token hardening closes).
 
-Completeness is defined by what readers need: the manifest parses AND
-every referenced bucket dir exists (an empty bucket map is complete — a
+Completeness is defined by what readers need: the manifest parses to a
+JSON object (the one loader in :mod:`.sinks`, so a damaged manifest is
+judged as every commit and read judges it) AND every referenced bucket
+dir exists (an empty bucket map is complete — a
 fully-tombstoned snapshot).  Only manifests are generations: a version
 dir without one is never a restore target, since CURRENT must name a
 manifest for any reader or commit to load it.
@@ -32,25 +34,14 @@ integrative_omics/gizmos.py); north-star operational surface.
 
 from __future__ import annotations
 
-import json
-
 from .commitstore import SnapshotStore, as_store
-from .sinks import _CURRENT, _MANIFEST_PREFIX, _batch_digits, _pointer
+from .sinks import _CURRENT, _batch_digits, _generations, _load_manifest, _pointer
 
 
 def _manifest_complete(store: SnapshotStore, name: str) -> "tuple[bool, str]":
-    got = store.get_text(name)
-    if got is None:
-        return False, "manifest object missing"
-    try:
-        man = json.loads(got[0])
-    except ValueError:
-        return False, "manifest unparseable"
-    if not isinstance(man, dict):
-        # valid JSON but not an object ('null', '[]', a bare number —
-        # truncation/corruption shapes): damaged, not a crash (this
-        # module's whole purpose is diagnosing damaged snapshots)
-        return False, "manifest unparseable (non-object JSON)"
+    man, why = _load_manifest(store, name)
+    if man is None:
+        return False, f"manifest is {why}"
     missing = [
         rel for rel in man.get("buckets", {}).values()
         if not store.exists_prefix(rel)
@@ -73,14 +64,7 @@ def snapshot_lineage(snapshot_dir: "str | SnapshotStore") -> dict:
     report is a snapshot in time, which is all an operator diagnosing a
     damaged pointer needs)."""
     store = as_store(snapshot_dir)
-    names = store.list_names()
-    manifests = sorted(
-        (
-            n for n in names
-            if n.startswith(_MANIFEST_PREFIX) and n.endswith(".json")
-        ),
-        reverse=True,
-    )
+    manifests, versions = _generations(store)
     cur, _ = _pointer(store)
     gens: "list[dict]" = []
     for name in manifests:
@@ -93,11 +77,8 @@ def snapshot_lineage(snapshot_dir: "str | SnapshotStore") -> dict:
                 "detail": detail,
             }
         )
-    # version dirs are probed only when no manifest decided the layout —
-    # on an object store every exists_prefix is a LIST round-trip
-    on_disk = bool(manifests) or any(
-        n.startswith("v") and store.exists_prefix(n) for n in names
-    )
+    # version dirs are probed only when no manifest decided the layout
+    on_disk = bool(manifests) or any(versions)
     complete_names = [g["name"] for g in gens if g["complete"]]
     return {
         "layout": "bucketed" if on_disk else "empty",

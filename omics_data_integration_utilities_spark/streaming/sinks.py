@@ -19,13 +19,34 @@ The newest ``keep_versions`` manifests are retained per flip so
 in-flight readers of a superseded generation finish their scan; older
 generations are pruned.
 
-Replay contract, per ``batch_id``: the caller numbers its commits with
-a monotone ``batch_id``, and every version and manifest name is a pure
-function of it.  Re-running a commit whose ``CURRENT`` flip happened is
-a no-op; re-running one that crashed before the flip re-derives the
-same next version from the still-current manifest; a ``batch_id``
-below the committed one is refused.  So a caller that retries a failed
-batch under its original id gets exactly-once output.
+Every commit — upsert, CDC apply and the rebucket/compaction/evolution
+maintenance commit — runs ONE skeleton, :func:`_bucketed_commit`, and
+differs only in its data step.  The skeleton, in order:
+
+- names the version dir and manifest from ``batch_id`` (pure functions
+  of it) and refuses ``n_buckets < 1``;
+- reads CURRENT.  If CURRENT names this batch's manifest the commit
+  happened: a replay re-runs retention (a crash may have landed between
+  the flip and the prune) and returns.  A ``batch_id`` below the
+  committed one is refused (a restarted numbering would clobber version
+  dirs that kept manifests reference).  CURRENT missing while manifests
+  or version dirs exist is a damaged pointer: refused rather than reset.
+  CURRENT naming a missing, unparseable or non-object manifest is a
+  damaged snapshot: refused before any write;
+- refuses key columns that differ from the pinned ones, order included
+  (``xxhash64(a, b) != xxhash64(b, a)``);
+- runs the data step, which applies its own pins and returns the rows
+  to write, the bucket dirs carried by reference and the new pins;
+- writes the rows partitioned by ``__bucket`` into the version dir, and
+  deletes that dir if the write fails (CURRENT still names the base);
+- puts the manifest, flips CURRENT conditionally on the generation read
+  at the start (the commit point), and prunes past ``keep_versions``.
+
+So a caller that retries a failed batch under its original id gets
+exactly-once output: a crash before the flip leaves leftovers that the
+replay rewrites from the still-current base (mode overwrite and an
+unconditional manifest put — only the replay of the same batch from the
+same base can rewrite a version-named manifest, with identical content).
 
 ``n_buckets=1`` is the whole-snapshot-rewrite shape: one bucket and one
 file per commit, plus a manifest put.  It is the cheaper choice when
@@ -36,14 +57,15 @@ manifest pins ``n_buckets``, the key schema and the row schema;
 :func:`rebucket_bucketed_snapshot` is the one sanctioned way to change
 them.
 
-A commit runs two Spark jobs: an Observation of the batch's buckets (a
-seed commit skips it) and one merge write with one exchange.  CDC apply
-(r14): :func:`apply_cdc_batch_into_bucketed_snapshot` adds DELETE
-tombstones — an op column of ``upsert``/``delete`` rows, committed in
-one manifest flip by the same merge: the right-to-be-forgotten half a
-training-data snapshot needs.  An unknown op, or both ops on one key of
-an unordered batch, fails the merge write (``raise_error``); the
-version dir is deleted and the caller gets a ``ValueError``.
+An upsert or CDC commit runs two Spark jobs: an Observation of the
+batch's buckets (a seed commit skips it) and one merge write with one
+exchange.  CDC apply (r14): :func:`apply_cdc_batch_into_bucketed_snapshot`
+adds DELETE tombstones — an op column of ``upsert``/``delete`` rows,
+committed in one manifest flip by the same merge: the right-to-be-
+forgotten half a training-data snapshot needs.  An unknown op, or both
+ops on one key of an unordered batch, fails the merge write
+(``raise_error``); the version dir is deleted and the caller gets a
+``ValueError``.
 
 Deployment shape (r15, r14 verdict item 2): every driver-side metadata
 operation — pointer read/flip, manifest put, listing, pruning — goes
@@ -66,6 +88,8 @@ from __future__ import annotations
 
 import json
 import re
+from collections.abc import Iterator
+from functools import partial
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 
@@ -99,6 +123,66 @@ def _batch_digits(name: "str | None") -> "int | None":
         return None
     digits = "".join(c for c in name if c.isdigit())
     return int(digits) if digits else None
+
+
+def _generations(store: SnapshotStore) -> "tuple[list[str], Iterator[str]]":
+    """One listing of the snapshot root: the manifest names, newest
+    first, and an iterator over the version dirs.  The iterator probes
+    ``exists_prefix`` lazily (a LIST round-trip on an object store), so
+    a caller that stops early probes little."""
+    names = store.list_names()
+    manifests = sorted(
+        (n for n in names if n.startswith(_MANIFEST_PREFIX) and n.endswith(".json")),
+        reverse=True,
+    )
+    return manifests, (
+        n for n in names if n.startswith("v") and store.exists_prefix(n)
+    )
+
+
+def _load_manifest(store: SnapshotStore, name: str) -> "tuple[dict | None, str]":
+    """The manifest ``name`` as ``(manifest, "")``, or ``(None, why)``
+    where ``why`` is ``"missing"``, ``"unparseable"`` or
+    ``"non-object JSON"`` (``null``, ``[]``: truncation and corruption
+    shapes)."""
+    got = store.get_text(name)
+    if got is None:
+        return None, "missing"
+    try:
+        man = json.loads(got[0])
+    except ValueError:
+        return None, "unparseable"
+    if not isinstance(man, dict):
+        return None, "non-object JSON"
+    return man, ""
+
+
+def _require_manifest(
+    store: SnapshotStore, name: str, missing: Exception
+) -> dict:
+    """The manifest ``name``; raises ``missing`` when it is not on disk,
+    and the damaged-snapshot RuntimeError, the same for every caller,
+    when it does not parse to a JSON object."""
+    man, why = _load_manifest(store, name)
+    if why == "missing":
+        raise missing
+    if man is None:
+        raise RuntimeError(
+            f"bucketed snapshot at {store.describe()!r}: manifest {name!r} "
+            f"is {why} — damaged snapshot; restore the manifest or repoint "
+            "CURRENT (recovery.snapshot_lineage lists the complete ones)"
+        )
+    return man
+
+
+def _current_manifest(
+    store: SnapshotStore, cur_name: str, error: type = RuntimeError
+) -> dict:
+    return _require_manifest(store, cur_name, error(
+        f"bucketed snapshot at {store.describe()!r}: CURRENT names "
+        f"{cur_name!r} but that manifest is missing — damaged "
+        "snapshot; restore the manifest or repoint CURRENT"
+    ))
 
 
 def _flip_current(store: SnapshotStore, name: str, expect: object) -> None:
@@ -156,15 +240,6 @@ def _refuse_stale_batch(
         )
 
 
-# ---------------------------------------------------------------------------
-# Bucketed upsert snapshot (r13 verdict item 2), the one snapshot layout.
-# Version dirs are partitioned by key-hash bucket and a batch rewrites
-# ONLY the buckets it touches; untouched buckets carry by reference
-# through a manifest, so per-batch rewrite cost is O(touched-bucket
-# data + batch), never O(snapshot).
-# ---------------------------------------------------------------------------
-
-
 def _quote(name: str) -> str:
     """A column name as a SQL identifier (backticks doubled, dots kept)."""
     return "`" + name.replace("`", "``") + "`"
@@ -175,22 +250,10 @@ def _bucket_sql(key_cols: "list[str]", n_buckets: int) -> str:
     return f"pmod(xxhash64({keys}), {int(n_buckets)})"
 
 
-def _load_manifest(store: SnapshotStore, name: str) -> "dict | None":
-    got = store.get_text(name)
-    return json.loads(got[0]) if got is not None else None
-
-
-def _current_manifest(
-    store: SnapshotStore, cur_name: str, error: type = RuntimeError
-) -> dict:
-    man = _load_manifest(store, cur_name)
-    if man is None:
-        raise error(
-            f"bucketed snapshot at {store.describe()!r}: CURRENT names "
-            f"{cur_name!r} but that manifest is missing — damaged "
-            "snapshot; restore the manifest or repoint CURRENT"
-        )
-    return man
+def _types(df: DataFrame, cols: "list[str] | None" = None) -> "dict[str, str]":
+    """Column name → ``simpleString`` dtype, the form a manifest pins."""
+    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    return types if cols is None else {c: types[c] for c in cols}
 
 
 def _written_buckets(store: SnapshotStore, version: str) -> "set[int]":
@@ -262,13 +325,10 @@ def read_bucketed_snapshot(
                 "pre-flip crash leftover or never-committed manifest, "
                 "not committed data"
             )
-        man = _load_manifest(store, manifest)
-        if man is None:
-            raise FileNotFoundError(
-                f"manifest {manifest!r} not on disk under "
-                f"{store.describe()!r} — pruned past keep_versions, or "
-                "never committed"
-            )
+        man = _require_manifest(store, manifest, FileNotFoundError(
+            f"manifest {manifest!r} not on disk under {store.describe()!r} "
+            "— pruned past keep_versions, or never committed"
+        ))
     paths = sorted(set(man["buckets"].values()))
     if not paths:
         # a CDC commit can legitimately empty the snapshot (every key
@@ -302,19 +362,8 @@ def upsert_batch_into_bucketed_snapshot(
     pre-aggregate when per-key ordering matters); a snapshot row with a
     NULL key is never replaced.  Size ``n_buckets`` so one bucket's
     data fits a comfortable rewrite unit (O(100 MB–1 GB) at scale), or
-    pass 1 when every batch touches most of the snapshot.
-
-    Crash/replay matrix (manifest + version names are pure functions of
-    batch_id, so a replay re-derives the same commit):
-
-    - CURRENT names this batch's manifest → committed; replay NO-OPs.
-    - version dir / manifest file exist but CURRENT wasn't flipped →
-      pre-flip crash leftovers; both are rewritten from the still-
-      current base (mode overwrite + unconditional manifest put — only
-      the replay of the SAME batch from the same base can rewrite a
-      version-named manifest, deriving identical content).
-    - CURRENT missing while manifests or version dirs exist → damaged
-      pointer; raise rather than silently resetting the snapshot.
+    pass 1 when every batch touches most of the snapshot.  The
+    crash/replay matrix is the commit skeleton's (module docstring).
 
     The bucket function is ``pmod(xxhash64(keys), n_buckets)`` —
     deterministic in the keys, so a key's rows land in the same bucket
@@ -327,56 +376,43 @@ def upsert_batch_into_bucketed_snapshot(
     duplicate the key — a commit with mismatched key dtypes is refused
     with a cast instruction instead."""
     _bucketed_commit(
-        spark, snapshot_dir, key_cols, batch_id, n_buckets, keep_versions,
-        batch_df, op_col=None,
+        snapshot_dir, key_cols, batch_id, n_buckets, keep_versions,
+        partial(_merge_step, spark, batch_df, key_cols, n_buckets, None),
     )
 
 
 def _bucketed_commit(
-    spark: SparkSession,
     snapshot_dir: "str | SnapshotStore",
     key_cols: "list[str]",
     batch_id: int,
     n_buckets: int,
     keep_versions: int,
-    batch: DataFrame,
-    op_col: "str | None",
+    step,
 ) -> None:
-    """The shared bucketed commit engine behind the upsert form
-    (``op_col=None``) and the CDC form (``op_col`` names the
-    upsert/delete column of ``batch``).  After the pointer, replay and
-    pin checks, an Observation over a ``noop`` write of the raw batch
-    yields the touched buckets in one narrow job (a seed commit, with no
-    buckets to read, skips it and takes the buckets its write produced);
-    the merge plan (:func:`_merge_plan`) writes the touched buckets in
-    one job, failing on a refused CDC batch, whose partial version dir
-    is then deleted; and the manifest repoints the touched buckets —
-    DROPPING any the commit emptied (a delete-only bucket with nothing
-    left writes no subdir and must vanish from the bucket map, not
-    dangle).  An empty touched set writes nothing."""
-    from pyspark.sql import functions as F
-
+    """The one commit skeleton (its steps are in the module docstring).
+    ``step(store, cur)`` is the commit's data step: given the current
+    manifest (None for a seed) it applies its own pins and returns
+    ``(rows, buckets, key_schema, value_schema)`` — the rows to write
+    with their ``__bucket`` column (None writes nothing), the bucket map
+    entries carried by reference, and the new manifest's pins."""
     store = as_store(snapshot_dir)
     keep = _check_keep_versions(keep_versions)
+    if int(n_buckets) < 1:
+        raise ValueError(f"n_buckets must be >= 1 (got {n_buckets})")
     version = f"v{int(batch_id):012d}"
     manifest_name = f"{_MANIFEST_PREFIX}{int(batch_id):012d}.json"
     cur_name, cur_token = _pointer(store)
     if cur_name == manifest_name:
-        # replayed already-committed batch: the flip happened, so the
-        # merge is a no-op — but a crash may have landed BETWEEN the
-        # flip and the retention deletes, so re-run retention (idempotent)
-        # rather than leaving orphan manifests/version dirs until the
-        # next fresh commit (found by the r15 crash soak)
+        # committed: only retention can be left over (found by the r15
+        # crash soak), and it is idempotent
         _bucketed_retention(store, keep)
         return
     _refuse_stale_batch(cur_name, batch_id, store)
     cur = _current_manifest(store, cur_name) if cur_name is not None else None
     if cur is None:
-        leftovers = [
-            n for n in store.list_names()
-            if (n.startswith("v") and n != version and store.exists_prefix(n))
-            or (n.startswith(_MANIFEST_PREFIX) and n.endswith(".json")
-                and n != manifest_name)
+        manifests, versions = _generations(store)
+        leftovers = [n for n in versions if n != version] + [
+            n for n in manifests if n != manifest_name
         ]
         if leftovers:
             raise RuntimeError(
@@ -385,87 +421,23 @@ def _bucketed_commit(
                 "the snapshot to a single batch; restore CURRENT to the "
                 "newest complete manifest"
             )
-    if cur is not None and int(cur["n_buckets"]) != int(n_buckets):
-        raise ValueError(
-            f"bucketed snapshot at {store.describe()!r} was created with "
-            f"n_buckets={cur['n_buckets']}, got {n_buckets} — the bucket "
-            "count is fixed for the snapshot's lifetime"
-        )
-    rows = batch.drop(op_col) if op_col is not None else batch
-    # key-schema pin (r14 ADVICE): the bucket function hashes the key
-    # VALUES AS TYPED — int 7 and long 7 hash differently — so the key
-    # dtypes are part of the snapshot's identity, exactly like n_buckets
-    key_types = {c: rows.schema[c].dataType.simpleString() for c in key_cols}
+    # the pin was written by json.dumps in key_cols order and json.loads
+    # keeps document order, so list(pinned) IS the pinned order (dicts
+    # and sets compare order-insensitively: r16 review finding)
     pinned = cur.get("key_schema") if cur is not None else None
-    # ORDER matters, not just membership: xxhash64(a, b) != xxhash64(b,
-    # a), so a commit naming the same key columns in a different order
-    # would bucket by a different function — dict equality alone would
-    # wave it through (dicts compare order-insensitively).  The pin was
-    # written by json.dumps in key_cols order and json.loads preserves
-    # document order, so list(pinned) IS the pinned order.  (r16 review
-    # finding.)
     if pinned is not None and list(pinned) != list(key_cols):
         raise ValueError(
             f"bucketed snapshot at {store.describe()!r} pinned key columns "
             f"{list(pinned)} (in that order) but this commit passed "
-            f"{list(key_cols)} — xxhash64 bucketing is ORDER-sensitive, "
-            "a permuted key list hashes to different buckets and "
-            "duplicates keys; pass key_cols in the pinned order"
+            f"{list(key_cols)} — xxhash64 bucketing is ORDER-sensitive, so "
+            "different or re-ordered key columns hash to different buckets "
+            "and duplicate keys; pass key_cols in the pinned order "
+            "(changing the key set is a NEW snapshot)"
         )
-    if pinned is not None and pinned != key_types:
-        raise ValueError(
-            f"bucketed snapshot at {store.describe()!r} pinned key schema "
-            f"{pinned} but this batch's keys are {key_types} — xxhash64 "
-            "bucketing is type-sensitive (a key arriving as int against "
-            "a long-keyed snapshot hashes to a different bucket and "
-            "duplicates the key); cast the batch keys to the pinned "
-            "types upstream"
-        )
-    # value-schema pin (r15 verdict item 1): the manifest pins the FULL
-    # row schema, not just the keys.  Without it a batch whose value
-    # column drifted dtype is silently coerced by unionByName in the
-    # buckets it touches — and a batch touching NO existing bucket
-    # (all-new keys) commits any drifted schema with no check at all —
-    # leaving mixed parquet schemas across version dirs that only blow
-    # up (or silently widen) at read time.  The pin check runs BEFORE
-    # any write, so it covers the all-new-keys path too; the sanctioned
-    # way to change a living snapshot's schema is
-    # :func:`rebucket_bucketed_snapshot`'s ``transform`` (an O(snapshot)
-    # rewrite that re-pins on purpose).
-    full_schema = {
-        f.name: f.dataType.simpleString() for f in rows.schema.fields
-    }
-    pinned_values = cur.get("value_schema") if cur is not None else None
-    if pinned_values is not None and pinned_values != full_schema:
-        raise ValueError(
-            f"bucketed snapshot at {store.describe()!r} pinned row schema "
-            f"{pinned_values} but this batch arrives as {full_schema} — "
-            "refusing a drifted commit (untouched buckets would keep the "
-            "old schema and the snapshot would read back mixed); cast or "
-            "re-shape the batch upstream, or evolve the schema on purpose "
-            "with rebucket_bucketed_snapshot(transform=...)"
-        )
-    bucket = _bucket_sql(key_cols, n_buckets)
-    old_buckets: "dict[str, str]" = dict(cur["buckets"]) if cur else {}
-    touched: "list[int]" = []
-    if old_buckets:
-        # one narrow job, no shuffle: the bucket set rides an Observation
-        # of a noop write over the raw batch
-        obs = Observation()
-        batch.selectExpr(f"{bucket} AS b").observe(
-            obs, F.collect_set("b").alias("t")
-        ).write.format("noop").mode("overwrite").save()
-        touched = sorted(obs.get["t"])
-    written: "set[int]" = set()
-    if touched or not old_buckets:  # a seed commit skips the Observation
-        paths = sorted(
-            {old_buckets[str(b)] for b in touched if str(b) in old_buckets}
-        )
-        target = _read_buckets(spark, store, cur, paths) if paths else None
-        cols = list(pinned_values or full_schema)
-        merged = _merge_plan(batch, target, key_cols, bucket, cols, op_col)
+    rows, buckets, key_schema, value_schema = step(store, cur)
+    if rows is not None:
         try:
-            merged.write.mode("overwrite").partitionBy("__bucket").parquet(
+            rows.write.mode("overwrite").partitionBy("__bucket").parquet(
                 store.spark_path(version)
             )
         except Exception as exc:
@@ -476,20 +448,18 @@ def _bucketed_commit(
             if refusal is not None:
                 raise ValueError(refusal.group(0)) from exc
             raise
-        written = _written_buckets(store, version)
-    # a touched bucket the commit emptied (delete-only) leaves the map
-    new_buckets = {
-        b: p for b, p in old_buckets.items() if int(b) not in touched
-    }
-    new_buckets.update(
-        {str(b): f"{version}/__bucket={b}" for b in sorted(written)}
-    )
+        buckets.update(
+            {
+                str(b): f"{version}/__bucket={b}"
+                for b in sorted(_written_buckets(store, version))
+            }
+        )
     manifest = {
         "batch_id": int(batch_id),
         "n_buckets": int(n_buckets),
-        "key_schema": pinned or key_types,
-        "value_schema": pinned_values or full_schema,
-        "buckets": new_buckets,
+        "key_schema": key_schema,
+        "value_schema": value_schema,
+        "buckets": buckets,
     }
     # version-named manifest: unconditional put (only the replay of the
     # same batch from the same base can rewrite it, with identical
@@ -497,6 +467,89 @@ def _bucketed_commit(
     store.put_text(manifest_name, json.dumps(manifest), expect=ANY)
     _flip_current(store, manifest_name, cur_token)
     _bucketed_retention(store, keep)
+
+
+def _merge_step(
+    spark: SparkSession,
+    batch: DataFrame,
+    key_cols: "list[str]",
+    n_buckets: int,
+    op_col: "str | None",
+    store: SnapshotStore,
+    cur: "dict | None",
+):
+    """The upsert (``op_col=None``) and CDC data step.  Its pins: the
+    modulus, the key dtypes and the full row schema.  Then an
+    Observation over a ``noop`` write of the raw batch yields the
+    touched buckets in one narrow job (a seed commit, with no buckets to
+    read, skips it and takes the buckets its write produced), and
+    :func:`_merge_plan` merges them in one exchange.  A touched bucket
+    the commit empties (delete-only) writes no subdir and leaves the
+    bucket map; an empty touched set writes nothing."""
+    from pyspark.sql import functions as F
+
+    if cur is not None and int(cur["n_buckets"]) != int(n_buckets):
+        raise ValueError(
+            f"bucketed snapshot at {store.describe()!r} was created with "
+            f"n_buckets={cur['n_buckets']}, got {n_buckets} — the bucket "
+            "count is fixed for the snapshot's lifetime"
+        )
+    rows = batch.drop(op_col) if op_col is not None else batch
+    # key-schema pin (r14 ADVICE): the bucket function hashes the key
+    # VALUES AS TYPED — int 7 and long 7 hash differently — so the key
+    # dtypes are part of the snapshot's identity, exactly like n_buckets
+    key_types = _types(rows, key_cols)
+    pinned = cur.get("key_schema") if cur is not None else None
+    if pinned is not None and pinned != key_types:
+        raise ValueError(
+            f"bucketed snapshot at {store.describe()!r} pinned key schema "
+            f"{pinned} but this batch's keys are {key_types} — xxhash64 "
+            "bucketing is type-sensitive (a key arriving as int against "
+            "a long-keyed snapshot hashes to a different bucket and "
+            "duplicates the key); cast the batch keys to the pinned "
+            "types upstream"
+        )
+    # value-schema pin (r15 verdict item 1): without it a batch whose
+    # value column drifted dtype is silently coerced in the buckets it
+    # touches, and a batch touching NO existing bucket (all-new keys)
+    # commits any drifted schema, leaving mixed parquet schemas across
+    # version dirs.  The check runs before any write, so it covers the
+    # all-new-keys path too.
+    full_schema = _types(rows)
+    pinned_values = cur.get("value_schema") if cur is not None else None
+    if pinned_values is not None and pinned_values != full_schema:
+        raise ValueError(
+            f"bucketed snapshot at {store.describe()!r} pinned row schema "
+            f"{pinned_values} but this batch arrives as {full_schema} — "
+            "refusing a drifted commit (untouched buckets would keep the "
+            "old schema and the snapshot would read back mixed); cast or "
+            "re-shape the batch upstream, or evolve the schema on purpose "
+            "with rebucket_bucketed_snapshot(transform=...)"
+        )
+    key_schema, value_schema = pinned or key_types, pinned_values or full_schema
+    bucket = _bucket_sql(key_cols, n_buckets)
+    old_buckets: "dict[str, str]" = dict(cur["buckets"]) if cur else {}
+    touched: "list[int]" = []
+    target = None
+    if old_buckets:
+        # one narrow job, no shuffle: the bucket set rides an Observation
+        # of a noop write over the raw batch
+        obs = Observation()
+        batch.selectExpr(f"{bucket} AS b").observe(
+            obs, F.collect_set("b").alias("t")
+        ).write.format("noop").mode("overwrite").save()
+        touched = sorted(obs.get["t"])
+        if not touched:
+            return None, old_buckets, key_schema, value_schema
+        paths = sorted(
+            {old_buckets[str(b)] for b in touched if str(b) in old_buckets}
+        )
+        target = _read_buckets(spark, store, cur, paths) if paths else None
+    carried = {b: p for b, p in old_buckets.items() if int(b) not in touched}
+    merged = _merge_plan(
+        batch, target, key_cols, bucket, list(value_schema), op_col
+    )
+    return merged, carried, key_schema, value_schema
 
 
 def _bucketed_retention(store: SnapshotStore, keep: int) -> None:
@@ -507,34 +560,25 @@ def _bucketed_retention(store: SnapshotStore, keep: int) -> None:
     MANIFEST: a reader that resolved a kept manifest can finish its
     scan while fewer than ``keep`` newer commits flip after it).
     Idempotent: re-running after a mid-prune crash converges."""
-    manifests = sorted(
-        (
-            n for n in store.list_names()
-            if n.startswith(_MANIFEST_PREFIX) and n.endswith(".json")
-        ),
-        reverse=True,
-    )
-    kept, pruned_manifests = manifests[:keep], manifests[keep:]
+    manifests, versions = _generations(store)
     referenced: "set[str]" = set()
-    for name in kept:
-        man = _load_manifest(store, name)
-        if man is None:
-            # a KEPT manifest vanished between listing and read (second
-            # writer / damaged store) — aborting retention is the safe
-            # move: treating it as empty would delete version dirs it
-            # still references (r15 review finding)
-            raise RuntimeError(
-                f"bucketed snapshot at {store.describe()!r}: retained "
-                f"manifest {name!r} disappeared during retention — "
-                "refusing to prune (a second writer on this snapshot, "
-                "or a damaged store?)"
-            )
+    for name in manifests[:keep]:
+        # a KEPT manifest that vanished between listing and read (second
+        # writer / damaged store) aborts retention: treating it as empty
+        # would delete version dirs it still references (r15 review
+        # finding)
+        man = _require_manifest(store, name, RuntimeError(
+            f"bucketed snapshot at {store.describe()!r}: retained "
+            f"manifest {name!r} disappeared during retention — "
+            "refusing to prune (a second writer on this snapshot, "
+            "or a damaged store?)"
+        ))
         for rel in man["buckets"].values():
             referenced.add(rel.split("/", 1)[0])
-    for name in pruned_manifests:
+    for name in manifests[keep:]:
         store.delete_text(name)
-    for n in store.list_names():
-        if n.startswith("v") and store.exists_prefix(n) and n not in referenced:
+    for n in versions:
+        if n not in referenced:
             store.delete_prefix(n)
 
 
@@ -552,7 +596,7 @@ def rebucket_bucketed_snapshot(
     n_buckets pin otherwise forbids for the snapshot's lifetime — or,
     at the same modulus, COMPACT it (after many incremental commits
     CURRENT references buckets scattered across many small version
-    dirs; this consolidates them into one).
+    dirs; this consolidates them into one file per bucket).
 
     Cost is O(snapshot) BY DESIGN — this is the maintenance job a
     deployment runs when per-bucket data outgrows the O(100 MB–1 GB)
@@ -560,95 +604,58 @@ def rebucket_bucketed_snapshot(
     per-commit operation.  Operational contract: the snapshot's writer
     must be STOPPED first and resumed with the new ``n_buckets``
     afterwards (every commit is checked against the pinned modulus, so
-    a writer passing the old value is refused by the standard pin
-    check — nothing can silently write the old layout).
+    a writer passing the old value is refused).
 
-    Same commit skeleton as every other unit (version/manifest names
-    are pure functions of batch_id, so the crash/replay matrix carries
-    verbatim): replayed committed batch → no-op + retention; pre-flip
-    leftovers rewritten; CAS'd pointer flip; reference-counted
-    retention afterwards — which also means a manifest from BEFORE the
-    resize keeps time-travel-reading while retained (readers never
-    consult n_buckets, only the bucket map).  ``batch_id`` continues
-    the snapshot's monotone lineage (use the next unused id); a stale
-    id is refused exactly like any stale batch.
+    It runs the commit skeleton of every other unit (module docstring):
+    ``batch_id`` continues the snapshot's monotone lineage, and a
+    manifest from BEFORE the resize keeps time-travel-reading while
+    retained (readers never consult n_buckets, only the bucket map).
+    ``key_cols`` must match the pinned key columns, in order: bucketing
+    by other columns under the old pin would let every later MERGE pass
+    the pin check yet miss same-key rows.
 
-    ``key_cols`` must MATCH the manifest's pinned key schema (r15
-    ADVICE): bucketing by different columns while the new manifest
-    carries the old pin would let every later MERGE pass the pin check
-    yet miss same-key rows strewn across wrong buckets — silent key
-    duplication, the exact class the pins exist to refuse.  A
-    maintenance run with the wrong ``key_cols`` raises before any
-    write.
-
-    ``transform`` (r15 verdict "what's missing" item 2) is the
-    SANCTIONED schema-evolution path: a ``DataFrame -> DataFrame``
-    callable applied to the whole snapshot during the rewrite — add a
-    column with a default, drop one, retype a value column.  The new
-    manifest re-pins ``value_schema`` from the transformed rows, so
-    subsequent commits must arrive in the NEW shape (and ad-hoc drift
-    stays refused — evolution is an explicit O(snapshot) maintenance
-    commit, never a side effect of one batch).  The key columns must
-    survive the transform with their pinned dtypes unchanged (they are
-    the snapshot's identity; changing them is a new snapshot, not an
-    evolution) — refused otherwise.  Replay safety is the caller's
-    contract here, same as the batch ids: a replayed maintenance
-    commit must pass the SAME transform (the version name is a pure
-    function of batch_id, and only a same-base replay may rewrite it).
+    ``transform`` is the SANCTIONED schema-evolution path: a
+    ``DataFrame -> DataFrame`` callable applied to the whole snapshot
+    during the rewrite — add a column with a default, drop one, retype a
+    value column.  The new manifest re-pins ``value_schema`` from the
+    transformed rows, so later commits must arrive in the NEW shape.
+    The key columns must survive the transform with their pinned dtypes
+    (they are the snapshot's identity) — refused otherwise.  A replayed
+    maintenance commit must pass the SAME transform (only a same-base
+    replay may rewrite a version name).
     """
-    store = as_store(snapshot_dir)
-    keep = _check_keep_versions(keep_versions)
-    if int(new_n_buckets) < 1:
-        raise ValueError(f"new_n_buckets must be >= 1 (got {new_n_buckets})")
-    version = f"v{int(batch_id):012d}"
-    manifest_name = f"{_MANIFEST_PREFIX}{int(batch_id):012d}.json"
-    cur_name, cur_token = _pointer(store)
-    if cur_name == manifest_name:
-        _bucketed_retention(store, keep)
-        return  # replayed already-committed maintenance batch
-    _refuse_stale_batch(cur_name, batch_id, store)
-    if cur_name is None:
-        raise FileNotFoundError(
-            f"no CURRENT manifest under {store.describe()!r} — nothing "
-            "to rebucket (seed the snapshot first)"
-        )
-    cur = _current_manifest(store, cur_name)
-    # key-cols pin (r15 ADVICE): bucketing by the caller's columns while
-    # carrying the manifest's old pin forward would pass every later
-    # commit's pin check against a layout bucketed by something else —
-    # the per-bucket merge then misses same-key rows and duplicates
-    # keys silently.  Refuse a mismatched maintenance run before any
-    # write; dtypes are re-verified against the read data below.
-    pinned_keys = cur.get("key_schema")
-    # list, not set: xxhash64 is ORDER-sensitive, so a permuted key
-    # list is as wrong as a different one (r16 review finding — dict/
-    # set comparison waved ['b','a'] through against a ['a','b'] pin)
-    if pinned_keys is not None and list(key_cols) != list(pinned_keys):
-        raise ValueError(
-            f"bucketed snapshot at {store.describe()!r} pinned key columns "
-            f"{list(pinned_keys)} (in that order) but this maintenance run "
-            f"passed {list(key_cols)} — re-bucketing by different or "
-            "re-ordered columns would strand same-key rows across buckets "
-            "while the pin still names the original keys; changing the key "
-            "set is a NEW snapshot, not a maintenance commit"
-        )
-    new_buckets: "dict[str, str]" = {}
-    if cur["buckets"]:
+
+    def step(store: SnapshotStore, cur: "dict | None"):
+        if cur is None:
+            raise FileNotFoundError(
+                f"no CURRENT manifest under {store.describe()!r} — nothing "
+                "to rebucket (seed the snapshot first)"
+            )
+        pinned_keys = cur.get("key_schema")
+        if not cur["buckets"]:
+            # an emptied snapshot: only the modulus changes
+            if transform is not None:
+                raise ValueError(
+                    f"bucketed snapshot at {store.describe()!r} is EMPTY — a "
+                    "schema-evolution transform has no rows to derive the "
+                    "new schema from; seed the snapshot in the new shape "
+                    "instead"
+                )
+            return None, {}, pinned_keys, cur.get("value_schema")
+        # footer inference, not the pinned schema: the read-back key
+        # dtypes are checked against the pin (SCALE.md 2026-10-18)
         data = spark.read.parquet(
             *[store.spark_path(p) for p in sorted(set(cur["buckets"].values()))]
         )
-        if pinned_keys is not None:
-            read_types = {
-                c: data.schema[c].dataType.simpleString() for c in key_cols
-            }
-            if read_types != pinned_keys:
-                raise RuntimeError(
-                    f"bucketed snapshot at {store.describe()!r} pinned key "
-                    f"schema {pinned_keys} but the snapshot data reads back "
-                    f"as {read_types} — damaged or hand-edited snapshot; "
-                    "xxhash64 bucketing is type-sensitive, refusing to "
-                    "rewrite a layout the pin no longer describes"
-                )
+        read_types = _types(data, key_cols)
+        if pinned_keys is not None and read_types != pinned_keys:
+            raise RuntimeError(
+                f"bucketed snapshot at {store.describe()!r} pinned key "
+                f"schema {pinned_keys} but the snapshot data reads back as "
+                f"{read_types} — damaged or hand-edited "
+                "snapshot; xxhash64 bucketing is type-sensitive, refusing "
+                "to rewrite a layout the pin no longer describes"
+            )
         if transform is not None:
             data = transform(data)
             missing = [c for c in key_cols if c not in data.columns]
@@ -658,65 +665,29 @@ def rebucket_bucketed_snapshot(
                     f"{missing} — the keys are the snapshot's identity; "
                     "changing them is a new snapshot, not an evolution"
                 )
-            out_types = {
-                c: data.schema[c].dataType.simpleString() for c in key_cols
-            }
-            expect_types = pinned_keys or out_types
-            if out_types != expect_types:
-                raise ValueError(
-                    f"schema-evolution transform retyped key column(s): "
-                    f"pinned {expect_types}, transform produced {out_types} "
-                    "— xxhash64 bucketing is type-sensitive; keys must "
-                    "survive evolution unchanged"
-                )
-        bucket = _bucket_sql(key_cols, new_n_buckets)
-        # clustered write: one file per bucket (see _merge_plan) — for
-        # the COMPACTION use of this maintenance commit the single file
-        # per bucket is the entire point
-        data.selectExpr("*", f"{bucket} AS __bucket").repartition(
-            "__bucket"
-        ).write.mode("overwrite").partitionBy("__bucket").parquet(
-            store.spark_path(version)
-        )
-        new_buckets = {
-            str(b): f"{version}/__bucket={b}"
-            for b in sorted(_written_buckets(store, version))
-        }
-        key_schema = pinned_keys or {
-            c: data.schema[c].dataType.simpleString() for c in key_cols
-        }
-        # re-pin the row schema from the (possibly transformed) rows —
-        # the one sanctioned place value_schema may change
-        value_schema = {
-            f.name: f.dataType.simpleString() for f in data.schema.fields
-        }
-    else:
-        # rebucketing an emptied snapshot: just record the new modulus
-        if transform is not None:
+        out_types = _types(data, key_cols)
+        if pinned_keys is not None and out_types != pinned_keys:
             raise ValueError(
-                f"bucketed snapshot at {store.describe()!r} is EMPTY — a "
-                "schema-evolution transform has no rows to derive the new "
-                "schema from; seed the snapshot in the new shape instead"
+                f"schema-evolution transform retyped key column(s): "
+                f"pinned {pinned_keys}, transform produced {out_types} — "
+                "xxhash64 bucketing is type-sensitive; keys must survive "
+                "evolution unchanged"
             )
-        key_schema = pinned_keys
-        value_schema = cur.get("value_schema")
-    manifest = {
-        "batch_id": int(batch_id),
-        "n_buckets": int(new_n_buckets),
-        "key_schema": key_schema,
-        "value_schema": value_schema,
-        "buckets": new_buckets,
-    }
-    store.put_text(manifest_name, json.dumps(manifest), expect=ANY)
-    _flip_current(store, manifest_name, cur_token)
-    _bucketed_retention(store, keep)
+        # one exchange, one file per bucket: the point of a compaction
+        rows = data.selectExpr(
+            "*", f"{_bucket_sql(key_cols, new_n_buckets)} AS __bucket"
+        ).repartition("__bucket")
+        return rows, {}, pinned_keys or out_types, _types(data)
+
+    _bucketed_commit(
+        snapshot_dir, key_cols, batch_id, new_n_buckets, keep_versions, step
+    )
 
 
 # ---------------------------------------------------------------------------
 # CDC apply (r14): upsert + DELETE tombstones in one commit — the
 # "right to be forgotten" half a real training-data snapshot needs that
-# plain MERGE-upsert can't express.  Same crash/replay matrix as the
-# upsert commit (version/manifest names are pure functions of batch_id).
+# plain MERGE-upsert can't express.
 # ---------------------------------------------------------------------------
 
 CDC_UPSERT = "upsert"
@@ -815,10 +786,10 @@ def apply_cdc_batch_into_bucketed_snapshot(
     upsert ∪ delete keys and only those rewrite — per-commit cost stays
     O(touched-bucket data + batch) with deletes in the mix.  A bucket
     the commit empties (delete-only, nothing survives) is DROPPED from
-    the manifest, not left dangling.  Same crash/replay matrix,
-    n_buckets pin, and key-schema pin as
+    the manifest, not left dangling.  Same commit skeleton, n_buckets
+    pin and key-schema pin as
     :func:`upsert_batch_into_bucketed_snapshot`."""
     _bucketed_commit(
-        spark, snapshot_dir, key_cols, batch_id, n_buckets, keep_versions,
-        batch_df, op_col=op_col,
+        snapshot_dir, key_cols, batch_id, n_buckets, keep_versions,
+        partial(_merge_step, spark, batch_df, key_cols, n_buckets, op_col),
     )

@@ -1668,3 +1668,154 @@ def test_lineage_refuses_manifestless_bucketed_dirs(spark, tmp_path):
     assert all(not g["complete"] for g in rep["generations"])
     with pytest.raises(RuntimeError, match="no COMPLETE generation"):
         restore_current(snap)
+
+
+# ---------------------------------------------------------------------------
+# one commit skeleton: the refusals every commit unit shares
+# ---------------------------------------------------------------------------
+
+
+def test_rebucket_refuses_key_dtype_read_back_drift(spark, tmp_path):
+    """A bucket whose data reads back with other key dtypes than the
+    pin (here int under a bigint pin, as a hand edit would leave it) is
+    refused by the rebucket before it writes a layout the pin no longer
+    describes; CURRENT is unchanged."""
+    from omics_data_integration_utilities_spark.streaming.sinks import (
+        rebucket_bucketed_snapshot,
+    )
+
+    snap = str(tmp_path / "snap")
+    upsert_batch_into_bucketed_snapshot(
+        spark, _df(spark, [(1, 1.0), (2, 2.0)]), snap, ["k"],
+        batch_id=0, n_buckets=1,
+    )
+    spark.createDataFrame([(1, 1.0), (2, 2.0)], "k int, v double").write.mode(
+        "overwrite"
+    ).parquet(os.path.join(snap, "v000000000000", "__bucket=0"))
+    with pytest.raises(RuntimeError, match="reads back as"):
+        rebucket_bucketed_snapshot(
+            spark, snap, ["k"], batch_id=1, new_n_buckets=4
+        )
+    assert open(os.path.join(snap, "CURRENT")).read().strip() == (
+        "m000000000000.json"
+    )
+    assert not os.path.exists(os.path.join(snap, "v000000000001"))
+
+
+def test_every_commit_refuses_non_positive_n_buckets_before_any_job(spark, tmp_path):
+    """``n_buckets < 1`` is refused by upsert, CDC and rebucket alike,
+    on a fresh dir and on a seeded snapshot, before any Spark job."""
+    from omics_data_integration_utilities_spark.streaming.sinks import (
+        rebucket_bucketed_snapshot,
+    )
+
+    from .conftest import jobs_fired
+
+    seeded = str(tmp_path / "seeded")
+    upsert_batch_into_bucketed_snapshot(
+        spark, _df(spark, [(1, 1.0)]), seeded, ["k"], batch_id=0, n_buckets=4
+    )
+    batch, cdc = _df(spark, [(2, 2.0)]), _cdc(spark, [(2, 2.0, "upsert")])
+    for n in (0, -4):
+        for snap in (str(tmp_path / f"fresh{n}"), seeded):
+            commits = [
+                lambda: upsert_batch_into_bucketed_snapshot(
+                    spark, batch, snap, ["k"], batch_id=1, n_buckets=n
+                ),
+                lambda: apply_cdc_batch_into_bucketed_snapshot(
+                    spark, cdc, snap, ["k"], batch_id=1, n_buckets=n
+                ),
+                lambda: rebucket_bucketed_snapshot(
+                    spark, snap, ["k"], batch_id=1, new_n_buckets=n
+                ),
+            ]
+            for commit in commits:
+
+                def refused(commit=commit):
+                    with pytest.raises(ValueError, match="must be >= 1"):
+                        commit()
+
+                assert jobs_fired(spark, refused) == 0, (n, snap)
+        assert not os.path.exists(tmp_path / f"fresh{n}")
+    assert open(os.path.join(seeded, "CURRENT")).read().strip() == (
+        "m000000000000.json"
+    )
+
+
+def test_failed_rebucket_write_deletes_its_version_dir(spark, tmp_path):
+    """A rebucket whose write job fails leaves no partial ``v<batch>``
+    dir behind, and CURRENT still names the base: once for a
+    ``transform`` that fails while the rows are computed, once for a
+    failure in the writer tasks themselves (a parquet codec whose class
+    is not installed), which fails after the writer made the dir."""
+    from pyspark.sql import functions as F
+
+    from omics_data_integration_utilities_spark.streaming.sinks import (
+        rebucket_bucketed_snapshot,
+    )
+
+    snap = str(tmp_path / "snap")
+    upsert_batch_into_bucketed_snapshot(
+        spark, _df(spark, [(k, float(k)) for k in range(8)]), snap, ["k"],
+        batch_id=0, n_buckets=4,
+    )
+    before = {r["k"]: r["v"] for r in read_bucketed_snapshot(spark, snap).collect()}
+    failing = lambda df: df.withColumn(  # noqa: E731
+        "v",
+        F.when(F.col("k") == 5, F.expr("raise_error('transform failed')"))
+        .otherwise(F.col("v")),
+    )
+    with pytest.raises(Exception, match="transform failed"):
+        rebucket_bucketed_snapshot(
+            spark, snap, ["k"], batch_id=1, new_n_buckets=4, transform=failing
+        )
+    codec = "spark.sql.parquet.compression.codec"
+    prior = spark.conf.get(codec, None)
+    spark.conf.set(codec, "brotli")
+    try:
+        with pytest.raises(Exception, match="TASK_WRITE_FAILED"):
+            rebucket_bucketed_snapshot(
+                spark, snap, ["k"], batch_id=1, new_n_buckets=4
+            )
+    finally:
+        if prior is None:
+            spark.conf.unset(codec)
+        else:
+            spark.conf.set(codec, prior)
+    assert not os.path.exists(os.path.join(snap, "v000000000001"))
+    assert open(os.path.join(snap, "CURRENT")).read().strip() == (
+        "m000000000000.json"
+    )
+    after = {r["k"]: r["v"] for r in read_bucketed_snapshot(spark, snap).collect()}
+    assert after == before
+
+
+@pytest.mark.parametrize(
+    "text, why",
+    [("null", "non-object JSON"), ("[]", "non-object JSON"), ("{not json", "unparseable")],
+)
+def test_damaged_current_manifest_is_refused_alike(spark, tmp_path, text, why):
+    """A CURRENT naming a manifest that does not parse to a JSON object
+    is a damaged snapshot: a commit raises the damaged-snapshot
+    RuntimeError before any write, a read raises the same, and lineage
+    reports the generation incomplete."""
+    from omics_data_integration_utilities_spark.streaming.recovery import (
+        snapshot_lineage,
+    )
+
+    snap = str(tmp_path / "snap")
+    upsert_batch_into_bucketed_snapshot(
+        spark, _df(spark, [(1, 1.0)]), snap, ["k"], batch_id=0, n_buckets=4
+    )
+    with open(os.path.join(snap, "m000000000000.json"), "w") as f:
+        f.write(text)
+    damaged = f"is {why} — damaged snapshot"
+    with pytest.raises(RuntimeError, match=damaged):
+        upsert_batch_into_bucketed_snapshot(
+            spark, _df(spark, [(2, 2.0)]), snap, ["k"], batch_id=1, n_buckets=4
+        )
+    assert not os.path.exists(os.path.join(snap, "v000000000001"))
+    with pytest.raises(RuntimeError, match=damaged):
+        read_bucketed_snapshot(spark, snap)
+    (gen,) = snapshot_lineage(snap)["generations"]
+    assert not gen["complete"] and why in gen["detail"]

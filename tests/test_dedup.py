@@ -977,7 +977,7 @@ def test_mixture_sample_stable_under_corpus_growth(spark):
 def test_extend_dedup_index_equals_rebuild(spark, tmp_path):
     """Folding a batch into an index (next generation) must probe
     identically to an index built from scratch over the union — and the
-    same-name overwrite foot-gun is refused."""
+    same-name and same-path overwrite foot-guns are refused."""
     import pytest
 
     from omics_data_integration_utilities_spark.operators.dedup import (
@@ -995,6 +995,11 @@ def test_extend_dedup_index_equals_rebuild(spark, tmp_path):
     g1 = build_dedup_index(ref1, "text", "doc_id", "gen1", str(tmp_path / "g1"))
     with pytest.raises(ValueError):
         extend_dedup_index(g1, ref2, "text", "doc_id", "gen1", str(tmp_path / "g1"))
+    # a trailing-slash spelling of the live generation's path is the same dir
+    with pytest.raises(ValueError, match="different"):
+        extend_dedup_index(
+            g1, ref2, "text", "doc_id", "gen1b", str(tmp_path / "g1") + "/"
+        )
     g2 = extend_dedup_index(g1, ref2, "text", "doc_id", "gen2", str(tmp_path / "g2"))
     fresh = build_dedup_index(
         ref1.unionByName(ref2), "text", "doc_id", "fresh", str(tmp_path / "f")

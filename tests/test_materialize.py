@@ -151,6 +151,14 @@ def test_loops_give_identical_rows_in_both_modes(spark, monkeypatch, local_outpu
         assert any(p.is_file() for p in ckpt_dir.rglob("*")), "no reliable checkpoint written"
 
 
+def test_get_spark_cleans_reliable_checkpoints(spark):
+    """Reliable checkpoints are deleted once their RDD is garbage, so a
+    session with a checkpoint dir does not keep every materialised
+    relation on disk."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
+
+
 def test_materialize_is_the_only_checkpoint_site():
     """``localCheckpoint(`` and ``.checkpoint(`` occur in the package
     only inside ``session.materialize``."""

@@ -39,6 +39,32 @@ def test_package_is_batch_only():
     assert hits == []
 
 
+def test_snapshot_names_and_listing_have_one_site():
+    """The ``:012d`` version and manifest name formats and the
+    ``_MANIFEST_PREFIX`` manifest listing each occur in one function
+    under ``streaming/``: one commit skeleton names every commit, and one
+    lister finds the generations for commits, retention and recovery."""
+    import ast
+    import pathlib
+
+    import omics_data_integration_utilities_spark.streaming as pkg
+
+    sites = {":012d": set(), "startswith(_MANIFEST_PREFIX)": set()}
+    for path in sorted(pathlib.Path(pkg.__file__).parent.glob("*.py")):
+        src = path.read_text()
+        funcs = [
+            n for n in ast.walk(ast.parse(src, str(path)))
+            if isinstance(n, ast.FunctionDef)
+        ]
+        for i, line in enumerate(src.splitlines(), 1):
+            for pattern, found in sites.items():
+                if pattern in line:
+                    owners = [f for f in funcs if f.lineno <= i <= f.end_lineno]
+                    inner = min(owners, key=lambda f: f.end_lineno - f.lineno, default=None)
+                    found.add(f"{path.name}:{inner.name if inner else '<module>'}")
+    assert all(len(found) == 1 for found in sites.values()), sites
+
+
 def test_ts_event_micros_all_encodings(spark):
     """The dtype-dispatching normalizer returns identical epoch micros for
     the three ts encodings the events parquet has shipped with (int64
